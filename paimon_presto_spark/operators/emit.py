@@ -29,7 +29,7 @@ with emit finally first-class:
    sequence's shard NEVER changes as the corpus grows), and shard
    groups are appended to a partitioned table-format table in a FIXED
    deterministic order, each commit an atomic snapshot (``table.py``
-   O_EXCL swap) stamped with a monotone **commit identifier** — Paimon's
+   hard-link publish) stamped with a monotone **commit identifier** — Paimon's
    sink resume contract (``commitIdentifier`` in real Paimon snapshots;
    the Flink sink's checkpoint id). A re-run reads the latest committed
    identifier from table METADATA and continues from the next group, so

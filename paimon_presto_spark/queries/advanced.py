@@ -2903,9 +2903,9 @@ def table_format_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
       no live byte.
 
     100 TB shape: rollback is metadata-only — O(#snapshots) file
-    deletes and a LATEST pointer swap, independent of data size; the
-    stranded bytes are reclaimed by the same O(metadata) orphan walk
-    the retention entry exercises. This is the operational answer to a
+    deletes (the latest snapshot is the highest id left), independent
+    of data size; the stranded bytes are reclaimed by the same
+    O(metadata) orphan walk the retention entry exercises. This is the operational answer to a
     bad backfill: undo in seconds, reclaim asynchronously.
     """
     import time as _time

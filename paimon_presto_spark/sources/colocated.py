@@ -57,7 +57,6 @@ from paimon_presto_spark.sources.datasource import (
     PaimonReader,
     _arrow_type,
     _load_schema,
-    _manifest_entries,
     dv_index_map,
     read_split_arrow,
     spark_ddl_type,
@@ -85,7 +84,7 @@ def _side_schema(options: dict, side: str) -> dict:
     snap = r._snapshot()
     if snap is None:
         return _load_schema(r.meta)
-    return _load_schema(r.meta, snap["schema_id"])
+    return _load_schema(r.meta, snap.schema_id)
 
 
 def _plan_side(options: dict, side: str, rename: dict[str, str] | None = None):
@@ -99,8 +98,8 @@ def _plan_side(options: dict, side: str, rename: dict[str, str] | None = None):
     snap = r._snapshot()
     if snap is None:
         return _load_schema(r.meta), {}
-    schema = _load_schema(r.meta, snap["schema_id"])
-    entries = _manifest_entries(r.meta, snap)
+    schema = _load_schema(r.meta, snap.schema_id)
+    entries = r.table.manifest_entries(snap)
     data_root = options[side]
     dv_map = dv_index_map(data_root, snap)
     merge = schema.get("options", {}).get("merge-engine", "deduplicate")
@@ -418,9 +417,7 @@ class ColocatedJoinDataSource(DataSource):
                     _side_options(self.options, side)
                 )._snapshot()
                 if snap is not None:
-                    self.options[f"{side}_snapshot"] = str(
-                        snap["snapshot_id"]
-                    )
+                    self.options[f"{side}_snapshot"] = str(snap.snapshot_id)
         lschema = _side_schema(self.options, "left")
         rschema = _side_schema(self.options, "right")
         lon = [c.strip() for c in self.options["left_on"].split(",")]

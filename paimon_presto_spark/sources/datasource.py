@@ -36,7 +36,8 @@ already do); never cache and re-filter one handle.
   for plain tables, upsert/delete (``option("rowkind", "D")``) for
   primary-key tables. Each task writes parquet files + footer stats and
   reports manifest entries in its commit message; the driver-side
-  ``commit`` performs the atomic manifest swap (A22 semantics). Bucket
+  ``commit`` publishes the snapshot through ``Table._commit_manifest``,
+  the one commit path of the package (A22 semantics). Bucket
   assignment uses ``functions/xxhash.spark_bucket`` — a pure-Python XXH64
   bit-identical to the JVM ``pmod(xxhash64(pks), n)`` — so DataSource and
   Table-API writes interleave on one table with a consistent bucket layout.
@@ -75,17 +76,25 @@ from pyspark.sql.datasource import (
 
 from paimon_presto_spark.plans import fileindex
 from paimon_presto_spark.plans.predicate import P, Predicate, skip_safe_predicate
+from paimon_presto_spark.table import (
+    Snapshot,
+    Table,
+    TableSchema,
+    _char_len,
+    _is_time_type,
+    _varchar_len,
+)
 
 
-def _meta_path(path: str, branch: str | None) -> str:
-    """Metadata root for a lineage: the table dir, or a branch's fork dir
-    (data files always stay under the table dir — see ``table.Table``)."""
-    if not branch:
-        return path
-    bdir = os.path.join(path, "branch", f"branch-{branch}")
-    if not os.path.isdir(bdir):
-        raise ValueError(f"branch {branch!r} does not exist")
-    return bdir
+def _table(options: dict) -> Table:
+    """The lineage the options name — the table dir, or its
+    ``option("branch")`` fork — as a Spark-less ``Table``. Every snapshot
+    and manifest read and every commit of this module goes through it,
+    so the DataSource and the DataFrame API share one commit protocol
+    (data files always stay under the table dir)."""
+    t = Table(None, options["path"])
+    branch = options.get("branch")
+    return t.branch(branch) if branch else t
 
 
 def _load_schema(path: str, schema_id: int | None = None) -> dict:
@@ -109,37 +118,6 @@ def _load_schema(path: str, schema_id: int | None = None) -> dict:
             f" (table has {fmt!r})"
         )
     return schema
-
-
-def _latest_snapshot(path: str) -> dict | None:
-    latest = os.path.join(path, "snapshot", "LATEST")
-    if not os.path.exists(latest):
-        return None
-    with open(latest) as fh:
-        sid = int(fh.read().strip())
-    with open(os.path.join(path, "snapshot", f"snapshot-{sid}.json")) as fh:
-        return json.load(fh)
-
-
-def _manifest_entries(path: str, snap: dict) -> list[dict]:
-    """Fold a snapshot's manifest (full / list-of-base+deltas — the same
-    three formats ``Table.manifest_entries`` reads)."""
-    with open(os.path.join(path, "manifest", snap["manifest"])) as fh:
-        d = json.load(fh)
-    if "entries" in d:
-        return d["entries"]
-    out: dict[str, dict] = {}
-    for name in d["manifests"]:
-        with open(os.path.join(path, "manifest", name)) as fh:
-            m = json.load(fh)
-        if "entries" in m:
-            out = {e["path"]: e for e in m["entries"]}
-        else:
-            for p in m.get("removes", []):
-                out.pop(p, None)
-            for e in m.get("adds", []):
-                out[e["path"]] = e
-    return list(out.values())
 
 
 def _arrow_type(ddl: str):
@@ -166,8 +144,6 @@ def _arrow_type(ddl: str):
         return simple[t]
     # TIME = micros-since-midnight bigint (table._parse_type convention;
     # single source of truth for the pattern is table._is_time_type)
-    from paimon_presto_spark.table import _is_time_type
-
     if _is_time_type(t):
         return pa.int64()
     if t.startswith("decimal"):
@@ -207,8 +183,6 @@ def _cast_to_schema(tbl, schema: dict, writing: bool = False):
     # _varchar_len are the single source of truth for the bound rules)
     import pyarrow.compute as pc
 
-    from paimon_presto_spark.table import _char_len, _varchar_len
-
     for name, t in ddl.items():
         if name not in tbl.column_names:
             continue
@@ -232,8 +206,6 @@ def _cast_to_schema(tbl, schema: dict, writing: bool = False):
 def _typed_partition_json(partition: dict, schema: dict) -> dict:
     """Partition dir values (strings) → typed values per the schema JSON
     (mirror of ``table._typed_partition`` without a TableSchema object)."""
-    from paimon_presto_spark.table import _is_time_type
-
     types = {f["name"]: f["type"] for f in schema["fields"]}
     out = {}
     for k, raw in partition.items():
@@ -313,7 +285,8 @@ class PaimonPartition(InputPartition):
 class PaimonReader(DataSourceReader):
     def __init__(self, options: dict):
         self.path = options["path"]  # data root
-        self.meta = _meta_path(self.path, options.get("branch"))
+        self.table = _table(options)
+        self.meta = self.table.meta_path
         self.snapshot_id = (
             int(options["snapshot"]) if "snapshot" in options else None
         )
@@ -335,42 +308,21 @@ class PaimonReader(DataSourceReader):
         # only use them to shrink the file list.
         return iter(filters)
 
-    def _snapshot(self) -> dict | None:
+    def _snapshot(self) -> Snapshot | None:
         if self.snapshot_id is not None:
-            with open(
-                os.path.join(
-                    self.meta, "snapshot", f"snapshot-{self.snapshot_id}.json"
-                )
-            ) as fh:
-                return json.load(fh)
+            return self.table.snapshot(self.snapshot_id)
         if self.tag is not None:
-            # tags carry the full snapshot payload (they outlive expiry)
-            with open(
-                os.path.join(self.meta, "tag", f"tag-{self.tag}.json")
-            ) as fh:
-                return json.load(fh)
+            return self.table.tag_snapshot(self.tag)
         if self.as_of_ms is not None:
-            sdir = os.path.join(self.meta, "snapshot")
-            best = None
-            for fn in os.listdir(sdir):
-                if fn.startswith("snapshot-") and fn.endswith(".json"):
-                    with open(os.path.join(sdir, fn)) as fh:
-                        s = json.load(fh)
-                    if s["timestamp_ms"] <= self.as_of_ms and (
-                        best is None or s["snapshot_id"] > best["snapshot_id"]
-                    ):
-                        best = s
-            if best is None:
-                raise ValueError(f"no snapshot at or before {self.as_of_ms}")
-            return best
-        return _latest_snapshot(self.meta)
+            return self.table.snapshot_as_of(self.as_of_ms)
+        return self.table.snapshot()
 
     def partitions(self) -> Sequence[PaimonPartition]:
         snap = self._snapshot()
         if snap is None:
             return [PaimonPartition(self.meta, [], None, _load_schema(self.meta))]
-        schema = _load_schema(self.meta, snap["schema_id"])
-        entries = _manifest_entries(self.meta, snap)
+        schema = _load_schema(self.meta, snap.schema_id)
+        entries = self.table.manifest_entries(snap)
         part_keys = schema.get("partition_keys", [])
         pks = schema.get("primary_keys", [])
         if self.predicate is not None:
@@ -456,7 +408,7 @@ class PaimonReader(DataSourceReader):
         return iter(tbl.to_batches(max_chunksize=4096))
 
 
-def dv_index_map(data_root: str, snap: dict) -> dict[str, list[int]]:
+def dv_index_map(data_root: str, snap: Snapshot) -> dict[str, list[int]]:
     """Deletion-vector index → {absolute data path: deleted positions}.
 
     Per-file deleted positions, handed to each split so the reader drops
@@ -464,16 +416,12 @@ def dv_index_map(data_root: str, snap: dict) -> dict[str, list[int]]:
     the index is small — planner-side read is a metadata read, like the
     manifest itself). Shared by ``PaimonReader.partitions`` and the
     co-located join planner (``sources/colocated.py``)."""
-    dv_map: dict[str, list[int]] = {}
-    if snap.get("dv_index"):
-        import pyarrow.parquet as pq
-
-        dvt = pq.read_table(os.path.join(data_root, "index", snap["dv_index"]))
-        for p, pos in zip(
-            dvt.column("path").to_pylist(), dvt.column("pos").to_pylist()
-        ):
-            dv_map.setdefault(os.path.join(data_root, p), []).append(pos)
-    return dv_map
+    if not snap.dv_index:
+        return {}
+    return {
+        os.path.join(data_root, p): pos
+        for p, pos in _dv_positions(data_root, snap.dv_index).items()
+    }
 
 
 def read_split_arrow(partition: PaimonPartition):
@@ -702,19 +650,22 @@ class PaimonWriter(DataSourceWriter):
 
     Each task writes its rows as parquet (footer stats mirroring
     ``table._footer_stats``) into a staging dir and reports manifest
-    entries; ``commit`` moves files into ``data/`` and performs the same
-    atomic snapshot swap as ``Table._commit_manifest``. Primary-key rows
-    carry (``__seq``, ``__pos``, ``__row_kind``) and land in the bucket
-    directory chosen by ``functions/xxhash.spark_bucket`` — bit-identical
-    to the JVM write path's ``pmod(xxhash64(pks), n)``, so DataSource and
-    Table-API writes interleave safely on one table. The snapshot id is
-    allocated optimistically at writer construction (same contract as
-    ``Table._commit_write``); a racing commit fails on the O_EXCL swap.
+    entries; ``commit`` moves files into ``data/`` and commits them
+    through ``Table._commit_manifest`` — the same manifest write, hard-link
+    snapshot publish, auto-tagging and snapshot retention as every
+    Table-API commit. Primary-key rows carry (``__seq``, ``__pos``,
+    ``__row_kind``) and land in the bucket directory chosen by
+    ``functions/xxhash.spark_bucket`` — bit-identical to the JVM write
+    path's ``pmod(xxhash64(pks), n)``, so DataSource and Table-API writes
+    interleave safely on one table. The snapshot id (one past the highest
+    listed id) is allocated optimistically at writer construction; if a
+    racing commit claims it first, ``commit`` raises ``CommitConflict``.
     """
 
     def __init__(self, options: dict, overwrite: bool):
         self.path = options["path"]  # data root
-        self.meta = _meta_path(self.path, options.get("branch"))
+        self.table = _table(options)
+        self.meta = self.table.meta_path
         self.overwrite = overwrite
         schema = _load_schema(self.meta)
         if schema.get("options", {}).get("file.format", "parquet") != "parquet":
@@ -797,9 +748,12 @@ class PaimonWriter(DataSourceWriter):
                 "Table.upsert()/delete() so the deletion-vector index stays "
                 "consistent"
             )
-        prev = _latest_snapshot(self.meta)
-        self.next_snapshot = (prev["snapshot_id"] + 1) if prev else 1
+        self._allocate_snapshot_id()
         self.staging = os.path.join(self.path, f".staging-ds-{uuid.uuid4().hex}")
+
+    def _allocate_snapshot_id(self) -> None:
+        ids = self.table.snapshot_ids()
+        self.next_snapshot = ids[-1] + 1 if ids else 1
 
     def write(self, iterator) -> PaimonCommitMessage:
         import pyarrow as pa
@@ -929,8 +883,6 @@ class PaimonWriter(DataSourceWriter):
         return PaimonCommitMessage(entries)
 
     def commit(self, messages) -> None:
-        import time as _time
-
         entries = [e for m in messages if m for e in m.entries]
         data_dir = os.path.join(self.path, "data")
         os.makedirs(data_dir, exist_ok=True)
@@ -959,13 +911,7 @@ class PaimonWriter(DataSourceWriter):
             )
         for d in staging_dirs:
             _rmtree(d)
-        # snapshot swap at the pre-allocated id (CommitConflict on a race)
-        prev = _latest_snapshot(self.meta)
-        sid = self.next_snapshot
-        os.makedirs(os.path.join(self.meta, "manifest"), exist_ok=True)
-        os.makedirs(os.path.join(self.meta, "snapshot"), exist_ok=True)
-        stamp = f"{sid}-{uuid.uuid4().hex}"
-        new_entries = final_entries
+        prev = self.table.snapshot()
         if self.overwrite:
             kind = "OVERWRITE"
         else:
@@ -976,55 +922,15 @@ class PaimonWriter(DataSourceWriter):
                 else "APPEND"
             )
             if prev is not None:
-                final_entries = _manifest_entries(self.meta, prev) + final_entries
-        # additive commits write a DELTA member + list (O(batch), not
-        # O(table) — Table._write_manifest's contract); overwrite/first
-        # commits write a full base
-        threshold = int(
-            self.schema.get("options", {}).get(
-                "manifest.full-compaction-threshold", "10")
-        )
-        members: list[str] = []
-        if prev is not None and not self.overwrite:
-            with open(os.path.join(self.meta, "manifest", prev["manifest"])) as fh:
-                pd = json.load(fh)
-            members = pd["manifests"] if "manifests" in pd else [prev["manifest"]]
-        if not members or len(members) + 1 >= threshold:
-            mname = f"manifest-{stamp}.json"
-            with open(os.path.join(self.meta, "manifest", mname), "w") as fh:
-                json.dump({"entries": final_entries}, fh, default=str)
-        else:
-            dname = f"manifest-delta-{stamp}.json"
-            with open(os.path.join(self.meta, "manifest", dname), "w") as fh:
-                json.dump({"adds": new_entries, "removes": []}, fh, default=str)
-            mname = f"manifest-{stamp}.json"
-            with open(os.path.join(self.meta, "manifest", mname), "w") as fh:
-                json.dump({"manifests": members + [dname]}, fh)
-        snap = {
-            "snapshot_id": sid,
-            "schema_id": self.schema["schema_id"],
-            "commit_user": os.environ.get("USER", "spark"),
-            "commit_identifier": sid,
-            "commit_kind": kind,
-            "timestamp_ms": int(_time.time() * 1000),
-            "manifest": mname,
-            "total_rows": sum(e["row_count"] for e in final_entries),
+                final_entries = self.table.manifest_entries(prev) + final_entries
+        # CommitConflict when a racing commit claimed the pre-allocated id
+        self.table._commit_manifest(
+            TableSchema.from_json(self.schema), self.next_snapshot, kind,
+            final_entries,
             # appends never disturb existing row positions: carry the
             # deletion-vector index forward (overwrite resets it)
-            "dv_index": (
-                None
-                if self.overwrite
-                else (prev or {}).get("dv_index")
-            ),
-        }
-        spath = os.path.join(self.meta, "snapshot", f"snapshot-{sid}.json")
-        fd = os.open(spath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        with os.fdopen(fd, "w") as fh:
-            json.dump(snap, fh)
-        tmp = os.path.join(self.meta, "snapshot", f".LATEST.{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            fh.write(str(sid))
-        os.replace(tmp, os.path.join(self.meta, "snapshot", "LATEST"))
+            dv_index=None if self.overwrite or prev is None else prev.dv_index,
+        )
 
     def abort(self, messages) -> None:
         _rmtree(self.staging)
@@ -1039,9 +945,11 @@ class PaimonStreamWriter(PaimonWriter, DataSourceStreamWriter):
 
     The batch writer's optimistic snapshot allocation moves from writer
     construction to per-batch: tasks stamp ``__seq`` from the latest
-    snapshot they observe, and the driver's commit claims that id with
-    the same O_EXCL swap — a racing external commit fails the batch and
-    Spark replays it with fresh stamps.
+    snapshot they observe, and the driver's commit publishes the batch as
+    the snapshot after the latest one through the same hard-link publish
+    as every other commit — if an external commit claims that id between
+    the driver's listing and its link, the commit raises
+    ``CommitConflict``, the batch fails and Spark replays it.
     """
 
     def __init__(self, options: dict, overwrite: bool):
@@ -1063,8 +971,7 @@ class PaimonStreamWriter(PaimonWriter, DataSourceStreamWriter):
     def write(self, iterator):
         # re-resolve the target snapshot per micro-batch (the batch writer
         # pins it once at construction; a stream commits many times)
-        prev = _latest_snapshot(self.meta)
-        self.next_snapshot = (prev["snapshot_id"] + 1) if prev else 1
+        self._allocate_snapshot_id()
         return super().write(iterator)
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803
@@ -1081,8 +988,7 @@ class PaimonStreamWriter(PaimonWriter, DataSourceStreamWriter):
                     except FileNotFoundError:
                         pass
             return
-        prev = _latest_snapshot(self.meta)
-        self.next_snapshot = (prev["snapshot_id"] + 1) if prev else 1
+        self._allocate_snapshot_id()
         PaimonWriter.commit(self, messages)
         os.makedirs(os.path.dirname(self._batches_path()), exist_ok=True)
         done.add(int(batchId))
@@ -1142,7 +1048,8 @@ class PaimonStreamReader(DataSourceStreamReader):
 
     def __init__(self, options: dict):
         self.path = options["path"]
-        self.meta = _meta_path(self.path, options.get("branch"))
+        self.table = _table(options)
+        self.meta = self.table.meta_path
         self.schema_json = _load_schema(self.meta)
         self.consumer = options.get("consumer-id") or options.get("consumer_id")
         self.starting = options.get("startingoffsets", options.get(
@@ -1157,69 +1064,51 @@ class PaimonStreamReader(DataSourceStreamReader):
                     "from-snapshot and startingOffsets=latest are exclusive")
             self.from_snapshot = int(self.from_snapshot)
 
-    def _ids(self) -> list[int]:
-        sdir = os.path.join(self.meta, "snapshot")
-        if not os.path.isdir(sdir):
-            return []
-        return sorted(
-            int(f[len("snapshot-"):-len(".json")])
-            for f in os.listdir(sdir)
-            if f.startswith("snapshot-") and f.endswith(".json")
-        )
-
-    def _snap(self, sid: int) -> dict:
-        with open(os.path.join(self.meta, "snapshot", f"snapshot-{sid}.json")) as fh:
-            return json.load(fh)
-
     def initialOffset(self) -> dict:
         if self.consumer:
-            cpath = os.path.join(
-                self.meta, "consumer", f"consumer-{self.consumer}.json"
-            )
-            if os.path.exists(cpath):
-                with open(cpath) as fh:
-                    return {"snapshot": json.load(fh)["next_snapshot"] - 1}
+            nxt = self.table.list_consumers().get(self.consumer)
+            if nxt is not None:
+                return {"snapshot": nxt - 1}
         if self.from_snapshot is not None:
             return {"snapshot": max(0, self.from_snapshot - 1)}
         if str(self.starting).lower() == "latest":
-            ids = self._ids()
-            return {"snapshot": ids[-1] if ids else 0}
+            return self.latestOffset()
         return {"snapshot": 0}
 
     def latestOffset(self) -> dict:
-        ids = self._ids()
+        ids = self.table.snapshot_ids()
         return {"snapshot": ids[-1] if ids else 0}
 
     def partitions(self, start: dict, end: dict) -> Sequence[PaimonStreamPartition]:
         lo, hi = start["snapshot"], end["snapshot"]
         producer = self.schema_json.get("options", {}).get("changelog-producer")
-        ids = [i for i in self._ids() if lo < i <= hi]
+        t = self.table
+        all_ids = t.snapshot_ids()
+        ids = [i for i in all_ids if lo < i <= hi]
         parts: list[PaimonStreamPartition] = []
         prev_paths: set[str] | None = None
         prev_dv: str | None = None
-        if lo in self._ids():
-            base = self._snap(lo)
-            prev_dv = base.get("dv_index")
+        if lo in all_ids:
+            prev_dv = t.snapshot(lo).dv_index
         for sid in ids:
-            snap = self._snap(sid)
-            schema = _load_schema(self.meta, snap["schema_id"])
-            entries = _manifest_entries(self.meta, snap)
+            snap = t.snapshot(sid)
+            schema = _load_schema(self.meta, snap.schema_id)
+            entries = t.manifest_entries(snap)
             if producer == "lookup":
-                if snap.get("changelog"):
+                if snap.changelog:
                     parts.append(PaimonStreamPartition(
                         "clg", self.meta, schema, sid,
                         clg_dir=os.path.join(
-                            self.meta, "changelog", snap["changelog"]),
+                            self.meta, "changelog", snap.changelog),
                     ))
                 prev_paths = {e["path"] for e in entries}
-                prev_dv = snap.get("dv_index")
+                prev_dv = snap.dv_index
                 continue
-            if snap["commit_kind"] != "COMPACT":
+            if snap.commit_kind != "COMPACT":
                 if prev_paths is None:
                     prev_paths = (
-                        {e["path"] for e in
-                         _manifest_entries(self.meta, self._snap(sid - 1))}
-                        if sid - 1 in self._ids()
+                        {e["path"] for e in t.manifest_entries(t.snapshot(sid - 1))}
+                        if sid - 1 in all_ids
                         else set()
                     )
                 new = [e for e in entries if e["path"] not in prev_paths]
@@ -1231,7 +1120,7 @@ class PaimonStreamReader(DataSourceStreamReader):
                     ))
                 # deletion-vector diff: positions newly marked dead in this
                 # commit come back as D rows (lossless, like incremental_df)
-                dv = snap.get("dv_index")
+                dv = snap.dv_index
                 if dv and dv != prev_dv:
                     diff = _dv_positions(self.path, dv)
                     if prev_dv:
@@ -1252,7 +1141,7 @@ class PaimonStreamReader(DataSourceStreamReader):
                             positions=by_schema,
                         ))
             prev_paths = {e["path"] for e in entries}
-            prev_dv = snap.get("dv_index")
+            prev_dv = snap.dv_index
         return parts
 
     def read(self, partition: PaimonStreamPartition):
@@ -1318,20 +1207,8 @@ class PaimonStreamReader(DataSourceStreamReader):
         return finalize(tbl, partition.seq, "I")
 
     def commit(self, end: dict) -> None:
-        if not self.consumer:
-            return
-        cdir = os.path.join(self.meta, "consumer")
-        os.makedirs(cdir, exist_ok=True)
-        import time as _time
-
-        tmp = os.path.join(cdir, f".consumer-{self.consumer}.{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"next_snapshot": int(end["snapshot"]) + 1,
-                 "update_ms": int(_time.time() * 1000)},
-                fh,
-            )
-        os.replace(tmp, os.path.join(cdir, f"consumer-{self.consumer}.json"))
+        if self.consumer:
+            self.table.register_consumer(self.consumer, int(end["snapshot"]) + 1)
 
 
 _SEQ = "__seq"
@@ -1361,8 +1238,6 @@ def spark_ddl_type(t: str) -> str:
     sources rejects Char/VarcharType."""
     import re as _re
 
-    from paimon_presto_spark.table import _is_time_type
-
     if _is_time_type(t):
         return "bigint"
     if _re.match(r"^\s*(var)?char\s*\(\s*\d+\s*\)\s*$", t, _re.I):
@@ -1381,9 +1256,7 @@ class PaimonDataSource(DataSource):
         return "paimon"
 
     def schema(self) -> str:
-        schema = _load_schema(
-            _meta_path(self.options["path"], self.options.get("branch"))
-        )
+        schema = _load_schema(_table(self.options).meta_path)
         cols = ", ".join(
             f"`{f['name']}` {spark_ddl_type(f['type'])}"
             for f in schema["fields"]

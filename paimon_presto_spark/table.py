@@ -22,15 +22,19 @@ Storage layout (one directory per table)::
 
     schema/schema-<id>.json      column list w/ stable field ids, pks, partition keys, options
     snapshot/snapshot-<id>.json  commit metadata -> manifest file
-    snapshot/LATEST              current snapshot id (advisory pointer)
     manifest/manifest-<id>.json  FULL file listing at that snapshot + per-file column stats
     data/...                     parquet data files (immutable)
 
-Commits are atomic: the snapshot JSON is created with O_EXCL, so two
-concurrent committers cannot both claim snapshot N — the loser re-plans
-against the winner's manifest and retries (the reference gets the same
-read-committed, snapshot-isolated behavior from immutable Paimon snapshots
-— ``PrestoConnectorBase.java:70-97``).
+The latest snapshot is the highest listed id; there is no pointer file.
+Commits are atomic: ``Table._publish_snapshot`` writes the snapshot JSON
+to a temp file and hard-links it to ``snapshot-<id>.json``. The link
+appears whole or not at all, so no reader and no crash ever sees a
+partial snapshot, and two concurrent committers cannot both claim
+snapshot N — the loser's link fails, it re-plans against the winner's
+manifest and retries (the reference gets the same read-committed,
+snapshot-isolated behavior from immutable Paimon snapshots —
+``PrestoConnectorBase.java:70-97``). Every writer, the Spark DataSource
+included, commits through this one path.
 
 Scale notes:
 - Data I/O is always Spark (``df.write.parquet`` / ``spark.read.parquet``);
@@ -297,6 +301,11 @@ def schema_from_spark(
 
 class CommitConflict(Exception):
     pass
+
+
+# name prefix of a snapshot payload before ``Table._publish_snapshot``
+# links it into place (never matches ``snapshot-*.json``)
+_SNAPSHOT_TMP_PREFIX = ".snapshot-tmp-"
 
 
 # folded manifest listings keyed by (meta_path, manifest file name) —
@@ -1971,16 +1980,9 @@ class Table:
             raise ValueError(f"branch {name!r} already exists")
         sdir = os.path.join(self.meta_path, "schema")
         os.makedirs(os.path.join(bdir, "schema"))
-        os.makedirs(os.path.join(bdir, "snapshot"))
         os.makedirs(os.path.join(bdir, "manifest"))
         for fn in os.listdir(sdir):  # all schema versions (files reference them)
             _copyfile(os.path.join(sdir, fn), os.path.join(bdir, "schema", fn))
-        with open(
-            os.path.join(bdir, "snapshot", f"snapshot-{snap.snapshot_id}.json"), "w"
-        ) as fh:
-            json.dump(snap.to_json(), fh)
-        with open(os.path.join(bdir, "snapshot", "LATEST"), "w") as fh:
-            fh.write(str(snap.snapshot_id))
         for m in self._manifest_members(snap):
             _copyfile(
                 os.path.join(self.meta_path, "manifest", m),
@@ -1992,7 +1994,9 @@ class Table:
                  "create_ms": int(time.time() * 1000)},
                 fh,
             )
-        return Table(self.spark, self.path, branch=name)
+        branch = Table(self.spark, self.path, branch=name)
+        branch._publish_snapshot(snap)
+        return branch
 
     def branch(self, name: str) -> "Table":
         if not os.path.isdir(self._branch_dir(name)):
@@ -2061,18 +2065,8 @@ class Table:
                 dst = os.path.join(self.meta_path, "manifest", m)
                 if not os.path.exists(dst):
                     _copyfile(os.path.join(b.meta_path, "manifest", m), dst)
-            spath = os.path.join(self.meta_path, "snapshot", f"snapshot-{sid}.json")
-            try:
-                fd = os.open(spath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            except FileExistsError as exc:  # concurrent main commit raced us
-                raise CommitConflict(str(exc)) from exc
-            with os.fdopen(fd, "w") as fh:
-                json.dump(snap.to_json(), fh)
+            self._publish_snapshot(snap)  # CommitConflict if main raced us
             last = snap
-        tmp = os.path.join(self.meta_path, "snapshot", f".LATEST.{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            fh.write(str(last.snapshot_id))
-        os.replace(tmp, os.path.join(self.meta_path, "snapshot", "LATEST"))
         return last
 
     def expire_snapshots(self, keep_last: int = 10) -> list[int]:
@@ -2227,10 +2221,6 @@ class Table:
                 os.remove(self._stats_path(sid))
             except FileNotFoundError:
                 pass
-        tmp = os.path.join(self.meta_path, "snapshot", f".LATEST.{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            fh.write(str(snapshot_id))
-        os.replace(tmp, os.path.join(self.meta_path, "snapshot", "LATEST"))
 
     def incremental_between_timestamps(
         self, start_ms: int, end_ms: int | None = None
@@ -2446,7 +2436,8 @@ class Table:
     def remove_orphan_files(self, older_than_ms: int | None = None) -> list[str]:
         """Delete data files no lineage references (Paimon's
         remove-orphan-files action): files stranded by deleted branches,
-        crashed writers, or interrupted commits.
+        crashed writers, or interrupted commits — including staging dirs
+        and unpublished snapshot temp files.
 
         `older_than_ms` (epoch millis) guards in-flight writers: only files
         modified before it are candidates (default: one hour ago). Scans
@@ -2510,6 +2501,19 @@ class Table:
                     continue
                 _rmtree_quiet(full)
                 removed.append(name)
+        # snapshot payloads of committers killed before the publish link
+        for t in lineages:
+            sdir = os.path.join(t.meta_path, "snapshot")
+            if not os.path.isdir(sdir):
+                continue
+            for name in os.listdir(sdir):
+                full = os.path.join(sdir, name)
+                if not name.startswith(_SNAPSHOT_TMP_PREFIX):
+                    continue
+                if os.path.getmtime(full) * 1000 >= older_than_ms:
+                    continue
+                os.remove(full)
+                removed.append(os.path.relpath(full, self.path))
         return sorted(removed)
 
     def _commit_meta(
@@ -2843,7 +2847,6 @@ class Table:
         changelog: str | None = None, commit_identifier: int | None = None,
     ) -> Snapshot:
         os.makedirs(os.path.join(self.meta_path, "manifest"), exist_ok=True)
-        os.makedirs(os.path.join(self.meta_path, "snapshot"), exist_ok=True)
         manifest_name = self._write_manifest(schema, snapshot_id, entries)
         snap = Snapshot(
             snapshot_id=snapshot_id,
@@ -2861,20 +2864,34 @@ class Table:
             bucket_index=bucket_index,
             changelog=changelog,
         )
-        spath = os.path.join(self.meta_path, "snapshot", f"snapshot-{snapshot_id}.json")
-        try:
-            fd = os.open(spath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError as exc:  # concurrent commit won this id
-            raise CommitConflict(str(exc)) from exc
-        with os.fdopen(fd, "w") as fh:
-            json.dump(snap.to_json(), fh)
-        tmp = os.path.join(self.meta_path, "snapshot", f".LATEST.{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            fh.write(str(snapshot_id))
-        os.replace(tmp, os.path.join(self.meta_path, "snapshot", "LATEST"))
+        self._publish_snapshot(snap)
         self._maybe_auto_tag(schema, snapshot_id)
         self._maybe_auto_expire(schema)
         return snap
+
+    def _publish_snapshot(self, snap: Snapshot) -> None:
+        """Make `snap` visible as ``snapshot-<id>.json`` — the only code
+        that creates snapshot files. The payload goes to a temp file whose
+        name never matches ``snapshot-*.json``, which is then hard-linked
+        to the final name: a link happens whole or not at all, so readers
+        and crashes see the old snapshot or the new one, never a partial
+        file. An id another committer already holds raises
+        ``CommitConflict``. A writer killed before the link leaves only
+        the temp file, which ``remove_orphan_files`` sweeps."""
+        payload = json.dumps(snap.to_json())
+        sdir = os.path.join(self.meta_path, "snapshot")
+        os.makedirs(sdir, exist_ok=True)
+        tmp = os.path.join(sdir, f"{_SNAPSHOT_TMP_PREFIX}{uuid.uuid4().hex}")
+        with open(tmp, "w") as fh:
+            fh.write(payload)
+        try:
+            os.link(tmp, os.path.join(sdir, f"snapshot-{snap.snapshot_id}.json"))
+        except FileExistsError as exc:  # a concurrent commit won this id
+            raise CommitConflict(
+                f"snapshot {snap.snapshot_id} of {self.meta_path} already exists"
+            ) from exc
+        finally:
+            os.remove(tmp)
 
     def _maybe_auto_expire(self, schema: TableSchema) -> None:
         """Paimon's per-commit snapshot retention: with

@@ -1,5 +1,6 @@
 import os
 import sys
+import warnings
 
 import pytest
 
@@ -112,7 +113,19 @@ _SLOW_TESTS = {
 
 
 def pytest_collection_modifyitems(config, items):
+    files, ids = set(), set()
     for item in items:
         path = item.nodeid.split("::")[0]
+        files.add(path)
+        ids.add(item.nodeid)
         if path in _SLOW_FILES or item.nodeid in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    # a renamed or deleted test silently un-marks nothing: flag ledger
+    # entries whose file was collected in full but matched no test
+    picked = {a.split("::")[0] for a in config.args if "::" in a}
+    for nodeid in sorted(_SLOW_TESTS - ids):
+        path = nodeid.split("::")[0]
+        if path in files and path not in picked:
+            warnings.warn(pytest.PytestWarning(
+                f"stale _SLOW_TESTS entry {nodeid!r}: no such test in {path}"
+            ))

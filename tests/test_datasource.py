@@ -613,3 +613,24 @@ def test_stream_from_snapshot_startup(registered, spark, catalog, tmp_path):
     q.awaitTermination(120)
     got = sorted((r["__seq"], r["k"]) for r in spark.table("ds_fs_out").collect())
     assert got == [(3, 2), (4, 3)]  # snapshots 3 and 4 only
+
+
+def test_writer_commit_race_raises_commit_conflict(spark, catalog):
+    """The DataSource writer pre-allocates its snapshot id; when a Table
+    commit claims that id first, ``commit`` loses the publish race with
+    a ``CommitConflict`` and the winner's snapshot is untouched."""
+    from pyspark.sql import Row
+
+    from paimon_presto_spark.sources.datasource import PaimonWriter
+    from paimon_presto_spark.table import CommitConflict
+
+    t = catalog.create_table("default", "ds_race", "a int")
+    t.append(spark.createDataFrame([(1,)], "a int"))
+    w = PaimonWriter({"path": t.path}, overwrite=False)
+    assert w.next_snapshot == 2
+    msg = w.write(iter([Row(a=5)]))
+    t.append(spark.createDataFrame([(2,)], "a int"))  # claims snapshot 2
+    with pytest.raises(CommitConflict):
+        w.commit([msg])
+    assert t.snapshot_ids() == [1, 2]
+    assert sorted(r["a"] for r in t.to_df().collect()) == [1, 2]

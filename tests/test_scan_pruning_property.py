@@ -108,8 +108,6 @@ def test_commit_conflict_retries_and_preserves_both_writers(spark, catalog):
             },
             fh,
         )
-    with open(os.path.join(t.path, "snapshot", "LATEST"), "w") as fh:
-        fh.write("2")
 
     # our commit must land as snapshot 3 and keep the intruder's rows
     t.append(spark.createDataFrame([(7,)], "a int"))

@@ -1198,14 +1198,23 @@ def test_remove_orphan_files(spark, catalog):
     t.compact()  # snapshot 2 on main: fresh rewrite of (1,)
     t.expire_snapshots(keep_last=1)  # drops main snapshot 1 (file shared w/ dev)
     dev_only = {e["path"] for e in t.branch("dev").manifest_entries()}
+    # a committer killed before publishing leaves its snapshot temp file
+    from paimon_presto_spark.table import _SNAPSHOT_TMP_PREFIX
+
+    stale = os.path.join("snapshot", f"{_SNAPSHOT_TMP_PREFIX}dead")
+    with open(os.path.join(t.path, stale), "w") as fh:
+        fh.write("{}")
 
     # age guard: nothing deleted when everything is fresh
     assert t.remove_orphan_files() == []
     t.delete_branch("dev")
     # cutoff in the future → dev-only files now orphaned and old enough
     removed = t.remove_orphan_files(older_than_ms=int(_time.time() * 1000) + 10_000)
+    assert stale in removed and not os.path.exists(os.path.join(t.path, stale))
+    removed.remove(stale)
     assert set(removed) <= dev_only and removed  # only ex-branch files went
     assert rows(t.to_df()) == [(1,)]  # main state intact
+    assert t.snapshot_ids() == [2]
 
 
 def test_rescale_bucket(spark, catalog):
@@ -1743,11 +1752,26 @@ class TestConcurrentCommits:
     def test_parallel_appends_all_land(self, spark, catalog):
         """A22 snapshot isolation under contention: N threads append
         concurrently; every commit either lands atomically or retries —
-        no lost rows, no duplicate snapshot ids, contiguous history."""
+        no lost rows, no duplicate snapshot ids, contiguous history. A
+        reader polling the latest snapshot and its manifest meanwhile
+        never sees a partial snapshot."""
         import threading
 
         t = catalog.create_table("default", "cc1", "w int, v int")
         errs = []
+        read_errs = []
+        done = threading.Event()
+
+        def reader():
+            while not done.is_set():
+                try:
+                    t.manifest_entries(t.snapshot())
+                except Exception as e:  # pragma: no cover - failure detail
+                    read_errs.append(e)
+                time.sleep(0.001)
+
+        poller = threading.Thread(target=reader)
+        poller.start()
 
         def writer(w):
             try:
@@ -1762,7 +1786,10 @@ class TestConcurrentCommits:
             th.start()
         for th in threads:
             th.join()
+        done.set()
+        poller.join()
         assert not errs
+        assert not read_errs
         ids = t.snapshot_ids()
         assert ids == list(range(1, 7))          # contiguous, no gaps
         assert t.to_df().count() == 60           # nothing lost
@@ -1774,6 +1801,38 @@ class TestConcurrentCommits:
         # every snapshot reads a consistent prefix (10 * k rows)
         for sid in ids:
             assert t.to_df(snapshot_id=sid).count() == 10 * sid
+
+    def test_crash_before_publish_keeps_previous_snapshot(
+        self, spark, catalog, monkeypatch
+    ):
+        """A committer that dies after writing its manifest but before
+        publishing the snapshot leaves no trace readers can see: the
+        Table API and the DataSource both still answer the previous
+        snapshot, and the next commit takes the unclaimed id."""
+        from paimon_presto_spark.sources.datasource import PaimonDataSource
+        from paimon_presto_spark.table import Snapshot
+
+        t = catalog.create_table("default", "crash1", "a int")
+        t.append(spark.createDataFrame([(1,)], "a int"))
+        real_to_json = Snapshot.to_json
+        calls = []
+
+        def crash_once(snap):
+            calls.append(snap.snapshot_id)
+            if len(calls) == 1:
+                raise OSError("injected crash during commit")
+            return real_to_json(snap)
+
+        monkeypatch.setattr(Snapshot, "to_json", crash_once)
+        with pytest.raises(OSError, match="injected"):
+            t.append(spark.createDataFrame([(2,)], "a int"))
+        assert calls == [2]
+        assert t.snapshot().snapshot_id == 1
+        spark.dataSource.register(PaimonDataSource)
+        assert spark.read.format("paimon").option("path", t.path).load().count() == 1
+        t.append(spark.createDataFrame([(3,)], "a int"))
+        assert t.snapshot().snapshot_id == 2
+        assert rows(t.to_df()) == [(1,), (3,)]
 
 
 class TestAutoExpiry:
@@ -1814,6 +1873,26 @@ class TestAutoExpiry:
         t.drop_consumer("lag")
         t.upsert(spark.createDataFrame([(9,)], "k int"))
         assert t.snapshot_ids()[0] > 1
+
+    def test_datasource_writes_apply_retention_and_auto_tags(
+        self, spark, catalog
+    ):
+        """Commits through ``df.write.format("paimon")`` run the same
+        per-commit retention and auto-tagging as Table-API commits."""
+        from paimon_presto_spark.sources.datasource import PaimonDataSource
+
+        spark.dataSource.register(PaimonDataSource)
+        t = catalog.create_table(
+            "default", "ae4", "k int",
+            options={"snapshot.num-retained.max": "3",
+                     "tag.automatic-creation": "process-time"},
+        )
+        for i in range(5):
+            spark.createDataFrame([(i,)], "k int").write.format("paimon").option(
+                "path", t.path).mode("append").save()
+        assert t.snapshot_ids() == [3, 4, 5]
+        assert rows(t.to_df()) == [(i,) for i in range(5)]
+        assert t.list_tags()  # the period's first commit pinned a tag
 
 
 class TestCharPadding:
