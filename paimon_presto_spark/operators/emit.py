@@ -165,10 +165,13 @@ def tokenized_sequences(
         # across join sides, so this subtree re-scans the input: count
         # tokens from the raw text (split size — identical to
         # size(__ids) because transform preserves length) instead of
-        # re-hashing every token through md5 a second time.
-        m_cheap = F.size(F.split(F.col(text_col), " "))
+        # re-hashing every token through md5 a second time. The EOS slot
+        # is counted through the same concat as __ids, so a NULL text
+        # stays NULL in both (size(NULL) is -1 with ANSI off, not 0).
+        words = F.split(F.col(text_col), " ")
         if eos_id is not None:
-            m_cheap = m_cheap + F.lit(1)
+            words = F.concat(words, F.array(F.lit("")))
+        m_cheap = F.size(words)
         bases = (
             docs.select(
                 F.col(source_col).alias("source"),

@@ -46,8 +46,6 @@ vectors and all. Missing right buckets yield null-extended rows under
 
 from __future__ import annotations
 
-import json
-import os
 from collections.abc import Sequence
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
@@ -56,8 +54,7 @@ from paimon_presto_spark.sources.datasource import (
     PaimonPartition,
     PaimonReader,
     _arrow_type,
-    _load_schema,
-    dv_index_map,
+    _scan,
     read_split_arrow,
     spark_ddl_type,
 )
@@ -75,48 +72,21 @@ def _side_options(options: dict, side: str) -> dict:
 
 
 def _side_schema(options: dict, side: str) -> dict:
-    """The SNAPSHOT-resolved schema for one side — honors the same
-    ``<side>_snapshot`` / ``<side>_tag`` / ``<side>_as-of-timestamp-ms``
-    time-travel options the planner does, so the declared read schema can
-    never diverge from the batches the splits emit under schema
-    evolution."""
-    r = PaimonReader(_side_options(options, side))
-    snap = r._snapshot()
-    if snap is None:
-        return _load_schema(r.meta)
-    return _load_schema(r.meta, snap.schema_id)
+    """One side's render schema — ``TableScan.render_schema`` under the
+    side's ``<side>_snapshot`` / ``<side>_tag`` / ``<side>_as-of-timestamp-ms``
+    options, the same rule the splits of ``_plan_side`` are rendered in."""
+    return _scan(_side_options(options, side)).render_schema().to_json()
 
 
 def _plan_side(options: dict, side: str, rename: dict[str, str] | None = None):
-    """(schema, {(partition_json, bucket): PaimonPartition}) for one side.
+    """(schema, {(partition_json, bucket): PaimonPartition}) for one side —
+    the DataSource reader's own split plan (``PaimonReader.plan_splits``).
 
     ``rename`` maps this side's partition column names to the LEFT side's
     names before the group key is serialized, so the two sides' keys
     compare under one naming (``right_on`` keys may differ from
     ``left_on``)."""
-    r = PaimonReader(_side_options(options, side))
-    snap = r._snapshot()
-    if snap is None:
-        return _load_schema(r.meta), {}
-    schema = _load_schema(r.meta, snap.schema_id)
-    entries = r.table.manifest_entries(snap)
-    data_root = options[side]
-    dv_map = dv_index_map(data_root, snap)
-    merge = schema.get("options", {}).get("merge-engine", "deduplicate")
-    groups: dict[tuple[str, int], list[tuple[str, int]]] = {}
-    for e in entries:
-        part = e["partition"]
-        if rename:
-            part = {rename.get(k, k): v for k, v in part.items()}
-        key = (json.dumps(part, sort_keys=True), e["bucket"])
-        groups.setdefault(key, []).append(
-            (os.path.join(data_root, e["path"]), e["schema_id"])
-        )
-    parts = {}
-    for key, files in groups.items():
-        dv = {f: dv_map[f] for f, _ in files if f in dv_map} or None
-        parts[key] = PaimonPartition(r.meta, files, merge, schema, dv)
-    return schema, parts
+    return PaimonReader(_side_options(options, side)).plan_splits(rename)
 
 
 def _field_types(schema: dict) -> dict[str, str]:
@@ -352,7 +322,7 @@ class ColocatedJoinReader(DataSourceReader):
         # right-only buckets contribute nothing under inner/left join
         return splits or [
             ColocatedSplit(
-                PaimonPartition("", [], None, {"fields": []}),
+                PaimonPartition(None, [], None, {"fields": []}),
                 None, self.left_on, self.right_on, self.how,
                 self.rschema, self.out,
             )
@@ -399,25 +369,6 @@ class ColocatedJoinDataSource(DataSource):
         return "paimon_colocated"
 
     def schema(self) -> str:
-        # Pin each side's snapshot at schema time (unless the caller
-        # already time-travels): the pin rides the existing
-        # ``<side>_snapshot`` option into the pickled DataSource, so
-        # reader() plans the EXACT snapshot the declared schema came
-        # from — a commit landing between schema() and reader() can no
-        # longer diverge the declared schema from the emitted batches,
-        # and reader() reuses the resolution instead of re-walking the
-        # snapshot directory.
-        for side in ("left", "right"):
-            pinned = any(
-                self.options.get(f"{side}_{k}") is not None
-                for k in ("snapshot", "tag", "as-of-timestamp-ms")
-            )
-            if not pinned:
-                snap = PaimonReader(
-                    _side_options(self.options, side)
-                )._snapshot()
-                if snap is not None:
-                    self.options[f"{side}_snapshot"] = str(snap.snapshot_id)
         lschema = _side_schema(self.options, "left")
         rschema = _side_schema(self.options, "right")
         lon = [c.strip() for c in self.options["left_on"].split(",")]

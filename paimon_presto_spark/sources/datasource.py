@@ -7,31 +7,32 @@ per-split readers `PrestoPageSourceProvider.java:43-86` — re-expressed on
 Spark's `pyspark.sql.datasource` SPI):
 
 - ``PaimonDataSource.schema``   — table resolution from the warehouse path
-  (plain-Python manifest reads; no SparkSession needed on the driver hook).
+  through a Spark-less ``Table`` (no SparkSession needed on the planner
+  hook). The declared schema is ``TableScan.render_schema``: the latest
+  schema for current reads, the snapshot's schema for time travel
+  (``snapshot`` / ``tag`` / ``as-of-timestamp-ms``) — the same rule
+  ``Table.to_df`` renders with, so declared and emitted columns agree.
 - ``PaimonReader.pushFilters``  — receives Catalyst's pushed filters,
   converts the supported subset (=, <, <=, >, >=, IN, IS [NOT] NULL — the
   exact set of ``PrestoFilterConverter.java:71-186``) into our structured
-  predicate for partition pruning + manifest-stat file skipping. All
-  filters are RETURNED to Spark so it re-applies them — advisory pushdown,
-  like the reference keeping the Filter node (`PrestoComputePushdown
-  .java:283-284`).
-- ``PaimonReader.partitions``   — one input partition per (partition,
-  bucket) group for primary-key tables, one per file for append-only.
-
-KNOWN UPSTREAM HAZARD (Spark 4.1.2, pinned by tests/test_pushdown_reuse
-.py): Spark caches a Python data source's planned partitions per
-``.load()`` handle and re-runs pushdown planning only when the current
-query carries a convertible filter — so on a REUSED handle, a filterless
-scan silently reuses the last filtered scan's PRUNED plan and drops rows.
-Use one ``.load()`` per query (``Table.to_df()`` and ``colocated_join()``
-already do); never cache and re-filter one handle.
-- ``PaimonReader.read``         — pyarrow parquet scan per partition,
-  yielding Arrow RecordBatches; primary-key groups are merged IN the
-  partition (pandas), which is the **shuffle-free merge-on-read**: bucketed
-  writes guarantee every version of a key lives in one bucket, so the merge
-  never crosses partition boundaries. (The DataFrame-path ``Table.to_df``
-  merges with a window over a shuffle instead; this reader is the
-  bucket-aligned variant SURVEY §7 risk 5 calls for.)
+  predicate. All filters are RETURNED to Spark so it re-applies them —
+  advisory pushdown, like the reference keeping the Filter node
+  (`PrestoComputePushdown.java:283-284`).
+- ``PaimonReader.partitions``   — planning is ``TableScan.plan_files``
+  (snapshot selection, partition pruning, stats and bloom-filter file
+  skipping, the primary-key skip-safety rule); the reader only groups
+  the surviving files into splits: one per (partition, bucket) for
+  primary-key tables, one per file for append-only tables, each with its
+  subset of the deletion-vector index.
+- ``PaimonReader.read``         — pyarrow scan per split, yielding Arrow
+  RecordBatches in the render schema; primary-key groups are merged IN
+  the split (pandas), which is the **shuffle-free merge-on-read**:
+  bucketed writes guarantee every version of a key lives in one bucket,
+  so the merge never crosses split boundaries. (The DataFrame-path
+  ``Table.to_df`` merges with a window over a shuffle instead; this
+  reader is the bucket-aligned variant SURVEY §7 risk 5 calls for.)
+- ``PaimonStreamReader``        — snapshot-id offsets over
+  ``Table.commit_walk``, the commit walk ``Table.incremental_df`` uses.
 - ``PaimonWriter``              — task-parallel writes: append/overwrite
   for plain tables, upsert/delete (``option("rowkind", "D")``) for
   primary-key tables. Each task writes parquet files + footer stats and
@@ -41,6 +42,14 @@ already do); never cache and re-filter one handle.
   assignment uses ``functions/xxhash.spark_bucket`` — a pure-Python XXH64
   bit-identical to the JVM ``pmod(xxhash64(pks), n)`` — so DataSource and
   Table-API writes interleave on one table with a consistent bucket layout.
+
+KNOWN UPSTREAM HAZARD (Spark 4.1.2, pinned by tests/test_pushdown_reuse
+.py): Spark caches a Python data source's planned partitions per
+``.load()`` handle and re-runs pushdown planning only when the current
+query carries a convertible filter — so on a REUSED handle, a filterless
+scan silently reuses the last filtered scan's PRUNED plan and drops rows.
+Use one ``.load()`` per query (``Table.to_df()`` and ``colocated_join()``
+already do); never cache and re-filter one handle.
 
 Scale: planning cost is manifest-bounded (driver), reads are Arrow-batched
 per task, and the number of input partitions = buckets × partitions, the
@@ -74,11 +83,11 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from paimon_presto_spark.plans import fileindex
-from paimon_presto_spark.plans.predicate import P, Predicate, skip_safe_predicate
+from paimon_presto_spark.plans.predicate import P, Predicate
 from paimon_presto_spark.table import (
     Snapshot,
     Table,
+    TableScan,
     TableSchema,
     _char_len,
     _is_time_type,
@@ -88,27 +97,15 @@ from paimon_presto_spark.table import (
 
 def _table(options: dict) -> Table:
     """The lineage the options name — the table dir, or its
-    ``option("branch")`` fork — as a Spark-less ``Table``. Every snapshot
-    and manifest read and every commit of this module goes through it,
-    so the DataSource and the DataFrame API share one commit protocol
-    (data files always stay under the table dir)."""
+    ``option("branch")`` fork — as a Spark-less ``Table``. Every schema,
+    snapshot and manifest read and every commit of this module goes
+    through it, so the DataSource and the DataFrame API share one read
+    planner and one commit protocol (data files always stay under the
+    table dir)."""
     t = Table(None, options["path"])
     branch = options.get("branch")
-    return t.branch(branch) if branch else t
-
-
-def _load_schema(path: str, schema_id: int | None = None) -> dict:
-    sdir = os.path.join(path, "schema")
-    if schema_id is None:
-        ids = [
-            int(f.split("-")[1].split(".")[0])
-            for f in os.listdir(sdir)
-            if f.startswith("schema-")
-        ]
-        schema_id = max(ids)
-    with open(os.path.join(sdir, f"schema-{schema_id}.json")) as fh:
-        schema = json.load(fh)
-    fmt = schema.get("options", {}).get("file.format", "parquet")
+    t = t.branch(branch) if branch else t
+    fmt = t.schema().options.get("file.format", "parquet")
     if fmt not in ("parquet", "orc", "avro"):
         # The per-split readers are pyarrow parquet/orc plus the
         # pure-Python avro codec — the full declared option surface
@@ -117,7 +114,23 @@ def _load_schema(path: str, schema_id: int | None = None) -> dict:
             f"paimon DataSource supports file.format=parquet, orc or avro"
             f" (table has {fmt!r})"
         )
-    return schema
+    return t
+
+
+def _scan(options: dict, predicate: Predicate | None = None) -> TableScan:
+    """The ``TableScan`` a batch read's options name: ``snapshot``,
+    ``tag`` or ``as-of-timestamp-ms`` time travel (mutually exclusive,
+    checked by ``Table.scan``) over the ``_table`` lineage."""
+
+    def opt_int(key: str) -> int | None:
+        return int(options[key]) if key in options else None
+
+    return _table(options).scan(
+        predicate,
+        snapshot_id=opt_int("snapshot"),
+        as_of_timestamp_ms=opt_int("as-of-timestamp-ms"),
+        tag=options.get("tag"),
+    )
 
 
 def _arrow_type(ddl: str):
@@ -203,27 +216,6 @@ def _cast_to_schema(tbl, schema: dict, writing: bool = False):
     return tbl
 
 
-def _typed_partition_json(partition: dict, schema: dict) -> dict:
-    """Partition dir values (strings) → typed values per the schema JSON
-    (mirror of ``table._typed_partition`` without a TableSchema object)."""
-    types = {f["name"]: f["type"] for f in schema["fields"]}
-    out = {}
-    for k, raw in partition.items():
-        t = types.get(k, "string")
-        if raw is None or raw == "__HIVE_DEFAULT_PARTITION__":
-            out[k] = None
-        elif t in ("tinyint", "smallint", "int", "bigint") or _is_time_type(t):
-            # TIME partitions by its physical micros-since-midnight long
-            out[k] = int(raw)
-        elif t in ("float", "double"):
-            out[k] = float(raw)
-        elif t == "boolean":
-            out[k] = str(raw).lower() == "true"
-        else:
-            out[k] = raw
-    return out
-
-
 def _filters_to_predicate(filters: Sequence[Filter]) -> Predicate | None:
     """Convert Spark's pushed filters (ANDed) to our predicate AST.
 
@@ -269,37 +261,23 @@ def _filters_to_predicate(filters: Sequence[Filter]) -> Predicate | None:
 class PaimonPartition(InputPartition):
     def __init__(
         self,
-        path: str,
+        table: Table | None,  # Spark-less lineage: writer schemas load from it
         files: list[tuple[str, int]],  # (absolute path, writer schema_id)
         merge: str | None,
         schema: dict,
         dv: dict[str, list[int]] | None = None,  # abs path -> deleted row positions
     ):
-        self.path = path
+        self.table = table
         self.files = files
         self.merge = merge  # merge-engine name, or None for append-only
-        self.schema = schema  # snapshot's table schema JSON
+        self.schema = schema  # the scan's render schema JSON
         self.dv = dv
 
 
 class PaimonReader(DataSourceReader):
     def __init__(self, options: dict):
+        self.options = options
         self.path = options["path"]  # data root
-        self.table = _table(options)
-        self.meta = self.table.meta_path
-        self.snapshot_id = (
-            int(options["snapshot"]) if "snapshot" in options else None
-        )
-        self.tag = options.get("tag")
-        self.as_of_ms = (
-            int(options["as-of-timestamp-ms"])
-            if "as-of-timestamp-ms" in options
-            else None
-        )
-        if sum(x is not None for x in (self.snapshot_id, self.tag, self.as_of_ms)) > 1:
-            raise ValueError(
-                "snapshot / tag / as-of-timestamp-ms are mutually exclusive"
-            )
         self.predicate: Predicate | None = None
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
@@ -308,98 +286,49 @@ class PaimonReader(DataSourceReader):
         # only use them to shrink the file list.
         return iter(filters)
 
-    def _snapshot(self) -> Snapshot | None:
-        if self.snapshot_id is not None:
-            return self.table.snapshot(self.snapshot_id)
-        if self.tag is not None:
-            return self.table.tag_snapshot(self.tag)
-        if self.as_of_ms is not None:
-            return self.table.snapshot_as_of(self.as_of_ms)
-        return self.table.snapshot()
+    def plan_splits(
+        self, rename: dict[str, str] | None = None
+    ) -> tuple[dict, dict[Any, PaimonPartition]]:
+        """(render schema JSON, {split key: PaimonPartition}).
+
+        ``TableScan.plan_files`` selects the snapshot and prunes the file
+        list (partitions, stats, bloom filters); this only groups the
+        surviving files into splits and hands each split its subset of
+        the deletion-vector index. Primary-key tables get one split per
+        ``(partition JSON, bucket)``, append-only tables one per file.
+        ``rename`` maps partition column names before the key is
+        serialized (the co-located join pairs two tables' splits)."""
+        scan = _scan(self.options, self.predicate)
+        schema = scan.render_schema().to_json()
+        entries = scan.plan_files()
+        snap = scan._snapshot()
+        dv_map = dv_index_map(self.path, snap) if snap is not None else {}
+        pks = schema["primary_keys"]
+        merge = schema["options"].get("merge-engine", "deduplicate") if pks else None
+        groups: dict[Any, list[tuple[str, int]]] = {}
+        for e in entries:
+            if pks:
+                part = e["partition"]
+                if rename:
+                    part = {rename.get(k, k): v for k, v in part.items()}
+                key = (json.dumps(part, sort_keys=True), e["bucket"])
+            else:
+                key = e["path"]
+            groups.setdefault(key, []).append(
+                (os.path.join(self.path, e["path"]), e["schema_id"])
+            )
+        splits = {
+            key: PaimonPartition(
+                scan.table, files, merge, schema,
+                {f: dv_map[f] for f, _ in files if f in dv_map} or None,
+            )
+            for key, files in groups.items()
+        }
+        return schema, splits
 
     def partitions(self) -> Sequence[PaimonPartition]:
-        snap = self._snapshot()
-        if snap is None:
-            return [PaimonPartition(self.meta, [], None, _load_schema(self.meta))]
-        schema = _load_schema(self.meta, snap.schema_id)
-        entries = self.table.manifest_entries(snap)
-        part_keys = schema.get("partition_keys", [])
-        pks = schema.get("primary_keys", [])
-        if self.predicate is not None:
-            if part_keys:
-                # Only partition-column conjuncts may prune (the full
-                # predicate would evaluate value-column comparisons as
-                # False against a partition-only row and drop everything).
-                # Partition dir values are strings; type them per the
-                # schema before predicate evaluation (int "5" == 5 is
-                # False in Python — untyped comparison would over-prune).
-                pp = skip_safe_predicate(self.predicate, set(part_keys))
-                if pp is not None:
-                    entries = [
-                        e
-                        for e in entries
-                        if pp.test_row(
-                            _typed_partition_json(e["partition"], schema)
-                        )
-                    ]
-            # merge-on-read safety: pk tables (without DV) may only skip
-            # files on key/partition columns — a value-column skip can
-            # drop a key's newest version and resurrect a stale row
-            dv_on = (
-                schema.get("options", {}).get("deletion-vectors.enabled")
-                == "true"
-            )
-            safe = (
-                None
-                if (not pks or dv_on)
-                else set(pks) | set(part_keys)
-            )
-            sp = skip_safe_predicate(self.predicate, safe)
-            if sp is not None:
-                # stats/bloom are writer-name-keyed; translate through
-                # field ids (see fileindex.translate_entry_metadata)
-                cur_by_id = {f["id"]: f["name"] for f in schema["fields"]}
-                ws_fields: dict[int, list] = {}
-
-                def survives(e: dict) -> bool:
-                    sid = e["schema_id"]
-                    wf = ws_fields.get(sid)
-                    if wf is None:
-                        wf = _load_schema(self.meta, sid)["fields"]
-                        ws_fields[sid] = wf
-                    stats, idx = fileindex.translate_entry_metadata(
-                        e, cur_by_id, wf
-                    )
-                    return sp.test_stats(stats, e["row_count"]) and (
-                        sp.test_index(idx)
-                    )
-
-                entries = [e for e in entries if survives(e)]
-        def fent(e) -> tuple[str, int]:
-            return (os.path.join(self.path, e["path"]), e["schema_id"])
-
-        dv_map = dv_index_map(self.path, snap)
-
-        def dv_for(files: list[tuple[str, int]]) -> dict[str, list[int]] | None:
-            sub = {f: dv_map[f] for f, _ in files if f in dv_map}
-            return sub or None
-
-        if not pks:
-            return [
-                PaimonPartition(self.meta, [fent(e)], None, schema, dv_for([fent(e)]))
-                for e in entries
-            ] or [PaimonPartition(self.meta, [], None, schema)]
-        groups: dict[str, list[tuple[str, int]]] = {}
-        for e in entries:
-            key = json.dumps(
-                {"p": e["partition"], "b": e["bucket"]}, sort_keys=True
-            )
-            groups.setdefault(key, []).append(fent(e))
-        merge = schema.get("options", {}).get("merge-engine", "deduplicate")
-        return [
-            PaimonPartition(self.meta, files, merge, schema, dv_for(files))
-            for files in groups.values()
-        ] or [PaimonPartition(self.meta, [], merge, schema)]
+        schema, splits = self.plan_splits()
+        return list(splits.values()) or [PaimonPartition(None, [], None, schema)]
 
     def read(self, partition: PaimonPartition):
         tbl = read_split_arrow(partition)
@@ -426,7 +355,7 @@ def dv_index_map(data_root: str, snap: Snapshot) -> dict[str, list[int]]:
 
 def read_split_arrow(partition: PaimonPartition):
     """One (partition, bucket) split → a fully merged pyarrow Table in the
-    snapshot schema (or None for an empty split). This is the executor-side
+    split's render schema (or None for an empty split). This is the executor-side
     read path shared by ``PaimonReader`` and the co-located bucket join
     (``sources/colocated.py``): field-id projection across writer schemas,
     deletion-vector position drops, merge-on-read, schema cast."""
@@ -437,11 +366,11 @@ def read_split_arrow(partition: PaimonPartition):
     if not partition.files:
         return None
     # field-id projection: files written under older schemas render
-    # through the snapshot schema (renames follow the id, dropped
+    # through the render schema (renames follow the id, dropped
     # columns vanish, added columns null-fill) — the A18 contract,
     # same as table._project_to on the DataFrame path
     writer_schemas = {
-        sid: _load_schema(partition.path, sid)
+        sid: partition.table.schema(sid).to_json()
         for sid in {sid for _, sid in partition.files}
     }
 
@@ -667,7 +596,7 @@ class PaimonWriter(DataSourceWriter):
         self.table = _table(options)
         self.meta = self.table.meta_path
         self.overwrite = overwrite
-        schema = _load_schema(self.meta)
+        schema = self.table.schema().to_json()
         if schema.get("options", {}).get("file.format", "parquet") != "parquet":
             raise NotImplementedError(
                 "paimon DataSource writes parquet only; write avro tables "
@@ -1012,7 +941,7 @@ class PaimonStreamPartition(InputPartition):
     def __init__(
         self,
         mode: str,  # "files" | "clg" | "dvdiff"
-        meta: str,
+        table: Table,
         schema: dict,
         seq: int,
         files: list[tuple[str, int]] | None = None,  # (abs path, schema_id)
@@ -1020,7 +949,7 @@ class PaimonStreamPartition(InputPartition):
         clg_dir: str | None = None,
     ):
         self.mode = mode
-        self.meta = meta
+        self.table = table
         self.schema = schema
         self.seq = seq
         self.files = files or []
@@ -1032,13 +961,17 @@ class PaimonStreamReader(DataSourceStreamReader):
     """Snapshot-range streaming source (``spark.readStream.format("paimon")``).
 
     Offsets are snapshot ids — the natural exactly-once unit of this
-    format: ``latestOffset`` is a driver-side metadata read, each
-    micro-batch covers the commits in ``(start, end]``, and COMPACT
-    commits are skipped (rewrites are not new data — same contract as
-    ``Table.incremental_df``). Tables with ``changelog-producer=lookup``
-    stream their materialized retraction changelog (I/UB/UA/D);
-    deletion-vector commits re-emit newly-deleted positions as D rows,
-    so consumers always see a lossless change stream.
+    format: ``latestOffset`` is a driver-side metadata read, and each
+    micro-batch covers the commits ``Table.commit_walk`` yields for
+    ``(start, end]`` — the walk ``Table.incremental_df`` uses, so an offset
+    range means the same commits as the batch change read over it (COMPACT
+    commits skipped, expired parents resolved through tags). Every commit
+    renders in the declared (latest) schema. Tables with
+    ``changelog-producer=lookup`` stream their materialized retraction
+    changelog (I/UB/UA/D); deletion-vector commits re-emit newly-deleted
+    positions as D rows (a Python-set diff of the commit's DV index
+    against its parent's), so consumers always see a lossless change
+    stream.
 
     ``option("consumer-id", name)`` records progress in the table's
     consumer file at each epoch commit — retention then never expires
@@ -1050,7 +983,9 @@ class PaimonStreamReader(DataSourceStreamReader):
         self.path = options["path"]
         self.table = _table(options)
         self.meta = self.table.meta_path
-        self.schema_json = _load_schema(self.meta)
+        # the declared stream schema: every commit renders in it, the way
+        # incremental_df renders a range in the latest schema
+        self.schema_json = self.table.schema().to_json()
         self.consumer = options.get("consumer-id") or options.get("consumer_id")
         self.starting = options.get("startingoffsets", options.get(
             "startingOffsets", "earliest"))
@@ -1080,68 +1015,46 @@ class PaimonStreamReader(DataSourceStreamReader):
         return {"snapshot": ids[-1] if ids else 0}
 
     def partitions(self, start: dict, end: dict) -> Sequence[PaimonStreamPartition]:
-        lo, hi = start["snapshot"], end["snapshot"]
-        producer = self.schema_json.get("options", {}).get("changelog-producer")
-        t = self.table
-        all_ids = t.snapshot_ids()
-        ids = [i for i in all_ids if lo < i <= hi]
+        t, schema = self.table, self.schema_json
+        lookup = schema["options"].get("changelog-producer") == "lookup"
         parts: list[PaimonStreamPartition] = []
-        prev_paths: set[str] | None = None
-        prev_dv: str | None = None
-        if lo in all_ids:
-            prev_dv = t.snapshot(lo).dv_index
-        for sid in ids:
-            snap = t.snapshot(sid)
-            schema = _load_schema(self.meta, snap.schema_id)
-            entries = t.manifest_entries(snap)
-            if producer == "lookup":
+        for snap, entries, new, parent_dv in t.commit_walk(
+            start["snapshot"], end["snapshot"]
+        ):
+            sid = snap.snapshot_id
+            if lookup:
                 if snap.changelog:
                     parts.append(PaimonStreamPartition(
-                        "clg", self.meta, schema, sid,
-                        clg_dir=os.path.join(
-                            self.meta, "changelog", snap.changelog),
+                        "clg", t, schema, sid,
+                        clg_dir=os.path.join(self.meta, "changelog", snap.changelog),
                     ))
-                prev_paths = {e["path"] for e in entries}
-                prev_dv = snap.dv_index
                 continue
-            if snap.commit_kind != "COMPACT":
-                if prev_paths is None:
-                    prev_paths = (
-                        {e["path"] for e in t.manifest_entries(t.snapshot(sid - 1))}
-                        if sid - 1 in all_ids
-                        else set()
-                    )
-                new = [e for e in entries if e["path"] not in prev_paths]
-                for e in new:
+            for e in new:
+                parts.append(PaimonStreamPartition(
+                    "files", t, schema, sid,
+                    files=[(os.path.join(self.path, e["path"]), e["schema_id"])],
+                ))
+            # deletion-vector diff: positions newly marked dead in this
+            # commit come back as D rows (lossless, like incremental_df)
+            dv = snap.dv_index
+            if dv and dv != parent_dv:
+                diff = _dv_positions(self.path, dv)
+                if parent_dv:
+                    old = _dv_positions(self.path, parent_dv)
+                    diff = {
+                        f: sorted(set(ps) - set(old.get(f, [])))
+                        for f, ps in diff.items()
+                    }
+                path_sid = {e["path"]: e["schema_id"] for e in entries}
+                positions = {
+                    os.path.join(self.path, f): (path_sid[f], ps)
+                    for f, ps in diff.items()
+                    if ps and f in path_sid
+                }
+                if positions:
                     parts.append(PaimonStreamPartition(
-                        "files", self.meta, schema, sid,
-                        files=[(os.path.join(self.path, e["path"]),
-                                e["schema_id"])],
+                        "dvdiff", t, schema, sid, positions=positions,
                     ))
-                # deletion-vector diff: positions newly marked dead in this
-                # commit come back as D rows (lossless, like incremental_df)
-                dv = snap.dv_index
-                if dv and dv != prev_dv:
-                    diff = _dv_positions(self.path, dv)
-                    if prev_dv:
-                        old = _dv_positions(self.path, prev_dv)
-                        diff = {
-                            f: sorted(set(ps) - set(old.get(f, [])))
-                            for f, ps in diff.items()
-                        }
-                    by_schema: dict[str, tuple[int, list[int]]] = {}
-                    path_sid = {e["path"]: e["schema_id"] for e in entries}
-                    for f, ps in diff.items():
-                        if ps and f in path_sid:
-                            by_schema[os.path.join(self.path, f)] = (
-                                path_sid[f], ps)
-                    if by_schema:
-                        parts.append(PaimonStreamPartition(
-                            "dvdiff", self.meta, schema, sid,
-                            positions=by_schema,
-                        ))
-            prev_paths = {e["path"] for e in entries}
-            prev_dv = snap.dv_index
         return parts
 
     def read(self, partition: PaimonStreamPartition):
@@ -1187,7 +1100,7 @@ class PaimonStreamReader(DataSourceStreamReader):
             for f, (sid, positions) in partition.positions.items():
                 t = _project_arrow(
                     pq.read_table(f).take(positions),
-                    _load_schema(partition.meta, sid),
+                    partition.table.schema(sid).to_json(),
                     schema,
                 )
                 tables.append(t.select([c for c in t.column_names if c in names]))
@@ -1195,7 +1108,7 @@ class PaimonStreamReader(DataSourceStreamReader):
             return finalize(tbl, partition.seq, "D")
         tables = [
             _project_arrow(
-                _read_arrow_file(f), _load_schema(partition.meta, sid), schema
+                _read_arrow_file(f), partition.table.schema(sid).to_json(), schema
             )
             for f, sid in partition.files
         ]
@@ -1256,10 +1169,10 @@ class PaimonDataSource(DataSource):
         return "paimon"
 
     def schema(self) -> str:
-        schema = _load_schema(_table(self.options).meta_path)
+        schema = _scan(self.options).render_schema()
         cols = ", ".join(
             f"`{f['name']}` {spark_ddl_type(f['type'])}"
-            for f in schema["fields"]
+            for f in schema.fields
         )
         if self.options.get("changelog") == "true":
             cols += f", `{_SEQ}` bigint, `{_KIND}` string"

@@ -59,7 +59,7 @@ import re as _re_mod
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Any, Iterable
+from typing import Any, Iterable, Iterator
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -2246,6 +2246,53 @@ class Table:
         )
         return self.incremental_df(start, max(start, end))
 
+    def commit_walk(
+        self, start: int, end: int
+    ) -> Iterator[tuple[Snapshot, list[dict], list[dict], str | None]]:
+        """The commits in ``(start, end]`` that bring new data, oldest
+        first — the one commit walk behind ``incremental_df`` and the
+        DataSource stream reader, so a stream offset range and a batch
+        change read over it mean the same commits. Needs no SparkSession.
+
+        Yields ``(snap, entries, new, parent_dv)`` per commit: the
+        commit's full manifest listing, the entries it adds over its
+        parent's listing, and the parent's deletion-vector index
+        (``snap.dv_index`` is the commit's own). COMPACT commits are
+        skipped — rewrites are not new data — but still serve as the
+        parent of the commit after them. A parent that expired is
+        resolved through a tag pinning it."""
+        ids = [i for i in self.snapshot_ids() if start < i <= end]
+        if not ids:
+            return
+
+        def resolve(sid: int) -> Snapshot | None:
+            if sid in self.snapshot_ids():
+                return self.snapshot(sid)
+            for name in self.list_tags():
+                pinned = self.tag_snapshot(name)
+                if pinned.snapshot_id == sid:
+                    return pinned
+            return None
+
+        start_snap = resolve(start)
+        prev_dv = start_snap.dv_index if start_snap is not None else None
+        prev_paths: set[str] | None = None
+        for sid in ids:
+            snap = self.snapshot(sid)
+            cur = self.manifest_entries(snap)
+            if snap.commit_kind != "COMPACT":
+                if prev_paths is None:
+                    parent = resolve(sid - 1)
+                    prev_paths = (
+                        {e["path"] for e in self.manifest_entries(parent)}
+                        if parent is not None
+                        else set()
+                    )
+                new = [e for e in cur if e["path"] not in prev_paths]
+                yield snap, cur, new, prev_dv
+            prev_paths = {e["path"] for e in cur}
+            prev_dv = snap.dv_index
+
     def incremental_df(
         self,
         start_snapshot: int | str,
@@ -2257,13 +2304,14 @@ class Table:
         (Paimon's incremental-between-tags): "the changes between release
         tags" is the reproducible-diff question a corpus pipeline asks.
 
-        Walks the commits in the range and unions each commit's NEW files
-        (manifest diff against its parent), skipping COMPACT commits —
-        rewrites are not new data, so incremental consumers never see a
-        compaction re-emit the table. Deletion-vector tables additionally
-        re-read the positions each commit marked deleted and emit them as
-        '-D' rows (positions are exact row identities, so the CDC stream
-        stays lossless without tombstone rows in the data files). Primary-
+        Walks the commits in the range (``commit_walk``) and unions each
+        commit's NEW files (manifest diff against its parent), skipping
+        COMPACT commits — rewrites are not new data, so incremental
+        consumers never see a compaction re-emit the table. Deletion-vector
+        tables additionally re-read the positions each commit marked
+        deleted and emit them as '-D' rows (positions are exact row
+        identities, so the CDC stream stays lossless without tombstone rows
+        in the data files). Primary-
         key tables yield audit-log style rows (leading ``rowkind``
         '+I'/'-D'); append tables without DVs yield plain rows. Cost is
         O(files + positions changed in range), never a full scan.
@@ -2279,52 +2327,22 @@ class Table:
         )
         if start_snapshot > end:
             raise ValueError(f"start {start_snapshot} > end {end}")
-        ids = [i for i in self.snapshot_ids() if start_snapshot < i <= end]
         new_entries: list[dict] = []
         dv_added: list[DataFrame] = []  # (path,pos) marked deleted in range
         path_entry: dict[str, dict] = {}  # any manifest entry per file path
-        def resolve(sid: int) -> Snapshot | None:
-            """A snapshot by id, or — after expiry — any TAG pinning it
-            (the tag file carries the full payload, so tag-bounded
-            incremental reads keep working once history is expired)."""
-            if sid in self.snapshot_ids():
-                return self.snapshot(sid)
-            for name in self.list_tags():
-                pinned = self.tag_snapshot(name)
-                if pinned.snapshot_id == sid:
-                    return pinned
-            return None
-
-        prev_paths: set[str] | None = None
-        prev_dv: str | None = None
-        start_resolved = resolve(start_snapshot) if ids else None
-        if start_resolved is not None:
-            prev_dv = start_resolved.dv_index
-        for sid in ids:
-            snap = self.snapshot(sid)
-            cur = self.manifest_entries(snap)
+        for snap, cur, new, parent_dv in self.commit_walk(start_snapshot, end):
             for e in cur:
                 path_entry.setdefault(e["path"], e)
-            if snap.commit_kind != "COMPACT":
-                if prev_paths is None:
-                    parent = resolve(sid - 1)
-                    prev_paths = (
-                        {e["path"] for e in self.manifest_entries(parent)}
-                        if parent is not None
-                        else set()
-                    )
-                new_entries += [e for e in cur if e["path"] not in prev_paths]
-                if snap.dv_index and snap.dv_index != prev_dv:
-                    step = self.dv_df(snap)
-                    if prev_dv:
-                        step = step.exceptAll(
-                            self.spark.read.parquet(
-                                os.path.join(self._dv_root(), prev_dv)
-                            )
+            new_entries += new
+            if snap.dv_index and snap.dv_index != parent_dv:
+                step = self.dv_df(snap)
+                if parent_dv:
+                    step = step.exceptAll(
+                        self.spark.read.parquet(
+                            os.path.join(self._dv_root(), parent_dv)
                         )
-                    dv_added.append(step)
-            prev_paths = {e["path"] for e in cur}
-            prev_dv = snap.dv_index
+                    )
+                dv_added.append(step)
         schema = self.schema()
         spark = self.spark
         # stable output schema per table: DV-enabled append tables always
@@ -2933,13 +2951,15 @@ class Table:
         partition_where: str | None = None,
         tag: str | None = None,
     ) -> "TableScan":
-        if tag is not None:
-            if snapshot_id is not None or as_of_timestamp_ms is not None:
-                raise ValueError("tag is exclusive with snapshot_id/as_of_timestamp_ms")
-            return TableScan(
-                self, predicate, None, None, partition_where, pinned=self.tag_snapshot(tag)
+        if sum(v is not None for v in (snapshot_id, as_of_timestamp_ms, tag)) > 1:
+            raise ValueError(
+                "snapshot_id / as_of_timestamp_ms / tag are mutually exclusive"
             )
-        return TableScan(self, predicate, snapshot_id, as_of_timestamp_ms, partition_where)
+        pinned = self.tag_snapshot(tag) if tag is not None else None
+        return TableScan(
+            self, predicate, snapshot_id, as_of_timestamp_ms, partition_where,
+            pinned=pinned,
+        )
 
     def to_df(self, **scan_kwargs) -> DataFrame:
         return self.scan(**scan_kwargs).to_df()
@@ -3251,16 +3271,39 @@ class TableScan:
         self.partition_where = partition_where
         self.pinned = pinned  # tag reads: snapshot payload came from the tag
         self.last_plan: dict[str, Any] = {}
+        self._snap: Snapshot | None = None  # resolved once, on first use
+        self._resolved = False
 
     def _snapshot(self) -> Snapshot | None:
-        t = self.table
-        if self.pinned is not None:
-            return self.pinned
-        if self.snapshot_id is not None:
-            return t.snapshot(self.snapshot_id)
-        if self.as_of_ts is not None:
-            return t.snapshot_as_of(self.as_of_ts)
-        return t.snapshot()
+        """The snapshot this scan reads. It is resolved once, so planning,
+        the deletion-vector lookup and the render schema see the same
+        snapshot even when a commit lands in between."""
+        if not self._resolved:
+            t = self.table
+            if self.pinned is not None:
+                snap = self.pinned
+            elif self.snapshot_id is not None:
+                snap = t.snapshot(self.snapshot_id)
+            elif self.as_of_ts is not None:
+                snap = t.snapshot_as_of(self.as_of_ts)
+            else:
+                snap = t.snapshot()
+            self._snap, self._resolved = snap, True
+        return self._snap
+
+    def render_schema(self) -> TableSchema:
+        """The schema this scan's rows are rendered in. Current reads use
+        the latest schema (DDL changes don't create snapshots); time-travel
+        reads use the schema the snapshot was committed under
+        (TestPrestoSqlTCase.java:319-387). ``to_df``, the DataSource's
+        declared schema and its splits all follow this one rule."""
+        time_travel = (
+            self.snapshot_id is not None
+            or self.as_of_ts is not None
+            or self.pinned is not None
+        )
+        snap = self._snapshot() if time_travel else None
+        return self.table.schema(snap.schema_id) if snap else self.table.schema()
 
     def plan_files(self) -> list[dict]:
         t = self.table
@@ -3274,9 +3317,12 @@ class TableScan:
         # A21 session toggles (PrestoSessionProperties.java:35-79). Both
         # only WIDEN the file list — the predicate is re-applied as a
         # DataFrame filter, so results are invariant, exactly like the
-        # reference's toggles (the engine Filter node stays on top).
-        prune_on = properties.partition_prune_enabled(t.spark)
-        pushdown_on = properties.pushdown_enabled(t.spark)
+        # reference's toggles (the engine Filter node stays on top). A
+        # Spark-less table (the DataSource planner) has no session: both on.
+        prune_on = pushdown_on = True
+        if t.spark is not None:
+            prune_on = properties.partition_prune_enabled(t.spark)
+            pushdown_on = properties.pushdown_enabled(t.spark)
 
         # 1) partition pruning from the structured predicate (A10 first
         #    half). Only the partition-column CONJUNCTS may prune: testing
@@ -3394,17 +3440,7 @@ class TableScan:
         the DV write path uses this to locate rows to mark deleted."""
         t = self.table
         snap = self._snapshot()
-        # Current reads render with the latest schema (DDL changes don't
-        # create snapshots); time-travel reads render with the schema the
-        # snapshot was committed under (TestPrestoSqlTCase.java:319-387).
-        time_travel = (
-            self.snapshot_id is not None
-            or self.as_of_ts is not None
-            or self.pinned is not None
-        )
-        schema_latest = (
-            t.schema(snap.schema_id) if (snap and time_travel) else t.schema()
-        )
+        schema_latest = self.render_schema()
         entries = self.plan_files()
         spark = t.spark
         if not entries:

@@ -293,6 +293,31 @@ def test_time_travel_options(catalog, spark):
     latest = colocated_join(spark, tl, tr, left_on="k")
     assert {r["x"] for r in latest.collect()} == {9}
 
+    # schema evolution on the right side follows TableScan's render rule:
+    # a current read renders the latest schema right after add_column (no
+    # commit since), a snapshot read the schema it was committed under
+    def right_rows(df):
+        return sorted((r["k"], r["x"], r["y"] if "y" in df.columns else None)
+                      for r in df.collect())
+
+    catalog.add_column("default", "tt_right", "y", "int")
+    tr = catalog.get_table("default", "tt_right")
+    latest = colocated_join(spark, tl, tr, left_on="k")
+    assert latest.columns == ["k", "v", "x", "y"]
+    assert right_rows(latest) == right_rows(tr.scan().to_df())
+    tr.upsert(spark.range(10).select(
+        F.col("id").alias("k"), F.lit(9).alias("x"), F.lit(5).alias("y")))
+    pinned = (
+        spark.read.format("paimon_colocated")
+        .option("left", tl.path).option("right", tr.path)
+        .option("left_on", "k").option("right_on", "k")
+        .option("right_snapshot", str(s1.snapshot_id))
+        .load()
+    )
+    assert pinned.columns == ["k", "v", "x"]
+    assert right_rows(pinned) == right_rows(
+        tr.scan(snapshot_id=s1.snapshot_id).to_df())
+
 
 def test_point_lookup_prunes_to_one_bucket(catalog, spark):
     """An equality on every join-key column pins the bucket: the scan

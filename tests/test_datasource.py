@@ -176,6 +176,42 @@ def test_schema_evolution_projection(registered, spark, catalog):
     assert rows == expect
 
 
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_current_read_renders_latest_schema_after_add_column(
+    registered, spark, catalog
+):
+    """A DDL change creates no snapshot: a current read declares the latest
+    schema and its splits render in it too (the added column null-fills),
+    exactly like ``Table.scan().to_df()``."""
+    t = catalog.create_table("default", "ds_ac", "a int, b string")
+    t.append(spark.createDataFrame([(1, "x"), (2, "y")], "a int, b string"))
+    catalog.add_column("default", "ds_ac", "c", "double")
+    t = catalog.get_table("default", "ds_ac")
+    df = _read(spark, t)
+    assert df.columns == ["a", "b", "c"]
+    assert _rows(df) == _rows(t.scan().to_df()) == [(1, "x", None), (2, "y", None)]
+
+
+def test_time_travel_read_renders_snapshot_schema(registered, spark, catalog):
+    """``option("snapshot")`` declares and renders the schema the snapshot
+    was committed under, even after a later commit evolved the schema —
+    the same rows ``Table.scan(snapshot_id=...)`` returns."""
+    t = catalog.create_table("default", "ds_tts", "a int, b string")
+    t.append(spark.createDataFrame([(1, "x")], "a int, b string"))
+    catalog.add_column("default", "ds_tts", "c", "double")
+    t = catalog.get_table("default", "ds_tts")
+    t.append(spark.createDataFrame([(2, "y", 0.5)], "a int, b string, c double"))
+    df = (
+        spark.read.format("paimon")
+        .option("path", t.path).option("snapshot", "1").load()
+    )
+    assert df.columns == ["a", "b"]
+    assert _rows(df) == _rows(t.scan(snapshot_id=1).to_df()) == [(1, "x")]
+
+
 def test_read_aggregation_engine(registered, spark, catalog):
     t = catalog.create_table(
         "default", "ds_ag", "k int, total int", primary_keys=["k"],
@@ -331,6 +367,24 @@ class TestStreamReader:
             "SELECT * FROM ds_s4_out ORDER BY __seq, __row_kind").collect()]
         assert rows == [(1, "a", "I"), (1, "a2", "UA"), (1, "a", "UB")]
 
+    def test_stream_renders_declared_schema_across_add_column(
+        self, spark, catalog, tmp_path
+    ):
+        """Every commit in the range renders in the stream's declared
+        (latest) schema: a commit made before ``add_column`` null-fills the
+        new column instead of returning fewer columns than declared."""
+        self._register(spark)
+        t = catalog.create_table("default", "ds_sev", "k int, v string",
+                                 primary_keys=["k"])
+        t.upsert(spark.createDataFrame([(1, "a")], "k int, v string"))
+        catalog.add_column("default", "ds_sev", "w", "int")
+        t = catalog.get_table("default", "ds_sev")
+        t.upsert(spark.createDataFrame([(2, "b", 7)], "k int, v string, w int"))
+        self._run(spark, t, tmp_path, "ds_sev_out")
+        rows = [(r["k"], r["v"], r["w"], r["__seq"]) for r in
+                spark.sql("SELECT * FROM ds_sev_out ORDER BY __seq").collect()]
+        assert rows == [(1, "a", None, 1), (2, "b", 7, 2)]
+
     def test_batch_read_rejects_changelog_option(self, spark, catalog):
         self._register(spark)
         t = catalog.create_table("default", "ds_s5", "k int", primary_keys=["k"])
@@ -439,9 +493,13 @@ def test_time_travel_tag_and_timestamp(registered, spark, catalog):
         spark.read.format("paimon").option("path", t.path)
         .option("tag", "rel").load().collect())] == [1]
 
+    # snapshot / tag / as-of-timestamp are mutually exclusive on both entry
+    # points: the DataSource options and Table.scan
     with pytest.raises(Exception, match="mutually exclusive"):
         (spark.read.format("paimon").option("path", t.path)
          .option("tag", "rel").option("snapshot", "1").load().collect())
+    with pytest.raises(ValueError, match="mutually exclusive"):
+        t.scan(snapshot_id=3, as_of_timestamp_ms=mid_ms)
 
 
 def test_stream_reader_mixed_rowkind_commit(spark, catalog, tmp_path):

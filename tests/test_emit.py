@@ -85,27 +85,41 @@ def test_layout_is_deterministic_and_order_based(docs, spark):
     assert sorted(a, key=key) == sorted(b, key=key)
 
 
-def test_two_pass_offsets_match_single_window(docs):
+def test_two_pass_offsets_match_single_window(docs, spark):
     """The block-decomposed offset path (offset_blocks/did_range — the
     scale rung emit_training_shards uses) must reproduce the single
     per-source window's sequences BIT-identically, including with an
     EOS separator and with block boundaries that split sources
-    mid-stream, and must reject half-specified parameters."""
+    mid-stream, and must reject half-specified parameters. A NULL-text
+    document leads source 'a': the block bases must count it exactly as
+    ``size(__ids)`` does in both ANSI modes (``size(NULL)`` is NULL with
+    ANSI on and -1 with it off, where a count of ``split(text) + 1``
+    used to disagree once an EOS separator was set)."""
+    null_doc = spark.createDataFrame(
+        [(0, "a", None)], "doc_id long, source string, text string"
+    )
+    docs = null_doc.unionByName(docs)
     key = lambda r: (r["source"], r["seq_id"])
-    for eos in (None, 32768):
-        base = sorted(
-            tokenized_sequences(docs, seq_len=8, eos_id=eos).collect(),
-            key=key,
-        )
-        for blocks in (2, 3, 64):  # mid-source splits and blocks >> docs
-            two = sorted(
-                tokenized_sequences(
-                    docs, seq_len=8, eos_id=eos,
-                    offset_blocks=blocks, did_range=(1, 4),
-                ).collect(),
-                key=key,
-            )
-            assert two == base, (eos, blocks)
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for mode in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", mode)
+            for eos in (None, 32768):
+                base = sorted(
+                    tokenized_sequences(docs, seq_len=8, eos_id=eos).collect(),
+                    key=key,
+                )
+                for blocks in (2, 3, 64):  # mid-source splits, blocks >> docs
+                    two = sorted(
+                        tokenized_sequences(
+                            docs, seq_len=8, eos_id=eos,
+                            offset_blocks=blocks, did_range=(0, 4),
+                        ).collect(),
+                        key=key,
+                    )
+                    assert two == base, (mode, eos, blocks)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
     with pytest.raises(ValueError, match="offset_blocks"):
         tokenized_sequences(docs, offset_blocks=4)
     with pytest.raises(ValueError, match="offset_blocks"):

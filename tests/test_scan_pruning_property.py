@@ -2,7 +2,9 @@
 optimization — `scan(predicate=p)` ≡ full scan + DataFrame filter for any
 supported predicate over any file layout. This guards the custom
 min/max-stats logic (`plans/predicate.py:test_stats`), the riskiest code in
-the read path (a wrong skip silently loses rows).
+the read path (a wrong skip silently loses rows). The DataSource read
+(`spark.read.format("paimon")` + filter, planned by the same
+`TableScan.plan_files` from Catalyst's pushed filters) is a third side.
 
 Also covers the commit protocol: a conflicting snapshot id must be retried
 and never drop either writer's data.
@@ -14,6 +16,17 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from paimon_presto_spark.plans.predicate import P
+from paimon_presto_spark.sources import register_datasource
+
+
+def _ds_filtered(spark, t, pred):
+    """The DataSource read of `t` filtered by `pred`: Catalyst pushes the
+    filter into the reader's scan planning, then re-applies it."""
+    register_datasource(spark)
+    return (
+        spark.read.format("paimon").option("path", t.path).load()
+        .filter(pred.to_spark())
+    )
 
 
 values = st.integers(-5, 25)
@@ -71,7 +84,12 @@ def test_file_skipping_never_changes_results(spark, tmp_path_factory, commits, p
         ((r["a"], r["b"]) for r in t.to_df().filter(pred.to_spark()).collect()),
         key=repr,
     )
+    ds = sorted(
+        ((r["a"], r["b"]) for r in _ds_filtered(spark, t, pred).collect()),
+        key=repr,
+    )
     assert pruned == full
+    assert ds == full
 
 
 def test_commit_conflict_retries_and_preserves_both_writers(spark, catalog):
@@ -230,7 +248,9 @@ def test_pk_file_skipping_never_resurrects_stale_rows(
         (r["k"], r["a"])
         for r in t.to_df().filter(pred.to_spark()).collect()
     )
+    ds = sorted((r["k"], r["a"]) for r in _ds_filtered(spark, t, pred).collect())
     assert pruned == full
+    assert ds == full
 
 
 def test_partition_and_value_conjunction_keeps_partition(spark, tmp_path_factory):
@@ -315,4 +335,10 @@ def test_partition_pruning_never_changes_results(
          t.to_df().filter(pred.to_spark()).collect()),
         key=repr,
     )
+    ds = sorted(
+        ((r["pt"], r["a"], r["b"]) for r in
+         _ds_filtered(spark, t, pred).collect()),
+        key=repr,
+    )
     assert pruned == full
+    assert ds == full
