@@ -85,7 +85,8 @@ def tokenized_sequences(
     seq_len`` for every row (the trailing partial sequence per source is
     dropped) and ``ids`` the in-order ``array<int>`` of hashed token
     ids. Deterministic for a given input: ids and shard come from
-    portable md5, sequence layout from doc-id order.
+    portable md5, sequence layout from doc-id order. A NULL text
+    contributes no tokens and no EOS separator, in either ANSI mode.
 
     ``eos_id`` (production packing's document separator): when set, that
     id is appended after every document's tokens BEFORE the stream is
@@ -132,7 +133,9 @@ def tokenized_sequences(
         ids_arr.alias("__ids"),
     )
     # per-source token offset of each doc: prefix sums over DOC rows (one
-    # row per document), never over tokens
+    # row per document), never over tokens. Counts use array_size, which
+    # is NULL for a NULL text in both ANSI modes (size(NULL) is -1 with
+    # ANSI off), so the sums skip it and its own offset stays NULL.
     if offset_blocks is None or offset_blocks <= 1:
         woff = (
             Window.partitionBy("source")
@@ -140,12 +143,13 @@ def tokenized_sequences(
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
         off = per_doc.withColumn(
-            "__doc_off", F.sum(F.size("__ids")).over(woff) - F.size("__ids")
+            "__doc_off",
+            F.sum(F.array_size("__ids")).over(woff) - F.array_size("__ids"),
         )
     else:
         lo, hi = did_range
         bsize = max(1, -(-(int(hi) - int(lo) + 1) // int(offset_blocks)))
-        sized = per_doc.withColumn("__m", F.size("__ids")).withColumn(
+        sized = per_doc.withColumn("__m", F.array_size("__ids")).withColumn(
             "__blk", F.expr(f"(__did - {int(lo)}) DIV {bsize}")
         )
         w_in = (
@@ -167,11 +171,11 @@ def tokenized_sequences(
         # size(__ids) because transform preserves length) instead of
         # re-hashing every token through md5 a second time. The EOS slot
         # is counted through the same concat as __ids, so a NULL text
-        # stays NULL in both (size(NULL) is -1 with ANSI off, not 0).
+        # stays NULL in both.
         words = F.split(F.col(text_col), " ")
         if eos_id is not None:
             words = F.concat(words, F.array(F.lit("")))
-        m_cheap = F.size(words)
+        m_cheap = F.array_size(words)
         bases = (
             docs.select(
                 F.col(source_col).alias("source"),

@@ -720,7 +720,8 @@ def semdedup(
 
     Returns one row per input: (id, cluster, cos_centroid, status
     kept|dropped). Reference has no counterpart (SURVEY §7 LLM-ops
-    extension).
+    extension). The batch job is the empty increment: this is
+    ``semdedup_incremental`` with no old side.
 
     ``pair_backend`` picks the within-cluster scorer, exactly like
     ``lsh_cosine_pairs``'s ``verify`` rungs: ``"codegen"`` (default)
@@ -736,7 +737,8 @@ def semdedup(
     4-6 s, identical drop sets; below a few hundred rows the Arrow
     group-shuffle overhead dominates and codegen wins). Same drop set
     either way (cosines differ only by float reassociation, ~1e-12, only
-    material for pairs sitting exactly on the threshold).
+    material for pairs sitting exactly on the threshold; see
+    ``semdedup_incremental`` for the reproducibility contract).
 
     Codegen bound: the argmax assignment inlines k x dim literals, so its
     one-time whole-stage-codegen compile grows with k (measured ~8 s at
@@ -745,30 +747,98 @@ def semdedup(
     pass (``assign="blas"``) and feed the resulting (id, bucket) table in
     place of the argmax — the fence and keep rule are unchanged.
     """
+    # Only the two columns: an input that happens to carry `cluster` and
+    # `cos_centroid` must not be read as a stored assignment. `limit(0)`
+    # lets the optimizer prune the empty old branch, so the plan is the
+    # batch plan.
+    vectors = vectors.select(id_col, vec_col)
+    return semdedup_incremental(
+        vectors.limit(0), vectors, centroids, threshold, id_col, vec_col,
+        pair_backend,
+    )
+
+
+def semdedup_incremental(
+    old: DataFrame,
+    new: DataFrame,
+    centroids: list[tuple[int, list[float]]],
+    threshold: float,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    pair_backend: str = "codegen",
+) -> DataFrame:
+    """Incremental SemDeDup: admit a NEW batch of vectors against an
+    already-deduped (published) corpus — one verdict row per new vector,
+    with the old corpus never paired against itself and never dropped.
+    Assignment, keep rule and ``pair_backend`` rungs are ``semdedup``'s.
+
+    Corpus-stability semantics, the production admission rule: an old
+    member always beats a new near-duplicate (published data does not
+    churn), while new-vs-new pairs use the standard SemDeDup keep rule
+    (lowest (cos_centroid, id) survives). This intentionally differs from
+    re-running ``semdedup`` over old ∪ new, which could retroactively
+    drop old members. Both rungs encode the asymmetry in the keep key
+    alone: old rows enter the pair stage with ``cos_centroid = -inf``, so
+    they sort before every new row and beat it under the standard rule,
+    and only rows keyed above ``-inf`` receive verdicts.
+
+    Scale shape mirrors ``minhash_lsh_pairs_incremental``: assignment is
+    the map-only argmax for BOTH sides, but at 100 TB the old side's
+    (id, cluster, cos_centroid) is a stored by-product of its own
+    admission pass — pass a DataFrame that already carries ``cluster``
+    and ``cos_centroid`` columns and the old corpus is not re-scored.
+    The pair join probes with the increment only, so candidate volume is
+    |new| x cluster population.
+
+    Reproducibility contract: only ``"codegen"`` is bit-reproducible
+    against the SQL oracle — the blas rung scores pairs with a numpy
+    matmul whose FP summation order differs from the fixed-order codegen
+    dot, so a cosine within ~1 ulp of ``threshold`` can flip verdicts
+    between rungs. Because ``"auto"`` switches rungs on measured cluster
+    population, the SAME call can change results as the corpus grows;
+    oracle-gated paths (the registry entries included) must pin
+    ``"codegen"``, and callers comparing runs across corpus sizes should
+    pin a rung explicitly rather than rely on ``"auto"``.
+    """
     unit = unit_centroids(centroids)
 
     def sims(emb: Column) -> Column:
         return _centroid_sims(emb, unit)
 
-    assigned = (
-        vectors.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__emb"))
-        .withColumn("__best", F.array_max(sims(F.col("__emb"))))
-        .withColumn("cluster", (-F.col("__best.negcid")).cast("int"))
-        .withColumn("__n", l2_norm(F.col("__emb")))
-        .withColumn("cos_centroid", F.col("__best.s") / F.col("__n"))
-        .drop("__best")
-        .cache()
-    )
-    # Materialize before fan-out: the pair join reads `assigned` twice and
+    def assign(df: DataFrame) -> DataFrame:
+        if "cluster" in df.columns and "cos_centroid" in df.columns:
+            # stored assignment from the corpus' own admission pass
+            return df.select(
+                F.col(id_col).alias("__id"), F.col(vec_col).alias("__emb"),
+                l2_norm(F.col(vec_col)).alias("__n"),
+                F.col("cluster").cast("int").alias("cluster"),
+                F.col("cos_centroid").cast("double").alias("cos_centroid"),
+            )
+        return (
+            df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__emb"))
+            .withColumn("__best", F.array_max(sims(F.col("__emb"))))
+            .withColumn("cluster", (-F.col("__best.negcid")).cast("int"))
+            .withColumn("__n", l2_norm(F.col("__emb")))
+            .withColumn("cos_centroid", F.col("__best.s") / F.col("__n"))
+            .drop("__best")
+        )
+
+    new_a = assign(new).cache()
+    # Materialize before fan-out: the pair join reads `new_a` twice and
     # the status join a third time — without the cache each consumer
-    # re-evaluates the k x dim argmax expression over the full corpus
+    # re-evaluates the k x dim argmax expression over the full increment
     # (measured 3x the runtime at the sf1 stress; same pattern as
     # minhash_lsh_pairs' shingle cache).
-    n_assigned = assigned.count()
+    n_new = new_a.count()
+    # old rows carry the keep key -inf, so they beat every new row
+    olds = assign(old).withColumn("cos_centroid", F.lit(float("-inf")))
+    both = olds.unionByName(new_a)
     if pair_backend == "auto":
-        # one k-row aggregation over the already-cached assignment
+        # One k-row aggregation. This re-evaluates the old side's argmax
+        # once (map-only); at 100 TB the old assignment is the stored
+        # by-product documented above, so the extra pass costs nothing.
         max_pop = (
-            assigned.groupBy("cluster")
+            both.groupBy("cluster")
             .agg(F.count(F.lit(1)).alias("n"))
             .agg(F.max("n").alias("m"))
             .collect()[0]["m"]
@@ -777,26 +847,26 @@ def semdedup(
             "blas" if max_pop > SEMDEDUP_BLAS_MIN_CLUSTER else "codegen"
         )
     if pair_backend == "codegen":
-        a = assigned.select(
+        a = new_a.select(
             F.col("__id").alias("__ida"), F.col("__emb").alias("__emba"),
             F.col("__n").alias("__na"), F.col("cos_centroid").alias("__ca"),
             "cluster",
         )
         # The quadratic pair stage's parallelism is the PROBE side's
-        # partitioning: when `b` broadcasts (small corpora), no exchange
+        # partitioning: when `b` broadcasts (small inputs), no exchange
         # ever re-spreads `a`, so the O(pop²) dot-product work runs at
         # the scan's split count — 4 tasks on a 32-core box for a
         # single-small-file scan (measured 38 s of executor CPU in 4
         # tasks at the sf1 stress). Spread it to the session's
-        # parallelism, gated by measured size so a 100 TB corpus — whose
-        # join shuffles both sides anyway and would only waste a full
-        # extra exchange — never pays it (guide §2.6 idle capacity;
+        # parallelism, gated by measured size so a 100 TB increment —
+        # whose join shuffles both sides anyway and would only waste a
+        # full extra exchange — never pays it (guide §2.6 idle capacity;
         # same measured-adaptivity pattern as the blas `auto` rung).
-        sc = vectors.sparkSession.sparkContext
+        sc = new.sparkSession.sparkContext
         dim = len(unit[0][1]) if unit else 0
-        if n_assigned * max(dim, 1) * 8 < (1 << 28):
+        if n_new * max(dim, 1) * 8 < (1 << 28):
             a = a.repartition(sc.defaultParallelism, "__ida")
-        b = assigned.select(
+        b = both.select(
             F.col("__id").alias("__idb"), F.col("__emb").alias("__embb"),
             F.col("__n").alias("__nb"), F.col("cos_centroid").alias("__cb"),
             "cluster",
@@ -826,193 +896,17 @@ def semdedup(
             # Sort by the keep key: a row can only be dropped by a
             # strictly-earlier row, so one lower-triangle check of the
             # cluster's similarity matrix resolves every pair at once.
+            # Old rows (key -inf) sort first and get no verdict.
             pdf = pdf.sort_values(["cos_centroid", "__id"], kind="mergesort")
-            m = np.asarray(pdf["__emb"].tolist(), dtype=np.float64)
-            sims_m = (m @ m.T) / np.outer(
-                pdf["__n"].to_numpy(), pdf["__n"].to_numpy()
-            )
-            tril = np.tril(sims_m > threshold, k=-1)
-            drop = tril.any(axis=1)
-            return pd.DataFrame({"__dropped_id": pdf["__id"].to_numpy()[drop]})
-
-        dropped = (
-            assigned.select("__id", "__emb", "__n", "cos_centroid", "cluster")
-            .groupBy("cluster")
-            .applyInPandas(
-                resolve,
-                schema=f"__dropped_id {dict(assigned.dtypes)['__id']}",
-            )
-        )
-    else:
-        raise ValueError(
-            f"pair_backend must be 'codegen', 'blas' or 'auto', "
-            f"got {pair_backend!r}"
-        )
-    return (
-        assigned.join(
-            dropped, assigned["__id"] == dropped["__dropped_id"], "left"
-        )
-        .select(
-            F.col("__id").alias(id_col),
-            "cluster",
-            "cos_centroid",
-            F.when(F.col("__dropped_id").isNull(), F.lit("kept"))
-            .otherwise(F.lit("dropped"))
-            .alias("status"),
-        )
-    )
-
-
-def semdedup_incremental(
-    old: DataFrame,
-    new: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    pair_backend: str = "codegen",
-) -> DataFrame:
-    """Incremental SemDeDup: admit a NEW batch of vectors against an
-    already-deduped (published) corpus — one verdict row per new vector,
-    with the old corpus never paired against itself and never dropped.
-
-    Corpus-stability semantics, the production admission rule: an old
-    member always beats a new near-duplicate (published data does not
-    churn), while new-vs-new pairs use the standard SemDeDup keep rule
-    (lowest (cos_centroid, id) survives). This intentionally differs from
-    re-running ``semdedup`` over old ∪ new, which could retroactively
-    drop old members.
-
-    Scale shape mirrors ``minhash_lsh_pairs_incremental``: assignment is
-    the map-only argmax for BOTH sides, but at 100 TB the old side's
-    (id, cluster, cos_centroid) is a stored by-product of its own
-    admission pass — pass a DataFrame that already carries ``cluster``
-    and ``cos_centroid`` columns and the old corpus is not re-scored.
-    The pair join probes with the increment only, so candidate volume is
-    |new| x cluster population.
-
-    ``pair_backend`` mirrors ``semdedup``'s rungs: ``"codegen"``
-    (default) expands new-vs-candidate pairs through the cluster
-    equi-join (bit-reproducible vs the SQL oracle); ``"blas"`` groups
-    each cluster's old+new rows and resolves the whole cluster with ONE
-    numpy matmul (``applyInPandas``, old rows sorted first so the
-    lower-triangle check encodes the corpus-stability asymmetry) — each
-    row crosses the shuffle once instead of once per candidate pair;
-    ``"auto"`` measures the largest cluster on the cached assignment and
-    picks blas past ``SEMDEDUP_BLAS_MIN_CLUSTER`` rows (the measured
-    crossover, same constant as ``semdedup``).
-
-    Reproducibility contract: only ``"codegen"`` is bit-reproducible
-    against the SQL oracle — the blas rung scores pairs with a numpy
-    matmul whose FP summation order differs from the fixed-order codegen
-    dot, so a cosine within ~1 ulp of ``threshold`` can flip verdicts
-    between rungs. Because ``"auto"`` switches rungs on measured cluster
-    population, the SAME call can change results as the corpus grows;
-    oracle-gated paths (the registry entry included) must pin
-    ``"codegen"``, and callers comparing runs across corpus sizes should
-    pin a rung explicitly rather than rely on ``"auto"``.
-    """
-    unit = unit_centroids(centroids)
-
-    def sims(emb: Column) -> Column:
-        return _centroid_sims(emb, unit)
-
-    def assign(df: DataFrame) -> DataFrame:
-        if "cluster" in df.columns and "cos_centroid" in df.columns:
-            # stored assignment from the corpus' own admission pass
-            return df.select(
-                F.col(id_col).alias("__id"), F.col(vec_col).alias("__emb"),
-                l2_norm(F.col(vec_col)).alias("__n"),
-                F.col("cluster").cast("int").alias("cluster"),
-                F.col("cos_centroid").cast("double").alias("cos_centroid"),
-            )
-        return (
-            df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__emb"))
-            .withColumn("__best", F.array_max(sims(F.col("__emb"))))
-            .withColumn("cluster", (-F.col("__best.negcid")).cast("int"))
-            .withColumn("__n", l2_norm(F.col("__emb")))
-            .withColumn("cos_centroid", F.col("__best.s") / F.col("__n"))
-            .drop("__best")
-        )
-
-    new_a = assign(new).cache()
-    # one argmax evaluation (see semdedup's cache rationale)
-    n_new = new_a.count()
-    olds = assign(old)
-    both = olds.withColumn("__isold", F.lit(True)).unionByName(
-        new_a.withColumn("__isold", F.lit(False))
-    )
-    if pair_backend == "auto":
-        # One k-row aggregation. This re-evaluates the old side's argmax
-        # once (map-only); at 100 TB the old assignment is the stored
-        # by-product documented above, so the extra pass costs nothing.
-        max_pop = (
-            both.groupBy("cluster")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n").alias("m"))
-            .collect()[0]["m"]
-        ) or 0
-        pair_backend = (
-            "blas" if max_pop > SEMDEDUP_BLAS_MIN_CLUSTER else "codegen"
-        )
-    if pair_backend == "codegen":
-        a = new_a.select(
-            F.col("__id").alias("__ida"), F.col("__emb").alias("__emba"),
-            F.col("__n").alias("__na"), F.col("cos_centroid").alias("__ca"),
-            "cluster",
-        )
-        # Same probe-side spread as semdedup's codegen rung (see there):
-        # when `b` broadcasts, the quadratic stage runs at the increment
-        # scan's split count; spread a small increment to the session's
-        # parallelism, size-gated so a huge increment (whose join
-        # shuffles anyway) never pays an extra exchange.
-        sc = new.sparkSession.sparkContext
-        dim = len(unit[0][1]) if unit else 0
-        if n_new * max(dim, 1) * 8 < (1 << 28):
-            a = a.repartition(sc.defaultParallelism, "__ida")
-        b = both.select(
-            F.col("__id").alias("__idb"), F.col("__emb").alias("__embb"),
-            F.col("__n").alias("__nb"), F.col("cos_centroid").alias("__cb"),
-            "cluster", "__isold",
-        )
-        beats = F.col("__isold") | (
-            (F.col("__cb") < F.col("__ca"))
-            | ((F.col("__cb") == F.col("__ca")) & (F.col("__idb") < F.col("__ida")))
-        )
-        dropped = (
-            a.join(b, "cluster")
-            .filter((F.col("__ida") != F.col("__idb")) & beats)
-            .filter(
-                dot(F.col("__emba"), F.col("__embb"))
-                / (F.col("__na") * F.col("__nb"))
-                > threshold
-            )
-            .select(F.col("__ida").alias("__dropped_id"))
-            .distinct()
-        )
-    elif pair_backend == "blas":
-        import pandas as pd
-
-        def resolve(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            # Old rows first (they beat every new row), then new rows by
-            # the keep key: a NEW row drops iff any strictly-earlier row
-            # in this order clears the threshold — one lower-triangle
-            # check of the cluster's similarity matrix resolves every
-            # pair, and old rows are masked out of the verdicts.
-            pdf = pdf.sort_values(
-                ["__isold", "cos_centroid", "__id"],
-                ascending=[False, True, True],
-                kind="mergesort",
-            )
             m = np.asarray(pdf["__emb"].tolist(), dtype=np.float64)
             norms = pdf["__n"].to_numpy()
             sims_m = (m @ m.T) / np.outer(norms, norms)
             tril = np.tril(sims_m > threshold, k=-1)
-            drop = tril.any(axis=1) & ~pdf["__isold"].to_numpy()
+            drop = tril.any(axis=1) & (pdf["cos_centroid"].to_numpy() > -np.inf)
             return pd.DataFrame({"__dropped_id": pdf["__id"].to_numpy()[drop]})
 
         dropped = (
-            both.select("__id", "__emb", "__n", "cos_centroid", "cluster", "__isold")
+            both.select("__id", "__emb", "__n", "cos_centroid", "cluster")
             .groupBy("cluster")
             .applyInPandas(
                 resolve,

@@ -82,17 +82,6 @@ def language_id(
     )
 
 
-def token_histogram(docs: DataFrame, text_col: str = "text", top: int = 1000) -> DataFrame:
-    """Corpus token frequency table (vocabulary building)."""
-    return (
-        docs.select(F.explode(F.split(text_col, " ")).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .orderBy(F.desc("freq"), F.asc("tok"))
-        .limit(top)
-    )
-
-
 def posting_lists(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

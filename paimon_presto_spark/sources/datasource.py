@@ -940,13 +940,12 @@ class PaimonStreamWriter(PaimonWriter, DataSourceStreamWriter):
 class PaimonStreamPartition(InputPartition):
     def __init__(
         self,
-        mode: str,  # "files" | "clg" | "dvdiff"
+        mode: str,  # "files" | "dvdiff"
         table: Table,
         schema: dict,
         seq: int,
         files: list[tuple[str, int]] | None = None,  # (abs path, schema_id)
         positions: dict[str, tuple[int, list[int]]] | None = None,
-        clg_dir: str | None = None,
     ):
         self.mode = mode
         self.table = table
@@ -954,7 +953,6 @@ class PaimonStreamPartition(InputPartition):
         self.seq = seq
         self.files = files or []
         self.positions = positions or {}
-        self.clg_dir = clg_dir
 
 
 class PaimonStreamReader(DataSourceStreamReader):
@@ -1024,9 +1022,15 @@ class PaimonStreamReader(DataSourceStreamReader):
             sid = snap.snapshot_id
             if lookup:
                 if snap.changelog:
+                    # written in the commit's schema: project it by field
+                    # id like any data file
+                    clg = os.path.join(self.meta, "changelog", snap.changelog)
                     parts.append(PaimonStreamPartition(
-                        "clg", t, schema, sid,
-                        clg_dir=os.path.join(self.meta, "changelog", snap.changelog),
+                        "files", t, schema, sid, files=[
+                            (os.path.join(clg, f), snap.schema_id)
+                            for f in sorted(os.listdir(clg))
+                            if f.startswith("part-") and f.endswith(".parquet")
+                        ],
                     ))
                 continue
             for e in new:
@@ -1083,18 +1087,6 @@ class PaimonStreamReader(DataSourceStreamReader):
             tbl = pa.table(dict(zip(out_names, cols)))
             return iter(_cast_to_schema(tbl, schema).to_batches(max_chunksize=4096))
 
-        if partition.mode == "clg":
-            files = [
-                os.path.join(partition.clg_dir, f)
-                for f in os.listdir(partition.clg_dir)
-                if f.startswith("part-") and f.endswith(".parquet")
-            ]
-            if not files:
-                return iter(())
-            tbl = pa.concat_tables(
-                [pq.read_table(f) for f in files], promote_options="permissive"
-            )
-            return finalize(tbl, partition.seq, "I")
         if partition.mode == "dvdiff":
             tables = []
             for f, (sid, positions) in partition.positions.items():

@@ -1165,9 +1165,12 @@ class Table:
                 gdf = _merge_on_read(gdf, schema)
             # one output file per compacted group — the point of the
             # rewrite; group size is bucket-bounded, so one task suffices
-            parts.append(
-                gdf.coalesce(1).withColumn("__bucket", F.lit(int(bucket)))
-            )
+            gdf = gdf.coalesce(1)
+            if pk:
+                # only primary-key writes turn `__bucket` into a directory;
+                # an append file would store it as a data column
+                gdf = gdf.withColumn("__bucket", F.lit(int(bucket)))
+            parts.append(gdf)
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
@@ -1736,21 +1739,24 @@ class Table:
             if end_snapshot is not None
             else (self.snapshot().snapshot_id if self.snapshot() else 0)
         )
-        names = []
-        for sid in self.snapshot_ids():
-            if start_snapshot < sid <= end:
-                snap = self.snapshot(sid)
-                if snap.changelog:
-                    names.append(snap.changelog)
         schema = self.schema()
         out = None
-        for name in names:
-            part = self.spark.read.parquet(
-                os.path.join(self.meta_path, "changelog", name)
+        for sid in self.snapshot_ids():
+            if not start_snapshot < sid <= end:
+                continue
+            snap = self.snapshot(sid)
+            if not snap.changelog:
+                continue
+            # each changelog keeps its commit's schema: follow renames,
+            # drops and adds by field id
+            part = _project_to(
+                self.spark.read.parquet(
+                    os.path.join(self.meta_path, "changelog", snap.changelog)
+                ),
+                self.schema(snap.schema_id), schema, keep_sys=False,
+                extra=(KIND_COL, SEQ_COL),
             )
-            out = part if out is None else out.unionByName(
-                part, allowMissingColumns=True
-            )
+            out = part if out is None else out.unionByName(part)
         if out is None:
             fields = [
                 T.StructField(f["name"], _parse_type(f["type"]), True)
@@ -1760,17 +1766,7 @@ class Table:
                 T.StructField(SEQ_COL, T.LongType(), True),
             ]
             return self.spark.createDataFrame([], T.StructType(fields))
-        # project to the current schema (changelog files keep their writer
-        # schema; added columns null-pad by name)
-        cols = [
-            (
-                F.col(f["name"]).cast(_parse_type(f["type"]))
-                if f["name"] in out.columns
-                else F.lit(None).cast(_parse_type(f["type"]))
-            ).alias(f["name"])
-            for f in schema.fields
-        ]
-        return out.select(*cols, F.col(KIND_COL), F.col(SEQ_COL))
+        return out
 
     def ro_df(self) -> DataFrame:
         """Read-optimized read (Paimon's ``$ro`` system table): serve the

@@ -94,13 +94,15 @@ def test_two_pass_offsets_match_single_window(docs, spark):
     document leads source 'a': the block bases must count it exactly as
     ``size(__ids)`` does in both ANSI modes (``size(NULL)`` is NULL with
     ANSI on and -1 with it off, where a count of ``split(text) + 1``
-    used to disagree once an EOS separator was set)."""
+    used to disagree once an EOS separator was set). A NULL text means
+    no tokens and no EOS, so both ANSI modes give the same sequences."""
     null_doc = spark.createDataFrame(
         [(0, "a", None)], "doc_id long, source string, text string"
     )
     docs = null_doc.unionByName(docs)
     key = lambda r: (r["source"], r["seq_id"])
     ansi = spark.conf.get("spark.sql.ansi.enabled")
+    by_mode = {}
     try:
         for mode in ("true", "false"):
             spark.conf.set("spark.sql.ansi.enabled", mode)
@@ -109,6 +111,7 @@ def test_two_pass_offsets_match_single_window(docs, spark):
                     tokenized_sequences(docs, seq_len=8, eos_id=eos).collect(),
                     key=key,
                 )
+                by_mode[mode, eos] = base
                 for blocks in (2, 3, 64):  # mid-source splits, blocks >> docs
                     two = sorted(
                         tokenized_sequences(
@@ -120,6 +123,8 @@ def test_two_pass_offsets_match_single_window(docs, spark):
                     assert two == base, (mode, eos, blocks)
     finally:
         spark.conf.set("spark.sql.ansi.enabled", ansi)
+    for eos in (None, 32768):
+        assert by_mode["false", eos] == by_mode["true", eos], eos
     with pytest.raises(ValueError, match="offset_blocks"):
         tokenized_sequences(docs, offset_blocks=4)
     with pytest.raises(ValueError, match="offset_blocks"):

@@ -433,11 +433,15 @@ def test_semdedup_incremental_stability_and_stored_assignment(spark):
 def test_semdedup_matches_numpy_reference(spark):
     """Randomized cross-check: semdedup (both pair backends) against an
     independent numpy implementation of assignment + keep rule, over
-    clustered random vectors where near-dups actually occur."""
+    clustered random vectors where near-dups actually occur. Also checks
+    semdedup_incremental over an old/new split of the same rows, and that
+    junk ``cluster``/``cos_centroid`` input columns do not change the
+    batch verdicts."""
     import numpy as np
     from paimon_presto_spark.operators.similarity import (
         _hyperplanes,
         semdedup,
+        semdedup_incremental,
         unit_centroids,
     )
 
@@ -477,6 +481,29 @@ def test_semdedup_matches_numpy_reference(spark):
         expect[i] = "dropped" if dropped else "kept"
     assert "dropped" in expect.values()  # the scenario must exercise drops
 
+    # incremental splits (old = ids < cut): an old row beats every new
+    # row; new-vs-new pairs follow the batch keep rule. Every row >= 100
+    # copies row i - 100, so cut=100 drops the whole increment; cut=3
+    # leaves most clusters to new-vs-new pairs.
+    expect_inc = {}
+    for cut in (100, 3):
+        expect_inc[cut] = {}
+        for i in range(cut, len(X)):
+            dropped = any(
+                cl[j] == cl[i]
+                and j != i
+                and sims_m[i, j] > thr
+                and (j < cut or (cos_c[j], j) < (cos_c[i], i))
+                for j in range(len(X))
+            )
+            expect_inc[cut][i] = "dropped" if dropped else "kept"
+        # some verdicts differ from the batch rule: old members win
+        assert any(v != expect[i] for i, v in expect_inc[cut].items())
+    assert set(expect_inc[3].values()) == {"dropped", "kept"}
+
+    junk = emb.withColumn("cluster", F.lit(99)).withColumn(
+        "cos_centroid", F.lit(0.5)
+    )
     for backend in ("codegen", "blas"):
         got = {
             r["vec_id"]: (r["cluster"], r["status"])
@@ -484,6 +511,21 @@ def test_semdedup_matches_numpy_reference(spark):
         }
         assert {i: got[i][0] for i in got} == {i: int(cl[i]) for i in expect}
         assert {i: got[i][1] for i in got} == expect, backend
+        got_junk = {
+            r["vec_id"]: r["status"]
+            for r in semdedup(junk, cents, thr, pair_backend=backend).collect()
+        }
+        assert got_junk == expect, backend
+        for cut, want in expect_inc.items():
+            got_inc = {
+                r["vec_id"]: r["status"]
+                for r in semdedup_incremental(
+                    emb.filter(F.col("vec_id") < cut),
+                    emb.filter(F.col("vec_id") >= cut),
+                    cents, thr, pair_backend=backend,
+                ).collect()
+            }
+            assert got_inc == want, (backend, cut)
 
 
 def test_kmeans_input_validation(spark):

@@ -1577,6 +1577,38 @@ class TestLookupChangelogProducer:
         # surviving range still reads (distinct keys → one I row per commit)
         assert t.changelog_df(2).count() == 2
 
+    def test_changelog_follows_rename_by_field_id(self, spark, catalog, tmp_path):
+        """Each commit's changelog keeps the schema it was written in: after
+        ``rename_column`` the batch changelog read and the lookup-producer
+        stream both find the renamed column by field id instead of
+        null-filling it."""
+        from paimon_presto_spark.sources.datasource import PaimonDataSource
+
+        t = self._mk(catalog, "clg7")
+        t.upsert(spark.createDataFrame([(1, "a")], "k int, v string"))
+        catalog.rename_column("default", "clg7", "v", "w")
+        t = catalog.get_table("default", "clg7")
+        t.upsert(spark.createDataFrame([(1, "b")], "k int, w string"))
+        want = [(1, "a", "I", 1), (1, "b", "UA", 2), (1, "a", "UB", 2)]
+
+        def rows(df):
+            return [
+                (r["k"], r["w"], r["__row_kind"], r["__seq"])
+                for r in df.orderBy("__seq", "__row_kind").collect()
+            ]
+
+        assert rows(t.changelog_df()) == want
+        spark.dataSource.register(PaimonDataSource)
+        q = (
+            spark.readStream.format("paimon").option("path", t.path)
+            .option("changelog", "true").load()
+            .writeStream.format("memory").queryName("clg7_out")
+            .option("checkpointLocation", str(tmp_path / "ck-clg7"))
+            .trigger(availableNow=True).start()
+        )
+        q.awaitTermination(120)
+        assert rows(spark.table("clg7_out")) == want
+
 
 class TestAutoTagsAndRo:
     def test_auto_tag_creation_and_retention(self, spark, catalog):
@@ -2159,6 +2191,14 @@ class TestBucketCompaction:
         assert t.to_df().count() == 3
         kinds = [t.snapshot(s).commit_kind for s in t.snapshot_ids()]
         assert kinds.count("COMPACT") == 1
+        # the compacted file stores only the table's columns (`__bucket`
+        # is a directory column of primary-key writes, not a data column)
+        import pyarrow.parquet as pq
+
+        names = [f["name"] for f in t.schema().fields]
+        for e in t.manifest_entries():
+            path = os.path.join(t.path, e["path"])
+            assert pq.read_schema(path).names == names, e["path"]
 
 
 class TestSplitDdlFieldsProperty:
