@@ -92,6 +92,7 @@ from paimon_presto_spark.table import (
     _char_len,
     _is_time_type,
     _varchar_len,
+    split_ddl_fields,
 )
 
 
@@ -134,11 +135,32 @@ def _scan(options: dict, predicate: Predicate | None = None) -> TableScan:
 
 
 def _arrow_type(ddl: str):
-    """DDL type string → pyarrow type (the subset the format supports for
-    hashable/statable columns; nested types pass through as-is)."""
+    """DDL type string → pyarrow type, nested types included, matching the
+    file schema ``table._file_schema`` declares (CHAR/VARCHAR as string,
+    TIME as int64). None for a type with no mapping here: the column keeps
+    the type the file or the inference gives it."""
     import pyarrow as pa
 
-    t = ddl.lower()
+    t = ddl.strip().lower()
+    if t.endswith(">"):
+        inner = ddl.strip()[t.index("<") + 1 : -1]
+        if t.startswith("array<"):
+            elem = _arrow_type(inner)
+            return pa.list_(elem) if elem is not None else None
+        if t.startswith("map<"):
+            depth = 0
+            for i, ch in enumerate(inner):
+                depth += (ch in "<(") - (ch in ">)")
+                if ch == "," and depth == 0:
+                    k, v = _arrow_type(inner[:i]), _arrow_type(inner[i + 1 :])
+                    return pa.map_(k, v) if None not in (k, v) else None
+        if t.startswith("struct<"):
+            fields = [(n, _arrow_type(ft)) for n, ft in split_ddl_fields(inner)]
+            if all(ft is not None for _, ft in fields):
+                return pa.struct(fields)
+        return None
+    if _char_len(t) is not None or _varchar_len(t) is not None:
+        return pa.string()
     simple = {
         "boolean": pa.bool_(),
         "tinyint": pa.int8(),
@@ -162,7 +184,7 @@ def _arrow_type(ddl: str):
     if t.startswith("decimal"):
         p, s = t[t.index("(") + 1 : -1].split(",")
         return pa.decimal128(int(p), int(s))
-    return None  # nested/unknown: leave the file's own type
+    return None
 
 
 _SYS_DDL = {"__seq": "bigint", "__pos": "bigint", "__row_kind": "string"}
@@ -734,7 +756,13 @@ class PaimonWriter(DataSourceWriter):
                 ]
             else:
                 cols["__row_kind"] = [self.row_kind] * len(rows)
-        tbl = pa.table(cols)
+        # nested columns take their declared type up front: inferred from
+        # Python values, array<int> would land as list<int64> and a map as
+        # a struct, unlike the file schema readers declare
+        nested = {n: _arrow_type(t) for n, t in types.items() if "<" in t}
+        tbl = pa.table(
+            {n: pa.array(v, type=nested.get(n)) for n, v in cols.items()}
+        )
         os.makedirs(self.staging, exist_ok=True)
         entries = []
         statable = {
@@ -803,7 +831,9 @@ class PaimonWriter(DataSourceWriter):
                 gmap = dict(zip(group_cols, gvals))
                 bucket = int(gmap.pop("__grp_bucket", 0))
                 _write_group(
-                    pa.Table.from_pandas(sub, preserve_index=False).select(out_names),
+                    pa.Table.from_pandas(
+                        sub, schema=tbl.schema, preserve_index=False
+                    ).select(out_names),
                     gmap,
                     bucket,
                 )

@@ -53,6 +53,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re as _re_mod
@@ -161,6 +162,7 @@ def _is_numeric_type(t: str) -> bool:
     return t.split("(")[0].strip().lower() in NUMERIC_TYPES
 
 
+@functools.lru_cache(maxsize=None)
 def _parse_type(ddl: str) -> T.DataType:
     """Declared type string → physical Spark type.
 
@@ -176,6 +178,31 @@ def _parse_type(ddl: str) -> T.DataType:
     if _is_time_type(ddl):
         return T.LongType()
     return T.StructType.fromDDL(f"c {ddl}")[0].dataType
+
+
+# CHAR(n) / VARCHAR(n) anywhere in a type string, nested ones included
+_CHAR_TYPES_RE = _re_mod.compile(r"\b(?:var)?char\s*\(\s*\d+\s*\)", _re_mod.I)
+
+
+def _file_schema(writer_schema: TableSchema) -> T.StructType:
+    """The physical schema of a data file written under `writer_schema`:
+    its declared fields, nullable, with TIME as its micros long, plus the
+    system columns of primary-key files. CHAR(n)/VARCHAR(n), nested ones
+    included, read as STRING, the type the files hold: a read schema may
+    not contain them (``UNSUPPORTED_CHAR_OR_VARCHAR_AS_STRING``)."""
+    fields = [
+        T.StructField(
+            f["name"], _parse_type(_CHAR_TYPES_RE.sub("string", f["type"])), True
+        )
+        for f in writer_schema.fields
+    ]
+    if writer_schema.primary_keys:
+        fields += [
+            T.StructField(SEQ_COL, T.LongType(), True),
+            T.StructField(POS_COL, T.LongType(), True),
+            T.StructField(KIND_COL, T.StringType(), True),
+        ]
+    return T.StructType(fields)
 
 
 def split_ddl_fields(ddl: str) -> list[tuple[str, str]]:
@@ -485,7 +512,13 @@ class Table:
         snap = snap if snap is not None else self.snapshot()
         if snap is None or not snap.dv_index:
             return None
-        return self.spark.read.parquet(os.path.join(self._dv_root(), snap.dv_index))
+        return self._read_dv_index(snap.dv_index)
+
+    def _read_dv_index(self, name: str) -> DataFrame:
+        # declared, not inferred: building the read runs no Spark job
+        return self.spark.read.schema("path string, pos long").parquet(
+            os.path.join(self._dv_root(), name)
+        )
 
     def _file_pos_cols(self) -> tuple[F.Column, F.Column]:
         """(table-relative file path, row position) columns for a scan of
@@ -1046,7 +1079,7 @@ class Table:
           independently. The right choice at 100 TB when queries filter on
           different columns of the same table. Column ranges come from
           manifest stats (no extra data pass); rows are range-partitioned
-          by Z-value so file count stays at the shuffle-partition count.
+          by Z-value.
         - ``strategy="hilbert"``: same per-column skipping as zorder but
           along a Hilbert curve (Paimon upstream's second clustering
           choice). The curve has no Z-shaped jumps — consecutive index
@@ -1054,6 +1087,13 @@ class Table:
           is tighter on average; prefer it when range predicates dominate.
           Computed with a vectorized Arrow-batched kernel (Skilling's
           transform) — a one-off pass inside the rewrite, not a hot path.
+
+        File count: every strategy range-partitions into
+        ``spark.sql.shuffle.partitions`` tasks, and the write splits each
+        task's rows by (partition, bucket) group, so a sort-compaction
+        writes up to shuffle partitions × groups files, not one file per
+        shuffle partition: a 4000-row table with 3 partitions × 2 buckets
+        gets 192 files at 32 shuffle partitions.
         """
         current = self.to_df()
         if sort_by:
@@ -1139,8 +1179,7 @@ class Table:
             gdf = None
             for wsid, files in sorted(by_schema.items()):
                 ws = self.schema(wsid)
-                fmt = ws.options.get("file.format", "parquet")
-                raw = _read_data_files(self.spark, fmt, files)
+                raw = _read_data_files(self.spark, ws, files)
                 if dv_mode:
                     # drop the group's deleted positions during the rewrite
                     # (the fold DV compaction performs); untouched files
@@ -2333,11 +2372,7 @@ class Table:
             if snap.dv_index and snap.dv_index != parent_dv:
                 step = self.dv_df(snap)
                 if parent_dv:
-                    step = step.exceptAll(
-                        self.spark.read.parquet(
-                            os.path.join(self._dv_root(), parent_dv)
-                        )
-                    )
+                    step = step.exceptAll(self._read_dv_index(parent_dv))
                 dv_added.append(step)
         schema = self.schema()
         spark = self.spark
@@ -2357,8 +2392,7 @@ class Table:
             parts = []
             for wsid, files in sorted(by_schema.items()):
                 writer_schema = self.schema(wsid)
-                fmt = writer_schema.options.get("file.format", "parquet")
-                df = _read_data_files(spark, fmt, files)
+                df = _read_data_files(spark, writer_schema, files)
                 if extra:
                     pcol, poscol = self._file_pos_cols()
                     df = df.select("*", pcol, poscol)
@@ -2448,9 +2482,10 @@ class Table:
         return self.compact()
 
     def remove_orphan_files(self, older_than_ms: int | None = None) -> list[str]:
-        """Delete data files no lineage references (Paimon's
-        remove-orphan-files action): files stranded by deleted branches,
-        crashed writers, or interrupted commits — including staging dirs
+        """Delete files no lineage references (Paimon's remove-orphan-files
+        action): data files stranded by deleted branches, crashed writers,
+        or interrupted commits — including staging dirs, manifests that
+        never got a published snapshot (or lost theirs to ``rollback_to``)
         and unpublished snapshot temp files.
 
         `older_than_ms` (epoch millis) guards in-flight writers: only files
@@ -2463,71 +2498,66 @@ class Table:
         lineages = [main] + [main.branch(n) for n in main.list_branches()]
         live = set()
         live_dv = set()
+        live_manifests: dict[str, set[str]] = {}
         for t in lineages:
             snaps = [t.snapshot(sid) for sid in t.snapshot_ids()] + [
                 t.tag_snapshot(nm) for nm in t.list_tags()
             ]
+            manifests = live_manifests.setdefault(t.meta_path, set())
             for snap in snaps:
+                manifests.update(t._manifest_members(snap))
                 if snap.dv_index:
                     live_dv.add(snap.dv_index)
                 if snap.bucket_index:
                     live_dv.add(snap.bucket_index)
                 for e in t.manifest_entries(snap):
                     live.add(e["path"])
-        data_dir = os.path.join(self.path, "data")
         removed = []
-        for root, _dirs, files in os.walk(data_dir):
+
+        def sweep(full: str) -> None:
+            if os.path.getmtime(full) * 1000 >= older_than_ms:
+                return  # too fresh — may belong to an in-flight commit
+            if os.path.isdir(full):
+                _rmtree_quiet(full)
+            else:
+                os.remove(full)
+            removed.append(os.path.relpath(full, self.path))
+
+        for root, _dirs, files in os.walk(os.path.join(self.path, "data")):
             for fn in files:
                 full = os.path.join(root, fn)
-                rel = os.path.relpath(full, self.path)
-                if rel in live:
-                    continue
-                if os.path.getmtime(full) * 1000 >= older_than_ms:
-                    continue  # too fresh — may belong to an in-flight commit
-                os.remove(full)
-                removed.append(rel)
+                if os.path.relpath(full, self.path) not in live:
+                    sweep(full)
         # deletion-vector index datasets no snapshot of any lineage points at
         dv_root = self._dv_root()
         if os.path.isdir(dv_root):
             for name in os.listdir(dv_root):
-                full = os.path.join(dv_root, name)
-                if name in live_dv:
-                    continue
-                if os.path.getmtime(full) * 1000 >= older_than_ms:
-                    continue
-                _rmtree_quiet(full)
-                removed.append(os.path.relpath(full, self.path))
+                if name not in live_dv:
+                    sweep(os.path.join(dv_root, name))
         # staging dirs abandoned by crashed writers (a completed commit
         # removes its staging dir; anything old enough here is dead weight)
         staging_root = os.path.join(self.path, "staging")
         if os.path.isdir(staging_root):
             for name in os.listdir(staging_root):
-                full = os.path.join(staging_root, name)
-                if os.path.getmtime(full) * 1000 >= older_than_ms:
-                    continue
-                _rmtree_quiet(full)
-                removed.append(os.path.relpath(full, self.path))
+                sweep(os.path.join(staging_root, name))
         # DataSource writers stage under .staging-ds-* at the table root
         for name in os.listdir(self.path):
             if name.startswith(".staging-ds-"):
-                full = os.path.join(self.path, name)
-                if os.path.getmtime(full) * 1000 >= older_than_ms:
-                    continue
-                _rmtree_quiet(full)
-                removed.append(name)
-        # snapshot payloads of committers killed before the publish link
+                sweep(os.path.join(self.path, name))
         for t in lineages:
+            # snapshot payloads of committers killed before the publish link
             sdir = os.path.join(t.meta_path, "snapshot")
-            if not os.path.isdir(sdir):
-                continue
-            for name in os.listdir(sdir):
-                full = os.path.join(sdir, name)
-                if not name.startswith(_SNAPSHOT_TMP_PREFIX):
-                    continue
-                if os.path.getmtime(full) * 1000 >= older_than_ms:
-                    continue
-                os.remove(full)
-                removed.append(os.path.relpath(full, self.path))
+            if os.path.isdir(sdir):
+                for name in os.listdir(sdir):
+                    if name.startswith(_SNAPSHOT_TMP_PREFIX):
+                        sweep(os.path.join(sdir, name))
+            # manifests of commits that failed before their snapshot was
+            # published, and of snapshots removed by rollback_to
+            mdir = os.path.join(t.meta_path, "manifest")
+            if os.path.isdir(mdir):
+                for name in os.listdir(mdir):
+                    if name not in live_manifests[t.meta_path]:
+                        sweep(os.path.join(mdir, name))
         return sorted(removed)
 
     def _commit_meta(
@@ -3251,11 +3281,16 @@ class Table:
 
 class TableScan:
     """Scan planning: snapshot selection → partition pruning → file skipping
-    → Spark parquet read → schema-evolution projection → merge-on-read.
+    → Spark file read → schema-evolution projection → merge-on-read.
 
-    The planned Spark job reads ONLY surviving files; the predicate is
-    re-applied as a DataFrame filter (advisory pushdown, reference keeps the
-    Filter node too), and pushed further into parquet row groups by Spark.
+    The file read is built from the manifest alone, like the reference's
+    splits (``PrestoSplitManager.java:79``): each writer schema's files load
+    with their declared file schema and as an explicit file list, so
+    building the DataFrame runs no Spark job (no schema inference, no
+    listing job). The planned Spark job reads ONLY surviving files; the
+    predicate is re-applied as a DataFrame filter (advisory pushdown,
+    reference keeps the Filter node too), and pushed further into parquet
+    row groups by Spark.
     """
 
     def __init__(self, table, predicate, snapshot_id, as_of_ts, partition_where,
@@ -3461,8 +3496,7 @@ class TableScan:
         parts = []
         for sid, files in sorted(by_schema.items()):
             writer_schema = t.schema(sid)
-            fmt = writer_schema.options.get("file.format", "parquet")
-            df = _read_data_files(spark, fmt, files)
+            df = _read_data_files(spark, writer_schema, files)
             if dv is not None or keep_pos:
                 # row identity for position-delete filtering, from the
                 # hidden _metadata struct (parquet row index)
@@ -3838,11 +3872,12 @@ def _project_to(
     do this projection; we do it with one Spark select).
     """
     by_id = {f["id"]: f for f in writer_schema.fields}
+    have = set(df.columns)  # one JVM schema round trip, not one per field
     cols = []
     for f in reader_schema.fields:
         w = by_id.get(f["id"])
         target_t = _parse_type(f["type"])
-        if w is not None and w["name"] in df.columns:
+        if w is not None and w["name"] in have:
             cols.append(F.col(w["name"]).cast(target_t).alias(f["name"]))
         else:
             cols.append(F.lit(None).cast(target_t).alias(f["name"]))
@@ -3850,7 +3885,7 @@ def _project_to(
         sys_types = {SEQ_COL: "long", POS_COL: "long", KIND_COL: "string"}
         for c in SYS_COLS:
             cols.append(
-                F.col(c) if c in df.columns else F.lit(None).cast(sys_types[c]).alias(c)
+                F.col(c) if c in have else F.lit(None).cast(sys_types[c]).alias(c)
             )
     for c in extra:
         cols.append(F.col(c))
@@ -4086,20 +4121,29 @@ def _plain(v):
     return v
 
 
-def _read_data_files(spark: SparkSession, fmt: str, files: list) -> DataFrame:
-    """Load registered data files in their writer schema's format.
+def _read_data_files(
+    spark: SparkSession, writer_schema: TableSchema, files: list
+) -> DataFrame:
+    """Load registered data files written under `writer_schema`, in its
+    format.
 
-    parquet/orc go through the vectorized JVM readers; avro (no JVM
-    DataSource in this distribution) through the executor-side pure-Python
-    container decoder (``sources/avroio.py``). Deletion vectors require
-    parquet (guarded at enable time), so the ``_metadata`` position columns
-    are never requested on the avro path.
+    parquet/orc go through the vectorized JVM readers with the declared
+    file schema (``_file_schema``) and the manifest's explicit file list,
+    so building the read runs no Spark job: no schema inference, and the
+    files are stat'ed on the driver (``session._DEFAULTS`` raises the
+    parallel-listing threshold). avro (no JVM DataSource in this
+    distribution) goes through the executor-side pure-Python container
+    decoder (``sources/avroio.py``), which probes one file header for its
+    schema. Deletion vectors require parquet (guarded at enable time), so
+    the ``_metadata`` position columns are never requested on the avro
+    path.
     """
+    fmt = writer_schema.options.get("file.format", "parquet")
     if fmt == "avro":
         from paimon_presto_spark.sources import avroio
 
         return avroio.read_avro(spark, files)
-    return spark.read.format(fmt).load(files)
+    return spark.read.format(fmt).schema(_file_schema(writer_schema)).load(files)
 
 
 def _rmtree_quiet(path: str) -> None:

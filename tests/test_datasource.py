@@ -89,6 +89,33 @@ def test_datasource_write_append_and_overwrite(registered, spark, catalog):
     assert [(r["a"], r["b"]) for r in t.to_df().collect()] == [(9, "z")]
 
 
+@pytest.mark.parametrize("pks", [[], ["k"]])
+def test_datasource_write_nested_columns_in_declared_types(
+    registered, spark, catalog, pks
+):
+    """DataSource-written files hold nested columns in their declared
+    types, the file schema ``Table.to_df`` reads them with: array<int> is
+    list<int32>, not the list<int64> Python ints infer to, and a map is a
+    map, not a struct inferred from dicts."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ddl = "k int, xs array<int>, m map<string,int>, st struct<a:int,b:string>"
+    t = catalog.create_table("default", f"ds_nest{len(pks)}", ddl,
+                             primary_keys=pks)
+    spark.createDataFrame(
+        [(1, [1, 2], {"a": 1}, (3, "x")), (2, [], {}, None)], ddl
+    ).write.format("paimon").option("path", t.path).mode("append").save()
+    for e in t.manifest_entries():
+        schema = pq.ParquetFile(os.path.join(t.path, e["path"])).schema_arrow
+        assert schema.field("xs").type == pa.list_(pa.int32())
+        assert schema.field("m").type == pa.map_(pa.string(), pa.int32())
+    got = sorted(tuple(r) for r in t.to_df().collect())
+    assert got == [(1, [1, 2], {"a": 1}, (3, "x")), (2, [], {}, None)]
+
+
 def test_datasource_write_partitioned(registered, spark, catalog):
     t = catalog.create_table(
         "default", "ds_wp", "a int, region string", partition_keys=["region"]

@@ -1866,6 +1866,171 @@ class TestConcurrentCommits:
         assert t.snapshot().snapshot_id == 2
         assert rows(t.to_df()) == [(1,), (3,)]
 
+    @pytest.mark.parametrize(
+        "point", ["before_manifest", "before_link", "before_auto_tag"]
+    )
+    def test_crash_point_leaves_old_or_new_snapshot(
+        self, spark, catalog, monkeypatch, point
+    ):
+        """A commit that raises at any point leaves the table at the old
+        snapshot or the new one, whole: after the data files are written
+        but before the manifest, after the manifest but before the
+        snapshot link, or after the link but before auto-tag and expiry.
+        The next commit succeeds, and ``remove_orphan_files`` sweeps
+        exactly what the failed commit left behind."""
+        from paimon_presto_spark import table as table_mod
+        from paimon_presto_spark.sources.datasource import PaimonDataSource
+
+        t = catalog.create_table(
+            "default", f"crash_{point}", "k int, v string",
+            primary_keys=["k"], options={"bucket": "2"},
+        )
+        t.upsert(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"))
+
+        def listing():
+            out = set()
+            for sub in ("data", "manifest", "snapshot"):
+                for root, _dirs, files in os.walk(os.path.join(t.path, sub)):
+                    out |= {os.path.relpath(os.path.join(root, f), t.path)
+                            for f in files}
+            return out
+
+        def boom(*_args, **_kwargs):
+            raise OSError("injected crash during commit")
+
+        before = listing()
+        with monkeypatch.context() as m:
+            if point == "before_manifest":
+                m.setattr(table_mod.Table, "_write_manifest", boom)
+            elif point == "before_link":
+                m.setattr(table_mod.os, "link", boom)
+            else:
+                m.setattr(table_mod.Table, "_maybe_auto_tag", boom)
+            with pytest.raises(OSError, match="injected"):
+                t.upsert(spark.createDataFrame(
+                    [(2, "B"), (3, "c")], "k int, v string"))
+        leftovers = listing() - before
+        assert leftovers  # the failed commit wrote something
+
+        old, new = [(1, "a"), (2, "b")], [(1, "a"), (2, "B"), (3, "c")]
+        landed = point == "before_auto_tag"
+        assert t.snapshot().snapshot_id == (2 if landed else 1)
+        assert rows(t.to_df()) == (new if landed else old)
+        spark.dataSource.register(PaimonDataSource)
+        got = spark.read.format("paimon").option("path", t.path).load()
+        assert rows(got) == (new if landed else old)
+
+        t.upsert(spark.createDataFrame([(4, "d")], "k int, v string"))
+        assert t.snapshot().snapshot_id == (3 if landed else 2)
+        expect = (new if landed else old) + [(4, "d")]
+        assert rows(t.to_df()) == expect
+
+        removed = t.remove_orphan_files(
+            older_than_ms=int(time.time() * 1000) + 10_000
+        )
+        # a landed commit left nothing behind; a failed one is swept whole
+        assert set(removed) == (set() if landed else leftovers)
+        assert not any(os.path.exists(os.path.join(t.path, p)) for p in removed)
+        assert rows(t.to_df()) == expect
+        assert t.to_df(snapshot_id=1).count() == 2
+
+
+class TestScanBuildRunsNoJobs:
+    """Building a scan's DataFrame is metadata-only: each file loads with
+    the physical schema of its writer schema and as the manifest's
+    explicit file list, so ``to_df()`` runs no Spark job — neither
+    schema inference nor a parallel listing job, even past Spark's
+    default 32-path listing threshold."""
+
+    @pytest.fixture(autouse=True)
+    def _engine_listing_threshold(self, spark):
+        # the suite's session is not built by session.get_spark; give it
+        # the engine's listing threshold for these tests only
+        from paimon_presto_spark.session import _DEFAULTS
+
+        key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, _DEFAULTS[key])
+        yield
+        spark.conf.set(key, prev)
+
+    @staticmethod
+    def _build(spark, t):
+        """(t.to_df(), number of Spark jobs building it ran)."""
+        import uuid
+
+        sc = spark.sparkContext
+        group = f"scan-build-{uuid.uuid4().hex}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            df = t.to_df()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_primary_key_table_past_listing_threshold(self, spark, catalog):
+        t = catalog.create_table(
+            "default", "nojob_pk", "k int, v string", primary_keys=["k"],
+            options={"bucket": "1"},
+        )
+        t.upsert(spark.createDataFrame(
+            [(i, f"v{i}") for i in range(200)], "k int, v string"
+        ).repartition(40))
+        t.upsert(spark.createDataFrame(
+            [(i, "new") for i in range(0, 200, 10)], "k int, v string"))
+        t.delete(spark.createDataFrame([(5, "")], "k int, v string"))
+        assert len(t.manifest_entries()) > 32
+        df, jobs = self._build(spark, t)
+        assert jobs == 0
+        expect = {i: ("new" if i % 10 == 0 else f"v{i}")
+                  for i in range(200) if i != 5}
+        assert {r["k"]: r["v"] for r in df.collect()} == expect
+
+    def test_char_varchar_time_and_nested_varchar(self, spark, catalog):
+        t = catalog.create_table(
+            "default", "nojob_types",
+            "k int, c char(3), vc varchar(5), t time, tags array<varchar(4)>",
+        )
+        t.append(spark.createDataFrame(
+            [(1, "ab", "hello", 3_600_000_000, ["x", "yz"]),
+             (2, None, "", 0, [])],
+            "k int, c string, vc string, t long, tags array<string>",
+        ))
+        df, jobs = self._build(spark, t)
+        assert jobs == 0
+        assert rows(df) == [
+            (1, "ab ", "hello", 3_600_000_000, ["x", "yz"]),
+            (2, None, "", 0, []),
+        ]
+
+    def test_deletion_vector_table(self, spark, catalog):
+        t = catalog.create_table(
+            "default", "nojob_dv", "k int, v string", primary_keys=["k"],
+            options={"deletion-vectors.enabled": "true", "bucket": "2"},
+        )
+        t.upsert(spark.createDataFrame(
+            [(i, f"v{i}") for i in range(10)], "k int, v string"))
+        t.upsert(spark.createDataFrame([(3, "new")], "k int, v string"))
+        t.delete(spark.createDataFrame([(7, "")], "k int, v string"))
+        assert t.snapshot().dv_index
+        df, jobs = self._build(spark, t)
+        assert jobs == 0
+        expect = {i: f"v{i}" for i in range(10) if i != 7} | {3: "new"}
+        assert {r["k"]: r["v"] for r in df.collect()} == expect
+
+    def test_after_add_and_rename_column(self, spark, catalog):
+        t = catalog.create_table("default", "nojob_ev", "k int, s string")
+        t.append(spark.createDataFrame([(1, "a")], "k int, s string"))
+        catalog.add_column("default", "nojob_ev", "z", "varchar(3)")
+        t.append(spark.createDataFrame(
+            [(2, "b", "zz")], "k int, s string, z string"))
+        catalog.rename_column("default", "nojob_ev", "s", "g")
+        t = catalog.get_table("default", "nojob_ev")
+        df, jobs = self._build(spark, t)
+        assert jobs == 0
+        assert df.columns == ["k", "g", "z"]
+        assert rows(df) == [(1, "a", None), (2, "b", "zz")]
+
 
 class TestAutoExpiry:
     def test_num_retained_max(self, spark, catalog):
