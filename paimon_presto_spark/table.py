@@ -335,6 +335,12 @@ class CommitConflict(Exception):
 _SNAPSHOT_TMP_PREFIX = ".snapshot-tmp-"
 
 
+# physical schemas of the datasets under <table>/index/: deletion-vector
+# positions, and the dynamic-bucket key index (xxhash64(pk) -> bucket)
+_DV_INDEX_DDL = "path string, pos long"
+_BUCKET_INDEX_DDL = "kh long, bucket int"
+
+
 # folded manifest listings keyed by (meta_path, manifest file name) —
 # manifest files are immutable once written, so entries never go stale
 _MANIFEST_CACHE: dict[tuple[str, str], list[dict]] = {}
@@ -396,6 +402,9 @@ class Table:
         with open(self._schema_path(schema_id)) as fh:
             return TableSchema.from_json(json.load(fh))
 
+    def _snapshot_path(self, sid: int) -> str:
+        return os.path.join(self.meta_path, "snapshot", f"snapshot-{sid}.json")
+
     def snapshot_ids(self) -> list[int]:
         sdir = os.path.join(self.meta_path, "snapshot")
         if not os.path.isdir(sdir):
@@ -413,7 +422,7 @@ class Table:
         sid = snapshot_id if snapshot_id is not None else ids[-1]
         if sid not in ids:
             raise ValueError(f"snapshot {sid} does not exist (have {ids})")
-        with open(os.path.join(self.meta_path, "snapshot", f"snapshot-{sid}.json")) as fh:
+        with open(self._snapshot_path(sid)) as fh:
             return Snapshot(**json.load(fh))
 
     def snapshot_as_of(self, timestamp_ms: int) -> Snapshot:
@@ -512,11 +521,11 @@ class Table:
         snap = snap if snap is not None else self.snapshot()
         if snap is None or not snap.dv_index:
             return None
-        return self._read_dv_index(snap.dv_index)
+        return self._read_index(snap.dv_index, _DV_INDEX_DDL)
 
-    def _read_dv_index(self, name: str) -> DataFrame:
+    def _read_index(self, name: str, ddl: str) -> DataFrame:
         # declared, not inferred: building the read runs no Spark job
-        return self.spark.read.schema("path string, pos long").parquet(
+        return self.spark.read.schema(ddl).parquet(
             os.path.join(self._dv_root(), name)
         )
 
@@ -584,9 +593,7 @@ class Table:
         snap = snap if snap is not None else self.snapshot()
         if snap is None or not snap.bucket_index:
             return None
-        return self.spark.read.parquet(
-            os.path.join(self._dv_root(), snap.bucket_index)
-        )
+        return self._read_index(snap.bucket_index, _BUCKET_INDEX_DDL)
 
     def _assign_dynamic_buckets(
         self, df: DataFrame, base: Snapshot | None, index_new_keys: bool = True
@@ -2048,8 +2055,9 @@ class Table:
 
     def delete_branch(self, name: str) -> None:
         """Drop a branch's metadata. Data files only it referenced become
-        orphans (not reclaimed here — same as Paimon, which ships a
-        separate orphan-file cleanup)."""
+        orphans: ``remove_orphan_files``, the one reclaimer of unreferenced
+        files, deletes them (as in Paimon, which ships a separate
+        orphan-file cleanup)."""
         bdir = self._branch_dir(name)
         if not os.path.isdir(bdir):
             raise ValueError(f"branch {name!r} does not exist")
@@ -2105,11 +2113,18 @@ class Table:
         return last
 
     def expire_snapshots(self, keep_last: int = 10) -> list[int]:
-        """Drop snapshots older than the newest `keep_last`, deleting data
-        files no surviving snapshot references (the standard lakehouse
-        retention op — bounds metadata growth and reclaims storage from
+        """Drop snapshots older than the newest `keep_last`, then delete
+        the files only they referenced (the standard lakehouse retention
+        op — bounds metadata growth and reclaims storage from
         compaction/overwrite churn). Time travel remains valid for every
         kept snapshot; expired ids raise on access. Returns expired ids.
+
+        The snapshot files go first, oldest first, and reclamation runs
+        after them through ``_reclaim``: a crash at any point leaves
+        every listed snapshot whole, and whatever the crash stranded is
+        an orphan for ``remove_orphan_files``. Files any other snapshot,
+        branch or tag still references are kept — a tag pins its
+        snapshot's data files, manifests, indexes and changelog.
         """
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
@@ -2133,76 +2148,12 @@ class Table:
             expired = [i for i in expired if i < floor]
         if not expired:
             return []
-        kept = [i for i in ids if i not in set(expired)]
-        live_files = set()
-        live_manifests = set()
-        live_dv = set()
-        # Tagged snapshots stay readable after expiry (the tag file carries
-        # the snapshot payload), so their manifests and data files are live.
-        live_snaps = [self.snapshot(sid) for sid in kept] + [
-            self.tag_snapshot(name) for name in self.list_tags()
-        ]
-        for snap in live_snaps:
-            live_manifests.update(self._manifest_members(snap))
-            if snap.dv_index:
-                live_dv.add(snap.dv_index)
-            if snap.bucket_index:
-                live_dv.add(snap.bucket_index)
-            for e in self.manifest_entries(snap):
-                live_files.add(e["path"])
-        # Data files are shared across lineages: anything ANY other branch
-        # (or main, when expiring on a branch) references stays live. Their
-        # manifests/snapshots live in their own directories and are untouched.
-        main = Table(self.spark, self.path)
-        others = [main] if self.branch_name is not None else []
-        others += [
-            main.branch(n)
-            for n in main.list_branches()
-            if n != self.branch_name
-        ]
-        for t in others:
-            for snap in (
-                [t.snapshot(sid) for sid in t.snapshot_ids()]
-                + [t.tag_snapshot(nm) for nm in t.list_tags()]
-            ):
-                if snap.dv_index:
-                    live_dv.add(snap.dv_index)
-                if snap.bucket_index:
-                    live_dv.add(snap.bucket_index)
-                for e in t.manifest_entries(snap):
-                    live_files.add(e["path"])
-        dead_files = set()
-        dead_manifests = set()
-        dead_dv = set()
+        dead = set()
         for sid in expired:
-            snap = self.snapshot(sid)
-            dead_manifests.update(self._manifest_members(snap))
-            if snap.dv_index and snap.dv_index not in live_dv:
-                dead_dv.add(snap.dv_index)
-            if snap.bucket_index and snap.bucket_index not in live_dv:
-                dead_dv.add(snap.bucket_index)
-            for e in self.manifest_entries(snap):
-                if e["path"] not in live_files:
-                    dead_files.add(e["path"])
-        for rel in dead_files:
-            try:
-                os.remove(os.path.join(self.path, rel))
-            except FileNotFoundError:
-                pass
-        for m in dead_manifests - live_manifests:
-            try:
-                os.remove(os.path.join(self.meta_path, "manifest", m))
-            except FileNotFoundError:
-                pass
-        for dv in dead_dv:
-            _rmtree_quiet(os.path.join(self._dv_root(), dv))
+            dead |= self._references(self.snapshot(sid))
         for sid in expired:
-            snap = self.snapshot(sid)
-            if snap.changelog:
-                _rmtree_quiet(
-                    os.path.join(self.meta_path, "changelog", snap.changelog)
-                )
-            os.remove(os.path.join(self.meta_path, "snapshot", f"snapshot-{sid}.json"))
+            os.remove(self._snapshot_path(sid))
+        self._reclaim(dead)
         return expired
 
     def truncate(self) -> Snapshot:
@@ -2224,14 +2175,23 @@ class Table:
     def rollback_to(self, snapshot_id: int) -> None:
         """Roll the table back to `snapshot_id`: snapshots after it are
         deleted (Paimon's ``rollback_to`` procedure). Metadata-only —
-        data files written by rolled-back commits become orphans and are
-        reclaimed by ``remove_orphan_files``, so rollback is O(#snapshots)
-        regardless of data size.
+        data files, manifests, indexes and changelogs written by
+        rolled-back commits become orphans and are reclaimed by
+        ``remove_orphan_files``, so rollback is O(#snapshots) regardless
+        of data size.
 
         Bookkeeping that referenced the rolled-back range is reconciled
         the way Paimon's RollbackHelper does: tags pinned to deleted
         snapshots are dropped; consumer positions past the new head are
-        clamped to it (their unread commits no longer exist).
+        clamped to it (their unread commits no longer exist); statistics
+        of the deleted snapshots go first, so none can attach to a later
+        commit that reuses the id. The snapshot files are then unlinked
+        newest first: a crash at any point leaves a shorter, contiguous
+        history.
+
+        Rollback is an offline procedure, as in Paimon: stop writers
+        first. A writer that read the old head before the rollback can
+        still publish the next id on top of a deleted snapshot.
         """
         ids = self.snapshot_ids()
         if snapshot_id not in ids:
@@ -2244,18 +2204,12 @@ class Table:
             if nxt > snapshot_id + 1:
                 self.register_consumer(name, snapshot_id + 1)
         for sid in doomed:
-            snap = self.snapshot(sid)
-            if snap.changelog:
-                _rmtree_quiet(
-                    os.path.join(self.meta_path, "changelog", snap.changelog)
-                )
-            os.remove(
-                os.path.join(self.meta_path, "snapshot", f"snapshot-{sid}.json")
-            )
             try:
                 os.remove(self._stats_path(sid))
             except FileNotFoundError:
                 pass
+        for sid in reversed(doomed):
+            os.remove(self._snapshot_path(sid))
 
     def incremental_between_timestamps(
         self, start_ms: int, end_ms: int | None = None
@@ -2372,7 +2326,7 @@ class Table:
             if snap.dv_index and snap.dv_index != parent_dv:
                 step = self.dv_df(snap)
                 if parent_dv:
-                    step = step.exceptAll(self._read_dv_index(parent_dv))
+                    step = step.exceptAll(self._read_index(parent_dv, _DV_INDEX_DDL))
                 dv_added.append(step)
         schema = self.schema()
         spark = self.spark
@@ -2484,81 +2438,94 @@ class Table:
     def remove_orphan_files(self, older_than_ms: int | None = None) -> list[str]:
         """Delete files no lineage references (Paimon's remove-orphan-files
         action): data files stranded by deleted branches, crashed writers,
-        or interrupted commits — including staging dirs, manifests that
-        never got a published snapshot (or lost theirs to ``rollback_to``)
-        and unpublished snapshot temp files.
+        or interrupted commits — including staging dirs, manifests and
+        changelog dirs that never got a published snapshot (or lost
+        theirs to ``rollback_to`` or an interrupted expiry), index
+        datasets and unpublished snapshot temp files.
 
         `older_than_ms` (epoch millis) guards in-flight writers: only files
-        modified before it are candidates (default: one hour ago). Scans
-        every snapshot and tag of every lineage — O(metadata), one listdir
-        walk over data/. Returns the deleted paths (table-relative)."""
+        modified before it are candidates (default: one hour ago). One
+        listdir walk over data/ plus the metadata dirs of every lineage;
+        ``_reclaim`` decides what is live. Returns the deleted paths
+        (table-relative)."""
         if older_than_ms is None:
             older_than_ms = int((time.time() - 3600) * 1000)
-        main = Table(self.spark, self.path)
-        lineages = [main] + [main.branch(n) for n in main.list_branches()]
-        live = set()
-        live_dv = set()
-        live_manifests: dict[str, set[str]] = {}
-        for t in lineages:
-            snaps = [t.snapshot(sid) for sid in t.snapshot_ids()] + [
-                t.tag_snapshot(nm) for nm in t.list_tags()
+
+        def entries(d: str, prefix: str = "") -> list[str]:
+            names = os.listdir(d) if os.path.isdir(d) else []
+            return [
+                os.path.relpath(os.path.join(d, n), self.path)
+                for n in names if n.startswith(prefix)
             ]
-            manifests = live_manifests.setdefault(t.meta_path, set())
-            for snap in snaps:
-                manifests.update(t._manifest_members(snap))
-                if snap.dv_index:
-                    live_dv.add(snap.dv_index)
-                if snap.bucket_index:
-                    live_dv.add(snap.bucket_index)
-                for e in t.manifest_entries(snap):
-                    live.add(e["path"])
+
+        candidates = [
+            os.path.relpath(os.path.join(root, fn), self.path)
+            for root, _dirs, files in os.walk(os.path.join(self.path, "data"))
+            for fn in files
+        ]
+        # index datasets, staging dirs of crashed writers and DataSource
+        # writers' .staging-ds-* dirs at the table root
+        candidates += entries(self._dv_root())
+        candidates += entries(os.path.join(self.path, "staging"))
+        candidates += entries(self.path, ".staging-ds-")
+        for t in self._lineages():
+            candidates += entries(os.path.join(t.meta_path, "manifest"))
+            candidates += entries(os.path.join(t.meta_path, "changelog"))
+            candidates += entries(
+                os.path.join(t.meta_path, "snapshot"), _SNAPSHOT_TMP_PREFIX
+            )
+        return self._reclaim(candidates, older_than_ms)
+
+    def _lineages(self) -> list["Table"]:
+        """Main plus every branch: the lineages sharing this table's files."""
+        main = Table(self.spark, self.path)
+        return [main] + [main.branch(n) for n in main.list_branches()]
+
+    def _references(self, snap: Snapshot) -> set[str]:
+        """Table-relative paths `snap` (a snapshot of this lineage or a
+        tag's payload) needs to stay readable: its data files, manifest
+        files, deletion-vector and bucket index datasets and its
+        changelog dir."""
+        meta = os.path.relpath(self.meta_path, self.path)
+        refs = {e["path"] for e in self.manifest_entries(snap)}
+        refs.update(
+            os.path.normpath(os.path.join(meta, "manifest", m))
+            for m in self._manifest_members(snap)
+        )
+        refs.update(
+            os.path.join("index", n) for n in (snap.dv_index, snap.bucket_index) if n
+        )
+        if snap.changelog:
+            refs.add(os.path.normpath(os.path.join(meta, "changelog", snap.changelog)))
+        return refs
+
+    def _reclaim(self, paths, older_than_ms: int | None = None) -> list[str]:
+        """Delete each table-relative path in `paths` that no snapshot or
+        tag of any lineage references — the one reachability walk behind
+        ``expire_snapshots`` and ``remove_orphan_files``. With
+        `older_than_ms`, paths modified at or after it are spared (they
+        may belong to an in-flight commit). Returns the deleted paths."""
+        live = set()
+        for t in self._lineages():
+            for snap in [t.snapshot(i) for i in t.snapshot_ids()] + [
+                t.tag_snapshot(n) for n in t.list_tags()
+            ]:
+                live |= t._references(snap)
         removed = []
-
-        def sweep(full: str) -> None:
-            if os.path.getmtime(full) * 1000 >= older_than_ms:
-                return  # too fresh — may belong to an in-flight commit
-            if os.path.isdir(full):
-                _rmtree_quiet(full)
-            else:
-                os.remove(full)
-            removed.append(os.path.relpath(full, self.path))
-
-        for root, _dirs, files in os.walk(os.path.join(self.path, "data")):
-            for fn in files:
-                full = os.path.join(root, fn)
-                if os.path.relpath(full, self.path) not in live:
-                    sweep(full)
-        # deletion-vector index datasets no snapshot of any lineage points at
-        dv_root = self._dv_root()
-        if os.path.isdir(dv_root):
-            for name in os.listdir(dv_root):
-                if name not in live_dv:
-                    sweep(os.path.join(dv_root, name))
-        # staging dirs abandoned by crashed writers (a completed commit
-        # removes its staging dir; anything old enough here is dead weight)
-        staging_root = os.path.join(self.path, "staging")
-        if os.path.isdir(staging_root):
-            for name in os.listdir(staging_root):
-                sweep(os.path.join(staging_root, name))
-        # DataSource writers stage under .staging-ds-* at the table root
-        for name in os.listdir(self.path):
-            if name.startswith(".staging-ds-"):
-                sweep(os.path.join(self.path, name))
-        for t in lineages:
-            # snapshot payloads of committers killed before the publish link
-            sdir = os.path.join(t.meta_path, "snapshot")
-            if os.path.isdir(sdir):
-                for name in os.listdir(sdir):
-                    if name.startswith(_SNAPSHOT_TMP_PREFIX):
-                        sweep(os.path.join(sdir, name))
-            # manifests of commits that failed before their snapshot was
-            # published, and of snapshots removed by rollback_to
-            mdir = os.path.join(t.meta_path, "manifest")
-            if os.path.isdir(mdir):
-                for name in os.listdir(mdir):
-                    if name not in live_manifests[t.meta_path]:
-                        sweep(os.path.join(mdir, name))
-        return sorted(removed)
+        for rel in sorted(set(paths) - live):
+            full = os.path.join(self.path, rel)
+            try:
+                if (older_than_ms is not None
+                        and os.path.getmtime(full) * 1000 >= older_than_ms):
+                    continue
+                if os.path.isdir(full):
+                    _rmtree_quiet(full)
+                else:
+                    os.remove(full)
+            except FileNotFoundError:
+                continue  # already gone, e.g. by an interrupted expiry
+            removed.append(rel)
+        return removed
 
     def _commit_meta(
         self, kind: str, entries: list[dict], dv_index: str | None,
@@ -2929,7 +2896,7 @@ class Table:
         with open(tmp, "w") as fh:
             fh.write(payload)
         try:
-            os.link(tmp, os.path.join(sdir, f"snapshot-{snap.snapshot_id}.json"))
+            os.link(tmp, self._snapshot_path(snap.snapshot_id))
         except FileExistsError as exc:  # a concurrent commit won this id
             raise CommitConflict(
                 f"snapshot {snap.snapshot_id} of {self.meta_path} already exists"
@@ -3432,7 +3399,8 @@ class TableScan:
         deterministic conjuncts* per partition): each top-level AND conjunct
         prunes independently; a conjunct that cannot be evaluated on
         partition values alone (references non-partition columns, unknown
-        function) is skipped — recoverable-error semantics (``:499-509``).
+        function, fails at run time) is skipped — recoverable-error
+        semantics (``:499-509``). The valid conjuncts run as one job.
         """
         parts = {}
         for e in entries:
@@ -3453,16 +3421,31 @@ class TableScan:
             tuple(v[f["name"]] for f in part_fields) + (k,) for k, v in parts.items()
         ]
         df = self.table.spark.createDataFrame(rows, sschema)
-        keep = set(parts)
-        any_applied = False
+
+        def kept(conjuncts: list[str]) -> set[str]:
+            tests = [F.coalesce(F.expr(c), F.lit(False)) for c in conjuncts]
+            got = df.select("__pkey", *tests).collect()
+            return {r[0] for r in got if all(r[1:])}
+
+        valid = []
         for conjunct in _split_conjuncts(self.partition_where):
             try:
-                kept = df.filter(F.expr(conjunct)).select("__pkey").collect()
+                df.filter(F.expr(conjunct))  # analysis is eager: no Spark job
             except Exception:
                 continue  # recoverable: this conjunct can't prune
-            keep &= {r["__pkey"] for r in kept}
-            any_applied = True
-        return keep if any_applied else None
+            valid.append(conjunct)
+        try:
+            return kept(valid) if valid else None  # one job for all conjuncts
+        except Exception:
+            # a conjunct that fails at run time (an ANSI cast, say) is
+            # skipped too: evaluate the conjuncts one by one
+            sets = []
+            for conjunct in valid:
+                try:
+                    sets.append(kept([conjunct]))
+                except Exception:
+                    continue
+            return set.intersection(*sets) if sets else None
 
     def to_df(self, merge: bool = True, keep_pos: bool = False) -> DataFrame:
         """`merge=False` keeps the raw change rows (system columns included)

@@ -21,6 +21,20 @@ def rows(df, *cols):
     return sorted(tuple(r) for r in out.collect())
 
 
+def spark_jobs(spark, fn):
+    """(fn(), number of Spark jobs calling it ran)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 # --- FIXTURES.md t1: pk table with merge-on-read delete --------------------
 
 
@@ -167,6 +181,32 @@ def test_partition_prune_mixed_conjuncts(t5):
     scan = t5.scan(partition_where="upper(i1) = '20241103' AND i3 = 2")
     assert rows(scan.to_df()) == [("20241103", 2, 2)]
     assert scan.last_plan["after_partition_prune"] == 2  # pruned by i1 only
+
+
+def test_partition_where_conjuncts_run_one_job(spark, t5):
+    # every conjunct that resolves on partition values is evaluated in
+    # one collect; the non-partition conjunct (i3) is skipped unevaluated
+    scan = t5.scan(
+        partition_where="upper(i1) = '20241103' AND i3 = 2 AND i2 >= 2")
+    _, jobs = spark_jobs(spark, scan.plan_files)
+    assert jobs == 1
+    assert scan.last_plan["after_partition_prune"] == 1
+    assert rows(scan.to_df()) == [("20241103", 2, 2)]
+
+
+def test_partition_where_runtime_error_conjunct_is_skipped(spark, catalog):
+    # a conjunct that fails at run time on one partition value (an ANSI
+    # cast of 'a') prunes nothing, like one that fails analysis; the
+    # other conjunct still prunes, and the residual never sees pt = 'a'
+    t = catalog.create_table(
+        "default", "pw_rt", "pt string, v int", partition_keys=["pt"],
+        options={"bucket": "1"},
+    )
+    t.append(spark.createDataFrame(
+        [("a", 1), ("1", 2), ("2", 3)], "pt string, v int"))
+    scan = t.scan(partition_where="pt <> 'a' AND CAST(pt AS INT) = 1")
+    assert rows(scan.to_df()) == [("1", 2)]
+    assert scan.last_plan["after_partition_prune"] == 2
 
 
 # --- t6: partition key also pk member (FIXTURES.md) ------------------------
@@ -1934,6 +1974,199 @@ class TestConcurrentCommits:
         assert rows(t.to_df()) == expect
         assert t.to_df(snapshot_id=1).count() == 2
 
+    def test_crash_before_link_leaves_changelog_to_orphan_sweep(
+        self, spark, catalog, monkeypatch
+    ):
+        """A ``changelog-producer=lookup`` commit that dies before its
+        snapshot link leaves a changelog dir no snapshot names.
+        ``remove_orphan_files`` sweeps it, and the next commit's
+        changelog neither sees the failed commit's rows nor its dir."""
+        from paimon_presto_spark import table as table_mod
+
+        ddl = "k int, v string"
+        t = catalog.create_table(
+            "default", "crash_clg", ddl, primary_keys=["k"],
+            options={"bucket": "1", "changelog-producer": "lookup"},
+        )
+
+        def boom(*_args, **_kwargs):
+            raise OSError("injected crash during commit")
+
+        with monkeypatch.context() as m:
+            m.setattr(table_mod.os, "link", boom)
+            with pytest.raises(OSError, match="injected"):
+                t.upsert(spark.createDataFrame([(1, "a"), (2, "b")], ddl))
+        clg_root = os.path.join(t.meta_path, "changelog")
+        leaked = {os.path.join("changelog", n) for n in os.listdir(clg_root)}
+        assert len(leaked) == 1
+
+        t.upsert(spark.createDataFrame([(2, "B"), (3, "c")], ddl))
+        removed = t.remove_orphan_files(
+            older_than_ms=int(time.time() * 1000) + 10_000
+        )
+        assert leaked <= set(removed)
+        assert not any(os.path.exists(os.path.join(t.path, p)) for p in leaked)
+        got = t.changelog_df().select("k", "v", "__row_kind", "__seq")
+        assert rows(got) == [(2, "B", "I", 1), (3, "c", "I", 1)]
+        assert rows(t.to_df()) == [(2, "B"), (3, "c")]
+
+
+# delete steps (os.remove calls plus directory removals) of
+# ``expire_snapshots(keep_last=1)`` and snapshot unlinks of
+# ``rollback_to(2)`` on the TestRetentionCrashPoints template table;
+# test_every_step_is_covered pins both counts
+_EXPIRE_STEPS = 17
+_ROLLBACK_STEPS = 3
+
+
+class TestRetentionCrashPoints:
+    """Retention stays crash-safe at every delete step. A crash in
+    ``expire_snapshots`` or ``rollback_to`` leaves every listed snapshot
+    readable on both read paths, rollback leaves a contiguous id prefix,
+    and ``remove_orphan_files`` and a re-run of the operation succeed.
+    Each case runs on a fresh copy of one template table: five
+    snapshots of a primary-key table with a lookup changelog, the
+    fourth a compaction, so expiry really deletes data files. Cleanup
+    only deletes, so snapshots whole after ``remove_orphan_files`` were
+    whole right after the crash too."""
+
+    DDL = "k int, v string"
+
+    @pytest.fixture(scope="class")
+    def template(self, spark, tmp_path_factory):
+        from paimon_presto_spark.catalog import Catalog
+
+        cat = Catalog(spark, str(tmp_path_factory.mktemp("retention")))
+        cat.create_database("default")
+        t = cat.create_table(
+            "default", "ret", self.DDL, primary_keys=["k"],
+            options={"bucket": "1", "changelog-producer": "lookup"},
+        )
+        t.upsert(spark.createDataFrame([(1, "a"), (2, "b")], self.DDL))
+        t.upsert(spark.createDataFrame([(2, "B"), (3, "c")], self.DDL))
+        t.delete(spark.createDataFrame([(1, "")], self.DDL))
+        t.compact()
+        t.upsert(spark.createDataFrame([(4, "d")], self.DDL))
+        assert t.snapshot(4).commit_kind == "COMPACT"
+        return t.path
+
+    # rows of each snapshot, and the changelog as (__seq, k, v, __row_kind)
+    EXPECT = {
+        1: [(1, "a"), (2, "b")],
+        2: [(1, "a"), (2, "B"), (3, "c")],
+        3: [(2, "B"), (3, "c")],
+        4: [(2, "B"), (3, "c")],
+        5: [(2, "B"), (3, "c"), (4, "d")],
+    }
+    CHANGELOG = [
+        (1, 1, "a", "I"), (1, 2, "b", "I"),
+        (2, 2, "B", "UA"), (2, 2, "b", "UB"), (2, 3, "c", "I"),
+        (3, 1, "a", "D"),
+        (5, 4, "d", "I"),
+    ]
+
+    @staticmethod
+    def _copy(spark, template, tmp_path):
+        import shutil
+
+        from paimon_presto_spark.table import Table
+
+        dst = str(tmp_path / "ret")
+        shutil.copytree(template, dst)
+        return Table(spark, dst)
+
+    @staticmethod
+    def _crash_at(m, k, counts=lambda path: True):
+        """Make the k-th counted delete raise; returns the counted paths.
+        A delete is an ``os.remove`` or a directory removal."""
+        from paimon_presto_spark import table as table_mod
+
+        calls = []
+
+        def step(real):
+            def delete(path, *args, **kwargs):
+                if counts(path):
+                    calls.append(path)
+                    if len(calls) == k:
+                        raise OSError("injected crash during retention")
+                return real(path, *args, **kwargs)
+            return delete
+
+        m.setattr(table_mod.os, "remove", step(os.remove))
+        m.setattr(table_mod, "_rmtree_quiet", step(table_mod._rmtree_quiet))
+        return calls
+
+    @staticmethod
+    def _is_snapshot(path):
+        return os.path.basename(path).startswith("snapshot-")
+
+    def _assert_whole(self, spark, t):
+        """Every listed snapshot reads its committed rows through the
+        Table API and the DataSource, as a fresh reader would, and so
+        does the changelog of the listed range."""
+        from paimon_presto_spark import table as table_mod
+        from paimon_presto_spark.sources.datasource import PaimonDataSource
+
+        table_mod._MANIFEST_CACHE.clear()
+        spark.dataSource.register(PaimonDataSource)
+        ids = t.snapshot_ids()
+        for sid in ids:
+            assert rows(t.to_df(snapshot_id=sid)) == self.EXPECT[sid]
+            got = (spark.read.format("paimon").option("path", t.path)
+                   .option("snapshot", sid).load())
+            assert rows(got) == self.EXPECT[sid]
+        got = t.changelog_df().select("__seq", "k", "v", "__row_kind")
+        assert rows(got) == [r for r in self.CHANGELOG if r[0] in ids]
+
+    @staticmethod
+    def _remove_orphans(t):
+        return t.remove_orphan_files(
+            older_than_ms=int(time.time() * 1000) + 10_000
+        )
+
+    def test_every_step_is_covered(self, spark, template, tmp_path, monkeypatch):
+        t = self._copy(spark, template, tmp_path)
+        with monkeypatch.context() as m:
+            calls = self._crash_at(m, 0)
+            assert t.expire_snapshots(keep_last=1) == [1, 2, 3, 4]
+        assert len(calls) == _EXPIRE_STEPS
+        t = self._copy(spark, template, tmp_path / "rollback")
+        with monkeypatch.context() as m:
+            calls = self._crash_at(m, 0, self._is_snapshot)
+            t.rollback_to(2)
+        assert len(calls) == _ROLLBACK_STEPS
+
+    @pytest.mark.parametrize("k", range(1, _EXPIRE_STEPS + 1))
+    def test_expire_crash(self, spark, template, tmp_path, monkeypatch, k):
+        t = self._copy(spark, template, tmp_path)
+        with monkeypatch.context() as m:
+            self._crash_at(m, k)
+            with pytest.raises(OSError, match="injected"):
+                t.expire_snapshots(keep_last=1)
+        assert t.snapshot_ids()[-1] == 5
+        self._remove_orphans(t)
+        self._assert_whole(spark, t)
+        t.expire_snapshots(keep_last=1)
+        assert t.snapshot_ids() == [5]
+        self._remove_orphans(t)
+        assert rows(t.to_df()) == self.EXPECT[5]
+
+    @pytest.mark.parametrize("k", range(1, _ROLLBACK_STEPS + 1))
+    def test_rollback_crash(self, spark, template, tmp_path, monkeypatch, k):
+        t = self._copy(spark, template, tmp_path)
+        with monkeypatch.context() as m:
+            self._crash_at(m, k, self._is_snapshot)
+            with pytest.raises(OSError, match="injected"):
+                t.rollback_to(2)
+        # newest first: each unlink before the crash shortened the history
+        assert t.snapshot_ids() == list(range(1, 7 - k))
+        self._remove_orphans(t)
+        self._assert_whole(spark, t)
+        t.rollback_to(2)
+        assert t.snapshot_ids() == [1, 2]
+        assert self._remove_orphans(t)
+        assert rows(t.to_df()) == self.EXPECT[2]
+
 
 class TestScanBuildRunsNoJobs:
     """Building a scan's DataFrame is metadata-only: each file loads with
@@ -1954,20 +2187,6 @@ class TestScanBuildRunsNoJobs:
         yield
         spark.conf.set(key, prev)
 
-    @staticmethod
-    def _build(spark, t):
-        """(t.to_df(), number of Spark jobs building it ran)."""
-        import uuid
-
-        sc = spark.sparkContext
-        group = f"scan-build-{uuid.uuid4().hex}"
-        sc.setLocalProperty("spark.jobGroup.id", group)
-        try:
-            df = t.to_df()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return df, len(sc.statusTracker().getJobIdsForGroup(group))
-
     def test_primary_key_table_past_listing_threshold(self, spark, catalog):
         t = catalog.create_table(
             "default", "nojob_pk", "k int, v string", primary_keys=["k"],
@@ -1980,7 +2199,7 @@ class TestScanBuildRunsNoJobs:
             [(i, "new") for i in range(0, 200, 10)], "k int, v string"))
         t.delete(spark.createDataFrame([(5, "")], "k int, v string"))
         assert len(t.manifest_entries()) > 32
-        df, jobs = self._build(spark, t)
+        df, jobs = spark_jobs(spark, t.to_df)
         assert jobs == 0
         expect = {i: ("new" if i % 10 == 0 else f"v{i}")
                   for i in range(200) if i != 5}
@@ -1996,7 +2215,7 @@ class TestScanBuildRunsNoJobs:
              (2, None, "", 0, [])],
             "k int, c string, vc string, t long, tags array<string>",
         ))
-        df, jobs = self._build(spark, t)
+        df, jobs = spark_jobs(spark, t.to_df)
         assert jobs == 0
         assert rows(df) == [
             (1, "ab ", "hello", 3_600_000_000, ["x", "yz"]),
@@ -2013,7 +2232,7 @@ class TestScanBuildRunsNoJobs:
         t.upsert(spark.createDataFrame([(3, "new")], "k int, v string"))
         t.delete(spark.createDataFrame([(7, "")], "k int, v string"))
         assert t.snapshot().dv_index
-        df, jobs = self._build(spark, t)
+        df, jobs = spark_jobs(spark, t.to_df)
         assert jobs == 0
         expect = {i: f"v{i}" for i in range(10) if i != 7} | {3: "new"}
         assert {r["k"]: r["v"] for r in df.collect()} == expect
@@ -2026,10 +2245,23 @@ class TestScanBuildRunsNoJobs:
             [(2, "b", "zz")], "k int, s string, z string"))
         catalog.rename_column("default", "nojob_ev", "s", "g")
         t = catalog.get_table("default", "nojob_ev")
-        df, jobs = self._build(spark, t)
+        df, jobs = spark_jobs(spark, t.to_df)
         assert jobs == 0
         assert df.columns == ["k", "g", "z"]
         assert rows(df) == [(1, "a", None), (2, "b", "zz")]
+
+    def test_dynamic_bucket_index(self, spark, catalog):
+        t = catalog.create_table(
+            "default", "nojob_dyn", "k int, v string", primary_keys=["k"],
+            options={"bucket": "-1", "dynamic-bucket.target-row-num": "4"},
+        )
+        t.upsert(spark.createDataFrame(
+            [(i, f"v{i}") for i in range(10)], "k int, v string"))
+        idx, jobs = spark_jobs(spark, t.bucket_index_df)
+        assert jobs == 0
+        assert idx.schema.simpleString() == "struct<kh:bigint,bucket:int>"
+        assert idx.count() == 10
+        assert {r["bucket"] for r in idx.collect()} <= {0, 1, 2}
 
 
 class TestAutoExpiry:
