@@ -931,7 +931,7 @@ def _perceptual_cluster_histogram_sf1(
         bits=64, max_hamming=3, chunks=4,
         collapse_identical=collapse_identical,
     ).select("doc_a", "doc_b")
-    comp = connected_components(pairs, algorithm="auto", star_switch_budget=4)
+    comp = connected_components(pairs, star_switch_budget=4)
     singles = docs.join(comp, "doc_id", "left_anti").select(
         "doc_id", F.col("doc_id").alias("component")
     )

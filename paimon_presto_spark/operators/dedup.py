@@ -807,18 +807,17 @@ def keep_first_of_clusters(pairs: DataFrame, docs: DataFrame, id_col: str) -> Da
     return docs.join(drops, id_col, "left_anti")
 
 
-#: ``algorithm="auto"`` runs min-label propagation this many rounds
-#: before concluding the graph is deep and restarting with the
-#: alternating-star algorithm (near-dup clusters converge in 2-3 rounds;
-#: anything still moving after 8 is chain-shaped).
+#: Min-label propagation runs this many rounds before concluding the
+#: graph is deep and restarting with the alternating-star algorithm
+#: (near-dup clusters converge in 2-3 rounds; anything still moving after
+#: 8 is chain-shaped).
 _STAR_SWITCH_BUDGET = 8
 
 
 def connected_components(
     pairs: DataFrame,
     max_iter: int = 25,
-    algorithm: str = "propagation",
-    star_switch_budget: int | None = None,
+    star_switch_budget: int = _STAR_SWITCH_BUDGET,
 ) -> DataFrame:
     """Exact duplicate CLUSTERS from pairwise matches: (doc_id, component)
     where component is the minimum doc id reachable through the undirected
@@ -827,47 +826,30 @@ def connected_components(
     (a chain a~b, b~c must collapse to ONE keeper even though a~c was
     never scored).
 
-    Three rungs, identical results (the component label is the reachable
-    minimum, a property of the graph, not the algorithm):
+    Two algorithms, chosen from the graph itself; both return the same
+    labels, because the reachable minimum is a property of the graph:
 
-    - ``"propagation"`` (default): each round every node takes the min
+    - min-label propagation first: each round every node takes the min
       label among itself and its neighbors — a join + groupBy(min) per
       round, O(component DIAMETER) rounds with a driver ``count()``
-      action each. Right for near-dup graphs, whose clusters are shallow
-      (2-3 rounds); `max_iter` caps adversarial chains.
-    - ``"star"``: alternating large-star/small-star rounds (Kiveris et
-      al., "Connected Components in MapReduce and Beyond", SOCC 2014) —
-      O(log n) rounds REGARDLESS of diameter, so a million-node chain
-      takes ~20 rounds instead of a million. Per-round shuffle shape is
-      the same join + groupBy(min); the round count is what changes.
-    - ``"auto"``: propagation for ``star_switch_budget`` rounds (default
-      ``_STAR_SWITCH_BUDGET`` = 8); if the labels are still moving (the
-      graph is deeper than any real near-dup cluster) it abandons the
-      walk and restarts with the star algorithm — the iteration-budget
-      escalation a 100 TB pipeline wants when the pair graph's shape is
-      unknown. Callers that KNOW their expected cluster depth pass the
+      action each. Near-dup clusters are shallow, so it converges in 2-3
+      rounds.
+    - if the labels still move after ``star_switch_budget`` rounds
+      (capped at ``max_iter``), the graph is chain-shaped: the walk is
+      abandoned and the result comes from alternating large-star/
+      small-star rounds (Kiveris et al., "Connected Components in
+      MapReduce and Beyond", SOCC 2014) — O(log n) rounds REGARDLESS of
+      diameter, at most ``max_iter`` of them, so a million-node chain
+      takes ~20 rounds instead of a million. Callers that KNOW their expected cluster depth pass the
       budget explicitly (e.g. near-dup canonicalization sets a small
-      one: a real dup cluster is 2-3 hops; anything deeper is an
-      adversarial chain better served by the O(log n) rung).
+      one: a real dup cluster is 2-3 hops).
+
+    The labels are exact whenever either algorithm converges, so a deep
+    chain that a plain ``max_iter``-round walk could not finish gets its
+    exact labels, not partial ones; a graph that defeats even
+    ``max_iter`` star rounds raises ``RuntimeError``.
     """
-    if algorithm != "auto" and star_switch_budget is not None:
-        raise ValueError(
-            "star_switch_budget only applies to algorithm='auto' — "
-            f"passing it with {algorithm!r} would be silently ignored"
-        )
-    if algorithm == "star":
-        return _connected_components_star(pairs, max_iter)
-    if algorithm not in ("propagation", "auto"):
-        raise ValueError(
-            f"algorithm must be 'propagation', 'star' or 'auto', "
-            f"got {algorithm!r}"
-        )
-    budget = (
-        min(max_iter, star_switch_budget
-            if star_switch_budget is not None else _STAR_SWITCH_BUDGET)
-        if algorithm == "auto"
-        else max_iter
-    )
+    budget = min(max_iter, star_switch_budget)
     # Both orientations from ONE scan of `pairs` (explode, not
     # union-of-two-selects): pair production is often the expensive part
     # (LSH band join + exact verify), and a union would evaluate that
@@ -919,7 +901,7 @@ def connected_components(
             converged = True
             break
     edges.unpersist()
-    if algorithm == "auto" and not converged:
+    if not converged:
         # deeper than the walk budget — restart with the O(log n) rung
         return _connected_components_star(pairs, max_iter)
     return labels
@@ -999,12 +981,11 @@ def _connected_components_star(
     if not converged:
         # An unconverged edge set is NOT a star forest: labels would be
         # wrong AND a multi-parent node would duplicate doc_id rows in
-        # the read-out below — fail loudly instead (the propagation rung
-        # at least returns well-formed partial labels; this one cannot).
-        # Star rounds are O(log n): 25 covers ~2^25 nodes, so exhaustion
-        # means a pathological graph or a too-small explicit budget.
+        # the read-out below — fail loudly instead. Star rounds are
+        # O(log n): 25 covers ~2^25 nodes, so exhaustion means a
+        # pathological graph or a too-small explicit budget.
         raise RuntimeError(
-            f"connected_components(algorithm='star') did not converge "
+            f"connected_components (star rounds) did not converge "
             f"within max_iter={max_iter} rounds; raise max_iter "
             f"(each round is O(log n) progress, so a small increase "
             f"goes far)"

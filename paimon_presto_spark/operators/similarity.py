@@ -12,9 +12,10 @@ Three tiers, trading recall for cost:
    here; at scale feed it LSH buckets instead of the full cross join).
 
 Math runs through ``functions/vectors.py`` (zip_with/aggregate — codegen,
-no Python). A Pandas-UDF BLAS path (``_cosine_pandas``) exists for wide
-batches where Arrow + numpy beats per-row codegen; it is opt-in because the
-JVM path wins below ~256 dims.
+no Python). Arrow/numpy rungs exist only where a measurement shows them
+winning: ``lsh_cosine_pairs(verify="blas")``, ``semdedup``'s
+``pair_backend="blas"|"auto"`` and ``pq_encode``/``ivf_pq_index``'s
+``encode="blas"``.
 
 Hyperplanes are generated from a fixed seed → deterministic bucketing
 across runs and engines (resumable pipelines).
@@ -293,7 +294,6 @@ def kmeans_centroids(
     vec_col: str = "embedding",
     dim: int | None = None,
     init_sample: int | None = None,
-    assign: str = "codegen",
 ) -> list[tuple[int, list[float]]]:
     """Deterministic Lloyd's k-means over an embedding column; returns the
     (cid, centroid) list ``ivf_topk`` consumes.
@@ -323,41 +323,16 @@ def kmeans_centroids(
     past the end would otherwise inject NULL partial sums and silently
     corrupt centroids).
 
-    Codegen bound: the default ``assign="codegen"`` argmax inlines k×dim
-    literals, the right trade up to a few hundred centroids (and
-    bit-deterministic — what the pytest pins). Its Lloyd update sums run
-    in DECIMAL(38,18) — exact, order-independent addition — so the
-    trained centroids are identical at any partitioning AND exactly
-    replayable by a SQL oracle (``knn_ivf_kmeans``); the blas rung keeps
-    float partials (its matmul already reassociates). ``assign="blas"`` lifts
-    that bound: each Arrow batch computes the argmax with one X@Cᵀ matmul
-    AND emits the per-batch Lloyd partials (bucket, count, per-dim sums)
-    in the same pass, so vectors never return to the JVM and the
-    per-iteration plan is one mapInPandas + one k-row hash aggregate,
-    independent of k in expression size. Ties resolve to the lowest
-    centroid id in both paths; the matmul reassociates float adds, so
-    near-exact-tie assignments can differ from codegen by one bucket —
-    use codegen when bit-replay matters, blas when k×dim does.
+    Its Lloyd update sums run in DECIMAL(38,18) — exact,
+    order-independent addition — so the trained centroids are identical
+    at any partitioning AND exactly replayable by a SQL oracle
+    (``knn_ivf_kmeans``).
     """
-    import math
-
     from paimon_presto_spark.functions.hashing import md5_long
 
     v = vectors.select(
         F.col(id_col).alias("__id"), F.col(vec_col).cast("array<double>").alias("__v")
     )
-
-    # One zip_with over single-literal centroid rows (see _centroid_sims):
-    # rebuilt every Lloyd iteration, so the O(k) tree — vs O(k x dim) —
-    # keeps the per-iteration plan build flat as k grows.
-    sims = _centroid_sims
-
-    def _unit(cents: list[tuple[int, list[float]]]) -> list[tuple[int, list[float]]]:
-        out = []
-        for cid, vec in cents:
-            norm = math.sqrt(sum(x * x for x in vec)) or 1.0
-            out.append((cid, [x / norm for x in vec]))
-        return out
 
     sample_n = init_sample if init_sample is not None else max(8 * k, 64)
     sample = (
@@ -405,71 +380,33 @@ def kmeans_centroids(
         maxsim = np.maximum(maxsim, U @ U[best_j])
     cents = [(i, [float(x) for x in X[j]]) for i, j in enumerate(chosen)]
 
-    if assign not in ("codegen", "blas"):
-        raise ValueError(f"assign must be 'codegen' or 'blas', got {assign!r}")
-
-    def _blas_partials(cents_now):
-        import pandas as pd
-
-        unit_now = _unit(cents_now)
-        cids = np.asarray([cid for cid, _ in unit_now], dtype=np.int64)
-        U = np.asarray([vec for _, vec in unit_now], dtype=np.float64)
-        cols = ["__b", "__n"] + [f"d{i}" for i in range(dim)]
-
-        def part(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.asarray(pdf["__v"].tolist(), dtype=np.float64)
-                b = np.argmax(X @ U.T, axis=1)
-                rows = []
-                for j in np.unique(b):
-                    m = b == j
-                    rows.append(
-                        [int(cids[j]), int(m.sum()), *X[m].sum(axis=0).tolist()]
-                    )
-                yield pd.DataFrame(rows, columns=cols)
-
-        schema = "__b int, __n long, " + ", ".join(f"d{i} double" for i in range(dim))
-        return v.select("__v").mapInPandas(part, schema=schema)
-
     for _ in range(max_iter):
-        if assign == "blas":
-            stats = (
-                _blas_partials(cents)
-                .groupBy("__b")
-                .agg(
-                    F.sum("__n").alias("__n"),
-                    *[F.sum(f"d{i}").alias(f"d{i}") for i in range(dim)],
-                )
-                .collect()
+        assigned = v.withColumn(
+            "__b",
+            (-F.array_max(
+                _centroid_sims(F.col("__v"), unit_centroids(cents))
+            ).getField("negcid")).cast("int"),
+        )
+        # Decimal-domain partial sums: double addition reassociates
+        # under partial aggregation, so a plain double SUM makes the
+        # centroids depend on partitioning (and differ between
+        # engines); DECIMAL(38,18) addition is exact and
+        # order-independent, which is what lets a SQL oracle replay
+        # the whole training loop bit-for-bit. The mean converts back
+        # to double below (one correctly-rounded cast + division).
+        stats = (
+            assigned.groupBy("__b")
+            .agg(
+                F.count(F.lit(1)).alias("__n"),
+                *[
+                    F.sum(
+                        F.element_at("__v", i + 1).cast("decimal(38,18)")
+                    ).alias(f"d{i}")
+                    for i in range(dim)
+                ],
             )
-        else:
-            assigned = v.withColumn(
-                "__b",
-                (-F.array_max(sims(F.col("__v"), _unit(cents))).getField("negcid"))
-                .cast("int"),
-            )
-            # Decimal-domain partial sums: double addition reassociates
-            # under partial aggregation, so a plain double SUM makes the
-            # centroids depend on partitioning (and differ between
-            # engines); DECIMAL(38,18) addition is exact and
-            # order-independent, which is what lets a SQL oracle replay
-            # the whole training loop bit-for-bit. The mean converts back
-            # to double below (one correctly-rounded cast + division).
-            stats = (
-                assigned.groupBy("__b")
-                .agg(
-                    F.count(F.lit(1)).alias("__n"),
-                    *[
-                        F.sum(
-                            F.element_at("__v", i + 1).cast("decimal(38,18)")
-                        ).alias(f"d{i}")
-                        for i in range(dim)
-                    ],
-                )
-                .collect()
-            )
+            .collect()
+        )
         by_cid = {r["__b"]: r for r in stats}
         new_cents = []
         moved = 0.0
@@ -634,45 +571,6 @@ def lsh_cosine_pairs(
     )
 
 
-def cosine_topk_pandas(
-    corpus: DataFrame,
-    queries_rows: list[tuple[int, list[float]]],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-batched BLAS variant: the query matrix is closed over and each
-    corpus batch is scored with one numpy matmul (``mapInPandas``).
-
-    Preferable above ~256 dims or ~100s of queries, where per-row codegen
-    loses to vectorized BLAS. Returns (q_id, n_id, cos_sim) un-ranked; rank
-    with a window like the callers above.
-    """
-    import pandas as pd
-
-    q_ids = [int(i) for i, _ in queries_rows]
-    qm = np.asarray([v for _, v in queries_rows], dtype=np.float64)
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-
-    def score(batches):
-        for pdf in batches:
-            cm = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            cm /= np.linalg.norm(cm, axis=1, keepdims=True)
-            sims = cm @ qm.T  # |batch| x |queries|
-            for qi, qid in enumerate(q_ids):
-                yield pd.DataFrame(
-                    {
-                        "q_id": qid,
-                        "n_id": pdf[id_col].to_numpy(),
-                        "cos_sim": sims[:, qi],
-                    }
-                )
-
-    return corpus.select(id_col, vec_col).mapInPandas(
-        score, schema="q_id long, n_id long, cos_sim double"
-    )
-
-
 def unit_centroids(
     centroids: list[tuple[int, list[float]]]
 ) -> list[tuple[int, list[float]]]:
@@ -742,10 +640,8 @@ def semdedup(
 
     Codegen bound: the argmax assignment inlines k x dim literals, so its
     one-time whole-stage-codegen compile grows with k (measured ~8 s at
-    k=32, dim=64 on a cold JVM; amortized across the corpus scan). Past a
-    few hundred centroids, assign with ``kmeans_centroids``'s fused BLAS
-    pass (``assign="blas"``) and feed the resulting (id, bucket) table in
-    place of the argmax — the fence and keep rule are unchanged.
+    k=32, dim=64 on a cold JVM; amortized across the corpus scan), which
+    bounds the centroid list to a few hundred entries.
     """
     # Only the two columns: an input that happens to carry `cluster` and
     # `cos_centroid` must not be read as a stored assignment. `limit(0)`
@@ -800,6 +696,11 @@ def semdedup_incremental(
     ``"codegen"``, and callers comparing runs across corpus sizes should
     pin a rung explicitly rather than rely on ``"auto"``.
     """
+    if pair_backend not in ("codegen", "blas", "auto"):
+        raise ValueError(
+            f"pair_backend must be 'codegen', 'blas' or 'auto', "
+            f"got {pair_backend!r}"
+        )
     unit = unit_centroids(centroids)
 
     def sims(emb: Column) -> Column:
@@ -889,7 +790,7 @@ def semdedup_incremental(
             .select(F.col("__ida").alias("__dropped_id"))
             .distinct()
         )
-    elif pair_backend == "blas":
+    else:
         import pandas as pd
 
         def resolve(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -912,11 +813,6 @@ def semdedup_incremental(
                 resolve,
                 schema=f"__dropped_id {dict(new_a.dtypes)['__id']}",
             )
-        )
-    else:
-        raise ValueError(
-            f"pair_backend must be 'codegen', 'blas' or 'auto', "
-            f"got {pair_backend!r}"
         )
     return (
         new_a.join(dropped, new_a["__id"] == dropped["__dropped_id"], "left")
@@ -1058,38 +954,6 @@ def pca_project(
 # ---------------------------------------------------------------------------
 
 
-def _pq_sqdist_expr(vec: Column, off: int, cvec: list[float]) -> Column:
-    """Squared L2 distance between ``vec[off+1 .. off+len]`` and a literal
-    centroid, as a FIXED left-fold sum — (d1*d1 + d2*d2) + d3*d3 ... —
-    so the IEEE result is bit-identical to the oracle's same-order SQL
-    spelling (float addition is not associative; the order IS the
-    contract)."""
-    total = None
-    for j, c in enumerate(cvec):
-        d = F.element_at(vec, off + j + 1) - F.lit(float(c))
-        term = d * d
-        total = term if total is None else total + term
-    return total
-
-
-def _pq_code_expr(vec: Column, ss: int, sub: int,
-                  codebook: dict[int, list[float]]) -> Column:
-    """argmin-distance centroid id for subspace ``ss`` — array_min over
-    (dist, cid) structs: lexicographic struct order = lowest distance,
-    ties to the lowest cid (the oracle's ORDER BY dist, cid)."""
-    return F.array_min(
-        F.array(
-            *[
-                F.struct(
-                    _pq_sqdist_expr(vec, ss * sub, codebook[cid]).alias("d"),
-                    F.lit(cid).alias("cid"),
-                )
-                for cid in sorted(codebook)
-            ]
-        )
-    )["cid"]
-
-
 def pq_train(
     vectors: DataFrame,
     m: int = 8,
@@ -1111,18 +975,15 @@ def pq_train(
       subspace (rank-based, so the SQL oracle replays it with one
       row_number instead of k unrolled maximin CTEs);
     - each iteration: relational argmin assignment
-      (``_pq_codes_exploded(..., "relational")`` — explode × broadcast
-      codebook join × struct-min, CONSTANT plan size; the original
-      literal-codegen assignment compiled an m×ksub expression per
-      iteration, ~19 s of pure plan compile over 128 cached rows — the
-      dominant cost of the whole sf1 index build), then ONE hash
+      (``_pq_codes_exploded`` — explode × broadcast codebook join ×
+      struct-min, CONSTANT plan size; a literal m×ksub argmin expression
+      costs ~19 s of plan compile per iteration over 128 cached rows,
+      which would dominate the whole sf1 index build), then ONE hash
       aggregation to m x ksub rows of DECIMAL(38,18) per-dimension sums
       — exact order-independent addition, so the trained codebooks are
       bit-identical at any partitioning and exactly replayable by the
-      DuckDB oracle (``knn_pq_adc``); the rungs' fixed-order float
-      arithmetic is pinned equal in tests/test_retrieval.py, so the
-      assignment swap changes no code anywhere. Empty cells keep their
-      previous centroid.
+      DuckDB oracle (``knn_pq_adc``). Empty cells keep their previous
+      centroid.
 
     The driver holds only codebooks (m*ksub*sub floats) and the tiny
     per-iteration update table. Collecting the update is one action per
@@ -1154,9 +1015,9 @@ def pq_train(
         for ss in range(m)
     }
     for _ in range(iters):
-        codes = _pq_codes_exploded(
-            sample, books, "__id", "__v", "relational"
-        ).join(sample, "__id")
+        codes = _pq_codes_exploded(sample, books, "__id", "__v").join(
+            sample, "__id"
+        )
         upd = codes.groupBy("ss", "code").agg(
             F.count(F.lit(1)).alias("__n"),
             *[
@@ -1191,7 +1052,6 @@ def _pq_codes_exploded(
     books: dict[int, dict[int, list[float]]],
     id_col: str,
     vec_col: str,
-    encode: str,
     carry: dict[str, "Column"] | None = None,
 ) -> DataFrame:
     """(id, ss, code[, carry...]) triples for every vector x subspace.
@@ -1200,23 +1060,15 @@ def _pq_codes_exploded(
     (e.g. an IVF bucket derived from the vector); they ride the same
     single corpus scan instead of forcing callers into a second scan
     plus an id-join. Carried values are functionally dependent on the
-    id, so adding them to the relational rung's group keys changes no
-    group.
+    id, so adding them to the group keys changes no group.
 
-    Two rungs, same results (identical fixed-order float arithmetic;
-    0.0 + t == t exactly for the squared terms, so the HOF fold and the
-    literal chain agree bit-for-bit):
-
-    - ``"relational"`` (default): explode m subspace rows per vector,
-      broadcast-join the m*ksub codebook table, and take the per-(id, ss)
-      min (dist, cid) struct with ONE hash aggregation — the 16x
-      candidate expansion collapses map-side in the partial aggregate,
-      so the shuffle carries 8 narrow rows per vector. Plan size is
-      CONSTANT in ksub — the rung that scales to FAISS-sized ksub=256
-      codebooks (the literal rung's 128-struct expression already falls
-      out of whole-stage codegen and OOMs small heaps at ksub=16).
-    - ``"codegen"``: the map-only literal-argmin expressions (zero
-      shuffle) — right for small m*ksub when executor memory is ample.
+    Explode m subspace rows per vector, broadcast-join the m*ksub
+    codebook table, and take the per-(id, ss) min (dist, cid) struct
+    with ONE hash aggregation — the 16x candidate expansion collapses
+    map-side in the partial aggregate, so the shuffle carries 8 narrow
+    rows per vector. Plan size is CONSTANT in ksub, so it scales to
+    FAISS-sized ksub=256 codebooks. The distance is a left fold from
+    0.0 over the sub dimension, ties go to the lowest cid.
     """
     m = len(books)
     sub = len(books[0][0])
@@ -1228,19 +1080,6 @@ def _pq_codes_exploded(
         *[expr.alias(nm) for nm, expr in carry.items()],
         F.col(vec_col).cast("array<double>").alias("__v"),
     ).filter(F.size("__v") == dim)
-    if encode == "codegen":
-        return v.select(
-            id_col,
-            *cnames,
-            F.posexplode(
-                F.array(*[
-                    _pq_code_expr(F.col("__v"), ss, sub, books[ss])
-                    for ss in range(m)
-                ])
-            ).alias("ss", "code"),
-        )
-    if encode != "relational":
-        raise ValueError(f"unknown encode rung {encode!r}")
     expl = v.select(
         id_col,
         *cnames,
@@ -1277,29 +1116,29 @@ def _pq_codes_blas(
     v: DataFrame, books: dict[int, dict[int, list[float]]]
 ) -> DataFrame:
     """Arrow-batched PQ encode: one numpy pass per batch computes all m
-    subspace argmins, BIT-IDENTICAL to the codegen/relational rungs.
+    subspace argmins, BIT-IDENTICAL to the relational rung
+    (``_pq_codes_exploded``).
 
     The relational rung's plan is constant-size in ksub but pays a
-    16x-exploded shuffle + hash aggregation per corpus encode; the
-    codegen rung is map-only but its m×ksub literal-argmin expression is
-    the heaviest per-row expression in the engine (the round-10 sf1
-    stress' top row). This rung is map-only AND constant-size: vectors
-    stream through mapInPandas, distances vectorize over (batch × ksub),
-    and ONLY the m-byte codes leave Python.
+    16x-exploded shuffle + hash aggregation per corpus encode. This rung
+    is map-only AND constant-size: vectors stream through mapInPandas,
+    distances vectorize over (batch × ksub), and ONLY the m-byte codes
+    leave Python.
 
     Bit-identity is engineered, not hoped for — the oracle gates codes,
     and argmin flips when near-ties round differently:
     - the squared-distance accumulation runs SEQUENTIALLY over the sub
       dimension (``acc = acc + term`` per j, vectorized across rows ×
-      centroids), the same left-fold order as ``_pq_sqdist_expr``'s
-      literal chain — a true matmul expansion (|v|² − 2v·c + |c|²) would
+      centroids), the same left-fold order as the relational rung's
+      ``F.aggregate`` from ``0.0`` (``0.0 + t == t`` for the first
+      square) — a true matmul expansion (|v|² − 2v·c + |c|²) would
       reassociate and break ties differently;
     - numpy elementwise float64 ops are IEEE-identical to the JVM's
       scalar doubles;
     - ``np.argmin`` returns the FIRST minimum = lowest cid, the same
       tie-break as the (dist, cid) struct-min.
-    ``tests/test_retrieval.py`` pins all three rungs code-identical on
-    real embeddings.
+    ``tests/test_retrieval.py`` pins both rungs to a numpy left-fold
+    reference on real embeddings.
 
     Input contract: ``v`` carries (id/carry... , __v array<double>,
     size-filtered); all non-``__v`` columns pass through untouched.
@@ -1316,7 +1155,7 @@ def _pq_codes_blas(
     # map argmin POSITIONS back to the actual cids: pq_train emits dense
     # 0..ksub-1 keys, but books is caller-supplied API — a sparse
     # codebook ({0: .., 2: .., 5: ..}) must yield the same cids the
-    # codegen/relational rungs emit, not positions. Ascending order
+    # relational rung emits, not positions. Ascending order
     # keeps np.argmin's first-min == lowest-cid tie-break.
     cid_of_pos = [
         np.asarray(sorted(books[ss]), dtype=np.int64) for ss in range(m)
@@ -1341,7 +1180,7 @@ def _pq_codes_blas(
                     acc = d0 * d0
                     for j in range(1, sub):
                         dj = Xs[:, j][:, None] - C[:, j][None, :]
-                        acc = acc + dj * dj  # left fold, per _pq_sqdist_expr
+                        acc = acc + dj * dj  # left fold, as the relational rung
                     codes[:, ss] = cid_of_pos[ss][np.argmin(acc, axis=1)]
                 out["codes"] = [r.tolist() for r in codes]
             else:
@@ -1358,42 +1197,28 @@ def pq_encode(
     vec_col: str = "embedding",
     encode: str = "relational",
 ) -> DataFrame:
-    """Corpus compression: each vector becomes m centroid codes (see
-    ``_pq_codes_exploded`` for the two encode rungs). Returns
+    """Corpus compression: each vector becomes m centroid codes. Returns
     (id_col, codes array<int>); at 100 TB this 8-byte column IS what the
     ANN index stores and shuffles, never the vectors.
 
-    Rungs: ``"relational"`` / ``"codegen"`` (see ``_pq_codes_exploded``)
-    plus ``"blas"`` — map-only Arrow/numpy encode, bit-identical codes
-    (see ``_pq_codes_blas``), the rung for corpus-scale builds where the
-    codegen expression's m×ksub size dominates."""
-    m = len(books)
+    Two rungs, bit-identical codes: ``"relational"`` (default; see
+    ``_pq_codes_exploded``) and ``"blas"`` — map-only Arrow/numpy encode
+    (see ``_pq_codes_blas``), the rung for corpus-scale builds, where it
+    drops the relational rung's aggregation shuffle."""
+    if encode not in ("relational", "blas"):
+        raise ValueError(
+            f"encode must be 'relational' or 'blas', got {encode!r}"
+        )
     if encode == "blas":
-        sub = len(books[0][0])
-        v = vectors.select(
-            F.col(id_col),
-            F.col(vec_col).cast("array<double>").alias("__v"),
-        ).filter(F.size("__v") == m * sub)
-        return _pq_codes_blas(v, books)
-    ex = _pq_codes_exploded(vectors, books, id_col, vec_col, encode)
-    if encode == "codegen":
-        # map-only path: rebuild the array without a shuffle by re-deriving
-        # it from the same expressions (posexplode was only for uniformity)
-        sub = len(books[0][0])
-        dim = m * sub
+        dim = len(books) * len(books[0][0])
         v = vectors.select(
             F.col(id_col),
             F.col(vec_col).cast("array<double>").alias("__v"),
         ).filter(F.size("__v") == dim)
-        return v.select(
-            id_col,
-            F.array(*[
-                _pq_code_expr(F.col("__v"), ss, sub, books[ss])
-                for ss in range(m)
-            ]).alias("codes"),
-        )
+        return _pq_codes_blas(v, books)
     return (
-        ex.groupBy(id_col)
+        _pq_codes_exploded(vectors, books, id_col, vec_col)
+        .groupBy(id_col)
         .agg(F.array_sort(F.collect_list(F.struct("ss", "code"))).alias("__p"))
         .select(
             id_col,
@@ -1455,7 +1280,6 @@ def pq_adc_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    encode: str = "relational",
 ) -> DataFrame:
     """ADC top-k: approximate squared-L2 of query-to-vector is the sum of
     m table lookups d[ss][code], where d is the query's per-subspace
@@ -1477,9 +1301,9 @@ def pq_adc_topk(
     approx_l2 rounded to 6 decimals for display.
     """
     dtable = _adc_distance_table(queries, books, id_col, vec_col)
-    exploded = _pq_codes_exploded(
-        corpus, books, id_col, vec_col, encode
-    ).select(F.col(id_col).alias("n_id"), "ss", "code")
+    exploded = _pq_codes_exploded(corpus, books, id_col, vec_col).select(
+        F.col(id_col).alias("n_id"), "ss", "code"
+    )
     scored = (
         exploded.join(F.broadcast(dtable), ["ss", "code"])
         .groupBy("q_id", "n_id")
@@ -1557,7 +1381,6 @@ def ivf_pq_adc_topk(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    encode: str = "relational",
 ) -> DataFrame:
     """IVF-PQ ANN — the FAISS big-index layout, both halves composed:
     the coarse quantizer prunes WHICH rows are scored (each query reads
@@ -1583,7 +1406,6 @@ def ivf_pq_adc_topk(
         books,
         id_col,
         vec_col,
-        encode,
         carry={
             "bucket": (
                 -F.array_max(
@@ -1649,7 +1471,13 @@ def ivf_pq_index(
 
     Row payload is m one-byte codes + one int bucket — the 32x memory cut
     at dim=64 that makes posting lists scannable from storage.
+
+    ``encode`` picks the PQ rung exactly as in ``pq_encode``.
     """
+    if encode not in ("relational", "blas"):
+        raise ValueError(
+            f"encode must be 'relational' or 'blas', got {encode!r}"
+        )
     unit = unit_centroids(centroids)
     bucket = {
         "bucket": (
@@ -1658,32 +1486,19 @@ def ivf_pq_index(
             ).getField("negcid")
         ).cast("int")
     }
-    if encode in ("codegen", "blas"):
-        m = len(books)
-        sub = len(books[0][0])
-        dim = m * sub
+    if encode == "blas":
+        dim = len(books) * len(books[0][0])
         v = corpus.select(
             F.col(id_col),
             bucket["bucket"].alias("bucket"),
             F.col(vec_col).cast("array<double>").alias("__v"),
         ).filter(F.size("__v") == dim)
-        if encode == "blas":
-            # bucket (a JVM codegen expression, bit-replayable) rides the
-            # same scan; only the PQ argmin moves to the Arrow/numpy pass
-            # — map-only, zero shuffle, codes bit-identical to the other
-            # rungs (_pq_codes_blas)
-            return _pq_codes_blas(v, books)
-        return v.select(
-            id_col,
-            "bucket",
-            F.array(*[
-                _pq_code_expr(F.col("__v"), ss, sub, books[ss])
-                for ss in range(m)
-            ]).alias("codes"),
-        )
-    ex = _pq_codes_exploded(
-        corpus, books, id_col, vec_col, encode, carry=bucket
-    )
+        # bucket (a JVM codegen expression, bit-replayable) rides the
+        # same scan; only the PQ argmin moves to the Arrow/numpy pass —
+        # map-only, zero shuffle, codes bit-identical to the relational
+        # rung (_pq_codes_blas)
+        return _pq_codes_blas(v, books)
+    ex = _pq_codes_exploded(corpus, books, id_col, vec_col, carry=bucket)
     return (
         ex.groupBy(id_col, "bucket")
         .agg(F.array_sort(F.collect_list(F.struct("ss", "code"))).alias("__p"))

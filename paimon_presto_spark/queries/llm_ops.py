@@ -424,10 +424,10 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     = min doc_id, so keepers are deterministic. The oracle recomputes the
     same pair graph and walks it with a recursive CTE.
 
-    algorithm="auto": the propagation walk (diameter-bounded) with the
-    alternating large-star/small-star escalation when a graph turns out
-    chain-shaped — the labels are a property of the graph, so the rung
-    choice cannot change this oracle-gated result.
+    The propagation walk (diameter-bounded) escalates to alternating
+    large-star/small-star rounds when a graph turns out chain-shaped —
+    the labels are a property of the graph, so the algorithm choice
+    cannot change this oracle-gated result.
     """
     docs = load_table(spark, sf_dir, "documents")
     from paimon_presto_spark.operators.dedup import connected_components
@@ -436,7 +436,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, shingle_n=3, k=MINHASH_K, bands=LSH_BANDS,
         threshold=JACCARD_THRESHOLD,
     ).select("doc_a", "doc_b")
-    return connected_components(pairs, algorithm="auto").orderBy("doc_id")
+    return connected_components(pairs).orderBy("doc_id")
 
 
 @register(
@@ -1418,15 +1418,15 @@ def dedup_keep_best_in_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_members, keeper_id, keeper_chars, total_chars).
 
     Scale shape: pair generation and components are the proven banded /
-    label-propagation paths; algorithm="auto" runs the propagation walk
-    with an EXPLICIT 4-round budget — a genuine near-dup cluster is 2-3
-    hops, so convergence inside 4 rounds is the expected path and
-    anything deeper is an adversarial chain that escalates to the
-    O(log n) alternating-star rung (round-7 verdict #7: the budget is a
-    stated contract of the entry, not an implicit module default); the
-    keeper choice adds ONE aggregation keyed
-    by component (max over a (quality, -id) struct — map-side
-    combinable), joined against the docs table on its primary key.
+    label-propagation paths; the propagation walk runs with an EXPLICIT
+    4-round budget — a genuine near-dup cluster is 2-3 hops, so
+    convergence inside 4 rounds is the expected path and anything deeper
+    is an adversarial chain that escalates to the O(log n)
+    alternating-star rounds (round-7 verdict #7: the budget is a stated
+    contract of the entry, not an implicit module default); the keeper
+    choice adds ONE aggregation keyed by component (max over a
+    (quality, -id) struct — map-side combinable), joined against the docs
+    table on its primary key.
     """
     from paimon_presto_spark.operators.dedup import connected_components
 
@@ -1435,8 +1435,7 @@ def dedup_keep_best_in_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, shingle_n=3, k=MINHASH_K, bands=LSH_BANDS,
         threshold=JACCARD_THRESHOLD,
     ).select("doc_a", "doc_b")
-    comp = connected_components(pairs, algorithm="auto",
-                                star_switch_budget=4)
+    comp = connected_components(pairs, star_switch_budget=4)
     member = comp.join(docs.select("doc_id", "n_chars"), "doc_id")
     return (
         member.groupBy("component")

@@ -339,15 +339,14 @@ PHASH_MAX_HAMMING = 3
 
 def _keep_best_clusters(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Shared tail of the perceptual-dedup twins: transitive clusters from
-    the qualifying pairs (``connected_components(algorithm="auto")``,
-    4-round budget — real media-dup clusters are 1-2 hops), singletons as
-    their own keeper, then one struct-max aggregation per cluster keeping
-    the best doc by quality (max n_chars, ties to smallest doc_id) plus
-    the sorted member list and char total the oracles assert."""
+    the qualifying pairs (``connected_components``, 4-round star-switch
+    budget — real media-dup clusters are 1-2 hops), singletons as their
+    own keeper, then one struct-max aggregation per cluster keeping the
+    best doc by quality (max n_chars, ties to smallest doc_id) plus the
+    sorted member list and char total the oracles assert."""
     from paimon_presto_spark.operators.dedup import connected_components
 
-    comp = connected_components(pairs, algorithm="auto",
-                                star_switch_budget=4)
+    comp = connected_components(pairs, star_switch_budget=4)
     singles = docs.join(comp, "doc_id", "left_anti").select(
         "doc_id", F.col("doc_id").alias("component")
     )
@@ -492,7 +491,7 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk banding (``operators/dedup.hamming_banded_pairs``: 8 chunks of
     8 bits, pigeonhole-complete recall for <= 3 flips, equi-join — never
     all-pairs), resolves transitive clusters
-    (``connected_components(algorithm="auto")``, 4-round budget: real
+    (``connected_components``, 4-round star-switch budget: real
     image-dup clusters are 1-2 hops), and keeps the best image of each
     cluster by document quality (max n_chars, ties to smallest doc_id).
     Singleton images survive as their own keeper. The DuckDB oracle never
@@ -674,7 +673,7 @@ def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     at Hamming distance <= 3 via ``operators/dedup.hamming_banded_pairs``
     (8 chunks of 8 bits, pigeonhole-complete recall for <= 3 flips,
     equi-join — never all-pairs), resolves transitive clusters
-    (``connected_components(algorithm="auto")``), and keeps the best
+    (``connected_components``), and keeps the best
     clip per cluster by document quality (max n_chars, ties to smallest
     doc_id); singletons survive as their own keeper. The DuckDB oracle
     never parses a byte: it rebuilds each block's amplitude from the
@@ -863,7 +862,7 @@ def dedup_video_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     at Hamming distance <= 3 via ``operators/dedup.hamming_banded_pairs``
     (8 chunks of 8 bits, pigeonhole-complete recall for <= 3 flips,
     equi-join — never all-pairs), resolves transitive clusters
-    (``connected_components(algorithm="auto")``), and keeps the best clip
+    (``connected_components``), and keeps the best clip
     per cluster by document quality (max n_chars, ties to smallest
     doc_id); singletons survive as their own keeper. The DuckDB oracle
     never demuxes a byte: it rebuilds every FRAME's bit map from the

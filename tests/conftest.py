@@ -72,19 +72,19 @@ _SLOW_TESTS = {
     "tests/test_registry_contract.py::test_all_query_outputs_are_hashable_scalars",  # 264
     "tests/test_operators.py::test_weighted_quantiles_decomposition_equals_single_window",  # 84
     "tests/test_streaming.py::test_stream_stream_interval_join",  # 28
-    "tests/test_retrieval.py::test_pq_encode_rungs_bit_identical",  # 22
-    "tests/test_operators.py::test_connected_components_star_rung_chain_equivalence",  # 17
+    "tests/test_operators.py::test_connected_components_star_rung_chain_equivalence",  # 15
     "tests/test_retrieval.py::test_connected_components_match_union_find",  # 15
     "tests/test_operators.py::test_tfidf_prefix_filter_is_exact",  # 13
     "tests/test_avro_format.py::test_avro_map_column_roundtrip",  # 13
     "tests/test_table_format.py::test_snapshots_system_table",  # 12
+    "tests/test_operators.py::test_connected_components_long_chain_converges",  # 12
     "tests/test_retrieval.py::test_bm25_matches_reference_on_random_corpora",  # 11
-    "tests/test_operators.py::test_connected_components_long_chain_converges",  # 10
     "tests/test_operators.py::test_connected_components_matches_union_find_property",  # 10
     "tests/test_streaming.py::test_stateful_running_totals",  # 10
     "tests/test_table_format.py::TestSequenceField::test_lookup_changelog_skips_losing_writes",  # 10
     "tests/test_operators.py::test_curate_corpus_end_to_end",  # 8
     "tests/test_deletion_vectors.py::test_partial_compaction_folds_dv_for_hot_files_only",  # 8
+    "tests/test_retrieval.py::test_pq_encode_rungs_bit_identical",  # 8
     "tests/test_avro_format.py::test_datasource_reads_avro_table",  # 7
     "tests/test_operators.py::test_select_until_budget_equals_global_window",  # 7
     "tests/test_table_format.py::TestMergeInto::test_merge_emits_mixed_changelog",  # 7
@@ -92,8 +92,8 @@ _SLOW_TESTS = {
     "tests/test_table_format.py::test_time_travel_timestamp",  # 7
     "tests/test_streaming.py::test_retraction_stream",  # 7
     "tests/test_datasource.py::test_stream_cdc_replication_with_deletes",  # 7
+    "tests/test_operators.py::test_kmeans_centroids_recover_clusters",  # 7
     "tests/test_table_format.py::test_time_travel_snapshot",  # 6
-    "tests/test_operators.py::test_kmeans_centroids_recover_clusters",  # 6
     "tests/test_datasource.py::TestStreamReader::test_consumer_option_records_progress",  # 6
     "tests/test_table_format.py::test_partition_prune_mixed_conjuncts",  # 6
     "tests/test_dynamic_bucket.py::test_dynamic_with_deletion_vectors",  # 6

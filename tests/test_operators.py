@@ -551,23 +551,6 @@ def test_kmeans_input_validation(spark):
     assert all(len(v) == 2 and all(x == x for x in v) for _, v in cents)
 
 
-def test_cosine_pandas_matches_jvm(spark, embeddings):
-    from paimon_presto_spark.operators.similarity import cosine_topk_pandas
-
-    qrows = [(r["vec_id"], list(r["embedding"]))
-             for r in embeddings.filter(F.col("vec_id") < 2).collect()]
-    corpus = embeddings.filter(F.col("vec_id") >= 2)
-    pd_scores = {(r["q_id"], r["n_id"]): r["cos_sim"]
-                 for r in cosine_topk_pandas(corpus, qrows, k=5).collect()}
-    jvm_scores = {(r["q_id"], r["n_id"]): r["cos_sim"]
-                  for r in brute_force_topk(
-                      corpus, embeddings.filter(F.col("vec_id") < 2), k=10**9
-                  ).collect()}
-    assert set(pd_scores) == set(jvm_scores)
-    for key, v in pd_scores.items():
-        assert abs(v - jvm_scores[key]) < 1e-9
-
-
 def test_quality_metrics(spark, docs):
     out = quality_metrics(docs).collect()
     assert len(out) == docs.count()
@@ -977,15 +960,6 @@ def test_kmeans_centroids_recover_clusters(spark):
     again = kmeans_centroids(emb, k=4, max_iter=8)
     assert cents == again
 
-    # The BLAS assignment rung (no k×dim codegen bound) recovers the same
-    # clusters: on well-separated data every assignment is far from a tie,
-    # so the matmul argmax agrees with codegen and centroids match to
-    # float-reassociation tolerance.
-    blas = kmeans_centroids(emb, k=4, max_iter=8, assign="blas")
-    assert [cid for cid, _ in blas] == [cid for cid, _ in cents]
-    for (_, a), (_, b) in zip(blas, cents):
-        assert max(abs(x - y) for x, y in zip(a, b)) < 1e-9
-
     # Trained centroids drive IVF to near-exact recall on this data.
     q = emb.filter(F.col("vec_id") < 4)
     corpus = emb.filter(F.col("vec_id") >= 4)
@@ -1047,6 +1021,10 @@ def test_connected_components_long_chain_converges(spark):
         [(i, i + 1) for i in range(n)], "doc_a long, doc_b long"
     )
     got = connected_components(pairs, max_iter=60).collect()
+    assert all(r["component"] == 0 for r in got) and len(got) == n + 1
+    # default arguments (curate_corpus' call shape): the chain is deeper
+    # than the propagation budget, so the star rounds finish it exactly
+    got = connected_components(pairs).collect()
     assert all(r["component"] == 0 for r in got) and len(got) == n + 1
 
 
@@ -1686,8 +1664,15 @@ def test_semdedup_incremental_blas_matches_codegen(spark):
     assert codegen == {10: "dropped", 11: "dropped", 12: "kept", 13: "kept"}
     assert blas == codegen
     assert auto == codegen
-    with pytest.raises(ValueError, match="pair_backend"):
-        semdedup_incremental(old, new, cents, 0.95, pair_backend="nope")
+    # an unknown rung is rejected before any Spark job (or cache) runs
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "semdedup-bad-backend")
+    try:
+        with pytest.raises(ValueError, match="pair_backend"):
+            semdedup_incremental(old, new, cents, 0.95, pair_backend="nope")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("semdedup-bad-backend") == []
 
 
 def test_semdedup_incremental_blas_matches_codegen_randomized(spark):
@@ -2098,50 +2083,46 @@ def test_ivf_pq_stored_index_probe_matches_full_pipeline(spark, tmp_path):
     # read (the only embedding access is the bounded local query rows)
     assert scans and all("codes" in ln for ln in scans), scans
     assert not any("embedding" in ln for ln in scans), scans
-    # codegen encode rung produces the same stored codes
-    a = ivf_pq_index(emb, cents, books, encode="codegen")
+    # blas encode rung produces the same stored codes
+    a = ivf_pq_index(emb, cents, books, encode="blas")
     b = ivf_pq_index(emb, cents, books, encode="relational")
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
 def test_connected_components_star_rung_chain_equivalence(spark):
     """Alternating large-star/small-star CC (Kiveris et al.) returns the
-    same min-id labels as propagation on shallow graphs, and stays EXACT
-    on a chain DEEPER than the propagation walk's round budget — the
-    O(log n)-vs-O(diameter) escalation 'auto' exists for."""
-    from paimon_presto_spark.operators.dedup import connected_components
+    same min-id labels as propagation on shallow graphs, and
+    ``connected_components`` stays EXACT on a chain DEEPER than the
+    propagation walk's round budget — the O(log n)-vs-O(diameter)
+    escalation."""
+    from paimon_presto_spark.operators.dedup import (
+        _connected_components_star,
+        connected_components,
+    )
 
-    # shallow graph: all three rungs agree
+    # shallow graph: the walk converges, and the star rounds agree
     shallow = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (12, 10), (20, 21)],
         "doc_a long, doc_b long",
     )
-    outs = {
-        al: sorted(
-            map(tuple, connected_components(shallow, algorithm=al).collect())
-        )
-        for al in ("propagation", "star", "auto")
-    }
-    assert outs["propagation"] == outs["star"] == outs["auto"]
-    # chain of diameter 40 with a 25-round budget: the walk CANNOT finish
-    # (sanity-checking the premise), star and auto still converge exactly
+    walk = sorted(map(tuple, connected_components(shallow).collect()))
+    star = sorted(map(tuple, _connected_components_star(shallow).collect()))
+    assert walk == star
+    # chain of diameter 40 with a 25-round budget: the star rounds and
+    # connected_components both converge exactly
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "doc_a long, doc_b long"
     )
-    prop = connected_components(chain, max_iter=25, algorithm="propagation")
-    assert any(r["component"] != 0 for r in prop.collect())
-    for al in ("star", "auto"):
-        got = connected_components(chain, max_iter=25, algorithm=al).collect()
-        assert all(r["component"] == 0 for r in got), al
+    for cc in (_connected_components_star, connected_components):
+        got = cc(chain, max_iter=25).collect()
+        assert all(r["component"] == 0 for r in got), cc.__name__
         assert len(got) == 41
     import pytest
 
-    with pytest.raises(ValueError, match="algorithm"):
-        connected_components(shallow, algorithm="bogus")
     # an unconverged star edge set is NOT a star forest — partial labels
     # would be wrong (and possibly duplicated), so exhaustion raises
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=1, algorithm="star")
+        _connected_components_star(chain, max_iter=1)
 
 
 def test_connected_components_explicit_switch_budget(spark):
@@ -2154,9 +2135,7 @@ def test_connected_components_explicit_switch_budget(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "doc_a long, doc_b long"
     )
-    got = connected_components(
-        chain, algorithm="auto", star_switch_budget=4
-    ).collect()
+    got = connected_components(chain, star_switch_budget=4).collect()
     assert all(r["component"] == 0 for r in got)
     assert len(got) == 13
     shallow = spark.createDataFrame(
@@ -2165,7 +2144,7 @@ def test_connected_components_explicit_switch_budget(spark):
     labels = {
         r["doc_id"]: r["component"]
         for r in connected_components(
-            shallow, algorithm="auto", star_switch_budget=4
+            shallow, star_switch_budget=4
         ).collect()
     }
     assert labels == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
