@@ -60,7 +60,9 @@ class Predicate:
 
 
 import datetime as _dt
+import math as _math
 import re as _re
+from decimal import Decimal as _Decimal
 
 _TS_RE = _re.compile(r"^\d{4}-\d{2}-\d{2}([ T]\d{2}:\d{2})?")
 
@@ -88,6 +90,22 @@ def _stat(stats, col):
     return _norm_val(s.get("min")), _norm_val(s.get("max")), s.get("null_count")
 
 
+def _covering(lo, hi, v):
+    """Stats bounds `lo`/`hi` made safe to compare with the literal `v`.
+    Decimal columns record float stats (``table._plain``): the nearest
+    double, which can sit on the wrong side of the exact value (the double
+    nearest 12345.6789 is 12345.67890000000079...; a decimal(30,0) file
+    holding only 2**53 + 1 records max 2**53), so against an exact
+    (Decimal or int) literal both widen one ulp outward. That never
+    excludes a matching row, also in manifests written before this rule."""
+    if (
+        isinstance(v, (int, _Decimal)) and not isinstance(v, bool)
+        and isinstance(lo, float) and isinstance(hi, float)
+    ):
+        return _math.nextafter(lo, -_math.inf), _math.nextafter(hi, _math.inf)
+    return lo, hi
+
+
 @dataclass(frozen=True)
 class Comparison(Predicate):
     """=, <, <=, >, >= against a literal."""
@@ -112,6 +130,7 @@ class Comparison(Predicate):
         if lo is None or hi is None:
             return True  # no stats → cannot skip
         v = _norm_val(self.value)
+        lo, hi = _covering(lo, hi, v)
         try:
             if self.op == "eq":
                 return lo <= v <= hi
@@ -166,8 +185,12 @@ class In(Predicate):
         lo, hi, _ = _stat(stats, self.column)
         if lo is None or hi is None:
             return True
+        def may_hold(v) -> bool:
+            a, b = _covering(lo, hi, v)
+            return a <= v <= b
+
         try:
-            return any(lo <= _norm_val(v) <= hi for v in self.values)
+            return any(may_hold(_norm_val(v)) for v in self.values)
         except TypeError:
             return True
 

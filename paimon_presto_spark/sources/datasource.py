@@ -37,8 +37,8 @@ Spark's `pyspark.sql.datasource` SPI):
   for plain tables, upsert/delete (``option("rowkind", "D")``) for
   primary-key tables. Each task writes parquet files + footer stats and
   reports manifest entries in its commit message; the driver-side
-  ``commit`` publishes the snapshot through ``Table._commit_manifest``,
-  the one commit path of the package (A22 semantics). Bucket
+  ``commit`` publishes the snapshot through ``Table._commit``, the one
+  commit path of the package (A22 semantics). Bucket
   assignment uses ``functions/xxhash.spark_bucket`` — a pure-Python XXH64
   bit-identical to the JVM ``pmod(xxhash64(pks), n)`` — so DataSource and
   Table-API writes interleave on one table with a consistent bucket layout.
@@ -85,12 +85,15 @@ from pyspark.sql.datasource import (
 
 from paimon_presto_spark.plans.predicate import P, Predicate
 from paimon_presto_spark.table import (
+    CommitConflict,
     Snapshot,
     Table,
     TableScan,
     TableSchema,
     _char_len,
+    _footer_stats,
     _is_time_type,
+    _next_id,
     _varchar_len,
     split_ddl_fields,
 )
@@ -591,26 +594,31 @@ def _merge_arrow(tbl, schema: dict, engine: str):
 
 
 class PaimonCommitMessage(WriterCommitMessage):
-    def __init__(self, entries: list[dict]):
+    def __init__(self, entries: list[dict], base: Snapshot | None):
         self.entries = entries
+        # the snapshot the task's rows were stamped on top of: its rows
+        # carry __seq = the next id, so the batch must publish at exactly
+        # that id
+        self.base = base
 
 
 class PaimonWriter(DataSourceWriter):
     """Task-parallel writes: append/overwrite for plain tables, upsert (or
     delete via ``option("rowkind", "D")``) for primary-key tables.
 
-    Each task writes its rows as parquet (footer stats mirroring
-    ``table._footer_stats``) into a staging dir and reports manifest
-    entries; ``commit`` moves files into ``data/`` and commits them
-    through ``Table._commit_manifest`` — the same manifest write, hard-link
-    snapshot publish, auto-tagging and snapshot retention as every
-    Table-API commit. Primary-key rows carry (``__seq``, ``__pos``,
-    ``__row_kind``) and land in the bucket directory chosen by
-    ``functions/xxhash.spark_bucket`` — bit-identical to the JVM write
-    path's ``pmod(xxhash64(pks), n)``, so DataSource and Table-API writes
-    interleave safely on one table. The snapshot id (one past the highest
-    listed id) is allocated optimistically at writer construction; if a
-    racing commit claims it first, ``commit`` raises ``CommitConflict``.
+    Each task writes its rows as parquet (footer stats from
+    ``table._footer_stats``, as the Table API records them) into a staging
+    dir and reports manifest entries; ``commit`` moves files into
+    ``data/`` and commits them through ``Table._commit`` — the same
+    manifest write, hard-link snapshot publish, auto-tagging and snapshot
+    retention as every Table-API commit. Primary-key rows carry
+    (``__seq``, ``__pos``, ``__row_kind``) and land in the bucket
+    directory chosen by ``functions/xxhash.spark_bucket`` — bit-identical
+    to the JVM write path's ``pmod(xxhash64(pks), n)``, so DataSource and
+    Table-API writes interleave safely on one table. The base snapshot (the latest) is
+    captured at writer construction and the rows are stamped for the id
+    after it; if a racing commit claims that id first, ``commit`` raises
+    ``CommitConflict``.
     """
 
     def __init__(self, options: dict, overwrite: bool):
@@ -703,8 +711,8 @@ class PaimonWriter(DataSourceWriter):
         self.staging = os.path.join(self.path, f".staging-ds-{uuid.uuid4().hex}")
 
     def _allocate_snapshot_id(self) -> None:
-        ids = self.table.snapshot_ids()
-        self.next_snapshot = ids[-1] + 1 if ids else 1
+        self.base = self.table.snapshot()
+        self.next_snapshot = _next_id(self.base)
 
     def write(self, iterator) -> PaimonCommitMessage:
         import pyarrow as pa
@@ -725,7 +733,7 @@ class PaimonWriter(DataSourceWriter):
                 if str(r[self.rowkind_field]).upper() not in ("UB", "-U")
             ]
         if not rows:
-            return PaimonCommitMessage([])
+            return PaimonCommitMessage([], self.base)
         names = [f["name"] for f in self.schema["fields"]]
         types = {f["name"]: f["type"] for f in self.schema["fields"]}
         part_keys = self.schema.get("partition_keys", [])
@@ -775,30 +783,7 @@ class PaimonWriter(DataSourceWriter):
             name = f"data-ds-{uuid.uuid4().hex}.parquet"
             dst = os.path.join(self.staging, name)
             pq.write_table(_cast_to_schema(sub_tbl, self.schema, writing=True), dst)
-            meta = pq.ParquetFile(dst).metadata
-            stats: dict[str, dict] = {}
-            for rg in range(meta.num_row_groups):
-                g = meta.row_group(rg)
-                for ci in range(g.num_columns):
-                    c = g.column(ci)
-                    col = c.path_in_schema
-                    try:
-                        s = c.statistics
-                    except Exception:
-                        continue  # unsupported physical type: no stats
-                    if col not in statable or s is None:
-                        continue
-                    cur = stats.setdefault(
-                        col, {"min": None, "max": None, "null_count": 0}
-                    )
-                    try:
-                        if s.has_min_max:
-                            mn, mx = _plain(s.min), _plain(s.max)
-                            cur["min"] = mn if cur["min"] is None else min(cur["min"], mn)
-                            cur["max"] = mx if cur["max"] is None else max(cur["max"], mx)
-                    except Exception:
-                        pass  # lazy raise on .min/.max (e.g. FLBA decimals)
-                    cur["null_count"] += s.null_count or 0
+            stats = _footer_stats(pq.ParquetFile(dst).metadata, statable)
             entries.append(
                 {
                     "path": name,  # staged; commit() relocates
@@ -839,9 +824,19 @@ class PaimonWriter(DataSourceWriter):
                 )
         else:
             _write_group(tbl, {})
-        return PaimonCommitMessage(entries)
+        return PaimonCommitMessage(entries, self.base)
 
     def commit(self, messages) -> None:
+        self._publish(messages, self.base)
+
+    def _publish(
+        self, messages, base: Snapshot | None, restack: bool = False
+    ) -> None:
+        """Move the staged files into ``data/`` and commit them on top of
+        `base`, the snapshot the tasks stamped their rows for. `restack`
+        (rows without ``__seq``, appended): re-plan on whichever snapshot
+        the commit lands on instead of conflicting."""
+        sid = _next_id(base)
         entries = [e for m in messages if m for e in m.entries]
         data_dir = os.path.join(self.path, "data")
         os.makedirs(data_dir, exist_ok=True)
@@ -864,13 +859,18 @@ class PaimonWriter(DataSourceWriter):
                 {
                     **{k: v for k, v in e.items() if k != "staged"},
                     "path": os.path.relpath(dst, self.path),
-                    "min_seq": self.next_snapshot if self.pks else 0,
-                    "max_seq": self.next_snapshot if self.pks else 0,
+                    "min_seq": sid if self.pks else 0,
+                    "max_seq": sid if self.pks else 0,
                 }
             )
         for d in staging_dirs:
             _rmtree(d)
-        prev = self.table.snapshot()
+
+        def listing(parent: Snapshot | None) -> list[dict]:
+            if parent is None or self.overwrite:
+                return final_entries
+            return self.table.manifest_entries(parent) + final_entries
+
         if self.overwrite:
             kind = "OVERWRITE"
         else:
@@ -880,15 +880,13 @@ class PaimonWriter(DataSourceWriter):
                 if self.pks
                 else "APPEND"
             )
-            if prev is not None:
-                final_entries = self.table.manifest_entries(prev) + final_entries
-        # CommitConflict when a racing commit claimed the pre-allocated id
-        self.table._commit_manifest(
-            TableSchema.from_json(self.schema), self.next_snapshot, kind,
-            final_entries,
-            # appends never disturb existing row positions: carry the
-            # deletion-vector index forward (overwrite resets it)
-            dv_index=None if self.overwrite or prev is None else prev.dv_index,
+        # without `restack`, CommitConflict when a racing commit claimed
+        # the stamped id; appends keep the parent's deletion-vector index
+        # (they never disturb existing row positions), overwrite resets it
+        self.table._commit(
+            base, kind, listing if restack else listing(base),
+            schema=TableSchema.from_json(self.schema),
+            **({"dv_index": None} if self.overwrite else {}),
         )
 
     def abort(self, messages) -> None:
@@ -902,13 +900,16 @@ class PaimonStreamWriter(PaimonWriter, DataSourceStreamWriter):
     re-committed), the same contract as ``streaming.table_sink`` but
     running on Spark's native sink protocol instead of foreachBatch.
 
-    The batch writer's optimistic snapshot allocation moves from writer
-    construction to per-batch: tasks stamp ``__seq`` from the latest
-    snapshot they observe, and the driver's commit publishes the batch as
-    the snapshot after the latest one through the same hard-link publish
-    as every other commit — if an external commit claims that id between
-    the driver's listing and its link, the commit raises
-    ``CommitConflict``, the batch fails and Spark replays it.
+    The batch writer's base snapshot moves from writer construction to
+    per-batch: each task stamps ``__seq`` for the id after the latest
+    snapshot it observes and reports that base in its commit message.
+    ``commit`` publishes the batch at exactly that id through the same
+    hard-link publish as every other commit. If the tasks' bases differ,
+    or an external commit claimed the id first, the commit raises
+    ``CommitConflict``, the batch fails and Spark replays it. Tables
+    without primary keys stamp nothing, so their batches append on the
+    latest snapshot and re-plan past racing commits, as ``Table.append``
+    does.
     """
 
     def __init__(self, options: dict, overwrite: bool):
@@ -947,8 +948,17 @@ class PaimonStreamWriter(PaimonWriter, DataSourceStreamWriter):
                     except FileNotFoundError:
                         pass
             return
-        self._allocate_snapshot_id()
-        PaimonWriter.commit(self, messages)
+        bases = {m.base.snapshot_id if m.base else 0: m.base for m in messages if m}
+        if not self.pks or not bases:
+            # no row carries a __seq stamp: append on the latest snapshot
+            self._publish(messages, self.table.snapshot(), restack=True)
+        elif len(bases) > 1:
+            raise CommitConflict(
+                f"tasks of batch {batchId} stamped rows for different "
+                f"snapshots {sorted(i + 1 for i in bases)}"
+            )
+        else:
+            self._publish(messages, next(iter(bases.values())))
         os.makedirs(os.path.dirname(self._batches_path()), exist_ok=True)
         done.add(int(batchId))
         tmp = self._batches_path() + f".{uuid.uuid4().hex}"
@@ -1226,19 +1236,6 @@ class PaimonDataSource(DataSource):
                 "micro-batch; complete-mode overwrite is not supported"
             )
         return PaimonStreamWriter(self.options, overwrite)
-
-
-def _plain(v):
-    import datetime
-
-    if isinstance(v, bytes):
-        try:
-            return v.decode("utf-8")
-        except UnicodeDecodeError:
-            return v.hex()
-    if isinstance(v, (datetime.date, datetime.datetime)):
-        return str(v)
-    return v
 
 
 def _rmtree(path: str) -> None:

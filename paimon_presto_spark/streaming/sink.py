@@ -3,7 +3,7 @@ atomic snapshot.
 
 ``foreachBatch`` is the idiomatic Spark shape for transactional sinks whose
 commit protocol Spark doesn't know about (here: the manifest swap in
-``Table._commit_manifest``). Exactly-once comes from the combination of
+``Table._commit``). Exactly-once comes from the combination of
 Spark's checkpointed batch ids and idempotent re-commit filtering: a batch
 id that already committed is skipped on replay, so a crashed-and-restarted
 query never double-writes.

@@ -30,11 +30,20 @@ Commits are atomic: ``Table._publish_snapshot`` writes the snapshot JSON
 to a temp file and hard-links it to ``snapshot-<id>.json``. The link
 appears whole or not at all, so no reader and no crash ever sees a
 partial snapshot, and two concurrent committers cannot both claim
-snapshot N — the loser's link fails, it re-plans against the winner's
-manifest and retries (the reference gets the same read-committed,
-snapshot-isolated behavior from immutable Paimon snapshots —
-``PrestoConnectorBase.java:70-97``). Every writer, the Spark DataSource
-included, commits through this one path.
+snapshot N (the reference gets the same snapshot-isolated behavior from
+immutable Paimon snapshots — ``PrestoConnectorBase.java:70-97``).
+
+One commit rule, in ``Table._commit``: a mutation captures its base
+snapshot once, computes everything from it (the ``__seq`` stamp,
+changelog rows, deletion-vector hits, dynamic-bucket assignment, merge
+matches, compaction input) and publishes at base + 1; any other latest
+snapshot raises ``CommitConflict``. Only commits that read nothing but
+their parent's file listing and stamp no ``__seq`` re-plan against the
+new latest and retry: ``append``/``overwrite``/``overwrite_dynamic`` of
+tables without primary keys, ``drop_partition``, ``expire_partitions``
+and ``truncate``. So concurrent writers of a primary-key table get
+``CommitConflict``, as in Paimon (one writer per bucket). Every writer,
+the Spark DataSource included, commits through this one path.
 
 Scale notes:
 - Data I/O is always Spark (``df.write.parquet`` / ``spark.read.parquet``);
@@ -60,7 +69,7 @@ import re as _re_mod
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Any, Iterable, Iterator
+from typing import Any, Callable, Iterable, Iterator
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -334,6 +343,15 @@ class CommitConflict(Exception):
 # links it into place (never matches ``snapshot-*.json``)
 _SNAPSHOT_TMP_PREFIX = ".snapshot-tmp-"
 
+# ``Table._commit`` default for an index: the new snapshot keeps the one
+# its parent snapshot has
+_INHERIT = object()
+
+
+def _next_id(snap: "Snapshot | None") -> int:
+    """The id a commit on top of `snap` publishes (1 on an empty table)."""
+    return snap.snapshot_id + 1 if snap is not None else 1
+
 
 # physical schemas of the datasets under <table>/index/: deletion-vector
 # positions, and the dynamic-bucket key index (xxhash64(pk) -> bucket)
@@ -441,7 +459,7 @@ class Table:
 
         Three manifest formats (Paimon's base+delta design, so a commit
         WRITES O(changed files), not O(table files) — see
-        ``_commit_manifest``):
+        ``_write_manifest``):
 
         - ``{"entries": [...]}`` — full listing (legacy, and the base
           written by manifest full-compaction);
@@ -536,6 +554,45 @@ class Table:
         rel = F.expr(f"substring(_metadata.file_path, {len(prefix) + 1})")
         return rel.alias(DV_PATH_COL), F.col("_metadata.row_index").alias(DV_POS_COL)
 
+    def _read_entries(
+        self, entries: list[dict], schema: TableSchema, keep_sys: bool,
+        dv: DataFrame | None = None, keep_pos: bool = False,
+    ) -> DataFrame | None:
+        """The rows of the data files `entries` in `schema` (None when
+        there are none): each writer schema's files are read with their
+        declared file schema and projected by field id (A18), and the
+        pieces are unioned. `dv` drops the positions a deletion-vector
+        index marks deleted; `keep_pos` keeps each row's (file, position)
+        identity columns."""
+        by_schema: dict[int, list[str]] = {}
+        for e in entries:
+            by_schema.setdefault(e["schema_id"], []).append(
+                os.path.join(self.path, e["path"])
+            )
+        pos = dv is not None or keep_pos
+        out = None
+        for sid, files in sorted(by_schema.items()):
+            writer_schema = self.schema(sid)
+            df = _read_data_files(self.spark, writer_schema, files)
+            if pos:
+                df = df.select("*", *self._file_pos_cols())
+            df = _project_to(
+                df, writer_schema, schema, keep_sys,
+                extra=[DV_PATH_COL, DV_POS_COL] if pos else (),
+            )
+            out = df if out is None else out.unionByName(df)
+        if out is not None and dv is not None:
+            # broadcast anti-join: the index is bounded by deletions since
+            # the last compaction, and no key shuffle happens here
+            out = out.join(
+                F.broadcast(dv),
+                on=(out[DV_PATH_COL] == dv["path"]) & (out[DV_POS_COL] == dv["pos"]),
+                how="left_anti",
+            )
+            if not keep_pos:
+                out = out.drop(DV_PATH_COL, DV_POS_COL)
+        return out
+
     def _check_dv_supported(self, schema: TableSchema) -> None:
         if schema.options.get("file.format", "parquet") != "parquet":
             raise ValueError("deletion-vectors require file.format=parquet "
@@ -602,9 +659,10 @@ class Table:
         known keys keep their bucket; new keys fill the newest bucket if it
         has room, else hash-split across ceil(n_new/target) FRESH buckets.
 
-        Returns (df with __bucket, new index dataset name or None when the
-        index is unchanged). Two small aggregations plus one join against
-        the index — the same cost profile as Paimon's hash-index lookup,
+        Returns (df with __bucket, the key index the commit carries: a new
+        dataset, or `base`'s when no key was added). Two small
+        aggregations plus one join against the index — the same cost
+        profile as Paimon's hash-index lookup,
         expressed as a Spark join instead of per-writer in-memory state.
         `index_new_keys=False` (deletes) assigns strays to bucket 0
         without recording them: a -D for a key never inserted merges away
@@ -642,7 +700,7 @@ class Table:
                 joined.withColumn(
                     "__bucket", F.coalesce("__old_bucket", F.lit(0)).cast("int")
                 ).drop("__kh", "__old_bucket"),
-                None,
+                base.bucket_index,
             )
         occ = {
             r["bucket"]: r["cnt"]
@@ -657,7 +715,7 @@ class Table:
             return (
                 joined.withColumn("__bucket", F.col("__old_bucket").cast("int"))
                 .drop("__kh", "__old_bucket"),
-                None,  # index unchanged
+                base.bucket_index,  # index unchanged
             )
         if n_new <= target - occ.get(max_b, 0):
             new_bucket = F.lit(max_b)  # newest bucket still has room
@@ -692,22 +750,22 @@ class Table:
         back to tombstone deletes of the matching keys. Non-DV append
         tables have no row identity to delete by, so they must use DV mode.
         """
+        base = self.snapshot()
         if not self.dv_enabled:
             if self.is_primary_keyed:
-                return self.delete(self.to_df().filter(F.expr(condition)))
+                return self._delete(base, self.to_df().filter(F.expr(condition)))
             raise ValueError(
                 "append table without deletion-vectors.enabled cannot delete rows"
             )
-        base = self.snapshot()
         if base is None:
             raise ValueError("table has no snapshots")
         live = self.scan().to_df(merge=False, keep_pos=True).filter(F.expr(condition))
         hits = live.select(
             F.col(DV_PATH_COL).alias("path"), F.col(DV_POS_COL).alias("pos")
         )
-        dv_name = self._write_dv_index(hits, base)
-        return self._commit_meta(
-            "DELETE", self.manifest_entries(base), dv_name, expect=base.snapshot_id
+        return self._commit(
+            base, "DELETE", self.manifest_entries(base),
+            dv_index=self._write_dv_index(hits, base),
         )
 
     # -- write path --------------------------------------------------------
@@ -727,7 +785,7 @@ class Table:
         if self.is_primary_keyed:
             raise ValueError("primary-key table: use upsert()/delete()")
         snap = self._commit_write(
-            df, kind="APPEND", row_kind=None,
+            self.snapshot(), df, kind="APPEND", row_kind=None,
             commit_identifier=commit_identifier,
         )
         # small-file compaction: append tables accumulate files per
@@ -745,30 +803,16 @@ class Table:
         the merge entirely."""
         if not self.is_primary_keyed:
             raise ValueError("append-only table: use append()")
+        base = self.snapshot()
         schema = self.schema()
         if schema.options.get("rowkind.field"):
-            return self._upsert_with_rowkind(df, schema)
+            return self._upsert_with_rowkind(base, df, schema)
         dv_mode = schema.options.get("deletion-vectors.enabled") == "true"
-        dynamic = schema.options.get("bucket") == "-1"
-        clg_name = None
+        meta = {}
         if schema.options.get("changelog-producer") == "lookup":
-            clg_name = self._produce_lookup_changelog(df, schema, deletes=False)
-            # changelog rows were computed against the current snapshot;
-            # serialize with `expect` so they can't go stale mid-commit
-            base0 = self.snapshot()
-            if not dv_mode and not dynamic:
-                snap = self._commit_write(
-                    df, kind="UPSERT", row_kind="I", changelog=clg_name,
-                    expect=base0.snapshot_id if base0 else 0,
-                )
-                self._maybe_auto_compact(schema)
-                return snap
-        elif not dv_mode and not dynamic:
-            snap = self._commit_write(df, kind="UPSERT", row_kind="I")
-            self._maybe_auto_compact(schema)
-            return snap
-        base = self.snapshot()
-        dv_name = None
+            meta["changelog"] = self._produce_lookup_changelog(
+                base, df, schema, deletes=False
+            )
         if dv_mode:
             self._check_dv_supported(schema)
             pks = schema.primary_keys
@@ -780,22 +824,17 @@ class Table:
                 .drop("__rn", POS_COL)
             )
             if base is not None:
-                hits = self._dv_hits(df)
-                dv_name = self._write_dv_index(hits, base)
-        b_name = None
-        if dynamic:
-            df, b_name = self._assign_dynamic_buckets(df, base)
-        snap = self._commit_write(
-            df, kind="UPSERT", row_kind="I", dv_index=dv_name,
-            bucket_index=b_name,
-            expect=base.snapshot_id if base else 0,
-            changelog=clg_name,
-        )
+                meta["dv_index"] = self._write_dv_index(self._dv_hits(df), base)
+        if schema.options.get("bucket") == "-1":
+            df, meta["bucket_index"] = self._assign_dynamic_buckets(df, base)
+        snap = self._commit_write(base, df, kind="UPSERT", row_kind="I", **meta)
         if not dv_mode:
             self._maybe_auto_compact(schema)
         return snap
 
-    def _upsert_with_rowkind(self, df: DataFrame, schema: TableSchema) -> Snapshot:
+    def _upsert_with_rowkind(
+        self, base: Snapshot | None, df: DataFrame, schema: TableSchema
+    ) -> Snapshot:
         """CDC-batch upsert driven by ``rowkind.field`` (Paimon's public
         option: a column of the input carries each row's kind, so ONE
         atomic commit can mix inserts/updates and deletes — exactly what a
@@ -816,7 +855,7 @@ class Table:
         df = df.withColumn(
             "__rk", F.when(is_del, F.lit("D")).otherwise(F.lit("I"))
         )
-        return self._commit_cdc_batch(df, schema)
+        return self._commit_cdc_batch(base, df, schema)
 
     def _check_cdc_batch_supported(self, schema: TableSchema, what: str) -> None:
         engine = schema.options.get("merge-engine", "deduplicate")
@@ -830,7 +869,9 @@ class Table:
                 "(eager position deletes assume insert-only batches)"
             )
 
-    def _commit_cdc_batch(self, df: DataFrame, schema: TableSchema) -> Snapshot:
+    def _commit_cdc_batch(
+        self, base: Snapshot | None, df: DataFrame, schema: TableSchema
+    ) -> Snapshot:
         """ONE atomic commit of a mixed insert/tombstone batch: `df`
         carries a ``__rk`` column ('I' or 'D') per row. Within-batch
         winners resolve per key first (by sequence.field when set, else
@@ -848,28 +889,26 @@ class Table:
             .drop("__rn", POS_COL)
         )
         is_del = F.col("__rk") == "D"
-        clg_name = None
+        meta = {}
         if schema.options.get("changelog-producer") == "lookup":
-            clg_name = self._produce_rowkind_changelog(
+            meta["changelog"] = self._produce_rowkind_changelog(
+                base,
                 df.filter(~is_del).drop("__rk"),
                 df.filter(is_del).drop("__rk"),
                 schema,
             )
-        base = self.snapshot()
-        b_name = None
         if schema.options.get("bucket") == "-1":
             # inserts index new keys; tombstones for never-seen keys merge
             # away wherever they land and must NOT pollute the key index
-            ins, b_name = self._assign_dynamic_buckets(df.filter(~is_del), base)
+            ins, meta["bucket_index"] = self._assign_dynamic_buckets(
+                df.filter(~is_del), base
+            )
             dels, _ = self._assign_dynamic_buckets(
                 df.filter(is_del), base, index_new_keys=False
             )
             df = ins.unionByName(dels)
-        need_expect = b_name is not None or clg_name is not None
         snap = self._commit_write(
-            df, kind="UPSERT", row_kind=F.col("__rk"),
-            bucket_index=b_name, changelog=clg_name,
-            expect=(base.snapshot_id if base else 0) if need_expect else None,
+            base, df, kind="UPSERT", row_kind=F.col("__rk"), **meta
         )
         self._maybe_auto_compact(schema)
         return snap
@@ -903,6 +942,7 @@ class Table:
         insert/tombstone batch, so readers never observe a half-applied
         merge.
         """
+        base = self.snapshot()
         if not self.is_primary_keyed:
             raise ValueError("merge_into requires a primary-key table")
         if when_matched not in ("update", "delete", "ignore"):
@@ -933,7 +973,6 @@ class Table:
         for c in missing_vals:
             source = source.withColumn(c, F.lit(None).cast(_parse_type(
                 next(f["type"] for f in schema.fields if f["name"] == c))))
-        base = self.snapshot()
         keys = source.select(*pks).distinct()
         if base is None:
             existing = None
@@ -1012,7 +1051,7 @@ class Table:
             .withColumn("__rk", rk)
             .select(*cols, "__rk")
         )
-        return self._commit_cdc_batch(batch, schema)
+        return self._commit_cdc_batch(base, batch, schema)
 
     def delete(self, df: DataFrame) -> Snapshot:
         """Delete by primary key.
@@ -1024,20 +1063,23 @@ class Table:
 
         ``df`` needs at least the pk columns; missing columns are nulled.
         """
+        return self._delete(self.snapshot(), df)
+
+    def _delete(self, base: Snapshot | None, df: DataFrame) -> Snapshot:
         schema = self.schema()
-        clg_name = None
+        meta = {}
         if schema.options.get("changelog-producer") == "lookup":
-            clg_name = self._produce_lookup_changelog(df, schema, deletes=True)
+            meta["changelog"] = self._produce_lookup_changelog(
+                base, df, schema, deletes=True
+            )
         if schema.options.get("deletion-vectors.enabled") == "true":
             self._check_dv_supported(schema)
-            base = self.snapshot()
             if base is None:
                 raise ValueError("table has no snapshots")
             hits = self._dv_hits(df.select(*schema.primary_keys))
-            dv_name = self._write_dv_index(hits, base)
-            return self._commit_meta(
-                "DELETE", self.manifest_entries(base), dv_name,
-                expect=base.snapshot_id, changelog=clg_name,
+            return self._commit(
+                base, "DELETE", self.manifest_entries(base),
+                dv_index=self._write_dv_index(hits, base), **meta,
             )
         engine = schema.options.get("merge-engine", "deduplicate")
         if engine != "deduplicate" and schema.options.get("ignore-delete") != "true":
@@ -1054,16 +1096,8 @@ class Table:
             # tombstones must land in the key's assigned bucket so the
             # per-bucket merge sees them; unknown keys go anywhere (their
             # -D merges to nothing regardless) and are not indexed
-            df, _ = self._assign_dynamic_buckets(
-                df, self.snapshot(), index_new_keys=False
-            )
-        if clg_name is not None:
-            base = self.snapshot()
-            return self._commit_write(
-                df, kind="DELETE", row_kind="D", changelog=clg_name,
-                expect=base.snapshot_id if base else 0,
-            )
-        return self._commit_write(df, kind="DELETE", row_kind="D")
+            df, _ = self._assign_dynamic_buckets(df, base, index_new_keys=False)
+        return self._commit_write(base, df, kind="DELETE", row_kind="D", **meta)
 
     def compact(
         self, sort_by: list[str] | None = None, strategy: str = "order"
@@ -1102,6 +1136,7 @@ class Table:
         shuffle partition: a 4000-row table with 3 partitions × 2 buckets
         gets 192 files at 32 shuffle partitions.
         """
+        base = self.snapshot()
         current = self.to_df()
         if sort_by:
             # explicit partition count: AQE would otherwise coalesce the
@@ -1125,18 +1160,14 @@ class Table:
             else:
                 raise ValueError(f"unknown compact strategy {strategy!r}")
         # a full replace rewrites from the merged state: deletions are
-        # materialized into the new files, so the DV index resets to empty.
-        # In DV mode, conflict (rather than silently drop) a concurrent
-        # delete that lands between our read and our commit.
-        base = self.snapshot()
+        # materialized into the new files, so the DV index resets to empty
         if self.is_primary_keyed and self.is_dynamic_bucket:
             # rewrite preserves each key's assigned bucket (n_new == 0, so
             # the index itself is untouched and carries forward)
             current, _ = self._assign_dynamic_buckets(current, base)
         return self._commit_write(
-            current, kind="COMPACT", row_kind="I" if self.is_primary_keyed else None,
-            replace=True,
-            expect=(base.snapshot_id if base else 0) if self.dv_enabled else None,
+            base, current, kind="COMPACT",
+            row_kind="I" if self.is_primary_keyed else None, replace=True,
         )
 
     def compact_buckets(self, min_files: int | None = None) -> Snapshot | None:
@@ -1175,38 +1206,13 @@ class Table:
         if not hot:
             return None
         pk = self.is_primary_keyed
+        # the rewrite drops the groups' deleted positions (the fold DV
+        # compaction performs); untouched files keep their index rows
+        dv = self.dv_df(base) if dv_mode else None
         parts: list[DataFrame] = []
         for key, es in hot.items():
             bucket = json.loads(key)["b"]
-            by_schema: dict[int, list[str]] = {}
-            for e in es:
-                by_schema.setdefault(e["schema_id"], []).append(
-                    os.path.join(self.path, e["path"])
-                )
-            gdf = None
-            for wsid, files in sorted(by_schema.items()):
-                ws = self.schema(wsid)
-                raw = _read_data_files(self.spark, ws, files)
-                if dv_mode:
-                    # drop the group's deleted positions during the rewrite
-                    # (the fold DV compaction performs); untouched files
-                    # keep their index rows
-                    dv = self.dv_df(base)
-                    if dv is not None:
-                        pcol, poscol = self._file_pos_cols()
-                        raw = (
-                            raw.select("*", pcol, poscol)
-                            .join(
-                                F.broadcast(dv.withColumnRenamed(
-                                    "path", DV_PATH_COL
-                                ).withColumnRenamed("pos", DV_POS_COL)),
-                                [DV_PATH_COL, DV_POS_COL],
-                                "left_anti",
-                            )
-                            .drop(DV_PATH_COL, DV_POS_COL)
-                        )
-                piece = _project_to(raw, ws, schema, pk)
-                gdf = piece if gdf is None else gdf.unionByName(piece)
+            gdf = self._read_entries(es, schema, pk, dv=dv)
             if pk:
                 gdf = _merge_on_read(gdf, schema)
             # one output file per compacted group — the point of the
@@ -1220,10 +1226,9 @@ class Table:
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
-        next_id = base.snapshot_id + 1
         staging = os.path.join(self.path, "staging", uuid.uuid4().hex)
         new_entries = self._write_data_files(
-            df, schema, next_id, "I" if pk else None, staging, prefix="cpt"
+            df, schema, _next_id(base), "I" if pk else None, staging, prefix="cpt"
         )
         keep = [
             e
@@ -1233,29 +1238,17 @@ class Table:
         ]
         # fold the rewritten files' deletions out of the DV index (their
         # dead rows were dropped in the rewrite); other files keep theirs
-        new_dv = base.dv_index
-        if dv_mode and base.dv_index:
+        meta = {}
+        if dv is not None:
             hot_paths = {e["path"] for es in hot.values() for e in es}
-            remaining = self.dv_df(base).filter(
-                ~F.col("path").isin(list(hot_paths))
-            )
-            if remaining.limit(1).count() == 0:
-                new_dv = None
-            else:
-                name = f"dv-{uuid.uuid4().hex}"
+            remaining = dv.filter(~F.col("path").isin(list(hot_paths)))
+            meta["dv_index"] = None
+            if remaining.limit(1).count() > 0:
+                meta["dv_index"] = f"dv-{uuid.uuid4().hex}"
                 remaining.repartition(1).write.parquet(
-                    os.path.join(self._dv_root(), name)
+                    os.path.join(self._dv_root(), meta["dv_index"])
                 )
-                new_dv = name
-        cur = self.snapshot()
-        if cur.snapshot_id != base.snapshot_id:
-            raise CommitConflict(
-                "concurrent commit during bucket compaction — retry"
-            )
-        return self._commit_manifest(
-            schema, next_id, "COMPACT", keep + new_entries,
-            dv_index=new_dv, bucket_index=base.bucket_index,
-        )
+        return self._commit(base, "COMPACT", keep + new_entries, **meta)
 
     def _maybe_auto_compact(self, schema: TableSchema) -> None:
         """Writer-side automatic compaction: with
@@ -1349,27 +1342,37 @@ class Table:
             if k not in schema.partition_keys:
                 raise ValueError(f"{k!r} is not a partition key")
         want = {k: str(v) for k, v in partition_values.items()}
-        if self.snapshot() is None:
+        base = self.snapshot()
+        if base is None:
             raise ValueError("table has no snapshots")
-        for _attempt in range(5):
-            prev = self.snapshot()
-            next_id = (prev.snapshot_id + 1) if prev else 1
-            # recomputed per attempt so a racing writer's files survive
-            kept = [
-                e
-                for e in self.manifest_entries(prev)
-                if any(e["partition"].get(k) != v for k, v in want.items())
-            ]
-            try:
-                # surviving partitions keep their deletion vectors and
-                # bucket assignments (entries for dropped files are inert)
-                return self._commit_manifest(
-                    schema, next_id, "DROP_PARTITION", kept,
-                    dv_index=prev.dv_index, bucket_index=prev.bucket_index,
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict("gave up after 5 retries")
+        snap, _ = self._drop_partitions(
+            base, lambda p: all(p.get(k) == v for k, v in want.items())
+        )
+        return snap
+
+    def _drop_partitions(
+        self, base: Snapshot, doomed: Callable[[dict], bool]
+    ) -> tuple[Snapshot, list[dict]]:
+        """One DROP_PARTITION commit of every file whose partition dict
+        `doomed` selects; returns it and the dropped partitions. The
+        listing is re-planned from whichever snapshot the commit lands on,
+        so a racing writer's files survive. Surviving partitions keep
+        their deletion vectors and bucket assignments (entries for dropped
+        files are inert)."""
+        dropped: dict[str, dict] = {}
+
+        def kept(parent: Snapshot) -> list[dict]:
+            dropped.clear()
+            out = []
+            for e in self.manifest_entries(parent):
+                if doomed(e["partition"]):
+                    dropped[json.dumps(e["partition"], sort_keys=True)] = e["partition"]
+                else:
+                    out.append(e)
+            return out
+
+        snap = self._commit(base, "DROP_PARTITION", kept)
+        return snap, list(dropped.values())
 
     def expire_partitions(
         self,
@@ -1414,50 +1417,31 @@ class Table:
             raise ValueError(f"{key!r} is not a partition key")
         cutoff_ms = (now_ms if now_ms is not None else int(time.time() * 1000)) - expiration_ms
 
-        def value_ms(v: str) -> int | None:
+        def expired(partition: dict) -> bool:
             try:
-                dt = _dt.datetime.strptime(v, fmt)
-                return int(dt.replace(tzinfo=_dt.timezone.utc).timestamp() * 1000)
+                dt = _dt.datetime.strptime(partition.get(key), fmt)
             except (ValueError, TypeError):
-                return None
+                return False
+            return dt.replace(tzinfo=_dt.timezone.utc).timestamp() * 1000 < cutoff_ms
 
-        if self.snapshot() is None:
+        base = self.snapshot()
+        if base is None or not any(
+            expired(e["partition"]) for e in self.manifest_entries(base)
+        ):
             return []
-        for _attempt in range(5):
-            prev = self.snapshot()
-            entries = self.manifest_entries(prev)
-            expired_parts: dict[str, dict] = {}
-            kept = []
-            for e in entries:
-                ms = value_ms(e["partition"].get(key))
-                if ms is not None and ms < cutoff_ms:
-                    expired_parts[json.dumps(e["partition"], sort_keys=True)] = e[
-                        "partition"
-                    ]
-                else:
-                    kept.append(e)
-            if not expired_parts:
-                return []
-            try:
-                self._commit_manifest(
-                    self.schema(), prev.snapshot_id + 1, "DROP_PARTITION", kept,
-                    dv_index=prev.dv_index, bucket_index=prev.bucket_index,
-                )
-                return list(expired_parts.values())
-            except CommitConflict:
-                continue
-        raise CommitConflict("gave up after 5 retries")
+        return self._drop_partitions(base, expired)[1]
 
     def overwrite(self, df: DataFrame) -> Snapshot:
         """Replace the whole table contents in one atomic commit."""
+        base = self.snapshot()
         kind = "I" if self.is_primary_keyed else None
-        b_name = None
+        meta = {}
         if self.is_primary_keyed and self.is_dynamic_bucket:
             # full replacement: assign against a FRESH index (the old
             # mapping only described the replaced contents)
-            df, b_name = self._assign_dynamic_buckets(df, None)
+            df, meta["bucket_index"] = self._assign_dynamic_buckets(df, None)
         return self._commit_write(
-            df, kind="OVERWRITE", row_kind=kind, replace=True, bucket_index=b_name
+            base, df, kind="OVERWRITE", row_kind=kind, replace=True, **meta
         )
 
     def overwrite_dynamic(self, df: DataFrame) -> Snapshot:
@@ -1466,17 +1450,17 @@ class Table:
         the partitions present in `df`; untouched partitions keep their files.
         The backfill primitive at scale — rewriting one day of a date-
         partitioned 100 TB table commits O(that day), not O(table)."""
+        base = self.snapshot()
         if not self.schema().partition_keys:
             raise ValueError("dynamic overwrite requires a partitioned table")
         kind = "I" if self.is_primary_keyed else None
-        b_name = None
+        meta = {}
         if self.is_primary_keyed and self.is_dynamic_bucket:
             # untouched partitions keep live rows, so keys keep buckets;
             # only genuinely new keys extend the index
-            df, b_name = self._assign_dynamic_buckets(df, self.snapshot())
+            df, meta["bucket_index"] = self._assign_dynamic_buckets(df, base)
         return self._commit_write(
-            df, kind="OVERWRITE", row_kind=kind, replace="dynamic",
-            bucket_index=b_name,
+            base, df, kind="OVERWRITE", row_kind=kind, replace="dynamic", **meta
         )
 
     # -- consumers: streaming-reader progress pins (Paimon consumer-id) ----
@@ -1493,8 +1477,7 @@ class Table:
         if not name or "/" in name or "$" in name:
             raise ValueError(f"invalid consumer name {name!r}")
         if next_snapshot is None:
-            cur = self.snapshot()
-            next_snapshot = (cur.snapshot_id + 1) if cur else 1
+            next_snapshot = _next_id(self.snapshot())
         os.makedirs(os.path.join(self.meta_path, "consumer"), exist_ok=True)
         tmp = self._consumer_path(name) + ".tmp"
         with open(tmp, "w") as fh:
@@ -1534,31 +1517,29 @@ class Table:
     #    streams with UPDATE_BEFORE/UPDATE_AFTER, paid at write time ---------
 
     def _produce_lookup_changelog(
-        self, df: DataFrame, schema: TableSchema, deletes: bool
+        self, base: Snapshot | None, df: DataFrame, schema: TableSchema,
+        deletes: bool,
     ) -> str:
-        """Materialize this commit's retraction changelog (see
-        ``_lookup_changelog_rows`` for the semantics)."""
-        clg, caches = self._lookup_changelog_rows(df, schema, deletes)
-        return self._write_changelog(clg, caches)
+        """Materialize the retraction changelog of the commit on top of
+        `base` (see ``_lookup_changelog_rows`` for the semantics)."""
+        clg, caches = self._lookup_changelog_rows(base, df, schema, deletes)
+        return self._write_changelog(base, clg, caches)
 
     def _produce_rowkind_changelog(
-        self, ins: DataFrame, dels: DataFrame, schema: TableSchema
+        self, base: Snapshot | None, ins: DataFrame, dels: DataFrame,
+        schema: TableSchema,
     ) -> str:
         """Changelog for a mixed rowkind.field commit: the insert rows and
         tombstone rows of ONE atomic batch, resolved against the same base
         snapshot, written as a single changelog dataset (keys are disjoint
         — the caller resolved within-batch winners first)."""
-        a, ca = self._lookup_changelog_rows(ins, schema, deletes=False)
-        b, cb = self._lookup_changelog_rows(dels, schema, deletes=True)
-        return self._write_changelog(a.unionByName(b), ca + cb)
+        a, ca = self._lookup_changelog_rows(base, ins, schema, deletes=False)
+        b, cb = self._lookup_changelog_rows(base, dels, schema, deletes=True)
+        return self._write_changelog(base, a.unionByName(b), ca + cb)
 
     def _lookup_changelog_combining(
-        self,
-        df: DataFrame,
-        schema: TableSchema,
+        self, base: Snapshot | None, df: DataFrame, schema: TableSchema,
         deletes: bool,
-        base,
-        engine: str,
     ) -> tuple[DataFrame, list[DataFrame]]:
         """Lookup changelog for the COMBINING merge engines
         (partial-update / aggregation): the post-image is the engine's
@@ -1569,7 +1550,6 @@ class Table:
         lookup compaction pays for these engines."""
         pks = schema.primary_keys
         cols = schema.field_names()
-        next_id = (base.snapshot_id + 1) if base else 1
         empty = (
             df.select(*[F.col(c) for c in cols if c in df.columns])
             .limit(0)
@@ -1584,7 +1564,7 @@ class Table:
             # where tombstones merge away — nothing changes, no changelog
             return empty, []
         batch = df.select(*cols).withColumn(
-            SEQ_COL, F.lit(next_id).cast("long")
+            SEQ_COL, F.lit(_next_id(base)).cast("long")
         ).withColumn(POS_COL, F.monotonically_increasing_id()).withColumn(
             KIND_COL, F.lit("I")
         )
@@ -1615,10 +1595,9 @@ class Table:
         return ub.unionByName(ua).unionByName(ins), [old]
 
     def _write_changelog(
-        self, clg: DataFrame, caches: list[DataFrame]
+        self, base: Snapshot | None, clg: DataFrame, caches: list[DataFrame]
     ) -> str:
-        base = self.snapshot()
-        next_id = (base.snapshot_id + 1) if base else 1
+        next_id = _next_id(base)
         clg = clg.withColumn(SEQ_COL, F.lit(next_id).cast("long"))
         name = f"clg-{next_id}-{uuid.uuid4().hex}"
         out = os.path.join(self.meta_path, "changelog", name)
@@ -1628,7 +1607,8 @@ class Table:
         return name
 
     def _lookup_changelog_rows(
-        self, df: DataFrame, schema: TableSchema, deletes: bool
+        self, base: Snapshot | None, df: DataFrame, schema: TableSchema,
+        deletes: bool,
     ) -> tuple[DataFrame, list[DataFrame]]:
         """This commit's retraction changelog rows: for each touched
         key, the pre-image (``UB`` = Paimon's -U, or ``D`` for deletes) and
@@ -1639,7 +1619,9 @@ class Table:
         downstream consumer gets a lossless retraction stream for free,
         instead of every consumer reconstructing old values itself. The
         lookup is a join of the (small) batch against the merged table —
-        broadcast the batch keys, never the table.
+        broadcast the batch keys, never the table. It reads the latest
+        snapshot: `base`, or a newer one, in which case the commit on top
+        of `base` conflicts and these rows are never published.
 
         Returns (rows, cached-frames-to-unpersist-after-write).
         """
@@ -1654,12 +1636,9 @@ class Table:
         pks = schema.primary_keys
         cols = schema.field_names()
         seqf = _sequence_fields(schema)
-        base = self.snapshot()
         caches: list[DataFrame] = []
         if engine in ("partial-update", "aggregation"):
-            return self._lookup_changelog_combining(
-                df, schema, deletes, base, engine
-            )
+            return self._lookup_changelog_combining(base, df, schema, deletes)
         if seqf:
             # sequence.field rows may arrive pk-only (deletes): null-pad so
             # the ordering columns exist — a null sequence value loses.
@@ -2160,17 +2139,12 @@ class Table:
         """TRUNCATE TABLE: one atomic commit with an empty manifest.
         History stays time-travelable until ``expire_snapshots``; storage
         is reclaimed then, not now — O(1) regardless of table size."""
-        if self.snapshot() is None:
+        base = self.snapshot()
+        if base is None:
             raise ValueError("table has no snapshots")
-        schema = self.schema()
-        for _attempt in range(5):
-            prev = self.snapshot()
-            next_id = (prev.snapshot_id + 1) if prev else 1
-            try:
-                return self._commit_manifest(schema, next_id, "TRUNCATE", [])
-            except CommitConflict:
-                continue
-        raise CommitConflict("gave up after 5 retries")
+        return self._commit(
+            base, "TRUNCATE", lambda parent: [], dv_index=None, bucket_index=None
+        )
 
     def rollback_to(self, snapshot_id: int) -> None:
         """Roll the table back to `snapshot_id`: snapshots after it are
@@ -2337,33 +2311,10 @@ class Table:
             or schema.options.get("deletion-vectors.enabled") == "true"
         )
 
-        def _read_group(entries: list[dict], extra=()) -> DataFrame | None:
-            by_schema: dict[int, list[str]] = {}
-            for e in entries:
-                by_schema.setdefault(e["schema_id"], []).append(
-                    os.path.join(self.path, e["path"])
-                )
-            parts = []
-            for wsid, files in sorted(by_schema.items()):
-                writer_schema = self.schema(wsid)
-                df = _read_data_files(spark, writer_schema, files)
-                if extra:
-                    pcol, poscol = self._file_pos_cols()
-                    df = df.select("*", pcol, poscol)
-                parts.append(
-                    _project_to(df, writer_schema, schema, self.is_primary_keyed,
-                                extra=extra)
-                )
-            if not parts:
-                return None
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-            return df
-
         data_names = schema.field_names()
+        pk = self.is_primary_keyed
         out = None
-        inserts = _read_group(new_entries)
+        inserts = self._read_entries(new_entries, schema, pk)
         if inserts is not None:
             if KIND_COL in inserts.columns:
                 kind = F.concat(
@@ -2383,8 +2334,10 @@ class Table:
             # rows a DV commit deleted still exist in their (immutable)
             # files — re-read exactly those positions for the -D payload
             paths = [r["path"] for r in added.select("path").distinct().collect()]
-            touched = _read_group([path_entry[p] for p in paths if p in path_entry],
-                                  extra=[DV_PATH_COL, DV_POS_COL])
+            touched = self._read_entries(
+                [path_entry[p] for p in paths if p in path_entry], schema, pk,
+                keep_pos=True,
+            )
             if touched is not None:
                 deletes = (
                     touched.join(
@@ -2527,52 +2480,26 @@ class Table:
             removed.append(rel)
         return removed
 
-    def _commit_meta(
-        self, kind: str, entries: list[dict], dv_index: str | None,
-        expect: int | None = None, changelog: str | None = None,
-    ) -> Snapshot:
-        """Metadata-only commit (no new data files) — DV deletes. `expect`
-        guards against committing positions computed on a stale snapshot:
-        a concurrent commit means the positions may be wrong, so conflict
-        instead of stacking."""
-        schema = self.schema()
-        prev = self.snapshot()
-        cur = prev.snapshot_id if prev else 0
-        if expect is not None and cur != expect:
-            raise CommitConflict(
-                f"deletion-vector commit computed against snapshot {expect}, "
-                f"but latest is now {cur} — recompute and retry"
-            )
-        return self._commit_manifest(
-            schema, cur + 1, kind, entries, dv_index=dv_index,
-            bucket_index=prev.bucket_index if prev else None,
-            changelog=changelog,
-        )
-
     def _commit_write(
         self,
+        base: Snapshot | None,
         df: DataFrame,
         kind: str,
         row_kind: str | Column | None,
         replace: bool | str = False,
-        dv_index: str | None = None,
-        bucket_index: str | None = None,
-        expect: int | None = None,
-        changelog: str | None = None,
-        commit_identifier: int | None = None,
+        **meta,
     ) -> Snapshot:
-        """`replace`: False stacks on the previous manifest, True replaces it
-        entirely, "dynamic" replaces only the partitions the new files touch.
+        """Write `df` as new data files stamped for the commit on top of
+        `base`, and commit them through ``_commit`` with `meta`.
 
-        `dv_index` attaches a deletion-vector index to the new snapshot;
-        when absent and not replacing, the previous snapshot's index is
-        carried forward (old files keep their deletions). A full replace
-        rewrites from the merged state, so the index resets.
-        `bucket_index` likewise attaches a dynamic-bucket key index; when
-        absent it ALWAYS carries forward (bucket assignments outlive any
-        rewrite — a key's bucket never changes). `expect` conflicts if the
-        latest snapshot moved past it (DV/bucket commits compute state
-        against a specific snapshot and cannot be re-stacked)."""
+        `replace`: False stacks on the parent's listing, True replaces it
+        entirely (the DV index resets: a full replace rewrites from the
+        merged state), "dynamic" replaces only the partitions the new
+        files touch. Input rows that carry no ``__seq`` (``row_kind`` None:
+        tables without primary keys) depend on nothing but the parent's
+        listing, so they re-plan against whichever snapshot they land on;
+        everything else — every stamped row, and every compaction, whose
+        input is the table itself — lands on `base` or conflicts."""
         schema = self.schema()
         expected = schema.field_names()
         missing = [c for c in expected if c.lower() not in {x.lower() for x in df.columns}]
@@ -2605,55 +2532,32 @@ class Table:
             ],
             *passthrough,
         )
-
-        prev = self.snapshot()
-        next_id = (prev.snapshot_id + 1) if prev else 1
         staging = os.path.join(self.path, "staging", uuid.uuid4().hex)
         # compaction rewrites carry a distinct name prefix so streaming
         # changelog readers (file-glob based) never re-consume a rewrite
         new_entries = self._write_data_files(
-            df, schema, next_id, row_kind, staging,
+            df, schema, _next_id(base), row_kind, staging,
             prefix="cpt" if kind == "COMPACT" else "data",
         )
-        # Data files are written once; only the metadata commit retries. A
-        # conflict means another writer claimed our snapshot id — re-read the
-        # new latest manifest and stack our entries on top of it.
         touched = {json.dumps(e["partition"], sort_keys=True) for e in new_entries}
-        for _attempt in range(5):
-            prev = self.snapshot()
-            next_id = (prev.snapshot_id + 1) if prev else 1
-            if expect is not None and (prev.snapshot_id if prev else 0) != expect:
-                raise CommitConflict(
-                    f"deletion-vector commit computed against snapshot {expect}, "
-                    f"but latest is now {prev.snapshot_id if prev else 0}"
-                )
-            dv = dv_index
-            if dv is None and replace is not True and prev is not None:
-                dv = prev.dv_index  # carry existing deletions forward
-            bidx = bucket_index
-            if bidx is None and prev is not None:
-                bidx = prev.bucket_index  # assignments survive any rewrite
-            if prev is None or replace is True:
-                base = []
-            elif replace == "dynamic":
-                base = [
-                    e
-                    for e in self.manifest_entries(prev)
+
+        def listing(parent: Snapshot | None) -> list[dict]:
+            if parent is None or replace is True:
+                return new_entries
+            old = self.manifest_entries(parent)
+            if replace == "dynamic":
+                old = [
+                    e for e in old
                     if json.dumps(e["partition"], sort_keys=True) not in touched
                 ]
-            else:
-                base = self.manifest_entries(prev)
-            try:
-                return self._commit_manifest(
-                    schema, next_id, kind, base + new_entries, dv_index=dv,
-                    bucket_index=bidx, changelog=changelog,
-                    commit_identifier=commit_identifier,
-                )
-            except CommitConflict:
-                if expect is not None:
-                    raise
-                continue
-        raise CommitConflict("gave up after 5 retries")
+            return old + new_entries
+
+        if replace is True:
+            meta.setdefault("dv_index", None)
+        replan = row_kind is None and kind != "COMPACT"
+        return self._commit(
+            base, kind, listing if replan else listing(base), schema=schema, **meta
+        )
 
     def _write_data_files(
         self,
@@ -2797,9 +2701,11 @@ class Table:
         return entries
 
     def _write_manifest(
-        self, schema: TableSchema, snapshot_id: int, entries: list[dict]
+        self, schema: TableSchema, parent: Snapshot | None, snapshot_id: int,
+        entries: list[dict],
     ) -> str:
-        """Persist a snapshot's file listing, writing O(changed files).
+        """Persist the file listing of the snapshot on top of `parent`,
+        writing O(changed files).
 
         Callers hand over the FULL entry list (simple to reason about);
         this diffs it against the parent snapshot and persists only a
@@ -2811,11 +2717,6 @@ class Table:
         instead — bounding read-side fold cost to ~threshold small files.
         """
         mdir = os.path.join(self.meta_path, "manifest")
-        parent = (
-            self.snapshot(snapshot_id - 1)
-            if (snapshot_id - 1) in self.snapshot_ids()
-            else None
-        )
         stamp = f"{snapshot_id}-{uuid.uuid4().hex}"
 
         def write_full() -> str:
@@ -2852,33 +2753,84 @@ class Table:
             json.dump({"manifests": members + [delta_name]}, fh)
         return list_name
 
-    def _commit_manifest(
-        self, schema: TableSchema, snapshot_id: int, kind: str, entries: list[dict],
-        dv_index: str | None = None, bucket_index: str | None = None,
-        changelog: str | None = None, commit_identifier: int | None = None,
+    def _commit(
+        self,
+        base: Snapshot | None,
+        kind: str,
+        entries: list[dict] | Callable[[Snapshot | None], list[dict]],
+        schema: TableSchema | None = None,
+        dv_index: Any = _INHERIT,
+        bucket_index: Any = _INHERIT,
+        changelog: str | None = None,
+        commit_identifier: int | None = None,
     ) -> Snapshot:
+        """Publish one commit on top of `base`: the only way a mutation
+        becomes a snapshot, with one retry rule that follows from what the
+        commit read.
+
+        `entries` is the new snapshot's full file listing. A list was
+        computed from `base` — and so was everything else the commit
+        carries (the ``__seq`` stamp, changelog, deletion-vector hits,
+        bucket assignment, merge matches, compaction input): it publishes
+        at base + 1, and any other latest snapshot raises
+        ``CommitConflict``. Reads the caller made after capturing `base`
+        saw `base` or a newer snapshot, and a newer one means base + 1 is
+        taken, so a stale computation is never published. Concurrent
+        writers of a primary-key table therefore conflict, as in Paimon
+        (one writer per bucket).
+
+        A function of the parent snapshot is a commit that read nothing
+        else: appends and overwrites of rows without ``__seq``, partition
+        drops, truncate. When another commit wins the id, it re-plans
+        against the new latest snapshot and retries.
+
+        `dv_index`/`bucket_index` default to the parent's indexes; pass a
+        dataset name to replace one, or None to drop it. A commit whose
+        files were written but whose publish conflicted leaves them for
+        ``remove_orphan_files``."""
+        schema = schema or self.schema()
+        replan = callable(entries)
+        parent = base
         os.makedirs(os.path.join(self.meta_path, "manifest"), exist_ok=True)
-        manifest_name = self._write_manifest(schema, snapshot_id, entries)
-        snap = Snapshot(
-            snapshot_id=snapshot_id,
-            schema_id=schema.schema_id,
-            commit_user=os.environ.get("USER", "spark"),
-            commit_identifier=(
-                commit_identifier if commit_identifier is not None
-                else snapshot_id
-            ),
-            commit_kind=kind,
-            timestamp_ms=int(time.time() * 1000),
-            manifest=manifest_name,
-            total_rows=sum(e["row_count"] for e in entries),
-            dv_index=dv_index,
-            bucket_index=bucket_index,
-            changelog=changelog,
-        )
-        self._publish_snapshot(snap)
-        self._maybe_auto_tag(schema, snapshot_id)
-        self._maybe_auto_expire(schema)
-        return snap
+        for _attempt in range(5):
+            listing = entries(parent) if replan else entries
+            sid = _next_id(parent)
+            snap = Snapshot(
+                snapshot_id=sid,
+                schema_id=schema.schema_id,
+                commit_user=os.environ.get("USER", "spark"),
+                commit_identifier=(
+                    commit_identifier if commit_identifier is not None else sid
+                ),
+                commit_kind=kind,
+                timestamp_ms=int(time.time() * 1000),
+                manifest=self._write_manifest(schema, parent, sid, listing),
+                total_rows=sum(e["row_count"] for e in listing),
+                dv_index=(
+                    (parent.dv_index if parent else None)
+                    if dv_index is _INHERIT else dv_index
+                ),
+                bucket_index=(
+                    (parent.bucket_index if parent else None)
+                    if bucket_index is _INHERIT else bucket_index
+                ),
+                changelog=changelog,
+            )
+            try:
+                self._publish_snapshot(snap)
+            except CommitConflict as exc:
+                if not replan:
+                    raise CommitConflict(
+                        f"{kind} computed against snapshot {sid - 1} of "
+                        f"{self.meta_path}, but another commit published "
+                        f"snapshot {sid} first — recompute and retry"
+                    ) from exc
+                parent = self.snapshot()
+                continue
+            self._maybe_auto_tag(schema, sid)
+            self._maybe_auto_expire(schema)
+            return snap
+        raise CommitConflict("gave up after 5 retries")
 
     def _publish_snapshot(self, snap: Snapshot) -> None:
         """Make `snap` visible as ``snapshot-<id>.json`` — the only code
@@ -3469,44 +3421,9 @@ class TableScan:
 
         is_pk = bool(schema_latest.primary_keys)
         dv_mode = schema_latest.options.get("deletion-vectors.enabled") == "true"
-        dv = t.dv_df(snap)
-        # group by writer schema for evolution-aware projection (A18)
-        by_schema: dict[int, list[str]] = {}
-        for e in entries:
-            by_schema.setdefault(e["schema_id"], []).append(
-                os.path.join(t.path, e["path"])
-            )
-        parts = []
-        for sid, files in sorted(by_schema.items()):
-            writer_schema = t.schema(sid)
-            df = _read_data_files(spark, writer_schema, files)
-            if dv is not None or keep_pos:
-                # row identity for position-delete filtering, from the
-                # hidden _metadata struct (parquet row index)
-                pcol, poscol = t._file_pos_cols()
-                df = df.select("*", pcol, poscol)
-            df = _project_to(
-                df, writer_schema, schema_latest, is_pk,
-                extra=[DV_PATH_COL, DV_POS_COL] if (dv is not None or keep_pos) else (),
-            )
-            parts.append(df)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-
-        if dv is not None:
-            # Drop deleted positions: broadcast anti-join against the DV
-            # index. The index is bounded by deletions-since-compaction
-            # (regular compact() folds it into the files), so broadcast is
-            # the right default at scale; no key shuffle happens here.
-            df = df.join(
-                F.broadcast(dv),
-                on=(df[DV_PATH_COL] == dv["path"]) & (df[DV_POS_COL] == dv["pos"]),
-                how="left_anti",
-            )
-        if not keep_pos and (dv is not None):
-            df = df.drop(DV_PATH_COL, DV_POS_COL)
-
+        df = t._read_entries(
+            entries, schema_latest, is_pk, dv=t.dv_df(snap), keep_pos=keep_pos
+        )
         if is_pk and merge:
             if dv_mode:
                 # DV invariant: every key has exactly one live position —

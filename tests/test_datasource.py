@@ -719,3 +719,99 @@ def test_writer_commit_race_raises_commit_conflict(spark, catalog):
         w.commit([msg])
     assert t.snapshot_ids() == [1, 2]
     assert sorted(r["a"] for r in t.to_df().collect()) == [1, 2]
+
+
+def test_stream_writer_publishes_at_the_stamped_id(spark, catalog):
+    """A streaming micro-batch publishes at the snapshot id its tasks
+    stamped into ``__seq``. An external commit that claims the id between
+    the tasks and ``commit`` makes the batch raise
+    ``CommitConflict`` (Spark replays it) instead of publishing rows whose
+    ``__seq`` names the other commit; so do tasks that stamped different
+    ids."""
+    from pyspark.sql import Row
+
+    from paimon_presto_spark.sources.datasource import PaimonStreamWriter
+    from paimon_presto_spark.table import CommitConflict
+
+    ddl = "k int, v string"
+    t = catalog.create_table("default", "ds_stream_race", ddl,
+                             primary_keys=["k"], options={"bucket": "1"})
+    t.upsert(spark.createDataFrame([(1, "a")], ddl))
+    w = PaimonStreamWriter({"path": t.path, "query-name": "q"}, overwrite=False)
+    stale = w.write(iter([Row(k=1, v="b")]))  # stamps __seq 2
+    t.upsert(spark.createDataFrame([(1, "c")], ddl))  # claims snapshot 2
+    with pytest.raises(CommitConflict):
+        w.commit([stale], 0)
+    assert t.snapshot_ids() == [1, 2]
+    assert _rows(t.to_df()) == [(1, "c")]
+    with pytest.raises(CommitConflict):
+        w.commit([w.write(iter([Row(k=1, v="b")])), stale], 0)
+    assert t.snapshot_ids() == [1, 2]
+
+    w.commit([w.write(iter([Row(k=1, v="b")]))], 0)  # the replay lands
+    assert t.snapshot_ids() == [1, 2, 3]
+    assert _rows(t.to_df()) == [(1, "b")]
+    raw = t.scan().to_df(merge=False).filter("v = 'b'")
+    assert {r["__seq"] for r in raw.collect()} == {3}
+
+
+def test_stream_writer_append_table_lands_past_racing_commits(spark, catalog):
+    """Rows of a table without primary keys carry no ``__seq`` stamp, so a
+    micro-batch re-plans on the latest snapshot: appends landing between
+    the tasks and ``commit``, or inside the commit's publish, do not
+    fail the batch, and every writer's rows stay."""
+    from pyspark.sql import Row
+
+    from paimon_presto_spark.sources.datasource import PaimonStreamWriter
+
+    t = catalog.create_table("default", "ds_stream_append", "a int")
+    t.append(spark.createDataFrame([(1,)], "a int"))
+    w = PaimonStreamWriter({"path": t.path, "query-name": "q"}, overwrite=False)
+    msg = w.write(iter([Row(a=5)]))
+    t.append(spark.createDataFrame([(2,)], "a int"))  # between write and commit
+    w.commit([msg], 0)
+    assert t.snapshot_ids() == [1, 2, 3]
+
+    publish = w.table._publish_snapshot
+    raced = []
+
+    def racing_publish(snap):
+        if not raced:  # another writer wins this id
+            raced.append(t.append(spark.createDataFrame([(3,)], "a int")))
+        publish(snap)
+
+    w.table._publish_snapshot = racing_publish
+    w.commit([w.write(iter([Row(a=6)]))], 1)
+    assert t.snapshot_ids() == [1, 2, 3, 4, 5]
+    assert sorted(r["a"] for r in t.to_df().collect()) == [1, 2, 3, 5, 6]
+
+
+def test_both_writers_record_the_same_stats(registered, spark, catalog):
+    """For the same rows, the Table API and the DataSource writer record
+    equal stats for every column both record: both read them with
+    ``table._footer_stats``, so a file skips the same whichever path
+    wrote it (a decimal's stats are floats on both paths)."""
+    import datetime
+    from decimal import Decimal
+
+    ddl = ("k int, big decimal(30,4), small decimal(9,2), s string, "
+           "x double, d date, b boolean")
+    data = [
+        (1, Decimal("12345.6789"), Decimal("1.10"), "a", 1.5,
+         datetime.date(2020, 1, 2), True),
+        (2, Decimal("99999.0001"), None, "b", None,
+         datetime.date(2021, 3, 4), False),
+    ]
+    df = spark.createDataFrame(data, ddl).coalesce(1)
+    by_table = catalog.create_table("default", "stats_tbl", ddl)
+    by_ds = catalog.create_table("default", "stats_ds", ddl)
+    by_table.append(df)
+    df.write.format("paimon").option("path", by_ds.path).mode("append").save()
+    (ea,), (eb,) = by_table.manifest_entries(), by_ds.manifest_entries()
+    sa, sb = ea["stats"], eb["stats"]
+    shared = sa.keys() & sb.keys()
+    assert {"k", "big", "s", "x", "d", "b"} <= shared
+    for c in shared:
+        assert sa[c]["null_count"] == sb[c]["null_count"], c
+        if sa[c]["min"] is not None and sb[c]["min"] is not None:
+            assert (sa[c]["min"], sa[c]["max"]) == (sb[c]["min"], sb[c]["max"]), c

@@ -10,9 +10,11 @@ Also covers the commit protocol: a conflicting snapshot id must be retried
 and never drop either writer's data.
 """
 
+from decimal import Decimal
+
 import pyspark.sql.functions as F
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from paimon_presto_spark.plans.predicate import P
@@ -30,6 +32,11 @@ def _ds_filtered(spark, t, pred):
 
 
 values = st.integers(-5, 25)
+# decimals no double represents exactly: the nearest double of 0.1 and of
+# 12345.6789 lies above the value, of 0.3 below it
+decimals = st.sampled_from(
+    [Decimal("0.1000"), Decimal("0.3000"), Decimal("12345.6789")]
+)
 
 predicates = st.recursive(
     st.one_of(
@@ -41,6 +48,10 @@ predicates = st.recursive(
         st.builds(P.is_null, st.just("b")),
         st.builds(P.not_null, st.just("b")),
         st.builds(P.eq, st.just("b"), st.integers(0, 5)),
+        st.builds(P.eq, st.just("d"), decimals),
+        st.builds(P.gte, st.just("d"), decimals),
+        st.builds(P.lte, st.just("d"), decimals),
+        st.builds(P.in_, st.just("d"), st.lists(decimals, min_size=1, max_size=2)),
     ),
     lambda kids: st.one_of(
         st.builds(lambda x, y: x & y, kids, kids),
@@ -51,7 +62,11 @@ predicates = st.recursive(
 
 layouts = st.lists(  # each inner list = one append commit = >=1 file
     st.lists(
-        st.tuples(values, st.one_of(st.none(), st.integers(0, 5))),
+        st.tuples(
+            values,
+            st.one_of(st.none(), st.integers(0, 5)),
+            st.one_of(st.none(), decimals),
+        ),
         min_size=1,
         max_size=6,
     ),
@@ -66,28 +81,30 @@ layouts = st.lists(  # each inner list = one append commit = >=1 file
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(commits=layouts, pred=predicates)
+# a decimal's float stats round above it (0.1) or below it (0.3)
+@example(commits=[[(1, None, Decimal("0.1000"))]], pred=P.eq("d", Decimal("0.1000")))
+@example(commits=[[(1, None, Decimal("0.3000"))]], pred=P.gte("d", Decimal("0.3000")))
+# an int literal past 2**53: the file's float max rounds 2**53 + 1 down
+@example(
+    commits=[[(1, None, Decimal(2**53 + 1))]], pred=P.eq("d", 2**53 + 1)
+)
 def test_file_skipping_never_changes_results(spark, tmp_path_factory, commits, pred):
     from paimon_presto_spark.catalog import Catalog
 
     wh = tmp_path_factory.mktemp("wh_prune")
     c = Catalog(spark, str(wh))
     c.create_database("d", ignore_if_exists=True)
-    t = c.create_table("d", "t", "a int, b int")
+    ddl = "a int, b int, d decimal(30,4)"
+    t = c.create_table("d", "t", ddl)
     for rows in commits:
-        t.append(spark.createDataFrame(rows, "a int, b int"))
+        t.append(spark.createDataFrame(rows, ddl))
 
-    pruned = sorted(
-        ((r["a"], r["b"]) for r in t.scan(predicate=pred).to_df().collect()),
-        key=repr,
-    )
-    full = sorted(
-        ((r["a"], r["b"]) for r in t.to_df().filter(pred.to_spark()).collect()),
-        key=repr,
-    )
-    ds = sorted(
-        ((r["a"], r["b"]) for r in _ds_filtered(spark, t, pred).collect()),
-        key=repr,
-    )
+    def got(df):
+        return sorted((tuple(r) for r in df.select("a", "b", "d").collect()), key=repr)
+
+    pruned = got(t.scan(predicate=pred).to_df())
+    full = got(t.to_df().filter(pred.to_spark()))
+    ds = got(_ds_filtered(spark, t, pred))
     assert pruned == full
     assert ds == full
 

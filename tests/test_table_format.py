@@ -2011,6 +2011,206 @@ class TestConcurrentCommits:
         assert rows(t.to_df()) == [(2, "B"), (3, "c")]
 
 
+class TestCommitRule:
+    """One commit rule: a mutation publishes at the snapshot after the one
+    it computed from, or raises ``CommitConflict``. Only commits that read
+    nothing but their parent's listing re-plan against the new latest and
+    retry. Each case lands a second commit, from another ``Table`` object,
+    at a chosen point inside the first."""
+
+    DDL = "k int, v string"
+
+    @staticmethod
+    def _intrude(monkeypatch, t, method, intruder, before=False):
+        """Run `intruder` once, during the first call of ``t.<method>``:
+        after it returns, or before it runs when `before`."""
+        real = getattr(t, method)
+        fired = []
+
+        def wrapped(*args, **kwargs):
+            if before and not fired:
+                fired.append(method)
+                intruder()
+            out = real(*args, **kwargs)
+            if not fired:
+                fired.append(method)
+                intruder()
+            return out
+
+        monkeypatch.setattr(t, method, wrapped)
+        return fired
+
+    def _pk_table(self, catalog, name, **options):
+        return catalog.create_table(
+            "default", name, self.DDL, primary_keys=["k"],
+            options={"bucket": "1", **options},
+        )
+
+    @pytest.mark.parametrize("pk", [True, False], ids=["pk", "append"])
+    def test_compact_conflicts_and_keeps_intruder_rows(
+        self, spark, catalog, monkeypatch, pk
+    ):
+        from paimon_presto_spark.table import CommitConflict
+
+        name = f"rule_compact_{'pk' if pk else 'append'}"
+        t = (self._pk_table(catalog, name) if pk
+             else catalog.create_table("default", name, self.DDL))
+        other = catalog.get_table("default", name)
+        df = lambda data: spark.createDataFrame(data, self.DDL)  # noqa: E731
+        (t.upsert if pk else t.append)(df([(1, "a"), (2, "b")]))
+        (t.upsert if pk else t.append)(df([(2, "bb")]))
+        fired = self._intrude(
+            monkeypatch, t, "_write_data_files",
+            lambda: (other.upsert if pk else other.append)(df([(3, "c")])),
+        )
+        with pytest.raises(CommitConflict):
+            t.compact()
+        assert fired
+        assert t.snapshot_ids() == [1, 2, 3]
+        assert rows(t.to_df()) == (
+            [(1, "a"), (2, "bb"), (3, "c")] if pk
+            else [(1, "a"), (2, "b"), (2, "bb"), (3, "c")]
+        )
+
+    def test_pk_upsert_race_conflicts_and_intruder_value_stays(
+        self, spark, catalog, monkeypatch
+    ):
+        from paimon_presto_spark.table import CommitConflict
+
+        t = self._pk_table(catalog, "rule_upsert")
+        other = catalog.get_table("default", "rule_upsert")
+        t.upsert(spark.createDataFrame([(1, "a")], self.DDL))
+        self._intrude(
+            monkeypatch, t, "_write_data_files",
+            lambda: other.upsert(spark.createDataFrame([(1, "y")], self.DDL)),
+        )
+        with pytest.raises(CommitConflict):
+            t.upsert(spark.createDataFrame([(1, "x")], self.DDL))
+        assert t.snapshot_ids() == [1, 2]
+        assert rows(t.to_df()) == [(1, "y")]
+
+    def test_lookup_changelog_upsert_conflicts_after_changelog(
+        self, spark, catalog, monkeypatch
+    ):
+        """The intruder lands after the changelog was computed: the commit
+        raises, and no changelog computed from the older snapshot is
+        published."""
+        from paimon_presto_spark.table import CommitConflict
+
+        t = self._pk_table(catalog, "rule_clg", **{"changelog-producer": "lookup"})
+        other = catalog.get_table("default", "rule_clg")
+        t.upsert(spark.createDataFrame([(1, "a")], self.DDL))
+        fired = self._intrude(
+            monkeypatch, t, "_write_changelog",
+            lambda: other.upsert(spark.createDataFrame([(1, "y")], self.DDL)),
+        )
+        with pytest.raises(CommitConflict):
+            t.upsert(spark.createDataFrame([(1, "x")], self.DDL))
+        assert fired
+        assert t.snapshot_ids() == [1, 2]
+        got = t.changelog_df().select("k", "v", "__row_kind", "__seq")
+        assert rows(got) == [(1, "a", "I", 1), (1, "a", "UB", 2), (1, "y", "UA", 2)]
+        assert rows(t.to_df()) == [(1, "y")]
+
+    def test_merge_into_conflicts(self, spark, catalog, monkeypatch):
+        """`merge_into` matched its source against the snapshot it read;
+        key 2 was unmatched there, so publishing its insert on top of the
+        intruder's key 2 would apply a stale matched set."""
+        from paimon_presto_spark.table import CommitConflict
+
+        t = self._pk_table(catalog, "rule_merge")
+        other = catalog.get_table("default", "rule_merge")
+        t.upsert(spark.createDataFrame([(1, "a")], self.DDL))
+        self._intrude(
+            monkeypatch, t, "_write_data_files",
+            lambda: other.upsert(spark.createDataFrame([(2, "b")], self.DDL)),
+        )
+        with pytest.raises(CommitConflict):
+            t.merge_into(
+                spark.createDataFrame([(1, "x"), (2, "z")], self.DDL),
+                when_matched="ignore",
+            )
+        assert t.snapshot_ids() == [1, 2]
+        assert rows(t.to_df()) == [(1, "a"), (2, "b")]
+
+    def test_parallel_pk_upserts_land_whole_or_conflict(self, spark, catalog):
+        """Six threads upsert the same key at once. Each either lands or
+        raises ``CommitConflict``; history stays contiguous, every landed
+        commit's row carries its own snapshot id as ``__seq`` (no two
+        commits tie), and the merged value is the newest landed one."""
+        import sys
+        import threading
+
+        from paimon_presto_spark.table import CommitConflict
+
+        t = self._pk_table(catalog, "rule_threads")
+        t.upsert(spark.createDataFrame([(0, "seed")], self.DDL))
+        landed, errs = {}, []
+
+        def writer(w):
+            other = catalog.get_table("default", "rule_threads")
+            try:
+                snap = other.upsert(spark.createDataFrame([(0, f"w{w}")], self.DDL))
+                landed[snap.snapshot_id] = f"w{w}"
+            except CommitConflict:
+                pass
+            except Exception as e:  # pragma: no cover - failure detail
+                errs.append(e)
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            threads = [threading.Thread(target=writer, args=(w,)) for w in range(6)]
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join(timeout=300)
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(th.is_alive() for th in threads)
+        assert not errs
+        assert landed
+        assert t.snapshot_ids() == list(range(1, 2 + len(landed)))
+        raw = t.scan().to_df(merge=False).select("v", "__seq").collect()
+        assert sorted((r["__seq"], r["v"]) for r in raw) == sorted(
+            [(1, "seed")] + list(landed.items()))
+        assert rows(t.to_df()) == [(0, landed[max(landed)])]
+
+    @pytest.mark.parametrize(
+        "op", ["drop_partition", "expire_partitions", "truncate"]
+    )
+    def test_metadata_commits_replan_and_keep_intruder_files(
+        self, spark, catalog, monkeypatch, op
+    ):
+        ddl = "dt string, v int"
+        t = catalog.create_table(
+            "default", f"rule_{op}", ddl, partition_keys=["dt"]
+        )
+        other = catalog.get_table("default", f"rule_{op}")
+        t.append(spark.createDataFrame(
+            [("2020-01-01", 1), ("2030-01-01", 2)], ddl))
+        fired = self._intrude(
+            monkeypatch, t, "_publish_snapshot",
+            lambda: other.append(spark.createDataFrame([("2031-01-01", 9)], ddl)),
+            before=True,
+        )
+        if op == "drop_partition":
+            t.drop_partition(dt="2020-01-01")
+        elif op == "expire_partitions":
+            now_ms = 1_700_000_000_000  # 2023-11-14: only 2020-01-01 is old
+            assert t.expire_partitions(expiration_ms=1, now_ms=now_ms) == [
+                {"dt": "2020-01-01"}]
+        else:
+            t.truncate()
+        assert fired
+        assert t.snapshot_ids() == [1, 2, 3]
+        assert rows(t.to_df(snapshot_id=2)) == [
+            ("2020-01-01", 1), ("2030-01-01", 2), ("2031-01-01", 9)]
+        assert rows(t.to_df()) == (
+            [] if op == "truncate" else [("2030-01-01", 2), ("2031-01-01", 9)]
+        )
+
+
 # delete steps (os.remove calls plus directory removals) of
 # ``expire_snapshots(keep_last=1)`` and snapshot unlinks of
 # ``rollback_to(2)`` on the TestRetentionCrashPoints template table;
