@@ -1329,33 +1329,7 @@ def remove_repeated_chunks(
     signature work is silently re-paid. Materialize this result before
     the next ledgered call.
     """
-    # Stage the split through its own projection: inlined, the transform
-    # lambda re-evaluates ``split(text)`` once PER CHUNK ELEMENT (array
-    # HOFs run interpreted, no common-subexpression elimination) — a
-    # 20-chunk document split its text 20 times. Same expressions, same
-    # results; CollapseProject keeps the stage (split is non-cheap).
-    ws = F.col("__rrc_ws")
-    chunked = docs.select(
-        F.col(id_col), F.split(F.col(text_col), " ").alias("__rrc_ws")
-    ).select(
-        F.col(id_col),
-        F.filter(
-            F.transform(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(
-                        (F.size(ws) - 1) / F.lit(chunk_words),
-                        F.lit(0),
-                    ).cast("int"),
-                ),
-                lambda i: F.array_join(
-                    F.slice(ws, i * chunk_words + 1, chunk_words),
-                    " ",
-                ),
-            ),
-            lambda c: c != "",
-        ).alias("__chunks"),
-    )
+    chunked = _fixed_chunks(docs, id_col, text_col, chunk_words)
     return _drop_overrepresented_chunks(chunked, id_col, max_count)
 
 
@@ -1381,20 +1355,40 @@ def remove_repeated_chunks_within_doc(
     hash-shuffle on already-slimmed text.
 
     Returns (id_col, n_chunks, n_removed, rebuilt_text).
-
-    Ledgered caches (see ``release_chunk_caches``): entering any other
-    ledgered dedup operator releases THIS call's caches — results stay
-    correct (unpersisted plans recompute), but the cached shingle /
-    signature work is silently re-paid. Materialize this result before
-    the next ledgered call.
     """
-    # Stage split -> chunks -> kept through separate projections: array
-    # HOFs run interpreted (no common-subexpression elimination), so
-    # inlined, ``split`` re-evaluates per chunk element and ``kept`` (the
-    # O(chunks²) first-occurrence filter) per referencing column. Same
-    # expressions, same results; each stage now evaluates once per row.
+    # Stage chunks -> kept through separate projections: array HOFs run
+    # interpreted (no common-subexpression elimination), so inlined,
+    # ``kept`` (the O(chunks²) first-occurrence filter) re-evaluates per
+    # referencing column. Each stage evaluates once per row.
+    chunked = _fixed_chunks(docs, id_col, text_col, chunk_words)
+    # keep chunk i iff its FIRST occurrence in this document is i itself
+    # (array_position is 1-based; filter's index is 0-based)
+    kept = F.expr(
+        "filter(__chunks, (c, i) -> array_position(__chunks, c) = i + 1)"
+    )
+    return chunked.select(
+        id_col, "__chunks", kept.alias("__kept")
+    ).select(
+        id_col,
+        F.size("__chunks").alias("n_chunks"),
+        (F.size("__chunks") - F.size("__kept")).alias("n_removed"),
+        F.array_join("__kept", " ").alias("rebuilt_text"),
+    )
+
+
+def _fixed_chunks(
+    docs: DataFrame, id_col: str, text_col: str, chunk_words: int
+) -> DataFrame:
+    """Fixed-width chunking: each document's words in non-overlapping
+    ``chunk_words``-word windows, empty chunks dropped. Pure map. Returns
+    (id_col, __chunks array<string>)."""
+    # Stage the split through its own projection: inlined, the transform
+    # lambda re-evaluates ``split(text)`` once PER CHUNK ELEMENT (array
+    # HOFs run interpreted, no common-subexpression elimination) — a
+    # 20-chunk document split its text 20 times. Same expressions, same
+    # results; CollapseProject keeps the stage (split is non-cheap).
     ws = F.col("__rrc_ws")
-    chunked = docs.select(
+    return docs.select(
         F.col(id_col), F.split(F.col(text_col), " ").alias("__rrc_ws")
     ).select(
         F.col(id_col),
@@ -1414,19 +1408,6 @@ def remove_repeated_chunks_within_doc(
             ),
             lambda c: c != "",
         ).alias("__chunks"),
-    )
-    # keep chunk i iff its FIRST occurrence in this document is i itself
-    # (array_position is 1-based; filter's index is 0-based)
-    kept = F.expr(
-        "filter(__chunks, (c, i) -> array_position(__chunks, c) = i + 1)"
-    )
-    return chunked.select(
-        id_col, "__chunks", kept.alias("__kept")
-    ).select(
-        id_col,
-        F.size("__chunks").alias("n_chunks"),
-        (F.size("__chunks") - F.size("__kept")).alias("n_removed"),
-        F.array_join("__kept", " ").alias("rebuilt_text"),
     )
 
 

@@ -90,6 +90,7 @@ from paimon_presto_spark.table import (
     Table,
     TableScan,
     TableSchema,
+    _CHAR_TYPES_RE,
     _char_len,
     _footer_stats,
     _is_time_type,
@@ -569,6 +570,23 @@ def _merge_arrow(tbl, schema: dict, engine: str):
                 merged.update(dict(m))
             return list(merged.items())
 
+        def _non_null(pick):
+            # `pick` over the non-null values (in commit order), None when
+            # there are none: Spark's aggregates skip nulls the same way
+            return lambda s: pick(s.dropna()) if s.notna().any() else None
+
+        simple = {
+            "sum": _non_null(lambda v: v.sum()),
+            "max": "max", "min": "min", "count": "count",
+            "last_non_null": _non_null(lambda v: v.iloc[-1]),
+            "first_non_null": _non_null(lambda v: v.iloc[0]),
+            "last_value": lambda s: s.iloc[-1],
+            "first_value": lambda s: s.iloc[0],
+            "bool_and": _non_null(lambda v: v.all()),
+            "bool_or": _non_null(lambda v: v.any()),
+            "product": _non_null(lambda v: v.prod()),
+            "listagg": lambda s: ",".join(s.dropna()),
+        }
         aggs = {}
         for f in schema["fields"]:
             c = f["name"]
@@ -579,11 +597,12 @@ def _merge_arrow(tbl, schema: dict, engine: str):
                 aggs[c] = _collect(opts.get(f"fields.{c}.distinct") == "true")
             elif fn == "merge_map":
                 aggs[c] = _merge_map
+            elif fn in simple:
+                aggs[c] = simple[fn]
             else:
-                aggs[c] = {
-                    "sum": "sum", "max": "max", "min": "min", "count": "count",
-                    "last_non_null": lambda s: s.dropna().iloc[-1] if s.notna().any() else None,
-                }[fn]
+                raise ValueError(
+                    f"unsupported aggregate-function {fn!r} for field {c!r}"
+                )
         pdf = pdf.groupby(pks, as_index=False, sort=False).agg(aggs)
     else:
         raise ValueError(f"unknown merge-engine {engine!r}")
@@ -1178,16 +1197,12 @@ def spark_ddl_type(t: str) -> str:
 
     TIME is stored/read as micros-since-midnight bigint (the
     table._parse_type convention); Spark's DDL parser has no TIME.
-    CHAR(n)/VARCHAR(n) read as plain string — the bound/padding are
-    write-side concerns, and Spark's Arrow conversion for Python data
-    sources rejects Char/VarcharType."""
-    import re as _re
-
+    CHAR(n)/VARCHAR(n), nested ones included, read as plain string — the
+    bound/padding are write-side concerns, and Spark's Arrow conversion
+    for Python data sources rejects Char/VarcharType."""
     if _is_time_type(t):
         return "bigint"
-    if _re.match(r"^\s*(var)?char\s*\(\s*\d+\s*\)\s*$", t, _re.I):
-        return "string"
-    return t
+    return _CHAR_TYPES_RE.sub("string", t)
 
 
 class PaimonDataSource(DataSource):

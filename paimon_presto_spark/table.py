@@ -810,8 +810,8 @@ class Table:
         dv_mode = schema.options.get("deletion-vectors.enabled") == "true"
         meta = {}
         if schema.options.get("changelog-producer") == "lookup":
-            meta["changelog"] = self._produce_lookup_changelog(
-                base, df, schema, deletes=False
+            meta["changelog"] = self._lookup_changelog(
+                base, df.withColumn(KIND_COL, F.lit("I")), schema
             )
         if dv_mode:
             self._check_dv_supported(schema)
@@ -891,11 +891,8 @@ class Table:
         is_del = F.col("__rk") == "D"
         meta = {}
         if schema.options.get("changelog-producer") == "lookup":
-            meta["changelog"] = self._produce_rowkind_changelog(
-                base,
-                df.filter(~is_del).drop("__rk"),
-                df.filter(is_del).drop("__rk"),
-                schema,
+            meta["changelog"] = self._lookup_changelog(
+                base, df.withColumnRenamed("__rk", KIND_COL), schema
             )
         if schema.options.get("bucket") == "-1":
             # inserts index new keys; tombstones for never-seen keys merge
@@ -936,11 +933,11 @@ class Table:
           — and every unlisted column KEEPS its stored value. Without it,
           the source row replaces the stored row whole.
 
-        Matching is by primary key against the CURRENT merged state (one
-        broadcast semi-lookup of the batch keys — the same price the
-        changelog producer pays). The commit itself is a mixed
-        insert/tombstone batch, so readers never observe a half-applied
-        merge.
+        Matching is by primary key against the source keys' merged state
+        at the snapshot the merge starts from (a broadcast semi-join of
+        the source keys, then their merge — the lookup the changelog
+        producer runs). The commit itself is a mixed insert/tombstone
+        batch, so readers never observe a half-applied merge.
         """
         base = self.snapshot()
         if not self.is_primary_keyed:
@@ -970,33 +967,17 @@ class Table:
                 f"columns {missing_vals}; pass update_set= to patch only "
                 f"some columns, or provide every table column"
             )
-        for c in missing_vals:
-            source = source.withColumn(c, F.lit(None).cast(_parse_type(
-                next(f["type"] for f in schema.fields if f["name"] == c))))
-        keys = source.select(*pks).distinct()
-        if base is None:
-            existing = None
-        else:
-            existing = (
-                self.to_df()
-                .join(F.broadcast(keys), pks, "inner")
-                .select(*[F.col(c).alias(f"__t_{c}") for c in cols])
-            )
-        src = source.select(*cols)
-        if existing is None:
-            marked = src.withColumn("__matched", F.lit(False))
-            for c in cols:
-                marked = marked.withColumn(f"__t_{c}", F.lit(None).cast(
-                    _parse_type(next(
-                        f["type"] for f in schema.fields if f["name"] == c))))
-        else:
-            marked = src.join(
-                existing,
-                [F.col(k) == F.col(f"__t_{k}") for k in pks],
-                "left",
-            ).withColumn(
-                "__matched", F.col(f"__t_{pks[0]}").isNotNull()
-            )
+        src = _pad_columns(source, schema).select(*cols)
+        existing = _merge_on_read(
+            self._key_history(base, src.select(*pks).distinct(), schema), schema
+        ).select(*[F.col(c).alias(f"__t_{c}") for c in cols])
+        marked = src.join(
+            existing,
+            [F.col(k) == F.col(f"__t_{k}") for k in pks],
+            "left",
+        ).withColumn(
+            "__matched", F.col(f"__t_{pks[0]}").isNotNull()
+        )
         # expose the stored row as target.<col> for the condition
         cond = F.lit(True)
         if matched_condition is not None:
@@ -1067,31 +1048,29 @@ class Table:
 
     def _delete(self, base: Snapshot | None, df: DataFrame) -> Snapshot:
         schema = self.schema()
-        meta = {}
-        if schema.options.get("changelog-producer") == "lookup":
-            meta["changelog"] = self._produce_lookup_changelog(
-                base, df, schema, deletes=True
-            )
-        if schema.options.get("deletion-vectors.enabled") == "true":
+        dv_mode = schema.options.get("deletion-vectors.enabled") == "true"
+        engine = schema.options.get("merge-engine", "deduplicate")
+        if dv_mode:
             self._check_dv_supported(schema)
             if base is None:
                 raise ValueError("table has no snapshots")
+        elif engine != "deduplicate" and schema.options.get("ignore-delete") != "true":
+            raise ValueError(
+                f"merge-engine {engine!r} does not accept deletes "
+                "(set option ignore-delete=true to silently drop them)"
+            )
+        meta = {}
+        if schema.options.get("changelog-producer") == "lookup":
+            meta["changelog"] = self._lookup_changelog(
+                base, df.withColumn(KIND_COL, F.lit("D")), schema
+            )
+        if dv_mode:
             hits = self._dv_hits(df.select(*schema.primary_keys))
             return self._commit(
                 base, "DELETE", self.manifest_entries(base),
                 dv_index=self._write_dv_index(hits, base), **meta,
             )
-        engine = schema.options.get("merge-engine", "deduplicate")
-        if engine != "deduplicate" and schema.options.get("ignore-delete") != "true":
-            raise ValueError(
-                f"merge-engine {engine!r} does not accept deletes "
-                "(set option ignore-delete=true to silently drop them)"
-            )
-        for c in schema.field_names():
-            if c not in df.columns:
-                df = df.withColumn(c, F.lit(None).cast(_parse_type(
-                    next(f["type"] for f in schema.fields if f["name"] == c))))
-        df = df.select(*schema.field_names())
+        df = _pad_columns(df, schema).select(*schema.field_names())
         if schema.options.get("bucket") == "-1":
             # tombstones must land in the key's assigned bucket so the
             # per-bucket merge sees them; unknown keys go anywhere (their
@@ -1516,235 +1495,77 @@ class Table:
     # -- changelog producer (Paimon changelog-producer=lookup): retraction
     #    streams with UPDATE_BEFORE/UPDATE_AFTER, paid at write time ---------
 
-    def _produce_lookup_changelog(
-        self, base: Snapshot | None, df: DataFrame, schema: TableSchema,
-        deletes: bool,
+    def _lookup_changelog(
+        self, base: Snapshot | None, batch: DataFrame, schema: TableSchema
     ) -> str:
-        """Materialize the retraction changelog of the commit on top of
-        `base` (see ``_lookup_changelog_rows`` for the semantics)."""
-        clg, caches = self._lookup_changelog_rows(base, df, schema, deletes)
-        return self._write_changelog(base, clg, caches)
+        """Write the retraction changelog of committing `batch` on top of
+        `base` and return its name. Each batch row carries its
+        ``__row_kind`` (``I`` or ``D``).
 
-    def _produce_rowkind_changelog(
-        self, base: Snapshot | None, ins: DataFrame, dels: DataFrame,
-        schema: TableSchema,
-    ) -> str:
-        """Changelog for a mixed rowkind.field commit: the insert rows and
-        tombstone rows of ONE atomic batch, resolved against the same base
-        snapshot, written as a single changelog dataset (keys are disjoint
-        — the caller resolved within-batch winners first)."""
-        a, ca = self._lookup_changelog_rows(base, ins, schema, deletes=False)
-        b, cb = self._lookup_changelog_rows(base, dels, schema, deletes=True)
-        return self._write_changelog(base, a.unionByName(b), ca + cb)
-
-    def _lookup_changelog_combining(
-        self, base: Snapshot | None, df: DataFrame, schema: TableSchema,
-        deletes: bool,
-    ) -> tuple[DataFrame, list[DataFrame]]:
-        """Lookup changelog for the COMBINING merge engines
-        (partial-update / aggregation): the post-image is the engine's
-        merge of the key's full raw history PLUS the batch — pre-
-        aggregated state cannot be combined directly (count is not
-        associative over its own output), so the lookup re-merges the
-        touched keys' change rows, the same O(touched keys) cost Paimon's
-        lookup compaction pays for these engines."""
+        One rule for every merge engine: the changelog is the difference
+        between the touched keys' merged state before and after the
+        commit. Both states are ``_merge_on_read`` over the keys' change
+        rows at `base`, the after-state with the batch added — the lookup
+        Paimon's producer runs inside lookup compaction, at the cost of
+        one broadcast semi-join of the batch keys, never a merge of the
+        table. A key whose merged row now comes from this commit (its
+        ``__seq`` is this commit's id) emits ``I``, or ``UB`` (the old
+        row) and ``UA`` (the new one) when it existed before; a key that
+        existed and is gone emits ``D``. Writes the merge discards (a
+        losing ``sequence.field`` value, a first-row update, an
+        ignore-delete tombstone) emit nothing."""
         pks = schema.primary_keys
-        cols = schema.field_names()
-        empty = (
-            df.select(*[F.col(c) for c in cols if c in df.columns])
-            .limit(0)
+        seq = _next_id(base)
+        batch = _pad_columns(batch, schema).select(
+            *[
+                _apply_char_padding(
+                    F.col(f["name"]).cast(_parse_type(f["type"])), f["type"]
+                ).alias(f["name"])
+                for f in schema.fields
+            ],
+            F.lit(seq).cast("long").alias(SEQ_COL),
+            F.monotonically_increasing_id().alias(POS_COL),
+            KIND_COL,
         )
-        for c in cols:
-            if c not in empty.columns:
-                empty = empty.withColumn(c, F.lit(None).cast(_parse_type(
-                    next(f["type"] for f in schema.fields if f["name"] == c))))
-        empty = empty.select(*cols).withColumn(KIND_COL, F.lit("I"))
-        if deletes:
-            # these engines only accept deletes under ignore-delete=true,
-            # where tombstones merge away — nothing changes, no changelog
-            return empty, []
-        batch = df.select(*cols).withColumn(
-            SEQ_COL, F.lit(_next_id(base)).cast("long")
-        ).withColumn(POS_COL, F.monotonically_increasing_id()).withColumn(
-            KIND_COL, F.lit("I")
-        )
-        keys = df.select(*pks).distinct()
-        if base is None:
-            post = _merge_on_read(batch, schema)
-            return post.select(*cols).withColumn(KIND_COL, F.lit("I")), []
-        raw_old = (
-            self.scan().to_df(merge=False)
-            .join(F.broadcast(keys), pks, "inner")
-            .select(*cols, SEQ_COL, POS_COL, KIND_COL)
-        )
-        old = _merge_on_read(raw_old, schema).cache()
-        old.count()
-        post = _merge_on_read(raw_old.unionByName(batch), schema)
-        had = old.select(*pks).distinct()
-        ub = old.select(*cols).withColumn(KIND_COL, F.lit("UB"))
-        ua = (
-            post.join(had, pks, "left_semi")
-            .select(*cols)
-            .withColumn(KIND_COL, F.lit("UA"))
-        )
-        ins = (
-            post.join(had, pks, "left_anti")
-            .select(*cols)
-            .withColumn(KIND_COL, F.lit("I"))
-        )
-        return ub.unionByName(ua).unionByName(ins), [old]
+        raw = self._key_history(base, batch.select(*pks).distinct(), schema)
+        pre = _merge_on_read(raw, schema)
+        post = _merge_on_read(raw.unionByName(batch), schema, keep_seq=True)
+        won = post.filter(F.col(SEQ_COL) == seq).drop(SEQ_COL)
 
-    def _write_changelog(
-        self, base: Snapshot | None, clg: DataFrame, caches: list[DataFrame]
-    ) -> str:
+        def kind(df: DataFrame, k: str) -> DataFrame:
+            return df.withColumn(KIND_COL, F.lit(k))
+
+        clg = (
+            kind(won.join(pre.select(*pks), pks, "left_anti"), "I")
+            .unionByName(kind(pre.join(won.select(*pks), pks, "left_semi"), "UB"))
+            .unionByName(kind(won.join(pre.select(*pks), pks, "left_semi"), "UA"))
+            .unionByName(kind(pre.join(post.select(*pks), pks, "left_anti"), "D"))
+        )
+        return self._write_changelog(base, clg)
+
+    def _key_history(
+        self, base: Snapshot | None, keys: DataFrame, schema: TableSchema
+    ) -> DataFrame:
+        """The change rows, system columns kept, of the primary keys in
+        `keys` at `base` (none when `base` is None): what merging those
+        keys' state needs, without merging the rest of the table."""
+        raw = None
+        if base is not None:
+            raw = self._read_entries(
+                self.manifest_entries(base), schema, keep_sys=True,
+                dv=self.dv_df(base),
+            )
+        if raw is None:
+            return self.spark.createDataFrame([], _file_schema(schema))
+        return raw.join(F.broadcast(keys), schema.primary_keys, "left_semi")
+
+    def _write_changelog(self, base: Snapshot | None, clg: DataFrame) -> str:
         next_id = _next_id(base)
         clg = clg.withColumn(SEQ_COL, F.lit(next_id).cast("long"))
         name = f"clg-{next_id}-{uuid.uuid4().hex}"
         out = os.path.join(self.meta_path, "changelog", name)
         clg.write.mode("overwrite").parquet(out)
-        for c in caches:
-            c.unpersist()
         return name
-
-    def _lookup_changelog_rows(
-        self, base: Snapshot | None, df: DataFrame, schema: TableSchema,
-        deletes: bool,
-    ) -> tuple[DataFrame, list[DataFrame]]:
-        """This commit's retraction changelog rows: for each touched
-        key, the pre-image (``UB`` = Paimon's -U, or ``D`` for deletes) and
-        post-image (``UA`` = +U) — brand-new keys emit ``I``.
-
-        Paimon's lookup producer does exactly this inside lookup
-        compaction: pay one key-lookup join at write time so every
-        downstream consumer gets a lossless retraction stream for free,
-        instead of every consumer reconstructing old values itself. The
-        lookup is a join of the (small) batch against the merged table —
-        broadcast the batch keys, never the table. It reads the latest
-        snapshot: `base`, or a newer one, in which case the commit on top
-        of `base` conflicts and these rows are never published.
-
-        Returns (rows, cached-frames-to-unpersist-after-write).
-        """
-        engine = schema.options.get("merge-engine", "deduplicate")
-        if engine not in (
-            "deduplicate", "first-row", "partial-update", "aggregation"
-        ):
-            raise ValueError(
-                f"changelog-producer=lookup does not support merge-engine "
-                f"{engine!r}"
-            )
-        pks = schema.primary_keys
-        cols = schema.field_names()
-        seqf = _sequence_fields(schema)
-        caches: list[DataFrame] = []
-        if engine in ("partial-update", "aggregation"):
-            return self._lookup_changelog_combining(base, df, schema, deletes)
-        if seqf:
-            # sequence.field rows may arrive pk-only (deletes): null-pad so
-            # the ordering columns exist — a null sequence value loses.
-            for c in cols:
-                if c not in df.columns:
-                    df = df.withColumn(c, F.lit(None).cast(_parse_type(
-                        next(f["type"] for f in schema.fields if f["name"] == c))))
-        # the post-commit value per key: last write wins for deduplicate
-        # (largest sequence value first, under sequence.field), the
-        # earliest for first-row (whose updates to existing keys are
-        # no-ops — they emit no changelog at all, matching Paimon's
-        # first-row changelog contract of insert-only streams)
-        order = (
-            [F.asc(POS_COL)]
-            if engine == "first-row"
-            else [F.desc_nulls_last(f) for f in seqf] + [F.desc(POS_COL)]
-        )
-        w = Window.partitionBy(*pks).orderBy(*order)
-        newest = (
-            df.withColumn(POS_COL, F.monotonically_increasing_id())
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", POS_COL)
-        )
-        if base is None:
-            clg = newest.select(*cols).withColumn(KIND_COL, F.lit("I"))
-            if deletes:  # delete against an empty table retracts nothing
-                clg = clg.filter(F.lit(False))
-        elif engine == "first-row":
-            keys = newest.select(*pks).distinct()
-            existing = self.to_df().join(F.broadcast(keys), pks, "inner")
-            clg = (
-                newest.join(existing.select(*pks), pks, "left_anti")
-                .select(*cols)
-                .withColumn(KIND_COL, F.lit("I"))
-            )
-            if deletes:  # first-row ignores deletes; nothing to retract
-                clg = clg.filter(F.lit(False))
-        else:
-            keys = newest.select(*pks).distinct()
-            old = self.to_df().join(F.broadcast(keys), pks, "inner").cache()
-            old.count()  # pre-image used twice below; compute the merge once
-            caches.append(old)
-            if seqf:
-                # The batch row only takes effect if it WINS the merge
-                # against the stored row (ties go to the batch — input
-                # order). A losing upsert/delete changes nothing and must
-                # emit NO changelog.
-                tagged = (
-                    old.select(*cols).withColumn("__src", F.lit(0))
-                    .unionByName(newest.select(*cols).withColumn("__src", F.lit(1)))
-                )
-                ww = Window.partitionBy(*pks).orderBy(
-                    *[F.desc_nulls_last(f) for f in seqf], F.desc("__src")
-                )
-                winner = (
-                    tagged.withColumn("__rn", F.row_number().over(ww))
-                    .filter(F.col("__rn") == 1)
-                    .drop("__rn")
-                )
-                batch_won = winner.filter(F.col("__src") == 1).drop("__src")
-                if deletes:
-                    clg = (
-                        old.join(batch_won.select(*pks), pks, "left_semi")
-                        .select(*cols)
-                        .withColumn(KIND_COL, F.lit("D"))
-                    )
-                else:
-                    had = old.select(*pks).distinct()
-                    ub = (
-                        old.join(batch_won.select(*pks), pks, "left_semi")
-                        .select(*cols)
-                        .withColumn(KIND_COL, F.lit("UB"))
-                    )
-                    ua = (
-                        batch_won.join(had, pks, "left_semi")
-                        .select(*cols)
-                        .withColumn(KIND_COL, F.lit("UA"))
-                    )
-                    ins = (
-                        batch_won.join(had, pks, "left_anti")
-                        .select(*cols)
-                        .withColumn(KIND_COL, F.lit("I"))
-                    )
-                    clg = ub.unionByName(ua).unionByName(ins)
-            elif deletes:
-                clg = old.select(*cols).withColumn(KIND_COL, F.lit("D"))
-            else:
-                ub = old.select(*cols).withColumn(KIND_COL, F.lit("UB"))
-                marked = newest.join(
-                    old.select(*pks).withColumn("__had", F.lit(1)).distinct(),
-                    pks,
-                    "left",
-                )
-                ua = (
-                    marked.filter(F.col("__had").isNotNull())
-                    .select(*cols)
-                    .withColumn(KIND_COL, F.lit("UA"))
-                )
-                ins = (
-                    marked.filter(F.col("__had").isNull())
-                    .select(*cols)
-                    .withColumn(KIND_COL, F.lit("I"))
-                )
-                clg = ub.unionByName(ua).unionByName(ins)
-        return clg, caches
 
     def changelog_df(
         self, start_snapshot: int = 0, end_snapshot: int | None = None
@@ -3482,7 +3303,9 @@ def _sequence_fields(schema: TableSchema) -> list[str]:
     return fields
 
 
-def _merge_on_read(df: DataFrame, schema: TableSchema) -> DataFrame:
+def _merge_on_read(
+    df: DataFrame, schema: TableSchema, keep_seq: bool = False
+) -> DataFrame:
     """Collapse the change rows of a primary-key table into its current
     state, per the table's ``merge-engine`` option (A13; engine surface
     exposed by the reference at ``PrestoSqlTableOptionUtils.java:96-128``):
@@ -3504,10 +3327,17 @@ def _merge_on_read(df: DataFrame, schema: TableSchema) -> DataFrame:
     All variants are one shuffle on the key: a single window or hash
     aggregate, so at scale the cost is the same as the deduplicate path
     (bounded further by bucketing + ``compact()``).
+
+    `keep_seq` keeps a ``__seq`` column: the commit the key's merged row
+    comes from — the winning row's ``__seq`` for deduplicate and
+    first-row, the latest ``__seq`` of the rows merged for the combining
+    engines (partial-update, aggregation). The lookup changelog reads it
+    to tell which keys a commit changed.
     """
     pks = schema.primary_keys
     engine = schema.options.get("merge-engine", "deduplicate")
     seqf = _sequence_fields(schema)
+    drop = [c for c in SYS_COLS if not (keep_seq and c == SEQ_COL)]
     if engine == "deduplicate":
         w = Window.partitionBy(*pks).orderBy(
             *[F.desc_nulls_last(f) for f in seqf],
@@ -3517,7 +3347,7 @@ def _merge_on_read(df: DataFrame, schema: TableSchema) -> DataFrame:
             df.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .filter(F.col(KIND_COL) != "D")
-            .drop("__rn", *SYS_COLS)
+            .drop("__rn", *drop)
         )
     if engine == "first-row":
         w = Window.partitionBy(*pks).orderBy(F.asc(SEQ_COL), F.asc(POS_COL))
@@ -3525,9 +3355,11 @@ def _merge_on_read(df: DataFrame, schema: TableSchema) -> DataFrame:
             df.filter(F.col(KIND_COL) != "D")
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
-            .drop("__rn", *SYS_COLS)
+            .drop("__rn", *drop)
         )
     data_cols = [n for n in schema.field_names() if n not in pks]
+    out_cols = schema.field_names() + ([SEQ_COL] if keep_seq else [])
+    latest = [F.max(SEQ_COL).alias(SEQ_COL)] if keep_seq else []
     if engine == "partial-update":
         df = df.filter(F.col(KIND_COL) != "D")  # ignore-delete semantics
         # Sequence groups (Paimon `fields.<seq>.sequence-group=a,b`): the
@@ -3566,7 +3398,7 @@ def _merge_on_read(df: DataFrame, schema: TableSchema) -> DataFrame:
                 aggs.append(
                     F.expr(f"max_by(`{c}`, IF({guard}, {order}, NULL))").alias(c)
                 )
-            return df.groupBy(*pks).agg(*aggs).select(*schema.field_names())
+            return df.groupBy(*pks).agg(*aggs, *latest).select(*out_cols)
         # Latest non-null per column, then one surviving row per key. Both
         # windows share the same partitioning -> one shuffle. With
         # sequence.field, "latest" means largest sequence value (nulls
@@ -3581,15 +3413,20 @@ def _merge_on_read(df: DataFrame, schema: TableSchema) -> DataFrame:
         )
         for c in data_cols:
             df = df.withColumn(c, F.last(c, ignorenulls=True).over(wa))
+        if keep_seq:
+            # the surviving row comes last in `wa`, so its frame is the
+            # whole key
+            df = df.withColumn("__latest", F.max(SEQ_COL).over(wa))
         wd = Window.partitionBy(*pks).orderBy(
             *[F.desc_nulls_last(f) for f in seqf],
             F.desc(SEQ_COL), F.desc(POS_COL),
         )
-        return (
+        df = (
             df.withColumn("__rn", F.row_number().over(wd))
             .filter(F.col("__rn") == 1)
             .drop("__rn", *SYS_COLS)
         )
+        return df.withColumnRenamed("__latest", SEQ_COL) if keep_seq else df
     if engine == "aggregation":
         df = df.filter(F.col(KIND_COL) != "D")
         aggs = []
@@ -3686,7 +3523,7 @@ def _merge_on_read(df: DataFrame, schema: TableSchema) -> DataFrame:
                 raise ValueError(
                     f"unsupported aggregate-function {fn!r} for field {c!r}"
                 )
-        return df.groupBy(*pks).agg(*aggs).select(*schema.field_names())
+        return df.groupBy(*pks).agg(*aggs, *latest).select(*out_cols)
     raise ValueError(f"unknown merge-engine {engine!r}")
 
 
@@ -3790,6 +3627,15 @@ def _project_to(
     for c in extra:
         cols.append(F.col(c))
     return df.select(*cols)
+
+
+def _pad_columns(df: DataFrame, schema: TableSchema) -> DataFrame:
+    """`df` with each declared column it lacks added as a typed NULL."""
+    have = {c.lower() for c in df.columns}
+    return df.select("*", *[
+        F.lit(None).cast(_parse_type(f["type"])).alias(f["name"])
+        for f in schema.fields if f["name"].lower() not in have
+    ])
 
 
 def _parse_duration_ms(spec: str) -> int:

@@ -239,16 +239,64 @@ def test_time_travel_read_renders_snapshot_schema(registered, spark, catalog):
     assert _rows(df) == _rows(t.scan(snapshot_id=1).to_df()) == [(1, "x")]
 
 
-def test_read_aggregation_engine(registered, spark, catalog):
+# aggregate-function -> (column type, two values v1, v2). Three commits:
+# key 1 gets v1, v2, NULL; key 2 gets NULL, v1; key 3 only NULL
+_AGG_CASES = {
+    **{fn: ("int", (10, 5)) for fn in ("sum", "max", "min", "count")},
+    **{fn: ("string", ("a", "b"))
+       for fn in ("last_non_null", "first_non_null", "last_value",
+                  "first_value", "listagg")},
+    **{fn: ("boolean", (True, False)) for fn in ("bool_and", "bool_or")},
+    "product": ("double", (2.0, 3.0)),
+    "collect": ("array<int>", ([1], [2, 1])),
+    "merge_map": ("map<string,int>", ({"x": 1}, {"x": 2, "y": 3})),
+}
+
+
+@pytest.mark.parametrize("fn", sorted(_AGG_CASES))
+def test_read_aggregation_engine(registered, spark, catalog, fn):
+    """The DataSource's per-bucket pandas merge and ``Table.to_df`` agree
+    for every aggregate function."""
+    typ, (v1, v2) = _AGG_CASES[fn]
+    ddl = f"k int, v {typ}"
     t = catalog.create_table(
-        "default", "ds_ag", "k int, total int", primary_keys=["k"],
-        options={"merge-engine": "aggregation",
-                 "fields.total.aggregate-function": "sum"},
+        "default", "ds_ag", ddl, primary_keys=["k"],
+        options={"bucket": "1", "merge-engine": "aggregation",
+                 "fields.v.aggregate-function": fn},
     )
-    t.upsert(spark.createDataFrame([(1, 10), (2, 1)], "k int, total int"))
-    t.upsert(spark.createDataFrame([(1, 5)], "k int, total int"))
-    got = {r["k"]: r["total"] for r in _read(spark, t).collect()}
-    assert got == {1: 15, 2: 1}
+    for rows in ([(1, v1), (2, None), (3, None)], [(1, v2), (2, v1)],
+                 [(1, None)]):
+        t.upsert(spark.createDataFrame(rows, ddl))
+    assert _rows(_read(spark, t)) == _rows(t.to_df())
+
+
+def test_merge_arrow_rejects_unknown_aggregate_function():
+    import pyarrow as pa
+
+    from paimon_presto_spark.sources.datasource import _merge_arrow
+
+    tbl = pa.table({"k": [1], "v": [1], "__seq": [1], "__pos": [0],
+                    "__row_kind": ["I"]})
+    schema = {"primary_keys": ["k"],
+              "fields": [{"name": "k"}, {"name": "v"}],
+              "options": {"fields.v.aggregate-function": "median"}}
+    with pytest.raises(
+        ValueError, match="unsupported aggregate-function 'median' for field 'v'"
+    ):
+        _merge_arrow(tbl, schema, "aggregation")
+
+
+@pytest.mark.parametrize("typ, input_typ, value", [
+    ("array<varchar(5)>", "array<string>", ["ab", "cde"]),
+    ("struct<a:char(3)>", "struct<a:string>", ("ab",)),
+])
+def test_read_nested_char_types(registered, spark, catalog, typ, input_typ, value):
+    """CHAR/VARCHAR nested in a complex type read as string, as top-level
+    ones do: Spark's Arrow conversion for Python data sources rejects
+    Char/VarcharType at any depth."""
+    t = catalog.create_table("default", "ds_nc", f"k int, v {typ}")
+    t.append(spark.createDataFrame([(1, value)], f"k int, v {input_typ}"))
+    assert _rows(_read(spark, t)) == _rows(t.to_df())
 
 
 def test_datasource_branch_read_and_write(registered, spark, catalog):

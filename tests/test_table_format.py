@@ -1597,6 +1597,25 @@ class TestLookupChangelogProducer:
         t.upsert(spark.createDataFrame([(1, 5)], "k int, total int"))
         assert [r["__row_kind"] for r in t.changelog_df().collect()] == ["I"]
 
+    def test_char_key_finds_its_pre_image(self, spark, catalog):
+        """CHAR keys are stored blank-padded; the batch's unpadded key must
+        still find the stored row, so an update emits UB/UA, not a second
+        I."""
+        t = catalog.create_table(
+            "default", "clgch", "k char(3), v string", primary_keys=["k"],
+            options={"changelog-producer": "lookup"},
+        )
+        ddl = "k string, v string"
+        t.upsert(spark.createDataFrame([("ab", "x")], ddl))
+        t.upsert(spark.createDataFrame([("ab", "y")], ddl))
+        rows = sorted(
+            (r["__seq"], r["__row_kind"], r["k"], r["v"])
+            for r in t.changelog_df().collect()
+        )
+        assert rows == [
+            (1, "I", "ab ", "x"), (2, "UA", "ab ", "y"), (2, "UB", "ab ", "x"),
+        ]
+
     def test_changelog_df_requires_lookup_producer(self, spark, catalog):
         t = catalog.create_table("default", "clg5", "k int", primary_keys=["k"])
         t.upsert(spark.createDataFrame([(1,)], "k int"))
