@@ -849,12 +849,13 @@ class PaimonWriter(DataSourceWriter):
         self._publish(messages, self.base)
 
     def _publish(
-        self, messages, base: Snapshot | None, restack: bool = False
+        self, messages, base: Snapshot | None, restack: bool = False, **meta
     ) -> None:
         """Move the staged files into ``data/`` and commit them on top of
         `base`, the snapshot the tasks stamped their rows for. `restack`
         (rows without ``__seq``, appended): re-plan on whichever snapshot
-        the commit lands on instead of conflicting."""
+        the commit lands on instead of conflicting. `meta` goes to
+        ``Table._commit``."""
         sid = _next_id(base)
         entries = [e for m in messages if m for e in m.entries]
         data_dir = os.path.join(self.path, "data")
@@ -906,6 +907,7 @@ class PaimonWriter(DataSourceWriter):
             base, kind, listing if restack else listing(base),
             schema=TableSchema.from_json(self.schema),
             **({"dv_index": None} if self.overwrite else {}),
+            **meta,
         )
 
     def abort(self, messages) -> None:
@@ -914,10 +916,16 @@ class PaimonWriter(DataSourceWriter):
 
 class PaimonStreamWriter(PaimonWriter, DataSourceStreamWriter):
     """Streaming sink: ``df.writeStream.format("paimon")`` — every
-    micro-batch is one atomic snapshot commit, exactly-once via batch-id
-    idempotence (a replayed batch's staged files are discarded, not
-    re-committed), the same contract as ``streaming.table_sink`` but
-    running on Spark's native sink protocol instead of foreachBatch.
+    micro-batch is one atomic snapshot commit, stamped
+    ``commit_user="stream:<query-name>"`` with the batch id as
+    ``commit_identifier`` (so the query name must be unique among the
+    table's stream writers): the snapshot log is the ledger, the same
+    contract as ``streaming.table_sink`` but running on Spark's native
+    sink protocol instead of foreachBatch. A replayed batch at or below
+    the query's ``Table.latest_identifier`` has already landed: its
+    staged files are discarded, not re-committed. The mark lives as long
+    as the query's newest snapshot, which expiry's
+    ``snapshot.num-retained.min`` (default 10) protects, as in Paimon.
 
     The batch writer's base snapshot moves from writer construction to
     per-batch: each task stamps ``__seq`` for the id after the latest
@@ -933,19 +941,7 @@ class PaimonStreamWriter(PaimonWriter, DataSourceStreamWriter):
 
     def __init__(self, options: dict, overwrite: bool):
         super().__init__(options, overwrite=False)
-        self.query_name = options.get("query-name", "default")
-
-    def _batches_path(self) -> str:
-        return os.path.join(
-            self.meta, "streaming", f"ds-batches-{self.query_name}.json"
-        )
-
-    def _committed(self) -> set[int]:
-        try:
-            with open(self._batches_path()) as fh:
-                return set(json.load(fh))
-        except FileNotFoundError:
-            return set()
+        self.commit_user = f"stream:{options.get('query-name', 'default')}"
 
     def write(self, iterator):
         # re-resolve the target snapshot per micro-batch (the batch writer
@@ -954,36 +950,22 @@ class PaimonStreamWriter(PaimonWriter, DataSourceStreamWriter):
         return super().write(iterator)
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803
-        done = self._committed()
-        if batchId in done:
+        done = self.table.latest_identifier(self.commit_user)
+        if done is not None and batchId <= done:
             # replay of a durable batch: drop its staged files, commit nothing
-            for m in messages:
-                for e in (m.entries if m else []):
-                    try:
-                        os.remove(
-                            e.get("staged")
-                            or os.path.join(self.staging, e["path"])
-                        )
-                    except FileNotFoundError:
-                        pass
-            return
+            return self.abort(messages, batchId)
+        meta = {"commit_user": self.commit_user, "commit_identifier": batchId}
         bases = {m.base.snapshot_id if m.base else 0: m.base for m in messages if m}
         if not self.pks or not bases:
             # no row carries a __seq stamp: append on the latest snapshot
-            self._publish(messages, self.table.snapshot(), restack=True)
+            self._publish(messages, self.table.snapshot(), restack=True, **meta)
         elif len(bases) > 1:
             raise CommitConflict(
                 f"tasks of batch {batchId} stamped rows for different "
                 f"snapshots {sorted(i + 1 for i in bases)}"
             )
         else:
-            self._publish(messages, next(iter(bases.values())))
-        os.makedirs(os.path.dirname(self._batches_path()), exist_ok=True)
-        done.add(int(batchId))
-        tmp = self._batches_path() + f".{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(sorted(done), fh)
-        os.replace(tmp, self._batches_path())
+            self._publish(messages, next(iter(bases.values())), **meta)
 
     def abort(self, messages, batchId: int) -> None:  # noqa: N803
         for m in messages:

@@ -443,6 +443,20 @@ class Table:
         with open(self._snapshot_path(sid)) as fh:
             return Snapshot(**json.load(fh))
 
+    def latest_identifier(self, commit_user: str) -> int | None:
+        """`commit_user`'s newest ``commit_identifier`` in the snapshot log
+        (None when no retained snapshot is theirs): where a resumable
+        writer continues, as a restarted Paimon committer does."""
+        for sid in reversed(self.snapshot_ids()):
+            try:
+                with open(self._snapshot_path(sid)) as fh:
+                    snap = json.load(fh)
+            except FileNotFoundError:
+                continue  # expired or rolled back under the walk
+            if snap["commit_user"] == commit_user:
+                return snap["commit_identifier"]
+        return None
+
     def snapshot_as_of(self, timestamp_ms: int) -> Snapshot:
         """Latest snapshot committed at or before `timestamp_ms` (A12)."""
         cand = [
@@ -771,30 +785,35 @@ class Table:
     # -- write path --------------------------------------------------------
 
     def append(
-        self, df: DataFrame, commit_identifier: int | None = None
+        self, df: DataFrame, commit_identifier: int | None = None,
+        commit_user: str | None = None,
     ) -> Snapshot:
         """Append-only commit (tables without primary keys).
 
-        ``commit_identifier`` is the writer-supplied idempotence handle
-        from Paimon's sink contract (``BatchTableCommit``/the Flink
-        sink's checkpoint id, surfaced as ``commitIdentifier`` in real
-        Paimon snapshots): a resumable writer stamps each commit with a
-        monotone identifier and, on restart, reads the latest committed
-        one back to know where to continue (see ``operators/emit.py``).
-        Default: the snapshot id, as before."""
+        ``commit_user`` and ``commit_identifier`` are the writer-supplied
+        idempotence handle of Paimon's sink contract (``commitUser``/
+        ``commitIdentifier`` in real Paimon snapshots): a resumable writer
+        stamps each commit with its user and a monotone identifier and, on
+        restart, reads ``latest_identifier`` back to know where to continue
+        (``streaming.table_sink``, ``operators/emit.py``). Defaults:
+        ``$USER`` and the snapshot id."""
         if self.is_primary_keyed:
             raise ValueError("primary-key table: use upsert()/delete()")
         snap = self._commit_write(
             self.snapshot(), df, kind="APPEND", row_kind=None,
-            commit_identifier=commit_identifier,
+            commit_identifier=commit_identifier, commit_user=commit_user,
         )
         # small-file compaction: append tables accumulate files per
         # partition just like pk buckets accumulate sorted runs
         self._maybe_auto_compact(self.schema())
         return snap
 
-    def upsert(self, df: DataFrame) -> Snapshot:
-        """Insert-or-update by primary key (RowKind +I rows).
+    def upsert(
+        self, df: DataFrame, commit_identifier: int | None = None,
+        commit_user: str | None = None,
+    ) -> Snapshot:
+        """Insert-or-update by primary key (RowKind +I rows), stamped with
+        ``commit_user``/``commit_identifier`` as in ``append``.
 
         In DV mode the batch is first deduplicated per key (last row wins,
         as the deduplicate engine would), then the OLD positions of the
@@ -805,10 +824,10 @@ class Table:
             raise ValueError("append-only table: use append()")
         base = self.snapshot()
         schema = self.schema()
+        meta = {"commit_identifier": commit_identifier, "commit_user": commit_user}
         if schema.options.get("rowkind.field"):
-            return self._upsert_with_rowkind(base, df, schema)
+            return self._upsert_with_rowkind(base, df, schema, **meta)
         dv_mode = schema.options.get("deletion-vectors.enabled") == "true"
-        meta = {}
         if schema.options.get("changelog-producer") == "lookup":
             meta["changelog"] = self._lookup_changelog(
                 base, df.withColumn(KIND_COL, F.lit("I")), schema
@@ -833,7 +852,7 @@ class Table:
         return snap
 
     def _upsert_with_rowkind(
-        self, base: Snapshot | None, df: DataFrame, schema: TableSchema
+        self, base: Snapshot | None, df: DataFrame, schema: TableSchema, **meta
     ) -> Snapshot:
         """CDC-batch upsert driven by ``rowkind.field`` (Paimon's public
         option: a column of the input carries each row's kind, so ONE
@@ -855,7 +874,7 @@ class Table:
         df = df.withColumn(
             "__rk", F.when(is_del, F.lit("D")).otherwise(F.lit("I"))
         )
-        return self._commit_cdc_batch(base, df, schema)
+        return self._commit_cdc_batch(base, df, schema, **meta)
 
     def _check_cdc_batch_supported(self, schema: TableSchema, what: str) -> None:
         engine = schema.options.get("merge-engine", "deduplicate")
@@ -870,7 +889,7 @@ class Table:
             )
 
     def _commit_cdc_batch(
-        self, base: Snapshot | None, df: DataFrame, schema: TableSchema
+        self, base: Snapshot | None, df: DataFrame, schema: TableSchema, **meta
     ) -> Snapshot:
         """ONE atomic commit of a mixed insert/tombstone batch: `df`
         carries a ``__rk`` column ('I' or 'D') per row. Within-batch
@@ -889,7 +908,6 @@ class Table:
             .drop("__rn", POS_COL)
         )
         is_del = F.col("__rk") == "D"
-        meta = {}
         if schema.options.get("changelog-producer") == "lookup":
             meta["changelog"] = self._lookup_changelog(
                 base, df.withColumnRenamed("__rk", KIND_COL), schema
@@ -967,7 +985,7 @@ class Table:
                 f"columns {missing_vals}; pass update_set= to patch only "
                 f"some columns, or provide every table column"
             )
-        src = _pad_columns(source, schema).select(*cols)
+        src = _declared_rows(source, schema)
         existing = _merge_on_read(
             self._key_history(base, src.select(*pks).distinct(), schema), schema
         ).select(*[F.col(c).alias(f"__t_{c}") for c in cols])
@@ -1516,13 +1534,8 @@ class Table:
         ignore-delete tombstone) emit nothing."""
         pks = schema.primary_keys
         seq = _next_id(base)
-        batch = _pad_columns(batch, schema).select(
-            *[
-                _apply_char_padding(
-                    F.col(f["name"]).cast(_parse_type(f["type"])), f["type"]
-                ).alias(f["name"])
-                for f in schema.fields
-            ],
+        batch = _declared_rows(
+            batch, schema,
             F.lit(seq).cast("long").alias(SEQ_COL),
             F.monotonically_increasing_id().alias(POS_COL),
             KIND_COL,
@@ -2584,6 +2597,7 @@ class Table:
         bucket_index: Any = _INHERIT,
         changelog: str | None = None,
         commit_identifier: int | None = None,
+        commit_user: str | None = None,
     ) -> Snapshot:
         """Publish one commit on top of `base`: the only way a mutation
         becomes a snapshot, with one retry rule that follows from what the
@@ -2606,9 +2620,10 @@ class Table:
         against the new latest snapshot and retries.
 
         `dv_index`/`bucket_index` default to the parent's indexes; pass a
-        dataset name to replace one, or None to drop it. A commit whose
-        files were written but whose publish conflicted leaves them for
-        ``remove_orphan_files``."""
+        dataset name to replace one, or None to drop it. `commit_user`/
+        `commit_identifier` (default ``$USER``, the snapshot id) publish
+        atomically with the data. A commit whose files were written but
+        whose publish conflicted leaves them for ``remove_orphan_files``."""
         schema = schema or self.schema()
         replan = callable(entries)
         parent = base
@@ -2619,7 +2634,7 @@ class Table:
             snap = Snapshot(
                 snapshot_id=sid,
                 schema_id=schema.schema_id,
-                commit_user=os.environ.get("USER", "spark"),
+                commit_user=commit_user or os.environ.get("USER", "spark"),
                 commit_identifier=(
                     commit_identifier if commit_identifier is not None else sid
                 ),
@@ -3636,6 +3651,20 @@ def _pad_columns(df: DataFrame, schema: TableSchema) -> DataFrame:
         F.lit(None).cast(_parse_type(f["type"])).alias(f["name"])
         for f in schema.fields if f["name"].lower() not in have
     ])
+
+
+def _declared_rows(df: DataFrame, schema: TableSchema, *extra) -> DataFrame:
+    """`df`'s declared columns as stored (missing ones NULL, declared
+    types, CHAR blank-padded) and `extra`: the form that matches stored keys."""
+    return _pad_columns(df, schema).select(
+        *[
+            _apply_char_padding(
+                F.col(f["name"]).cast(_parse_type(f["type"])), f["type"]
+            ).alias(f["name"])
+            for f in schema.fields
+        ],
+        *extra,
+    )
 
 
 def _parse_duration_ms(spec: str) -> int:

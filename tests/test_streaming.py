@@ -275,6 +275,109 @@ def test_table_sink_upsert_pk(spark, catalog, tmp_path):
     assert got == {1: "a2", 2: "b"}
 
 
+_SINK_DDL = "k int, v int"
+_SINK_TABLES = {
+    "append": ([], {}),
+    "deduplicate": (["k"], {"bucket": "1"}),
+    "aggregation_sum": (["k"], {
+        "bucket": "1", "merge-engine": "aggregation",
+        "fields.v.aggregate-function": "sum",
+    }),
+}
+
+
+def _stream_sink(kind, spark, t, query):
+    """Commit one micro-batch ``(rows, batch_id)`` into `t` the way Spark
+    drives the named sink: ``table_sink``'s foreachBatch function, or the
+    DataSource stream writer's task ``write`` then driver ``commit``."""
+    from pyspark.sql import Row
+
+    from paimon_presto_spark.sources.datasource import PaimonStreamWriter
+    from paimon_presto_spark.streaming import table_sink
+
+    if kind == "table_sink":
+        commit = table_sink(t, query)
+        return lambda rows, bid: commit(spark.createDataFrame(rows, _SINK_DDL), bid)
+    w = PaimonStreamWriter({"path": t.path, "query-name": query}, overwrite=False)
+    return lambda rows, bid: w.commit(
+        [w.write(iter([Row(k=k, v=v) for k, v in rows]))], bid
+    )
+
+
+def _crash_after_publish_once(monkeypatch):
+    """Make the first commit die after its snapshot is published:
+    ``_maybe_auto_expire`` runs inside ``Table._commit`` right after the
+    publish."""
+    from paimon_presto_spark.table import Table
+
+    real, crashed = Table._maybe_auto_expire, []
+
+    def crash(self, schema):
+        if not crashed:
+            crashed.append(True)
+            raise OSError("injected crash after publish")
+        return real(self, schema)
+
+    monkeypatch.setattr(Table, "_maybe_auto_expire", crash)
+
+
+@pytest.mark.parametrize("table_kind", sorted(_SINK_TABLES))
+@pytest.mark.parametrize("sink", ["table_sink", "stream_writer"])
+def test_sink_replay_after_crash_commits_once(
+    spark, catalog, monkeypatch, sink, table_kind
+):
+    """A batch whose commit published its snapshot and then crashed is
+    found in the snapshot log on replay and skipped: the table holds its
+    rows once (an aggregation ``sum`` does not double), and the next
+    batch still lands."""
+    pks, opts = _SINK_TABLES[table_kind]
+    t = catalog.create_table("default", f"crash_{sink}_{table_kind}", _SINK_DDL,
+                             primary_keys=pks, options=opts)
+    commit = _stream_sink(sink, spark, t, "q")
+    batch0 = [(1, 10), (2, 20)]
+    _crash_after_publish_once(monkeypatch)
+    with pytest.raises(OSError, match="injected"):
+        commit(batch0, 0)
+    commit(batch0, 0)  # Spark replays the batch after the restart
+    assert sorted(tuple(r) for r in t.to_df().collect()) == batch0
+    assert t.snapshot_ids() == [1]
+    assert t.latest_identifier("stream:q") == 0
+
+    commit([(1, 5)], 1)
+    assert t.snapshot_ids() == [1, 2]
+    assert sorted(tuple(r) for r in t.to_df().collect()) == {
+        "append": [(1, 5), (1, 10), (2, 20)],
+        "deduplicate": [(1, 5), (2, 20)],
+        "aggregation_sum": [(1, 15), (2, 20)],
+    }[table_kind]
+
+
+@pytest.mark.parametrize("sink", ["table_sink", "stream_writer"])
+def test_sink_high_water_mark_survives_foreign_commits(spark, catalog, sink):
+    """A stream's high-water mark is its newest snapshot; commits of other
+    users after it, here a plain upsert and the auto-compaction it
+    triggers, do not hide it. The mark needs no retention of its own:
+    it lives as long as that snapshot, which expiry's
+    ``snapshot.num-retained.min`` (default 10) keeps, as in Paimon."""
+    t = catalog.create_table(
+        "default", f"mark_{sink}", _SINK_DDL, primary_keys=["k"],
+        options={"bucket": "1", "num-sorted-run.compaction-trigger": "2"},
+    )
+    commit = _stream_sink(sink, spark, t, "ingest")
+    commit([(1, 10)], 0)
+    t.upsert(spark.createDataFrame([(2, 20)], _SINK_DDL))  # compacts too
+    assert [t.snapshot(i).commit_kind for i in t.snapshot_ids()] == [
+        "UPSERT", "UPSERT", "COMPACT"]
+
+    commit([(1, 99)], 0)  # replay: skipped
+    assert t.snapshot_ids() == [1, 2, 3]
+    assert sorted(tuple(r) for r in t.to_df().collect()) == [(1, 10), (2, 20)]
+    snaps = catalog.read_table("default", f"mark_{sink}$snapshots")
+    first = snaps.filter("snapshot_id = 1").first()
+    assert (first["commit_user"], first["commit_identifier"]) == ("stream:ingest", 0)
+    assert snaps.filter("commit_user = 'stream:ingest'").count() == 1
+
+
 def test_changelog_stream_from_snapshot(spark, catalog, tmp_path):
     from paimon_presto_spark.streaming import changelog_stream
 

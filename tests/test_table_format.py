@@ -3611,6 +3611,21 @@ class TestMergeInto:
         t.merge_into(keys, when_matched="delete", when_not_matched="ignore")
         assert rows(t.to_df(), "k") == [(2,)]
 
+    def test_char_key_matches_stored_key(self, spark, catalog):
+        """A CHAR key is stored blank-padded; the source's unpadded key
+        must still match it, so a matched delete removes the row instead
+        of inserting a second one."""
+        t = catalog.create_table(
+            "default", "mi11", "k char(3), v string", primary_keys=["k"])
+        ddl = "k string, v string"
+        t.upsert(spark.createDataFrame([("ab", "x")], ddl))
+        t.merge_into(spark.createDataFrame([("ab", "y")], ddl),
+                     when_matched="delete")
+        assert rows(t.to_df()) == []
+        t.merge_into(spark.createDataFrame([("cd", "z")], ddl))
+        t.merge_into(spark.createDataFrame([("cd", "w")], ddl))
+        assert rows(t.to_df()) == [("cd ", "w")]
+
 
 def test_incremental_between_timestamps(spark, catalog):
     """Wall-clock incremental bounds resolve to the snapshots at-or-before
