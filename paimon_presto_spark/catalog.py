@@ -27,10 +27,13 @@ from pyspark.sql import types as T
 
 from paimon_presto_spark import properties
 from paimon_presto_spark.table import (
+    MERGE_FIELD_SUFFIXES,
+    MERGE_OPTIONS,
     Table,
     TableSchema,
     _is_time_type,
     _parse_type,
+    merge_spec,
     schema_from_spark,
     split_ddl_fields,
 )
@@ -173,6 +176,7 @@ class Catalog:
         for k in ts.partition_keys:
             if k in ts.primary_keys and set(ts.primary_keys) <= set(ts.partition_keys):
                 raise ValueError("primary key cannot be a subset of partition keys")
+        merge_spec(ts)  # a bad merge contract fails before anything exists
         # register FIRST: the backend validates the location (and, on
         # jdbc, the pointer insert is the atomic duplicate check) before
         # any content is written, so a rejected create leaves no debris.
@@ -365,6 +369,16 @@ class Catalog:
         col = s.resolve(column)
         if col in s.primary_keys or col in s.partition_keys:
             raise ValueError(f"cannot rename key column {col}")
+        spec = merge_spec(s)
+        # the merge options follow the column: the lists naming it, and
+        # its own fields.<col>.* keys
+        for k, cols in (spec.references(col) if spec else {}).items():
+            s.options[k] = ",".join(new_name if c == col else c for c in cols)
+        own = f"fields.{col}."
+        s.options = {
+            (f"fields.{new_name}.{k[len(own):]}" if k.startswith(own) else k): v
+            for k, v in s.options.items()
+        }
         for f in s.fields:
             if f["name"] == col:
                 f["name"] = new_name
@@ -403,7 +417,15 @@ class Catalog:
             raise ValueError(f"cannot drop key column {col}")
         if len(s.fields) == 1:
             raise ValueError("cannot drop the last column")
+        spec = merge_spec(s)
+        refs = sorted(spec.references(col)) if spec else []
+        if refs:
+            raise ValueError(f"cannot drop {col}: merge options {refs} name it")
         s.fields = [f for f in s.fields if f["name"] != col]
+        s.options = {
+            k: v for k, v in s.options.items()
+            if not k.startswith(f"fields.{col}.")
+        }
         self._write_schema(t, s, s.highest_field_id)
 
     #: options that define the table's physical/merge contract — changing
@@ -413,13 +435,13 @@ class Catalog:
     #: deletion-vectors (pre-existing multi-version keys would violate the
     #: one-live-position read invariant; recreate or compact-migrate).
     _IMMUTABLE_OPTIONS = frozenset(
-        ["bucket", "merge-engine", "sequence.field", "deletion-vectors.enabled"]
+        ["bucket", *MERGE_OPTIONS, "deletion-vectors.enabled"]
     )
     #: per-field merge semantics are part of the same contract — changing
     #: fields.<c>.aggregate-function (or .sequence-group / .distinct)
     #: re-aggregates the already-committed history under new rules,
     #: contradicting every changelog and read served so far
-    _IMMUTABLE_SUFFIXES = (".aggregate-function", ".sequence-group", ".distinct")
+    _IMMUTABLE_SUFFIXES = MERGE_FIELD_SUFFIXES
 
     @classmethod
     def _immutable_option_keys(cls, keys) -> list[str]:
@@ -499,6 +521,7 @@ class Catalog:
         self._write_schema(t, s, s.highest_field_id)
 
     def _write_schema(self, table: Table, s: TableSchema, highest_id: int) -> None:
+        merge_spec(s)  # every schema version keeps a valid merge contract
         s.schema_id += 1
         s.highest_field_id = max(s.highest_field_id, highest_id)
         path = os.path.join(table.meta_path, "schema", f"schema-{s.schema_id}.json")

@@ -58,6 +58,7 @@ same parallelism contract Paimon gives its engines.
 
 from __future__ import annotations
 
+import decimal
 import json
 import os
 import uuid
@@ -86,6 +87,7 @@ from pyspark.sql.datasource import (
 from paimon_presto_spark.plans.predicate import P, Predicate
 from paimon_presto_spark.table import (
     CommitConflict,
+    MergeSpec,
     Snapshot,
     Table,
     TableScan,
@@ -96,6 +98,7 @@ from paimon_presto_spark.table import (
     _is_time_type,
     _next_id,
     _varchar_len,
+    merge_spec,
     split_ddl_fields,
 )
 
@@ -289,13 +292,13 @@ class PaimonPartition(InputPartition):
         self,
         table: Table | None,  # Spark-less lineage: writer schemas load from it
         files: list[tuple[str, int]],  # (absolute path, writer schema_id)
-        merge: str | None,
+        merge: MergeSpec | None,
         schema: dict,
         dv: dict[str, list[int]] | None = None,  # abs path -> deleted row positions
     ):
         self.table = table
         self.files = files
-        self.merge = merge  # merge-engine name, or None for append-only
+        self.merge = merge  # None for append-only
         self.schema = schema  # the scan's render schema JSON
         self.dv = dv
 
@@ -325,12 +328,13 @@ class PaimonReader(DataSourceReader):
         ``rename`` maps partition column names before the key is
         serialized (the co-located join pairs two tables' splits)."""
         scan = _scan(self.options, self.predicate)
-        schema = scan.render_schema().to_json()
+        render = scan.render_schema()
+        merge = merge_spec(render)
+        schema = render.to_json()
         entries = scan.plan_files()
         snap = scan._snapshot()
         dv_map = dv_index_map(self.path, snap) if snap is not None else {}
         pks = schema["primary_keys"]
-        merge = schema["options"].get("merge-engine", "deduplicate") if pks else None
         groups: dict[Any, list[tuple[str, int]]] = {}
         for e in entries:
             if pks:
@@ -417,7 +421,7 @@ def read_split_arrow(partition: PaimonPartition):
     ]
     tbl = pa.concat_tables(tables, promote_options="permissive")
     if partition.merge is not None:
-        tbl = _merge_arrow(tbl, schema, partition.merge)
+        tbl = _merge_arrow(tbl, partition.merge)
     tbl = tbl.select([n for n in names if n in tbl.column_names])
     return _cast_to_schema(tbl, schema)
 
@@ -486,130 +490,115 @@ def _project_arrow(tbl, writer_schema: dict, reader_schema: dict):
     return pa.table(dict(zip(names, cols)))
 
 
-def _merge_arrow(tbl, schema: dict, engine: str):
-    """Per-bucket merge-on-read in Arrow/pandas (no shuffle — every version
-    of a key is in this bucket by the write-side hash contract)."""
+def _merge_arrow(tbl, spec: MergeSpec):
+    """Per-bucket merge-on-read in Arrow: ``table._merge_on_read`` under
+    the same ``MergeSpec`` for one bucket's change rows (no shuffle —
+    every version of a key is in this bucket by the write-side hash
+    contract). No pandas round trip, so NULL stays apart from NaN and
+    int64 stays exact. A merged value is the last (or first) row of its
+    key, in an Arrow sort that orders NULL first and NaN above every
+    number as Spark does, or an Arrow hash aggregate (sum, product,
+    count, bool_and, bool_or)."""
+    import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    pdf = tbl.to_pandas()
-    pks = schema["primary_keys"]
-    pdf = pdf.sort_values(["__seq", "__pos"], kind="stable")
-    # sequence.field: largest sequence value wins, commit order only
-    # breaking ties (twin of table._merge_on_read, incl. its engine
-    # validation). NaN sorts first (ascending): null versions always lose.
-    seqf = [
-        c.strip()
-        for c in schema.get("options", {}).get("sequence.field", "").split(",")
-        if c.strip()
-    ]
-    if seqf and engine in ("first-row", "aggregation"):
-        raise ValueError(
-            f"sequence.field is not supported with merge-engine {engine!r}"
-        )
-    if seqf:
-        pdf = pdf.sort_values(
-            seqf + ["__seq", "__pos"], kind="stable", na_position="first"
-        )
-    if engine == "deduplicate":
-        pdf = pdf.drop_duplicates(pks, keep="last")
-        pdf = pdf[pdf["__row_kind"] != "D"]
-    elif engine == "first-row":
-        pdf = pdf[pdf["__row_kind"] != "D"].drop_duplicates(pks, keep="first")
-    elif engine == "partial-update":
-        pdf = pdf[pdf["__row_kind"] != "D"]
-        data_cols = [c for c in pdf.columns if c not in pks and not c.startswith("__")]
-        opts = schema.get("options", {})
-        groups = {
-            opt[len("fields."):-len(".sequence-group")]: [
-                c.strip() for c in val.split(",") if c.strip()
-            ]
-            for opt, val in opts.items()
-            if opt.startswith("fields.") and opt.endswith(".sequence-group")
-        }
-        if groups:
-            # sequence-group semantics (pandas twin of table._merge_on_read):
-            # group columns order by THEIR sequence column; commit order
-            # only breaks ties; null-sequence rows never update the group
-            owner = {c: s for s, cs in groups.items() for c in cs}
-            base = pdf.drop_duplicates(pks, keep="last")[pks].copy()
-            for c in data_cols:
-                s = owner.get(c)
-                if c in groups:
-                    frame = pdf[~pdf[c].isna()].sort_values(
-                        [c, "__seq", "__pos"], kind="stable"
-                    )
-                elif s is not None:
-                    frame = pdf[(~pdf[s].isna()) & (~pdf[c].isna())].sort_values(
-                        [s, "__seq", "__pos"], kind="stable"
-                    )
-                else:
-                    frame = pdf[~pdf[c].isna()]  # already in commit order
-                pick = frame.drop_duplicates(pks, keep="last")[pks + [c]]
-                base = base.merge(pick, on=pks, how="left")
-            pdf = base
-        else:
-            filled = pdf.groupby(pks, sort=False)[data_cols].ffill()
-            pdf[data_cols] = filled
-            pdf = pdf.drop_duplicates(pks, keep="last")
-    elif engine == "aggregation":
-        pdf = pdf[pdf["__row_kind"] != "D"]
-        opts = schema.get("options", {})
+    if spec.engine != "deduplicate":  # every other engine ignores deletes
+        tbl = tbl.filter(pc.not_equal(tbl["__row_kind"], "D"))
+    n = tbl.num_rows
+    rows = np.arange(n)
+    keys = tbl.select(list(spec.keys)).append_column("__i", pa.array(rows))
+    groups = keys.group_by(list(spec.keys), use_threads=False).aggregate(
+        [("__i", "list")])
+    n_groups = groups.num_rows
+    gid = np.empty(n, np.int64)  # row -> its key's group
+    gid[pc.list_flatten(groups["__i_list"]).to_numpy()] = np.repeat(
+        np.arange(n_groups), pc.list_value_length(groups["__i_list"]).to_numpy())
 
-        def _collect(distinct):
-            def agg(s):
-                out = [x for lst in s.dropna() for x in lst]
-                return list(dict.fromkeys(out)) if distinct else out
-            return agg
+    def order(*cols):
+        sort = {}
+        for i, c in enumerate(cols):
+            sort[f"n{i}"], sort[f"v{i}"] = pc.is_valid(tbl[c]), tbl[c]
+        return pc.sort_indices(
+            pa.table(sort), [(k, "ascending") for k in sort]).to_numpy()
 
-        def _merge_map(s):
-            vals = s.dropna()
-            if not len(vals):
-                return None
-            merged: dict = {}
-            for m in vals:  # arrow maps render as [(k, v), ...]
-                merged.update(dict(m))
-            return list(merged.items())
+    def pick(ordered, mask=None, first=False):
+        """Per key, its row among `mask`'s that comes last (first) in
+        `ordered`; a null index for a key with none."""
+        rank = np.empty(n, np.int64)
+        rank[ordered] = rows
+        sel = rows if mask is None else np.flatnonzero(mask)
+        best = np.full(n_groups, n if first else -1)
+        (np.minimum if first else np.maximum).at(best, gid[sel], rank[sel])
+        none = (best < 0) | (best >= n)
+        return pa.array(ordered[np.where(none, 0, best)], mask=none)
 
-        def _non_null(pick):
-            # `pick` over the non-null values (in commit order), None when
-            # there are none: Spark's aggregates skip nulls the same way
-            return lambda s: pick(s.dropna()) if s.notna().any() else None
+    latest = order(*spec.sequence_fields, "__seq", "__pos")
+    if spec.engine in ("deduplicate", "first-row"):
+        tbl = tbl.take(pick(latest, first=spec.engine == "first-row"))
+        return tbl.filter(pc.not_equal(tbl["__row_kind"], "D"))
+    hashed = {"sum": "sum", "product": "product", "count": "count",
+              "bool_and": "all", "bool_or": "any"}
+    out = {k: groups[k] for k in spec.keys}
+    for c in spec.values:
+        v = tbl[c]
+        fn, s = spec.function(c)
+        valid = pc.is_valid(v).to_numpy(zero_copy_only=False)
+        ordered = latest
+        if s is not None:  # a sequence group's member
+            valid = valid & pc.is_valid(tbl[s]).to_numpy(zero_copy_only=False)
+            ordered = order(s, "__seq", "__pos")
+        picks = {"last_non_null": (ordered, valid, False),
+                 "first_non_null": (ordered, valid, True),
+                 "last_value": (latest, None, False),
+                 "first_value": (latest, None, True)}
+        if fn in ("max", "min"):
+            out[c] = v.take(pick(order(c), valid, fn == "min"))
+        elif fn in picks:
+            out[c] = v.take(pick(*picks[fn]))
+        elif fn in hashed and not (
+            fn == "product" and pa.types.is_decimal(v.type)
+        ):
+            agg = pa.table({"g": gid, "v": v}).group_by(
+                "g", use_threads=False).aggregate([("v", hashed[fn])])
+            out[c] = agg[f"v_{hashed[fn]}"].take(
+                pc.sort_indices(agg["g"])).cast(tbl[c].type)
+        else:  # listagg, collect, merge_map, decimal product
+            by_key = [[] for _ in range(n_groups)]
+            py = v.to_pylist()
+            for i in latest:
+                if py[i] is not None:
+                    by_key[gid[i]].append(py[i])
+            out[c] = pa.array(
+                [_fold(fn, vals, c in spec.distinct, v.type)
+                 for vals in by_key],
+                type=v.type)
+    return pa.table(out)
 
-        simple = {
-            "sum": _non_null(lambda v: v.sum()),
-            "max": "max", "min": "min", "count": "count",
-            "last_non_null": _non_null(lambda v: v.iloc[-1]),
-            "first_non_null": _non_null(lambda v: v.iloc[0]),
-            "last_value": lambda s: s.iloc[-1],
-            "first_value": lambda s: s.iloc[0],
-            "bool_and": _non_null(lambda v: v.all()),
-            "bool_or": _non_null(lambda v: v.any()),
-            "product": _non_null(lambda v: v.prod()),
-            "listagg": lambda s: ",".join(s.dropna()),
-        }
-        aggs = {}
-        for f in schema["fields"]:
-            c = f["name"]
-            if c in pks:
-                continue
-            fn = opts.get(f"fields.{c}.aggregate-function", "last_non_null")
-            if fn == "collect":
-                aggs[c] = _collect(opts.get(f"fields.{c}.distinct") == "true")
-            elif fn == "merge_map":
-                aggs[c] = _merge_map
-            elif fn in simple:
-                aggs[c] = simple[fn]
-            else:
-                raise ValueError(
-                    f"unsupported aggregate-function {fn!r} for field {c!r}"
-                )
-        pdf = pdf.groupby(pks, as_index=False, sort=False).agg(aggs)
-    else:
-        raise ValueError(f"unknown merge-engine {engine!r}")
-    keep = [f["name"] for f in schema["fields"] if f["name"] in pdf.columns]
-    # preserve the writer's arrow types (pandas round-trip can widen)
-    target = pa.schema([tbl.schema.field(n) for n in keep])
-    return pa.Table.from_pandas(pdf[keep], schema=target, preserve_index=False)
+
+def _fold(fn: str, vals: list, distinct: bool, typ):
+    """One key's non-null values, in commit order, folded under `fn`
+    (Spark's ``_merge_column`` twin)."""
+    if fn == "product":  # decimals: each step rounds to the scale
+        if not vals:
+            return None
+        out, q = decimal.Decimal(1), decimal.Decimal(1).scaleb(-typ.scale)
+        with decimal.localcontext(prec=80):
+            for x in vals:
+                out = (out * x).quantize(q, decimal.ROUND_HALF_UP)
+        return out
+    if fn == "listagg":
+        return ",".join(vals)
+    if fn == "collect":
+        flat = [x for arr in vals for x in arr]
+        # repr keys: NaN repeats are one value, as in array_distinct
+        return list({repr(x): x for x in flat}.values()) if distinct else flat
+    if not vals:  # merge_map of no maps
+        return None
+    merged: dict = {}
+    for m in vals:  # arrow maps render as [(k, v), ...]
+        merged.update(m)
+    return list(merged.items())
 
 
 class PaimonCommitMessage(WriterCommitMessage):
@@ -677,18 +666,10 @@ class PaimonWriter(DataSourceWriter):
             if self.rowkind_field not in names and self.rowkind_field != "__row_kind":
                 raise ValueError(
                     f"rowkind-field {self.rowkind_field!r} is not a column")
-            # mirror Table._check_cdc_batch_supported: on partial-update/
-            # aggregation tables the read path's merge filters 'D' rows
-            # before combining, so a '-D' tombstone written here would
-            # silently no-op — the Table API raises; this path must too
-            engine = schema.get("options", {}).get(
-                "merge-engine", "deduplicate")
-            if engine != "deduplicate":
-                raise ValueError(
-                    f"rowkind-field requires merge-engine deduplicate, "
-                    f"got {engine!r} (tombstones would be silently "
-                    f"discarded by the merge read path)"
-                )
+            # the Table API's rule: the combining engines' merge drops 'D'
+            # rows, so a '-D' tombstone written here would silently no-op
+            self.table._check_cdc_batch_supported(
+                self.table.schema(), "rowkind-field")
         if (
             self.pks
             and schema.get("options", {}).get("changelog-producer") == "lookup"

@@ -611,11 +611,11 @@ class Table:
         if schema.options.get("file.format", "parquet") != "parquet":
             raise ValueError("deletion-vectors require file.format=parquet "
                              "(row positions come from the parquet row index)")
-        engine = schema.options.get("merge-engine", "deduplicate")
-        if schema.primary_keys and engine != "deduplicate":
+        spec = merge_spec(schema)
+        if spec and spec.engine != "deduplicate":
             raise ValueError(
-                f"deletion-vectors support merge-engine deduplicate, got {engine!r}")
-        if schema.options.get("sequence.field"):
+                f"deletion-vectors support merge-engine deduplicate, got {spec.engine!r}")
+        if spec and spec.sequence_fields:
             # DV upserts eagerly delete the key's OLD position; under
             # sequence.field the old row may be the merge winner, so the
             # eager delete would be wrong. Paimon has the same restriction.
@@ -877,7 +877,7 @@ class Table:
         return self._commit_cdc_batch(base, df, schema, **meta)
 
     def _check_cdc_batch_supported(self, schema: TableSchema, what: str) -> None:
-        engine = schema.options.get("merge-engine", "deduplicate")
+        engine = merge_spec(schema).engine
         if engine != "deduplicate":
             raise ValueError(
                 f"{what} requires merge-engine deduplicate, got {engine!r}"
@@ -897,7 +897,7 @@ class Table:
         input order), the lookup producer emits a single mixed changelog,
         dynamic-bucket tombstones for never-seen keys are not indexed."""
         pks = schema.primary_keys
-        seqf = _sequence_fields(schema)
+        seqf = merge_spec(schema).sequence_fields
         w = Window.partitionBy(*pks).orderBy(
             *[F.desc_nulls_last(f) for f in seqf], F.desc(POS_COL)
         )
@@ -987,7 +987,8 @@ class Table:
             )
         src = _declared_rows(source, schema)
         existing = _merge_on_read(
-            self._key_history(base, src.select(*pks).distinct(), schema), schema
+            self._key_history(base, src.select(*pks).distinct(), schema),
+            merge_spec(schema),
         ).select(*[F.col(c).alias(f"__t_{c}") for c in cols])
         marked = src.join(
             existing,
@@ -1067,14 +1068,15 @@ class Table:
     def _delete(self, base: Snapshot | None, df: DataFrame) -> Snapshot:
         schema = self.schema()
         dv_mode = schema.options.get("deletion-vectors.enabled") == "true"
-        engine = schema.options.get("merge-engine", "deduplicate")
+        spec = merge_spec(schema)
         if dv_mode:
             self._check_dv_supported(schema)
             if base is None:
                 raise ValueError("table has no snapshots")
-        elif engine != "deduplicate" and schema.options.get("ignore-delete") != "true":
+        elif (spec and spec.engine != "deduplicate"
+              and schema.options.get("ignore-delete") != "true"):
             raise ValueError(
-                f"merge-engine {engine!r} does not accept deletes "
+                f"merge-engine {spec.engine!r} does not accept deletes "
                 "(set option ignore-delete=true to silently drop them)"
             )
         meta = {}
@@ -1211,7 +1213,7 @@ class Table:
             bucket = json.loads(key)["b"]
             gdf = self._read_entries(es, schema, pk, dv=dv)
             if pk:
-                gdf = _merge_on_read(gdf, schema)
+                gdf = _merge_on_read(gdf, merge_spec(schema))
             # one output file per compacted group — the point of the
             # rewrite; group size is bucket-bounded, so one task suffices
             gdf = gdf.coalesce(1)
@@ -1541,8 +1543,9 @@ class Table:
             KIND_COL,
         )
         raw = self._key_history(base, batch.select(*pks).distinct(), schema)
-        pre = _merge_on_read(raw, schema)
-        post = _merge_on_read(raw.unionByName(batch), schema, keep_seq=True)
+        spec = merge_spec(schema)
+        pre = _merge_on_read(raw, spec)
+        post = _merge_on_read(raw.unionByName(batch), spec, keep_seq=True)
         won = post.filter(F.col(SEQ_COL) == seq).drop(SEQ_COL)
 
         def kind(df: DataFrame, k: str) -> DataFrame:
@@ -3267,12 +3270,160 @@ class TableScan:
                 # read is just the scan minus system columns.
                 df = df.drop(*SYS_COLS)
             else:
-                df = _merge_on_read(df, schema_latest)
+                df = _merge_on_read(df, merge_spec(schema_latest))
         if self.predicate is not None:
             df = df.filter(self.predicate.to_spark())
         if self.partition_where:
             df = df.filter(F.expr(self.partition_where))
         return df
+
+
+#: every merge engine, and every aggregate function of the aggregation engine
+MERGE_ENGINES = ("deduplicate", "first-row", "partial-update", "aggregation")
+AGGREGATE_FUNCTIONS = (
+    "sum", "product", "count", "max", "min", "last_non_null", "last_value",
+    "first_non_null", "first_value", "bool_and", "bool_or", "listagg",
+    "collect", "merge_map",
+)
+#: the options that make up a primary-key table's merge contract: the
+#: table-wide ones, and the suffixes of the per-column ``fields.<c>.*`` ones
+MERGE_OPTIONS = ("merge-engine", "sequence.field")
+MERGE_FIELD_SUFFIXES = (".aggregate-function", ".sequence-group", ".distinct")
+
+
+@dataclass(frozen=True)
+class MergeSpec:
+    """A primary-key table's merge contract (A13; option surface
+    ``PrestoSqlTableOptionUtils.java:96-128``): what a read returns for
+    a key's change rows. ``merge_spec`` builds it; both executors take it
+    and nothing else — ``_merge_on_read`` (Spark) and
+    ``sources.datasource._merge_arrow`` (Arrow, one bucket at a time),
+    held to one result by ``tests/test_merge_spec_property.py``.
+
+    - ``deduplicate`` (default): the latest row per key wins; a latest
+      DELETE removes the key.
+    - ``first-row``: the earliest row per key wins; deletes are ignored.
+    - ``partial-update``: deletes are ignored; per column, the latest
+      non-NULL value wins. A sequence group's columns take theirs from the
+      row with the largest group sequence value, rows with a NULL there
+      never update the group, and the sequence column keeps its maximum.
+    - ``aggregation``: deletes are ignored; each value column combines
+      under its ``aggregate_function`` (default ``last_non_null``; sum and
+      product skip NULLs, count counts non-NULLs, listagg joins with ',',
+      collect concatenates arrays, ``distinct`` keeping first occurrences,
+      merge_map lets later entries overwrite earlier ones per map key).
+
+    "Latest" means the largest (``sequence.field`` values..., ``__seq``,
+    ``__pos``): commit order, unless ``sequence.field`` orders the rows
+    first. Values follow one rule in both executors: NULL is absence, NaN
+    is a value that sorts above every number, int64 is exact, and every
+    merged column keeps its declared type.
+    """
+
+    engine: str
+    keys: tuple[str, ...]
+    columns: tuple[str, ...]  # every column, in schema order
+    sequence_fields: tuple[str, ...] = ()
+    sequence_groups: dict = field(default_factory=dict)  # seq col -> members
+    aggregates: dict = field(default_factory=dict)  # value col -> function
+    distinct: frozenset = frozenset()  # collect columns that drop repeats
+
+    @property
+    def values(self) -> tuple[str, ...]:
+        return tuple(c for c in self.columns if c not in self.keys)
+
+    def group_of(self, column: str) -> str | None:
+        """The sequence column of the group `column` belongs to."""
+        return next(
+            (s for s, cols in self.sequence_groups.items() if column in cols),
+            None,
+        )
+
+    def function(self, column: str) -> tuple[str, str | None]:
+        """How value `column` merges under a combining engine: its
+        aggregate function, and the sequence column of its group, which
+        then orders the rows instead of ``sequence.field`` (rows with a
+        NULL there are skipped)."""
+        if self.engine == "aggregation":
+            return self.aggregates[column], None
+        if column in self.sequence_groups:  # a sequence column only advances
+            return "max", None
+        return "last_non_null", self.group_of(column)
+
+    def references(self, column: str) -> dict[str, tuple[str, ...]]:
+        """The options that name `column`, each with its column list:
+        ``sequence.field``, the sequence group `column` belongs to, and
+        the one it orders."""
+        refs = {}
+        if column in self.sequence_fields:
+            refs["sequence.field"] = self.sequence_fields
+        for s in (self.group_of(column), column):
+            if s in self.sequence_groups:
+                refs[f"fields.{s}.sequence-group"] = self.sequence_groups[s]
+        return refs
+
+
+def merge_spec(schema: TableSchema) -> MergeSpec | None:
+    """The merge contract of `schema`'s table, None for an append-only
+    table (it has none). The only reader of the merge options: every rule
+    is checked here, so a bad option fails at create time, on ALTER and
+    at scan planning."""
+    if not schema.primary_keys:
+        return None
+    opts = schema.options
+    keys = tuple(schema.primary_keys)
+    names = schema.field_names()
+    engine = opts.get("merge-engine", "deduplicate")
+    if engine not in MERGE_ENGINES:
+        raise ValueError(f"unknown merge-engine {engine!r}")
+
+    def columns(opt: str, raw: str) -> tuple[str, ...]:
+        cols = tuple(c.strip() for c in raw.split(",") if c.strip())
+        for c in cols:
+            if c not in names:
+                raise ValueError(f"{opt} references unknown column {c!r}")
+            if c in keys:
+                raise ValueError(f"{opt} {c!r} cannot be a primary key")
+        return cols
+
+    seqf = columns("sequence.field", opts.get("sequence.field", ""))
+    groups = {
+        columns("sequence-group", k[len("fields."):-len(".sequence-group")])[0]:
+            columns("sequence-group", v)
+        for k, v in opts.items()
+        if k.startswith("fields.") and k.endswith(".sequence-group")
+    }
+    if seqf and engine in ("first-row", "aggregation"):
+        raise ValueError(
+            f"sequence.field is not supported with merge-engine {engine!r}"
+        )
+    if seqf and groups:
+        raise ValueError(
+            "sequence.field cannot be combined with fields.*.sequence-group "
+            "(pick whole-row or per-group ordering, not both)"
+        )
+    members = [c for cols in groups.values() for c in cols]
+    if len(members) != len(set(members)):
+        raise ValueError("a column belongs to at most one sequence-group")
+    aggs = {}
+    if engine == "aggregation":
+        for f in schema.fields:
+            c = f["name"]
+            if c in keys:
+                continue
+            fn = opts.get(f"fields.{c}.aggregate-function", "last_non_null")
+            if fn not in AGGREGATE_FUNCTIONS:
+                raise ValueError(
+                    f"unsupported aggregate-function {fn!r} for field {c!r}")
+            if fn == "merge_map" and not f["type"].lower().startswith("map<"):
+                raise ValueError(
+                    f"merge_map needs a map column, got {f['type']!r} for {c!r}")
+            aggs[c] = fn
+    distinct = frozenset(
+        c for c in names
+        if c not in keys and opts.get(f"fields.{c}.distinct") == "true"
+    )
+    return MergeSpec(engine, keys, tuple(names), seqf, groups, aggs, distinct)
 
 
 def _commit_sorted(c: str) -> str:
@@ -3287,61 +3438,18 @@ def _commit_sorted(c: str) -> str:
     )
 
 
-def _sequence_fields(schema: TableSchema) -> list[str]:
-    """Parse + validate the ``sequence.field`` option (Paimon's
-    user-defined merge ordering: the row with the LARGEST sequence value
-    wins, commit order only breaking ties — so out-of-order ingestion,
-    e.g. a CDC replay or late-arriving partition, can never regress a
-    fresher row). Comma-separated multi-field keys compare
-    lexicographically; NULL sorts lowest (a row that doesn't carry the
-    sequence column never beats one that does)."""
-    raw = schema.options.get("sequence.field", "")
-    fields = [c.strip() for c in raw.split(",") if c.strip()]
-    if not fields:
-        return []
-    names = set(schema.field_names())
-    for f in fields:
-        if f not in names:
-            raise ValueError(f"sequence.field references unknown column {f!r}")
-        if f in schema.primary_keys:
-            raise ValueError(f"sequence.field {f!r} cannot be a primary key")
-    engine = schema.options.get("merge-engine", "deduplicate")
-    if engine in ("first-row", "aggregation"):
-        raise ValueError(
-            f"sequence.field is not supported with merge-engine {engine!r}"
-        )
-    if any(o.endswith(".sequence-group") for o in schema.options):
-        raise ValueError(
-            "sequence.field cannot be combined with fields.*.sequence-group "
-            "(pick whole-row or per-group ordering, not both)"
-        )
-    return fields
-
-
 def _merge_on_read(
-    df: DataFrame, schema: TableSchema, keep_seq: bool = False
+    df: DataFrame, spec: MergeSpec, keep_seq: bool = False
 ) -> DataFrame:
     """Collapse the change rows of a primary-key table into its current
-    state, per the table's ``merge-engine`` option (A13; engine surface
-    exposed by the reference at ``PrestoSqlTableOptionUtils.java:96-128``):
+    state under its merge contract `spec` (``MergeSpec`` says what each
+    engine returns; ``sources.datasource._merge_arrow`` is the Arrow
+    executor of the same spec).
 
-    - ``deduplicate`` (default): latest row per key wins; a latest DELETE
-      removes the key (``TestPrestoITCase.java:94-96,392-393``).
-    - ``first-row``: earliest row per key wins (deletes ignored).
-    - ``partial-update``: per column, the latest NON-NULL value wins —
-      upserts patch individual columns without erasing the rest.
-    - ``aggregation``: per column, rows combine under
-      ``fields.<name>.aggregate-function`` (sum/max/min/count;
-      default last_non_null).
-
-    ``sequence.field`` (deduplicate / group-less partial-update) replaces
-    "latest commit" with "largest sequence value" as the merge order —
-    including for DELETE tombstones, so a stale delete cannot remove a
-    fresher row.
-
-    All variants are one shuffle on the key: a single window or hash
-    aggregate, so at scale the cost is the same as the deduplicate path
-    (bounded further by bucketing + ``compact()``).
+    Every engine is one shuffle on the key: deduplicate and first-row a
+    single window, partial-update and aggregation a single aggregate,
+    so at scale the cost is the same as the deduplicate path (bounded
+    further by bucketing + ``compact()``).
 
     `keep_seq` keeps a ``__seq`` column: the commit the key's merged row
     comes from — the winning row's ``__seq`` for deduplicate and
@@ -3349,14 +3457,15 @@ def _merge_on_read(
     engines (partial-update, aggregation). The lookup changelog reads it
     to tell which keys a commit changed.
     """
-    pks = schema.primary_keys
-    engine = schema.options.get("merge-engine", "deduplicate")
-    seqf = _sequence_fields(schema)
+    pks = list(spec.keys)
     drop = [c for c in SYS_COLS if not (keep_seq and c == SEQ_COL)]
-    if engine == "deduplicate":
+    if spec.engine in ("deduplicate", "first-row"):
+        first = spec.engine == "first-row"
+        if first:
+            df = df.filter(F.col(KIND_COL) != "D")
         w = Window.partitionBy(*pks).orderBy(
-            *[F.desc_nulls_last(f) for f in seqf],
-            F.desc(SEQ_COL), F.desc(POS_COL),
+            *[F.desc_nulls_last(f) for f in spec.sequence_fields],
+            *[(F.asc if first else F.desc)(c) for c in (SEQ_COL, POS_COL)],
         )
         return (
             df.withColumn("__rn", F.row_number().over(w))
@@ -3364,182 +3473,66 @@ def _merge_on_read(
             .filter(F.col(KIND_COL) != "D")
             .drop("__rn", *drop)
         )
-    if engine == "first-row":
-        w = Window.partitionBy(*pks).orderBy(F.asc(SEQ_COL), F.asc(POS_COL))
-        return (
-            df.filter(F.col(KIND_COL) != "D")
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", *drop)
+    df = df.filter(F.col(KIND_COL) != "D")  # the combining engines ignore deletes
+    types = {f.name: f.dataType for f in df.schema}
+    merged = [
+        _merge_column(spec, c, types[c]).cast(types[c]).alias(c)
+        for c in spec.values
+    ]
+    return (
+        df.groupBy(*pks)
+        .agg(*merged, F.max(SEQ_COL).alias(SEQ_COL))
+        .select(*spec.columns, *([SEQ_COL] if keep_seq else []))
+    )
+
+
+def _merge_column(spec: MergeSpec, c: str, dtype: T.DataType) -> Column:
+    """The aggregate merging value column `c` of one key's change rows
+    under a combining engine (partial-update, aggregation)."""
+    fn, s = spec.function(c)
+    order = (s,) if s else spec.sequence_fields
+    latest = ", ".join(f"`{f}`" for f in (*order, SEQ_COL, POS_COL))
+    if fn in ("last_non_null", "first_non_null"):
+        by = "max_by" if fn == "last_non_null" else "min_by"
+        guard = f"`{c}` IS NOT NULL" + (f" AND `{s}` IS NOT NULL" if s else "")
+        return F.expr(f"{by}(`{c}`, IF({guard}, struct({latest}), NULL))")
+    if fn in ("last_value", "first_value"):
+        by = "max_by" if fn == "last_value" else "min_by"
+        return F.expr(f"{by}(`{c}`, struct({latest}))")
+    if fn == "product" and isinstance(dtype, (T.IntegralType, T.DecimalType)):
+        # exact (Spark's product() computes in double); a decimal rounds
+        # to its declared scale at each step, as Paimon's does
+        t = "bigint" if isinstance(dtype, T.IntegralType) else dtype.simpleString()
+        return F.expr(
+            f"IF(count(`{c}`) = 0, NULL, aggregate(collect_list(`{c}`),"
+            f" CAST(1 AS {t}), (a, x) -> CAST(a * x AS {t})))"
         )
-    data_cols = [n for n in schema.field_names() if n not in pks]
-    out_cols = schema.field_names() + ([SEQ_COL] if keep_seq else [])
-    latest = [F.max(SEQ_COL).alias(SEQ_COL)] if keep_seq else []
-    if engine == "partial-update":
-        df = df.filter(F.col(KIND_COL) != "D")  # ignore-delete semantics
-        # Sequence groups (Paimon `fields.<seq>.sequence-group=a,b`): the
-        # group's columns take their latest non-null value ordered by the
-        # GROUP's sequence column (commit order only breaks ties), and
-        # rows where the sequence column is null never update the group —
-        # so out-of-order arrivals can't regress a fresher value.
-        groups: dict[str, list[str]] = {}
-        for opt, val in schema.options.items():
-            if opt.startswith("fields.") and opt.endswith(".sequence-group"):
-                seq_col = opt[len("fields."):-len(".sequence-group")]
-                cols = [c.strip() for c in val.split(",") if c.strip()]
-                for c in cols + [seq_col]:
-                    if c not in data_cols:
-                        raise ValueError(
-                            f"sequence-group references unknown column {c!r}")
-                groups[seq_col] = cols
-        if groups:
-            # aggregation form: one hash aggregate on the key (same single
-            # shuffle as the window form), max_by per column
-            owner = {c: s for s, cols in groups.items() for c in cols}
-            aggs = []
-            for c in data_cols:
-                if c in groups:  # a sequence column: advances monotonically
-                    aggs.append(F.max(c).alias(c))
-                    continue
-                s = owner.get(c)
-                order = (
-                    f"struct(`{s}`, `{SEQ_COL}`, `{POS_COL}`)"
-                    if s is not None
-                    else f"struct(`{SEQ_COL}`, `{POS_COL}`)"
-                )
-                guard = f"`{c}` IS NOT NULL" + (
-                    f" AND `{s}` IS NOT NULL" if s is not None else ""
-                )
-                aggs.append(
-                    F.expr(f"max_by(`{c}`, IF({guard}, {order}, NULL))").alias(c)
-                )
-            return df.groupBy(*pks).agg(*aggs, *latest).select(*out_cols)
-        # Latest non-null per column, then one surviving row per key. Both
-        # windows share the same partitioning -> one shuffle. With
-        # sequence.field, "latest" means largest sequence value (nulls
-        # lowest), commit order breaking ties.
-        wa = (
-            Window.partitionBy(*pks)
-            .orderBy(
-                *[F.asc_nulls_first(f) for f in seqf],
-                F.asc(SEQ_COL), F.asc(POS_COL),
-            )
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        for c in data_cols:
-            df = df.withColumn(c, F.last(c, ignorenulls=True).over(wa))
-        if keep_seq:
-            # the surviving row comes last in `wa`, so its frame is the
-            # whole key
-            df = df.withColumn("__latest", F.max(SEQ_COL).over(wa))
-        wd = Window.partitionBy(*pks).orderBy(
-            *[F.desc_nulls_last(f) for f in seqf],
-            F.desc(SEQ_COL), F.desc(POS_COL),
-        )
-        df = (
-            df.withColumn("__rn", F.row_number().over(wd))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", *SYS_COLS)
-        )
-        return df.withColumnRenamed("__latest", SEQ_COL) if keep_seq else df
-    if engine == "aggregation":
-        df = df.filter(F.col(KIND_COL) != "D")
-        aggs = []
-        for c in data_cols:
-            fn = schema.options.get(f"fields.{c}.aggregate-function", "last_non_null")
-            if fn == "sum":
-                aggs.append(F.sum(c).alias(c))
-            elif fn == "max":
-                aggs.append(F.max(c).alias(c))
-            elif fn == "min":
-                aggs.append(F.min(c).alias(c))
-            elif fn == "count":
-                aggs.append(F.count(c).alias(c))
-            elif fn == "last_non_null":
-                aggs.append(
-                    F.expr(
-                        f"max_by(`{c}`, IF(`{c}` IS NOT NULL,"
-                        f" struct(`{SEQ_COL}`, `{POS_COL}`), NULL))"
-                    ).alias(c)
-                )
-            elif fn == "last_value":
-                aggs.append(
-                    F.expr(f"max_by(`{c}`, struct(`{SEQ_COL}`, `{POS_COL}`))")
-                    .alias(c)
-                )
-            elif fn == "first_value":
-                aggs.append(
-                    F.expr(f"min_by(`{c}`, struct(`{SEQ_COL}`, `{POS_COL}`))")
-                    .alias(c)
-                )
-            elif fn == "first_non_null":
-                aggs.append(
-                    F.expr(
-                        f"min_by(`{c}`, IF(`{c}` IS NOT NULL,"
-                        f" struct(`{SEQ_COL}`, `{POS_COL}`), NULL))"
-                    ).alias(c)
-                )
-            elif fn == "bool_and":
-                aggs.append(F.bool_and(c).alias(c))
-            elif fn == "bool_or":
-                aggs.append(F.bool_or(c).alias(c))
-            elif fn == "product":
-                aggs.append(F.product(c).alias(c))
-            elif fn == "listagg":
-                # commit-ordered concatenation (deterministic: sorted by the
-                # commit sequence, not arrival order)
-                aggs.append(
-                    F.expr(
-                        f"array_join(transform(array_sort(collect_list("
-                        f"IF(`{c}` IS NOT NULL, struct(`{SEQ_COL}` AS s,"
-                        f" `{POS_COL}` AS p, `{c}` AS v), NULL))),"
-                        f" x -> x.v), ',')"
-                    ).alias(c)
-                )
-            elif fn == "collect":
-                # commit-ordered array concatenation; fields.<c>.distinct
-                # keeps first occurrences (Paimon's collect agg). The sort
-                # comparator touches only (seq, pos) so the payload type
-                # needn't be orderable (maps/structs welcome).
-                inner = (
-                    f"flatten(transform({_commit_sorted(c)}, x -> x.v))"
-                )
-                if schema.options.get(f"fields.{c}.distinct") == "true":
-                    inner = f"array_distinct({inner})"
-                aggs.append(F.expr(inner).alias(c))
-            elif fn == "merge_map":
-                # later commits' entries overwrite earlier ones key-wise
-                # (Paimon's merge_map agg). Fold over commit-sorted maps,
-                # replacing same-key entries — map sizes are per-row small,
-                # so the quadratic fold is driver-irrelevant and stays in
-                # one hash aggregate.
-                ftype = next(f["type"] for f in schema.fields if f["name"] == c)
-                mt = _parse_type(ftype)
-                if not isinstance(mt, T.MapType):
-                    raise ValueError(
-                        f"merge_map needs a map column, got {ftype!r} for {c!r}")
-                kd = mt.keyType.simpleString()
-                vd = mt.valueType.simpleString()
-                maps_sorted = f"transform({_commit_sorted(c)}, x -> x.v)"
-                folded = (
-                    f"aggregate(flatten(transform({maps_sorted},"
-                    f" m -> map_entries(m))),"
-                    f" cast(array() as array<struct<key:{kd},value:{vd}>>),"
-                    f" (acc, e) -> concat(filter(acc,"
-                    f" a -> NOT (a.key <=> e.key)), array(e)))"
-                )
-                aggs.append(
-                    F.expr(
-                        f"IF(size({maps_sorted}) = 0, NULL,"
-                        f" map_from_entries({folded}))"
-                    ).alias(c)
-                )
-            else:
-                raise ValueError(
-                    f"unsupported aggregate-function {fn!r} for field {c!r}"
-                )
-        return df.groupBy(*pks).agg(*aggs, *latest).select(*out_cols)
-    raise ValueError(f"unknown merge-engine {engine!r}")
+    simple = {"sum": F.sum, "product": F.product, "count": F.count,
+              "max": F.max, "min": F.min, "bool_and": F.bool_and,
+              "bool_or": F.bool_or}
+    if fn in simple:
+        return simple[fn](c)
+    values = f"transform({_commit_sorted(c)}, x -> x.v)"
+    if fn == "listagg":  # commit-ordered, not arrival-ordered
+        return F.expr(f"array_join({values}, ',')")
+    if fn == "collect":
+        # commit-ordered array concatenation; the sort comparator touches
+        # only (seq, pos), so the payload type needn't be orderable
+        inner = f"flatten({values})"
+        return F.expr(
+            f"array_distinct({inner})" if c in spec.distinct else inner)
+    # merge_map: fold the commit-sorted maps, later entries replacing
+    # same-key ones — map sizes are per-row small, so the quadratic fold
+    # stays inside the one hash aggregate
+    kd = dtype.keyType.simpleString()
+    vd = dtype.valueType.simpleString()
+    folded = (
+        f"aggregate(flatten(transform({values}, m -> map_entries(m))),"
+        f" cast(array() as array<struct<key:{kd},value:{vd}>>),"
+        f" (acc, e) -> concat(filter(acc, a -> NOT (a.key <=> e.key)),"
+        f" array(e)))"
+    )
+    return F.expr(f"IF(size({values}) = 0, NULL, map_from_entries({folded}))")
 
 
 def _hilbert_index(coords: list[F.Column], bits: int) -> F.Column:

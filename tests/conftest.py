@@ -60,6 +60,7 @@ SF_DIR = "/root/testdata/sf0.001"
 # whole files: randomized/property suites, every test ≥ 5 s
 _SLOW_FILES = {
     "tests/test_merge_on_read_property.py",   # 149 s
+    "tests/test_merge_spec_property.py",      # 186 s
     "tests/test_changelog_property.py",       # 300 s
     "tests/test_hamming_property.py",         # 116 s
     "tests/test_scan_pruning_property.py",    # 106 s

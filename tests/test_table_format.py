@@ -309,6 +309,82 @@ def test_schema_evolution_add_rename_drop(spark, catalog):
     assert t.to_df(snapshot_id=1).columns == ["order_key", "order_status", "total"]
 
 
+class TestMergeOptionsFollowSchemaEvolution:
+    """The merge options name columns: a rename rewrites every option
+    naming the column, a drop removes its fields.<c>.* options and is
+    refused for a column ``sequence.field`` or a sequence group names."""
+
+    def test_rename_aggregated_column_keeps_its_function(self, spark, catalog):
+        t = catalog.create_table(
+            "default", "mr1", "k int, v bigint", primary_keys=["k"],
+            options={"merge-engine": "aggregation",
+                     "fields.v.aggregate-function": "sum"})
+        t.upsert(spark.createDataFrame([(1, 10)], "k int, v bigint"))
+        t.upsert(spark.createDataFrame([(1, 5)], "k int, v bigint"))
+        catalog.rename_column("default", "mr1", "v", "w")
+        assert rows(t.to_df()) == [(1, 15)]
+        opts = t.schema().options
+        assert opts["fields.w.aggregate-function"] == "sum"
+        assert "fields.v.aggregate-function" not in opts
+
+    def test_rename_sequence_field_column(self, spark, catalog):
+        ddl = "k int, v string, ver bigint"
+        t = catalog.create_table(
+            "default", "mr2", ddl, primary_keys=["k"],
+            options={"sequence.field": "ver"})
+        t.upsert(spark.createDataFrame([(1, "new", 10)], ddl))
+        t.upsert(spark.createDataFrame([(1, "stale", 5)], ddl))
+        catalog.rename_column("default", "mr2", "ver", "version")
+        assert t.schema().options["sequence.field"] == "version"
+        assert rows(t.to_df()) == [(1, "new", 10)]
+
+    def test_rename_sequence_group_columns(self, spark, catalog):
+        ddl = "k int, g bigint, a string, b string"
+        t = catalog.create_table(
+            "default", "mr3", ddl, primary_keys=["k"],
+            options={"merge-engine": "partial-update",
+                     "fields.g.sequence-group": "a,b"})
+        t.upsert(spark.createDataFrame([(1, 2, "new", "x")], ddl))
+        t.upsert(spark.createDataFrame([(1, 1, "old", "y")], ddl))
+        catalog.rename_column("default", "mr3", "a", "a2")
+        catalog.rename_column("default", "mr3", "g", "g2")
+        opts = t.schema().options
+        assert opts["fields.g2.sequence-group"] == "a2,b"
+        assert "fields.g.sequence-group" not in opts
+        assert rows(t.to_df()) == [(1, 2, "new", "x")]
+
+    def test_drop_column_removes_its_merge_options(self, spark, catalog):
+        t = catalog.create_table(
+            "default", "mr4", "k int, v bigint, w bigint", primary_keys=["k"],
+            options={"merge-engine": "aggregation",
+                     "fields.v.aggregate-function": "sum",
+                     "fields.w.aggregate-function": "sum"})
+        t.upsert(spark.createDataFrame([(1, 1, 1)], "k int, v bigint, w bigint"))
+        catalog.drop_column("default", "mr4", "w")
+        assert "fields.w.aggregate-function" not in t.schema().options
+        # a new column of the same name starts with the default function
+        catalog.add_column("default", "mr4", "w", "bigint")
+        ddl = "k int, v bigint, w bigint"
+        t.upsert(spark.createDataFrame([(1, 2, 5)], ddl))
+        t.upsert(spark.createDataFrame([(1, 3, 7)], ddl))
+        assert rows(t.to_df()) == [(1, 6, 7)]
+
+    @pytest.mark.parametrize("column", ["ver", "g", "a"])
+    def test_drop_rejects_columns_the_merge_names(self, catalog, column):
+        catalog.create_table(
+            "default", "mr5", "k int, ver bigint, g bigint, a string",
+            primary_keys=["k"],
+            options={"merge-engine": "partial-update",
+                     "fields.g.sequence-group": "a"})
+        catalog.create_table(
+            "default", "mr6", "k int, ver bigint, g bigint, a string",
+            primary_keys=["k"], options={"sequence.field": "ver"})
+        name = "mr6" if column == "ver" else "mr5"
+        with pytest.raises(ValueError, match="merge options"):
+            catalog.drop_column("default", name, column)
+        assert column in catalog.get_table("default", name).schema().field_names()
+
+
 # --- DDL (A15-A17) ---------------------------------------------------------
 
 
