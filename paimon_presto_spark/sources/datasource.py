@@ -497,8 +497,9 @@ def _merge_arrow(tbl, spec: MergeSpec):
     contract). No pandas round trip, so NULL stays apart from NaN and
     int64 stays exact. A merged value is the last (or first) row of its
     key, in an Arrow sort that orders NULL first and NaN above every
-    number as Spark does, or an Arrow hash aggregate (sum, product,
-    count, bool_and, bool_or)."""
+    number as Spark does, or an Arrow hash aggregate (sum, float product,
+    count, bool_and, bool_or). A merged value that leaves its declared
+    type raises, as in Spark under ANSI."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -556,47 +557,65 @@ def _merge_arrow(tbl, spec: MergeSpec):
             out[c] = v.take(pick(order(c), valid, fn == "min"))
         elif fn in picks:
             out[c] = v.take(pick(*picks[fn]))
-        elif fn in hashed and not (
-            fn == "product" and pa.types.is_decimal(v.type)
-        ):
+        elif fn in hashed and (fn != "product" or pa.types.is_floating(v.type)):
+            if fn == "sum" and not pa.types.is_floating(v.type):
+                # Arrow's int64 and decimal sums wrap: sum in 38 digits
+                # and narrow back with an overflow check, as Spark does
+                v = v.cast(pa.decimal128(38, getattr(v.type, "scale", 0)))
             agg = pa.table({"g": gid, "v": v}).group_by(
                 "g", use_threads=False).aggregate([("v", hashed[fn])])
-            out[c] = agg[f"v_{hashed[fn]}"].take(
-                pc.sort_indices(agg["g"])).cast(tbl[c].type)
-        else:  # listagg, collect, merge_map, decimal product
+            out[c] = _narrow(agg[f"v_{hashed[fn]}"].take(
+                pc.sort_indices(agg["g"])), tbl[c].type, c)
+        else:  # listagg, collect, merge_map, exact product
             by_key = [[] for _ in range(n_groups)]
             py = v.to_pylist()
             for i in latest:
                 if py[i] is not None:
                     by_key[gid[i]].append(py[i])
-            out[c] = pa.array(
-                [_fold(fn, vals, c in spec.distinct, v.type)
-                 for vals in by_key],
-                type=v.type)
+            folded = [_fold(fn, vals, c in spec.distinct, v.type) for vals in by_key]
+            wide = pa.int64() if pa.types.is_integer(v.type) else v.type
+            out[c] = _narrow(pa.array(folded, type=wide), v.type, c)
     return pa.table(out)
+
+
+def _narrow(arr, typ, column: str):
+    """`arr` cast to the declared `typ`; a value that does not fit raises,
+    as Spark's ANSI arithmetic does."""
+    import pyarrow as pa
+
+    try:
+        return arr.cast(typ)
+    except (pa.ArrowInvalid, OverflowError) as e:
+        raise ArithmeticError(
+            f"[ARITHMETIC_OVERFLOW] merged column {column!r} overflows {typ}: {e}"
+        ) from e
 
 
 def _fold(fn: str, vals: list, distinct: bool, typ):
     """One key's non-null values, in commit order, folded under `fn`
-    (Spark's ``_merge_column`` twin)."""
-    if fn == "product":  # decimals: each step rounds to the scale
-        if not vals:
-            return None
-        out, q = decimal.Decimal(1), decimal.Decimal(1).scaleb(-typ.scale)
+    (Spark's ``_merge_column`` twin); None when there are none."""
+    if not vals:
+        return None
+    if fn == "product":
+        # exact: a decimal rounds to its scale at each step, an integer
+        # stays in bigint, as Spark's product does
+        scale = getattr(typ, "scale", None)
+        out, q = decimal.Decimal(1), decimal.Decimal(1).scaleb(-(scale or 0))
         with decimal.localcontext(prec=80):
             for x in vals:
                 out = (out * x).quantize(q, decimal.ROUND_HALF_UP)
-        return out
+                if scale is None and not -(1 << 63) <= out < 1 << 63:
+                    raise ArithmeticError(
+                        f"[ARITHMETIC_OVERFLOW] product overflows bigint: {out}")
+        return out if scale is not None else int(out)
     if fn == "listagg":
         return ",".join(vals)
     if fn == "collect":
         flat = [x for arr in vals for x in arr]
         # repr keys: NaN repeats are one value, as in array_distinct
         return list({repr(x): x for x in flat}.values()) if distinct else flat
-    if not vals:  # merge_map of no maps
-        return None
     merged: dict = {}
-    for m in vals:  # arrow maps render as [(k, v), ...]
+    for m in vals:  # merge_map; arrow maps render as [(k, v), ...]
         merged.update(m)
     return list(merged.items())
 

@@ -86,6 +86,8 @@ SYS_COLS = (SEQ_COL, POS_COL, KIND_COL)
 PART_DIR_PREFIX = "__part_"
 DV_PATH_COL = "__dv_path"  # table-relative data-file path of a scanned row
 DV_POS_COL = "__dv_pos"  # row position within that file (_metadata.row_index)
+#: a change row's audit-log kind: '+I' or '-D' (Paimon's +I/-D)
+_ROWKIND = f"concat(IF(`{KIND_COL}` = 'D', '-', '+'), `{KIND_COL}`) AS rowkind"
 
 
 # --------------------------------------------------------------------------
@@ -1129,44 +1131,41 @@ class Table:
           transform) — a one-off pass inside the rewrite, not a hot path.
 
         File count: every strategy range-partitions into
-        ``spark.sql.shuffle.partitions`` tasks, and the write splits each
-        task's rows by (partition, bucket) group, so a sort-compaction
-        writes up to shuffle partitions × groups files, not one file per
-        shuffle partition: a 4000-row table with 3 partitions × 2 buckets
-        gets 192 files at 32 shuffle partitions.
+        ``spark.sql.shuffle.partitions`` tasks on (partition keys,
+        ``__bucket``, clustering key), so each (partition, bucket) group is
+        one sorted run (files with disjoint key ranges) and the rewrite
+        writes at most shuffle partitions + groups − 1 files: 37, not 192,
+        for 3 partitions × 2 buckets at 32 shuffle partitions.
         """
         base = self.snapshot()
+        schema = self.schema()
         current = self.to_df()
-        if sort_by:
-            # explicit partition count: AQE would otherwise coalesce the
-            # range shuffle and fold the clustering into too few files
-            n = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
-            if strategy in ("zorder", "hilbert"):
-                if strategy == "zorder":
-                    z = self._zorder_value(current, sort_by)
-                else:
-                    z = self._hilbert_value(current, sort_by)
-                current = (
-                    current.withColumn("__z", z)
-                    .repartitionByRange(n, "__z")
-                    .sortWithinPartitions("__z")
-                    .drop("__z")
-                )
-            elif strategy == "order":
-                current = current.repartitionByRange(n, *sort_by).sortWithinPartitions(
-                    *sort_by
-                )
-            else:
-                raise ValueError(f"unknown compact strategy {strategy!r}")
-        # a full replace rewrites from the merged state: deletions are
-        # materialized into the new files, so the DV index resets to empty
-        if self.is_primary_keyed and self.is_dynamic_bucket:
+        pk = bool(schema.primary_keys)
+        if pk and schema.options.get("bucket") == "-1":
             # rewrite preserves each key's assigned bucket (n_new == 0, so
             # the index itself is untouched and carries forward)
             current, _ = self._assign_dynamic_buckets(current, base)
+        elif pk:
+            current = current.withColumn("__bucket", _fixed_bucket(schema))
+        if sort_by:
+            if strategy == "order":
+                order = [*map(_q, sort_by)]
+            elif strategy in ("zorder", "hilbert"):
+                z = (self._zorder_value if strategy == "zorder"
+                     else self._hilbert_value)(current, sort_by)
+                current, order = current.withColumn("__z", z), ["__z"]
+            else:
+                raise ValueError(f"unknown compact strategy {strategy!r}")
+            group = [*map(_q, schema.partition_keys), *(["__bucket"] if pk else [])]
+            key = [*group, *order]  # each group's rows in contiguous ranges
+            # explicit partition count: AQE would otherwise coalesce the
+            # range shuffle and fold the clustering into too few files
+            n = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
+            current = current.repartitionByRange(n, *key).sortWithinPartitions(*key)
+        # a full replace rewrites from the merged state: deletions are
+        # materialized into the new files, so the DV index resets to empty
         return self._commit_write(
-            base, current, kind="COMPACT",
-            row_kind="I" if self.is_primary_keyed else None, replace=True,
+            base, current, kind="COMPACT", row_kind="I" if pk else None, replace=True,
         )
 
     def compact_buckets(self, min_files: int | None = None) -> Snapshot | None:
@@ -2154,11 +2153,7 @@ class Table:
         inserts = self._read_entries(new_entries, schema, pk)
         if inserts is not None:
             if KIND_COL in inserts.columns:
-                kind = F.concat(
-                    F.when(F.col(KIND_COL) == "D", F.lit("-")).otherwise(F.lit("+")),
-                    F.col(KIND_COL),
-                )
-                out = inserts.select(kind.alias("rowkind"), *data_names)
+                out = inserts.selectExpr(_ROWKIND, *map(_q, data_names))
             elif emit_kind:
                 out = inserts.select(F.lit("+I").alias("rowkind"), *data_names)
             else:
@@ -2427,12 +2422,8 @@ class Table:
                 out = out.withColumn(PART_DIR_PREFIX + k, F.col(k).cast("string"))
             dir_cols += [PART_DIR_PREFIX + k for k in part_cols]
         if row_kind is not None and schema.primary_keys:
-            if "__bucket" not in out.columns:  # dynamic tables pre-assign
-                nb = schema.num_buckets
-                bucket = F.pmod(
-                    F.xxhash64(*[F.col(k) for k in schema.primary_keys]), F.lit(nb)
-                ).cast("int")
-                out = out.withColumn("__bucket", bucket)
+            if "__bucket" not in out.columns:  # compact and dynamic tables pre-assign
+                out = out.withColumn("__bucket", _fixed_bucket(schema))
             dir_cols.append("__bucket")
         fmt = schema.options.get("file.format", "parquet")
         if fmt not in ("parquet", "orc", "avro"):
@@ -3008,12 +2999,8 @@ class Table:
         scan = self.scan(**scan_kwargs)
         df = scan.to_df(merge=False)
         if KIND_COL in df.columns:
-            kind = F.concat(
-                F.when(F.col(KIND_COL) == "D", F.lit("-")).otherwise(F.lit("+")),
-                F.col(KIND_COL),
-            )
             data_cols = [c for c in df.columns if c not in SYS_COLS]
-            return df.select(kind.alias("rowkind"), *data_cols)
+            return df.selectExpr(_ROWKIND, *map(_q, data_cols))
         return df.select(F.lit("+I").alias("rowkind"), "*")
 
     def schemas_df(self) -> DataFrame:
@@ -3427,12 +3414,12 @@ def merge_spec(schema: TableSchema) -> MergeSpec | None:
 
 
 def _commit_sorted(c: str) -> str:
-    """SQL fragment: non-null values of `c` as struct(s,p,v) sorted by the
-    commit sequence via an explicit comparator — payload type need not be
-    orderable (array_sort's default struct comparison would reject maps)."""
+    """SQL fragment: non-null values of quoted `c` as struct(s,p,v) sorted
+    by the commit sequence via an explicit comparator — payload type need
+    not be orderable (array_sort's default struct comparison rejects maps)."""
     return (
-        f"array_sort(collect_list(IF(`{c}` IS NOT NULL,"
-        f" struct(`{SEQ_COL}` AS s, `{POS_COL}` AS p, `{c}` AS v), NULL)),"
+        f"array_sort(collect_list(IF({c} IS NOT NULL,"
+        f" struct(`{SEQ_COL}` AS s, `{POS_COL}` AS p, {c} AS v), NULL)),"
         f" (l, r) -> CASE WHEN l.s < r.s OR (l.s = r.s AND l.p < r.p) THEN -1"
         f" WHEN l.s = r.s AND l.p = r.p THEN 0 ELSE 1 END)"
     )
@@ -3458,20 +3445,23 @@ def _merge_on_read(
     to tell which keys a commit changed.
     """
     pks = list(spec.keys)
-    drop = [c for c in SYS_COLS if not (keep_seq and c == SEQ_COL)]
+    out = [*spec.columns, *([SEQ_COL] if keep_seq else [])]
     if spec.engine in ("deduplicate", "first-row"):
+        # one window expression, one filter and one select, all SQL
+        # strings: each DataFrame step is an eager analysis
         first = spec.engine == "first-row"
-        if first:
-            df = df.filter(F.col(KIND_COL) != "D")
-        w = Window.partitionBy(*pks).orderBy(
-            *[F.desc_nulls_last(f) for f in spec.sequence_fields],
-            *[(F.asc if first else F.desc)(c) for c in (SEQ_COL, POS_COL)],
+        order = [f"{_q(f)} DESC NULLS LAST" for f in spec.sequence_fields]
+        if first:  # deletes are ignored: they rank after every insert
+            order.append(f"IF({_q(KIND_COL)} <> 'D', 0, 1)")
+        order += [f"{_q(c)} {'ASC' if first else 'DESC'}" for c in (SEQ_COL, POS_COL)]
+        rn = (
+            f"row_number() OVER (PARTITION BY {', '.join(map(_q, pks))}"
+            f" ORDER BY {', '.join(order)}) AS __rn"
         )
         return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .filter(F.col(KIND_COL) != "D")
-            .drop("__rn", *drop)
+            df.selectExpr("*", rn)
+            .filter(f"__rn = 1 AND {_q(KIND_COL)} <> 'D'")
+            .selectExpr(*map(_q, out))
         )
     df = df.filter(F.col(KIND_COL) != "D")  # the combining engines ignore deletes
     types = {f.name: f.dataType for f in df.schema}
@@ -3480,59 +3470,63 @@ def _merge_on_read(
         for c in spec.values
     ]
     return (
-        df.groupBy(*pks)
+        df.groupBy(*map(_q, pks))
         .agg(*merged, F.max(SEQ_COL).alias(SEQ_COL))
-        .select(*spec.columns, *([SEQ_COL] if keep_seq else []))
+        .selectExpr(*map(_q, out))
     )
 
 
-def _merge_column(spec: MergeSpec, c: str, dtype: T.DataType) -> Column:
-    """The aggregate merging value column `c` of one key's change rows
-    under a combining engine (partial-update, aggregation)."""
-    fn, s = spec.function(c)
+def _merge_column(spec: MergeSpec, column: str, dtype: T.DataType) -> Column:
+    """The aggregate merging value column `column` of one key's change
+    rows under a combining engine (partial-update, aggregation). A key
+    whose values are all NULL merges to NULL under every function but
+    ``count``."""
+    fn, s = spec.function(column)
+    c = _q(column)
     order = (s,) if s else spec.sequence_fields
-    latest = ", ".join(f"`{f}`" for f in (*order, SEQ_COL, POS_COL))
+    latest = ", ".join(map(_q, (*order, SEQ_COL, POS_COL)))
     if fn in ("last_non_null", "first_non_null"):
         by = "max_by" if fn == "last_non_null" else "min_by"
-        guard = f"`{c}` IS NOT NULL" + (f" AND `{s}` IS NOT NULL" if s else "")
-        return F.expr(f"{by}(`{c}`, IF({guard}, struct({latest}), NULL))")
+        guard = f"{c} IS NOT NULL" + (f" AND {_q(s)} IS NOT NULL" if s else "")
+        return F.expr(f"{by}({c}, IF({guard}, struct({latest}), NULL))")
     if fn in ("last_value", "first_value"):
         by = "max_by" if fn == "last_value" else "min_by"
-        return F.expr(f"{by}(`{c}`, struct({latest}))")
+        return F.expr(f"{by}({c}, struct({latest}))")
     if fn == "product" and isinstance(dtype, (T.IntegralType, T.DecimalType)):
         # exact (Spark's product() computes in double); a decimal rounds
         # to its declared scale at each step, as Paimon's does
         t = "bigint" if isinstance(dtype, T.IntegralType) else dtype.simpleString()
         return F.expr(
-            f"IF(count(`{c}`) = 0, NULL, aggregate(collect_list(`{c}`),"
+            f"IF(count({c}) = 0, NULL, aggregate(collect_list({c}),"
             f" CAST(1 AS {t}), (a, x) -> CAST(a * x AS {t})))"
         )
     simple = {"sum": F.sum, "product": F.product, "count": F.count,
               "max": F.max, "min": F.min, "bool_and": F.bool_and,
               "bool_or": F.bool_or}
     if fn in simple:
-        return simple[fn](c)
+        return simple[fn](F.col(c))
     values = f"transform({_commit_sorted(c)}, x -> x.v)"
     if fn == "listagg":  # commit-ordered, not arrival-ordered
-        return F.expr(f"array_join({values}, ',')")
-    if fn == "collect":
+        merged = f"array_join({values}, ',')"
+    elif fn == "collect":
         # commit-ordered array concatenation; the sort comparator touches
         # only (seq, pos), so the payload type needn't be orderable
-        inner = f"flatten({values})"
-        return F.expr(
-            f"array_distinct({inner})" if c in spec.distinct else inner)
-    # merge_map: fold the commit-sorted maps, later entries replacing
-    # same-key ones — map sizes are per-row small, so the quadratic fold
-    # stays inside the one hash aggregate
-    kd = dtype.keyType.simpleString()
-    vd = dtype.valueType.simpleString()
-    folded = (
-        f"aggregate(flatten(transform({values}, m -> map_entries(m))),"
-        f" cast(array() as array<struct<key:{kd},value:{vd}>>),"
-        f" (acc, e) -> concat(filter(acc, a -> NOT (a.key <=> e.key)),"
-        f" array(e)))"
-    )
-    return F.expr(f"IF(size({values}) = 0, NULL, map_from_entries({folded}))")
+        merged = f"flatten({values})"
+        if column in spec.distinct:
+            merged = f"array_distinct({merged})"
+    else:
+        # merge_map: fold the commit-sorted maps, later entries replacing
+        # same-key ones — map sizes are per-row small, so the quadratic
+        # fold stays inside the one hash aggregate
+        kd, vd = dtype.keyType.simpleString(), dtype.valueType.simpleString()
+        merged = (
+            f"map_from_entries(aggregate("
+            f"flatten(transform({values}, m -> map_entries(m))),"
+            f" cast(array() as array<struct<key:{kd},value:{vd}>>),"
+            f" (acc, e) -> concat(filter(acc, a -> NOT (a.key <=> e.key)),"
+            f" array(e))))"
+        )
+    return F.expr(f"IF(count({c}) = 0, NULL, {merged})")
 
 
 def _hilbert_index(coords: list[F.Column], bits: int) -> F.Column:
@@ -3605,6 +3599,18 @@ def _hilbert_index(coords: list[F.Column], bits: int) -> F.Column:
     return F.pandas_udf(hkey, "long")(*[c.cast("long") for c in coords])
 
 
+def _fixed_bucket(schema: TableSchema) -> Column:
+    """Each row's bucket in a fixed-bucket primary-key table (Python twin:
+    ``functions.xxhash.spark_bucket``)."""
+    keys = [F.col(_q(k)) for k in schema.primary_keys]
+    return F.pmod(F.xxhash64(*keys), F.lit(schema.num_buckets)).cast("int")
+
+
+def _q(name: str) -> str:
+    """`name` as a quoted SQL identifier (backticks escaped)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _project_to(
     df: DataFrame, writer_schema: TableSchema, reader_schema: TableSchema,
     keep_sys: bool, extra: Iterable[str] = (),
@@ -3614,27 +3620,34 @@ def _project_to(
     Field-ID based: renames follow the id, dropped columns disappear, added
     columns materialize as typed NULLs — the standard lakehouse evolution
     contract (reference applies SchemaChange server-side and Paimon readers
-    do this projection; we do it with one Spark select).
+    do this projection).
+
+    The read-plan rule: one ``selectExpr`` of SQL strings from one read
+    of the file schema, so building a read costs a constant number of
+    JVM calls per column list, not per column. A column whose file type
+    is its read type (CHAR/VARCHAR as string, TIME as bigint) is only
+    renamed; ``CAST(... AS <declared type>)`` appears only where the
+    types differ (type evolution, an avro file's physical type).
     """
-    by_id = {f["id"]: f for f in writer_schema.fields}
-    have = set(df.columns)  # one JVM schema round trip, not one per field
-    cols = []
+    file_types = {f.name: f.dataType for f in df.schema}  # one JVM round trip
+    read_types = {f.name: f.dataType for f in _file_schema(reader_schema)}
+    by_id = {f["id"]: f["name"] for f in writer_schema.fields}
+    exprs = []
     for f in reader_schema.fields:
-        w = by_id.get(f["id"])
-        target_t = _parse_type(f["type"])
-        if w is not None and w["name"] in have:
-            cols.append(F.col(w["name"]).cast(target_t).alias(f["name"]))
+        name, w = _q(f["name"]), by_id.get(f["id"])
+        ddl = "bigint" if _is_time_type(f["type"]) else f["type"]
+        if w not in file_types:
+            exprs.append(f"CAST(NULL AS {ddl}) AS {name}")
+        elif file_types[w] != read_types[f["name"]]:
+            exprs.append(f"CAST({_q(w)} AS {ddl}) AS {name}")
         else:
-            cols.append(F.lit(None).cast(target_t).alias(f["name"]))
+            exprs.append(name if w == f["name"] else f"{_q(w)} AS {name}")
     if keep_sys:
-        sys_types = {SEQ_COL: "long", POS_COL: "long", KIND_COL: "string"}
-        for c in SYS_COLS:
-            cols.append(
-                F.col(c) if c in have else F.lit(None).cast(sys_types[c]).alias(c)
-            )
-    for c in extra:
-        cols.append(F.col(c))
-    return df.select(*cols)
+        for c, ddl in ((SEQ_COL, "bigint"), (POS_COL, "bigint"), (KIND_COL, "string")):
+            exprs.append(
+                _q(c) if c in file_types else f"CAST(NULL AS {ddl}) AS {_q(c)}")
+    exprs += map(_q, extra)
+    return df if exprs == [*map(_q, file_types)] else df.selectExpr(*exprs)
 
 
 def _pad_columns(df: DataFrame, schema: TableSchema) -> DataFrame:

@@ -27,3 +27,22 @@ def test_ratio_pairs_won_and_bound_direction():
     assert ab._past_bound({"name": "m", "better": "lower"}, 9.0) == 0
     assert ab._seeds("3-5") == [3, 4, 5] and ab._seeds("7") == [7]
     assert ab._quartiles([1.0, 2.0, 3.0, 4.0, 5.0]) == (2.0, 3.0, 4.0)
+
+
+def test_layer_report_gives_medians_and_skips_untouched_layers(capsys):
+    spec = {"per_layer": [{"name": "scan.build_s", "better": "lower"},
+                          {"name": "streaming.delta_rows", "better": "higher"}]}
+
+    def run(build, rows):
+        return {"attempted": 3, "failed": 0, "correct": True,
+                "metrics": {"scan.build_s": {"value": build},
+                            "streaming.delta_rows": {"value": rows}}}
+
+    pairs = [{"parent": run(p, 0.0), "change": run(c, 0.0)}
+             for p, c in ((0.2, 0.1), (0.4, 0.1), (0.3, 0.5))]
+    ab._report_layers(spec, pairs)
+    out = capsys.readouterr().out
+    assert "failed/attempted ops 0/9" in out
+    line = next(x for x in out.splitlines() if x.startswith("scan.build_s"))
+    assert line.split()[1:] == ["0.3000", "0.1000", "0.333", "2/3"]
+    assert "streaming.delta_rows" not in out  # 0 on both sides

@@ -11,6 +11,7 @@ from tests.test_merge_spec_property import (
     BIG,
     NAN,
     _norm,
+    arrow_table,
     merged_by_both,
     table_schema,
 )
@@ -58,6 +59,18 @@ ENGINE_CASES = {
         [(1, BIG + 2, NAN, 1.0, 2, (2**31 + 1) ** 2, "a", D("1.56")),
          (2, None, None, None, 0, None, None, None)],
     ),
+    "aggregation-all-null": (
+        "l string, c array<int>, d array<int>",
+        {"merge-engine": "aggregation",
+         "fields.l.aggregate-function": "listagg",
+         "fields.c.aggregate-function": "collect",
+         "fields.d.aggregate-function": "collect",
+         "fields.d.distinct": "true"},
+        [(1, "a", [1], [1], 1, 0, "I"), (1, None, None, None, 2, 1, "I"),
+         (2, None, None, None, 1, 2, "I"), (2, None, None, None, 2, 3, "I")],
+        # a key whose values are all NULL keeps NULL, as in Paimon
+        [(1, "a", [1], [1]), (2, None, None, None)],
+    ),
     "aggregation-keys-only": (
         "", {"merge-engine": "aggregation"},
         [(1, 1, 0, "I"), (1, 2, 1, "I"), (2, 1, 2, "I"), (3, 1, 3, "D")],
@@ -74,6 +87,37 @@ def test_engine_case(spark, case):
     assert spark_rows == arrow_rows
     assert sorted(spark_rows.elements(), key=repr) == sorted(
         (tuple(map(_norm, r)) for r in expected), key=repr)
+
+
+#: (declared type, aggregate function, one key's values) whose merge
+#: overflows the declared type
+OVERFLOW_CASES = {
+    "sum-bigint": ("bigint", "sum", [2**62, 2**62]),
+    "sum-int": ("int", "sum", [2**30, 2**30]),
+    "sum-decimal": ("decimal(4,2)", "sum", [D("99.99"), D("0.01")]),
+    "product-bigint": ("bigint", "product", [2**62, 4]),
+    "product-bigint-step": ("bigint", "product", [2**62, 4, 0]),
+    "product-int": ("int", "product", [2**16, 2**16]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(OVERFLOW_CASES))
+def test_overflow_raises_in_both_executors(spark, case):
+    """An aggregate that leaves its type raises in both executors, as
+    Spark's ANSI arithmetic does, instead of wrapping silently."""
+    from paimon_presto_spark.sources.datasource import _merge_arrow
+    from paimon_presto_spark.table import _file_schema, _merge_on_read, merge_spec
+
+    typ, fn, values = OVERFLOW_CASES[case]
+    schema = table_schema(f"v {typ}", {
+        "merge-engine": "aggregation", "fields.v.aggregate-function": fn})
+    rows = [(1, v, i + 1, 0, "I") for i, v in enumerate(values)]
+    spec = merge_spec(schema)
+    df = spark.createDataFrame(rows, _file_schema(schema))
+    with pytest.raises(Exception, match="OVERFLOW|OUT_OF_RANGE"):
+        _merge_on_read(df, spec).collect()
+    with pytest.raises(ArithmeticError, match="ARITHMETIC_OVERFLOW"):
+        _merge_arrow(arrow_table(schema, rows), spec)
 
 
 #: option sets merge_spec rejects, with the error they raise

@@ -129,12 +129,26 @@ def _norm(v):
     return v
 
 
+def arrow_table(schema, rows):
+    """`rows` as the Arrow table of one bucket's change rows under
+    `schema`, in the declared Arrow types."""
+    import pyarrow as pa
+
+    from paimon_presto_spark.sources.datasource import _arrow_type
+    from paimon_presto_spark.table import _file_schema
+
+    types = [_arrow_type(f["type"]) for f in schema.fields]
+    types += [pa.int64(), pa.int64(), pa.string()]
+    return pa.table({
+        f.name: pa.array([r[i] for r in rows], type=t)
+        for i, (f, t) in enumerate(zip(_file_schema(schema).fields, types))
+    })
+
+
 def merged_by_both(spark, schema, rows):
     """(Spark rows, Arrow rows) of merging `rows` under `schema`'s spec,
     each normalized for a multiset compare; both keep declared types."""
-    import pyarrow as pa
-
-    from paimon_presto_spark.sources.datasource import _arrow_type, _merge_arrow
+    from paimon_presto_spark.sources.datasource import _merge_arrow
     from paimon_presto_spark.table import _file_schema, _merge_on_read, merge_spec
 
     spec = merge_spec(schema)
@@ -142,14 +156,9 @@ def merged_by_both(spark, schema, rows):
     out = _merge_on_read(spark.createDataFrame(rows, file_schema), spec)
     assert [(f.name, f.dataType) for f in out.schema] == [
         (f.name, f.dataType) for f in file_schema if f.name in spec.columns]
-    types = [_arrow_type(f["type"]) for f in schema.fields]
-    types += [pa.int64(), pa.int64(), pa.string()]
-    tbl = pa.table({
-        f.name: pa.array([r[i] for r in rows], type=t)
-        for i, (f, t) in enumerate(zip(file_schema.fields, types))
-    })
+    tbl = arrow_table(schema, rows)
     got = _merge_arrow(tbl, spec).select(list(spec.columns))
-    assert got.schema.types == types[:len(spec.columns)]
+    assert got.schema.types == tbl.schema.types[:len(spec.columns)]
     spark_rows = Counter(tuple(map(_norm, r)) for r in out.collect())
     arrow_rows = Counter(
         tuple(_norm(r[c]) for c in spec.columns) for r in got.to_pylist())
@@ -161,8 +170,9 @@ _PRODUCT_BOUND = {"int": 2**31, "bigint": 2**63, "decimal(10,2)": 10**8 - 1}
 
 
 def _fits(schema, rows):
-    """Overflow is outside the contract (Spark raises under ANSI, Arrow
-    wraps): keep tables whose per-key products fit their type."""
+    """Overflow raises in both executors (the fixed cases in
+    ``test_merge_spec.py``), so it has no rows to compare: keep tables
+    whose per-key products fit their type."""
     for j, f in enumerate(schema.fields):
         fn = schema.options.get(f"fields.{f['name']}.aggregate-function")
         if fn != "product" or f["type"] not in _PRODUCT_BOUND:

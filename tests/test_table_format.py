@@ -595,7 +595,8 @@ class TestMergeEngines:
         assert got[1]["tags"] == ["a", "b", "b", "c"]
         assert got[1]["uniq"] == [1, 2, 3]
         assert dict(got[1]["attrs"]) == {"x": 1, "y": 20, "z": 30}
-        assert got[2]["tags"] == [] and got[2]["attrs"] is None
+        # a key whose values are all NULL keeps NULL, as in Paimon
+        assert got[2]["tags"] is None and got[2]["attrs"] is None
 
         # shuffle-free DataSource read agrees
         spark.dataSource.register(__import__(
@@ -787,6 +788,94 @@ def test_sort_compact_improves_file_skipping(spark, catalog):
     # results identical
     got = sorted(r["a"] for r in scan_after.to_df().collect())
     assert got == sorted(a for a, _ in rows if 100 <= a <= 120)
+
+
+@pytest.mark.parametrize("bucket", ["2", "-1"])
+def test_sort_compact_writes_one_run_per_group(spark, catalog, bucket):
+    """compact(sort_by) range-partitions on (partition, bucket, sort key):
+    each (partition, bucket) group is one sorted run — its files' sort-key
+    ranges are pairwise disjoint — and the rewrite writes at most shuffle
+    partitions + groups - 1 files. A dynamic-bucket table assigns its
+    buckets before the range partition, so its runs are sorted too."""
+    ddl = "k int, p string, a int"
+    t = catalog.create_table(
+        "default", "sc_run", ddl, primary_keys=["k", "p"], partition_keys=["p"],
+        options={"bucket": bucket, "dynamic-bucket.target-row-num": "500"},
+    )
+    data = [(i, "xyz"[i % 3], (i * 7919) % 1000) for i in range(1800)]
+    for lo in (0, 600, 1200):  # three commits, each spanning every group
+        t.upsert(spark.createDataFrame(data[lo:lo + 600], ddl).repartition(4))
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        t.compact(sort_by=["a"])
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    groups: dict = {}
+    for e in t.manifest_entries():
+        groups.setdefault((e["partition"]["p"], e["bucket"]), []).append(
+            (e["stats"]["a"]["min"], e["stats"]["a"]["max"]))
+    # 3 partitions x 2 buckets (a dynamic table opens more buckets)
+    assert len(groups) >= 6, sorted(groups)
+    n_files = sum(len(r) for r in groups.values())
+    assert n_files <= 8 + len(groups) - 1, n_files
+    for ranges in groups.values():
+        ranges.sort()
+        assert all(hi < lo for (_, hi), (lo, _) in zip(ranges, ranges[1:])), ranges
+    assert rows(t.to_df(), "k", "p", "a") == sorted(data)
+
+
+def test_reserved_word_columns_read_merge_and_sort_compact(spark, catalog):
+    """The read plan quotes every identifier it renders into SQL: keys,
+    values, partition columns and sort keys named by reserved words."""
+    ddl = "`order` int, `select` bigint, `group` string"
+    t = catalog.create_table(
+        "default", "kw", ddl, primary_keys=["order", "group"],
+        partition_keys=["group"], options={"merge-engine": "first-row"},
+    )
+    t.upsert(spark.createDataFrame([(1, 10, "a"), (2, 20, "b")], ddl))
+    t.upsert(spark.createDataFrame([(1, 99, "a"), (3, 30, "a")], ddl))
+    catalog.add_column("default", "kw", "from", "string")
+    want = [(1, 10, "a", None), (2, 20, "b", None), (3, 30, "a", None)]
+    assert rows(t.to_df()) == want
+    t.compact(sort_by=["select"])
+    assert rows(t.to_df()) == want
+
+
+def test_read_plan_costs_constant_jvm_calls_per_column(spark, catalog):
+    """Building ``to_df()`` of a primary-key table sends a constant number
+    of py4j commands per column list: the projection is one selectExpr
+    of SQL strings and the merge one window expression, so a column
+    costs about one command (the string crossing), not one per
+    Column-builder call."""
+    import gc
+
+    import py4j.clientserver as cs
+
+    def calls(ncol: int) -> int:
+        ddl = ", ".join(["k int"] + [f"c{i} bigint" for i in range(ncol - 1)])
+        t = catalog.create_table("default", f"wide{ncol}", ddl, primary_keys=["k"])
+        for _ in range(2):
+            t.upsert(spark.createDataFrame([tuple(range(ncol))], ddl))
+        t.to_df()  # warm the manifest and schema caches
+        send, n = cs.ClientServerConnection.send_command, [0]
+
+        def counting(self, command):
+            n[0] += 1
+            return send(self, command)
+
+        gc.collect()
+        gc.disable()  # py4j's finalizers send commands too
+        cs.ClientServerConnection.send_command = counting
+        try:
+            t.to_df()
+        finally:
+            cs.ClientServerConnection.send_command = send
+            gc.enable()
+        return n[0]
+
+    narrow, wide = calls(8), calls(48)
+    assert wide - narrow <= 3 * 40, (narrow, wide)
 
 
 def test_zorder_compact_skips_on_both_columns(spark, catalog):

@@ -3,6 +3,7 @@
 Usage, from anywhere in the checkout:
 
     python3 tools/ab_perfbench.py <parent-rev> --workload lake_ingest --seeds 1-6
+    python3 tools/ab_perfbench.py <parent-rev> --workload lake_query --seeds 1-3 --trace 1
 
 The parent's committed files are extracted (``git archive``) into a temp
 directory. For each seed the two trees run ``python3 perfbench/run.py
@@ -18,6 +19,12 @@ A metric whose median moved past its ``BENCHMARK.json`` bound is measured
 once more with a second set of pairs (Blink Twice: one sample of a noisy
 machine is not a finding). It is labelled ``confirmed`` when the second
 set moves past the bound the same way, else ``noise``.
+
+With ``--trace 1`` both sides run traced, and the report gives the
+per-layer metrics of ``BENCHMARK.json`` instead: each side's median, the
+change/parent ratio and the pairs the change won (per-layer metrics have
+no bound, so nothing is re-measured). A layer claim then comes from the
+same command as the end-to-end one.
 
 Reads perfbench and ``BENCHMARK.json``; edits neither.
 """
@@ -49,9 +56,9 @@ def _export(rev: str, dst: str) -> None:
     subprocess.run(["tar", "-x", "-C", dst], input=archive, check=True)
 
 
-def _run(tree: str, workload: str, seed: int, seconds: int) -> dict:
+def _run(tree: str, workload: str, seed: int, seconds: int, trace: int) -> dict:
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     proc = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
     for line in reversed(proc.stdout.splitlines()):
         if line.startswith("{"):
@@ -61,13 +68,13 @@ def _run(tree: str, workload: str, seed: int, seconds: int) -> dict:
 
 
 def _pairs(trees: dict[str, str], workload: str, seeds: list[int],
-           seconds: int) -> list[dict[str, dict]]:
+           seconds: int, trace: int) -> list[dict[str, dict]]:
     out = []
     for i, seed in enumerate(seeds):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         pair = {}
         for side in order:
-            pair[side] = _run(trees[side], workload, seed, seconds)
+            pair[side] = _run(trees[side], workload, seed, seconds, trace)
             m = {k: round(v["value"], 4) for k, v in pair[side]["metrics"].items()}
             print(f"# seed {seed} {side:<6} correct={pair[side]['correct']} {m}",
                   flush=True)
@@ -105,13 +112,34 @@ def _past_bound(metric: dict, ratio: float) -> int:
     return 1 if worse > bound else (-1 if worse < -bound else 0)
 
 
-def _report(spec: dict, pairs: list[dict[str, dict]], recheck: dict) -> None:
+def _report_ops(pairs: list[dict[str, dict]]) -> None:
     n = len(pairs)
     for side in ("parent", "change"):
         att = sum(p[side]["attempted"] for p in pairs)
         fail = sum(p[side]["failed"] for p in pairs)
         bad = sum(not p[side]["correct"] for p in pairs)
         print(f"{side:<7} failed/attempted ops {fail}/{att}, incorrect runs {bad}/{n}")
+
+
+def _report_layers(spec: dict, pairs: list[dict[str, dict]]) -> None:
+    """Per-layer medians of traced pairs; a metric both sides read 0 on
+    (a layer the workload does not touch) is left out."""
+    _report_ops(pairs)
+    print(f"{'metric':<28} {'parent med':>14} {'change med':>14} {'ratio':>7} {'won':>6}")
+    for metric in spec["per_layer"]:
+        name = metric["name"]
+        med = [statistics.median(p[side]["metrics"][name]["value"] for p in pairs)
+               for side in ("parent", "change")]
+        if med == [0, 0]:
+            continue
+        ratio, won = _moved(metric, pairs) if med[0] else (float("inf"), 0)
+        print(f"{name:<28} {med[0]:14.4f} {med[1]:14.4f} {ratio:7.3f} "
+              f"{won:>2}/{len(pairs):<3}")
+
+
+def _report(spec: dict, pairs: list[dict[str, dict]], recheck: dict) -> None:
+    n = len(pairs)
+    _report_ops(pairs)
     print(f"{'metric':<14} {'parent q1/med/q3':>26} {'change q1/med/q3':>26}"
           f" {'ratio':>7} {'won':>6}  verdict")
     for metric in spec["end_to_end"]:
@@ -131,6 +159,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("parent", help="git rev of the parent side")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="a-b, inclusive")
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0,
+                    help="1: traced pairs, per-layer report")
     args = ap.parse_args(argv)
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
@@ -141,13 +171,16 @@ def main(argv: list[str] | None = None) -> int:
     try:
         _export(args.parent, tmp)
         trees = {"parent": tmp, "change": ROOT}
-        pairs = _pairs(trees, args.workload, seeds, seconds)
+        pairs = _pairs(trees, args.workload, seeds, seconds, args.trace)
+        if args.trace:
+            _report_layers(spec, pairs)
+            return 0
         recheck = {}
         moved = {m["name"]: _past_bound(m, _moved(m, pairs)[0])
                  for m in spec["end_to_end"]}
         if any(moved.values()):
             print("# a median moved past its bound: measuring once more", flush=True)
-            again = _pairs(trees, args.workload, seeds, seconds)
+            again = _pairs(trees, args.workload, seeds, seconds, 0)
             for m in spec["end_to_end"]:
                 if moved[m["name"]]:
                     same = _past_bound(m, _moved(m, again)[0]) == moved[m["name"]]
