@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -149,11 +150,9 @@ class Catalog:
             # TIME type, but the reference surface does (mapped to
             # micros-since-midnight bigint — see table._parse_type). The
             # declared "time" string is preserved in the table metadata.
-            import re as _re
-
             fields = []
             for i, (nm, typ) in enumerate(split_ddl_fields(schema)):
-                typ, n_notnull = _re.subn(r"(?i)\s+not\s+null\s*$", "", typ)
+                typ, n_notnull = re.subn(r"(?i)\s+not\s+null\s*$", "", typ)
                 tstr = "time" if _is_time_type(typ) else _parse_type(typ).simpleString()
                 fields.append(
                     {"id": i, "name": nm, "type": tstr, "nullable": n_notnull == 0}
@@ -532,7 +531,7 @@ class Catalog:
 
 
 _INT_RANK = {"tinyint": 0, "smallint": 1, "int": 2, "bigint": 3}
-_DECIMAL_RE = None  # lazy-compiled
+_DECIMAL_RE = re.compile(r"^decimal\((\d+),(\d+)\)$")
 
 
 def _normalize_type(t: str) -> str:
@@ -540,11 +539,6 @@ def _normalize_type(t: str) -> str:
 
 
 def _decimal_ps(t: str) -> tuple[int, int] | None:
-    global _DECIMAL_RE
-    import re as _re
-
-    if _DECIMAL_RE is None:
-        _DECIMAL_RE = _re.compile(r"^decimal\((\d+),(\d+)\)$")
     m = _DECIMAL_RE.match(_normalize_type(t))
     return (int(m.group(1)), int(m.group(2))) if m else None
 

@@ -6,9 +6,12 @@ writers (the DataSource write path) must place rows in the same bucket as
 JVM writers or bucket-aligned merge-on-read breaks — so this module
 re-implements exactly the subset Spark uses:
 
-- XXH64 over an 8-byte little-endian long (``hash_long``) — Spark hashes
-  every integral type (byte/short/int/long) through this shape;
-- XXH64 over raw bytes (``hash_bytes``) — strings hash as UTF-8 bytes;
+- XXH64 over an 8-byte little-endian long (``hash_long``) — bigint, and
+  a timestamp's (with or without time zone) micros since the epoch;
+- XXH64 over a 4-byte int (``hash_int``) — boolean/byte/short/int and a
+  date's days since the epoch;
+- XXH64 over raw bytes (``hash_bytes``) — strings, CHAR(n) and VARCHAR(n)
+  hash as the UTF-8 bytes of the stored value (a CHAR already padded);
 - multi-column chaining: ``hash(col_i, seed=hash(col_{i-1}, ...))`` with
   initial seed 42, null columns skipped (Spark keeps the running seed).
 
@@ -116,18 +119,21 @@ def _to_signed(u: int) -> int:
 
 
 #: ddl types routed through the 4-byte int path vs the 8-byte long path
-_INT_TYPES = {"boolean", "tinyint", "smallint", "int"}
-_LONG_TYPES = {"bigint"}
+_INT_TYPES = {"boolean", "tinyint", "smallint", "int", "date"}
+_LONG_TYPES = {"bigint", "timestamp", "timestamp_ntz"}
 
 
 def spark_xxhash64(values_with_types) -> int:
     """Bit-identical twin of ``F.xxhash64(*cols)``.
 
     `values_with_types` is a sequence of (value, ddl_type) — the column
-    type decides the hash shape (Spark hashes boolean/byte/short/int via a
-    4-byte path, bigint via an 8-byte path, strings as UTF-8 bytes). None
-    values are skipped with the running seed carried through, exactly as
-    Spark does. Returns Spark's signed 64-bit result.
+    type decides the hash shape (Spark hashes boolean/byte/short/int and
+    date via a 4-byte path, bigint and timestamps via an 8-byte path,
+    strings, CHAR and VARCHAR as UTF-8 bytes). A date is given as its
+    days since the epoch and a timestamp as its micros since the epoch,
+    the values Spark hashes. None values are skipped with the running
+    seed carried through, exactly as Spark does. Returns Spark's signed
+    64-bit result.
     """
     h = SPARK_SEED
     for v, t in values_with_types:
@@ -137,14 +143,14 @@ def spark_xxhash64(values_with_types) -> int:
             h = hash_int(int(v), h)
         elif t in _LONG_TYPES:
             h = hash_long(int(v), h)
-        elif t == "string":
+        elif t == "string" or t.startswith(("char(", "varchar(")):
             h = hash_bytes(str(v).encode("utf-8"), h)
         elif t == "binary":
             h = hash_bytes(bytes(v), h)
         else:
             raise TypeError(
                 f"unsupported bucket-key type {t!r}; bucket keys must be "
-                "integral, string, or binary"
+                "integral, date, timestamp, string, char, varchar or binary"
             )
     return _to_signed(h)
 

@@ -8,15 +8,18 @@ unavailable; instead the container format is implemented here directly
 (Avro 1.11 spec: https://avro.apache.org/docs/1.11.1/specification/) and
 run INSIDE executors:
 
-- **read**: the file list becomes a one-column DataFrame, ``mapInPandas``
-  decodes each file into Arrow batches — per-file parallelism, no driver
-  materialization. The writer schema embedded in the first file's header
-  (a few hundred bytes, read driver-side) declares the output schema.
-- **write**: ``mapInPandas`` over the staged DataFrame writes one file per
+- **read**: the file list becomes a one-column DataFrame, ``mapInArrow``
+  decodes each file into Arrow batches (``read_arrow``) — per-file
+  parallelism, no driver materialization. The writer schema embedded in
+  the first file's header (a few hundred bytes, read driver-side)
+  declares the output schema.
+- **write**: ``mapInArrow`` over the staged DataFrame writes one file per
   (task, partition-dir) into the same ``k=v`` staging layout the parquet
   writer produces, computing min/max/null-count stats in the same pass
   (avro has no parquet-style footer stats, so the writer IS the stats
   source — the same contract ``_orc_file_stats`` fulfills for ORC).
+  Values go from Spark's Arrow batches straight to the encoder: no
+  pandas, so int64 stays exact and NaN stays apart from NULL.
 
 Scale note: per-row Python decode is ~10-50× slower than the vectorized
 JVM parquet path. Avro is supported for *compatibility* (migrating tables
@@ -318,20 +321,16 @@ def _encoder(sch: Any) -> Callable[[io.BytesIO, Any], None]:
         return enc_date
     if logical in ("timestamp-micros", "local-timestamp-micros"):
 
+        epoch = datetime.datetime(1970, 1, 1)
+        us = datetime.timedelta(microseconds=1)
+
         def enc_ts(out, v):
-            # pandas.Timestamp / datetime → micros since epoch (naive
-            # values treated as UTC wall-clock: symmetric with the decoder,
-            # so roundtrip is exact regardless of session zone)
-            if hasattr(v, "value"):  # pandas.Timestamp, ns resolution
-                micros = v.value // 1000
-            else:
-                if v.tzinfo is not None:
-                    micros = int(v.timestamp() * 1_000_000)
-                else:
-                    micros = (
-                        v - datetime.datetime(1970, 1, 1)
-                    ) // datetime.timedelta(microseconds=1)
-            _write_long(out, micros)
+            # datetime → exact micros since epoch (naive values are UTC
+            # wall-clock: symmetric with the decoder, so roundtrip is
+            # exact regardless of session or process zone)
+            if v.tzinfo is not None:
+                v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+            _write_long(out, (v - epoch) // us)
 
         return enc_ts
     if logical == "decimal":
@@ -355,8 +354,7 @@ def _encoder(sch: Any) -> Callable[[io.BytesIO, Any], None]:
 
         def enc_arr(out, v):
             if is_map:
-                # dicts from the row path; Arrow->pandas delivers MapType
-                # as a list of (key, value) 2-tuples — normalize both.
+                # a dict, or Arrow's list of (key, value) 2-tuples
                 if isinstance(v, dict):
                     v = [{"key": k, "value": x} for k, x in v.items()]
                 else:
@@ -516,6 +514,8 @@ class AvroWriter:
         if codec not in ("null", "deflate"):
             raise ValueError(f"avro: unsupported write codec {codec!r}")
         self.codec = codec
+        self.path = path
+        self.n_rows = 0  # rows written so far
         self.schema = avro_schema
         self.enc = _encoder(avro_schema)
         self.sync = uuid.uuid4().bytes
@@ -541,6 +541,7 @@ class AvroWriter:
 
     def write(self, row: Any) -> None:
         self.enc(self.block, row)
+        self.n_rows += 1
         self.block_rows += 1
         if self.block_rows >= _BLOCK_ROWS:
             self._flush_block()
@@ -633,39 +634,42 @@ def read_file_rows(path: str) -> Iterator[dict]:
 # ---------------------------------------------------------------------------
 
 
+def read_arrow(path: str):
+    """One container file → a pyarrow Table in the Arrow types of its
+    writer schema (``to_arrow_schema`` of ``avro_to_spark_type``:
+    timestamps in UTC, int64 exact, NaN apart from NULL). The one avro
+    decoder: the DataFrame read (``read_avro``) and the DataSource reader
+    (``datasource._read_arrow_file``) both run it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    avro_schema, _, _, _ = read_header(path)
+    schema = to_arrow_schema(avro_to_spark_type(avro_schema)[0])
+    rows = list(read_file_rows(path))
+    return pa.table(
+        [pa.array([r[f.name] for r in rows], f.type) for f in schema],
+        schema=schema,
+    )
+
+
 def read_avro(spark: SparkSession, files: list[str]) -> DataFrame:
     """Distributed avro read: one header probe driver-side for the schema,
-    then ``mapInPandas`` decodes files in executors (a task decodes whole
+    then ``mapInArrow`` decodes files in executors (a task decodes whole
     files — the avro analog of parquet's file-granular splits; container
     blocks could subdivide further, unneeded at bucket-bounded file sizes).
     """
-    import pandas as pd
-
     avro_schema, _, _, _ = read_header(files[0])
     spark_schema, _ = avro_to_spark_type(avro_schema)
     paths_df = spark.createDataFrame(
         [(f,) for f in files], T.StructType([T.StructField("path", T.StringType())])
     ).repartition(min(len(files), 32))
-    names = [f.name for f in spark_schema.fields]
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path in pdf["path"]:
-                rows: list[dict] = []
-                for row in read_file_rows(path):
-                    rows.append(row)
-                    if len(rows) >= 65536:
-                        yield pd.DataFrame(
-                            {n: [r[n] for r in rows] for n in names},
-                            dtype=object,
-                        )
-                        rows = []
-                if rows:
-                    yield pd.DataFrame(
-                        {n: [r[n] for r in rows] for n in names}, dtype=object
-                    )
+    def decode(batches):
+        for batch in batches:
+            for path in batch.column("path").to_pylist():
+                yield from read_arrow(path).to_batches(max_chunksize=65536)
 
-    return paths_df.mapInPandas(decode, schema=spark_schema)
+    return paths_df.mapInArrow(decode, schema=spark_schema)
 
 
 def write_avro_partitioned(
@@ -680,44 +684,18 @@ def write_avro_partitioned(
     file columns), returning ``{abspath: (stats, n_rows)}`` — the
     ``_orc_file_stats`` contract, computed in the same pass as the write.
 
-    One file per (task, partition-dir): tasks stream their Arrow batches
-    into per-dir writers, so parallelism matches the incoming partitioning
-    exactly like ``DataFrameWriter.partitionBy``.
+    One file per (task, partition-dir): a ``mapInArrow`` task splits each
+    Arrow batch by its ``dir_cols`` values (``datasource.split_groups``,
+    the DataSource writer's splitter) and streams the groups into per-dir
+    writers, so parallelism matches the incoming partitioning exactly
+    like ``DataFrameWriter.partitionBy``.
     """
-    import pandas as pd
+    import pyarrow as pa
 
     data_fields = [f for f in df.schema.fields if f.name not in dir_cols]
-    file_schema = T.StructType(data_fields)
-    avro_schema = spark_to_avro_schema(file_schema)
+    avro_schema = spark_to_avro_schema(T.StructType(data_fields))
     names = [f.name for f in data_fields]
-    dir_types = {
-        f.name: f.dataType.simpleString()
-        for f in df.schema.fields
-        if f.name in dir_cols
-    }
-
-    def _dir_value(c: str, v) -> str:
-        """Render one partition value the way DataFrameWriter.partitionBy
-        does: NULL -> the Hive sentinel, integer columns as plain ints
-        (Arrow->pandas floatifies nullable ints, so 3 arrives as 3.0),
-        booleans lowercase. Diverging from the parquet layout would break
-        _typed_partition at scan time (int('3.0') raises) and make NULLs
-        group as the literal string 'nan'."""
-        import numpy as np
-
-        if _is_na(v):
-            return "__HIVE_DEFAULT_PARTITION__"
-        if isinstance(v, np.generic):
-            v = v.item()
-        t = dir_types[c]
-        if t in ("tinyint", "smallint", "int", "bigint"):
-            return str(int(v))
-        if t == "boolean":
-            return "true" if v else "false"
-        return str(v)
-    stat_cols = [
-        n for n in names if n in statable
-    ]
+    stat_cols = [n for n in names if n in statable]
     os.makedirs(staging, exist_ok=True)
 
     meta_schema = T.StructType(
@@ -728,117 +706,65 @@ def write_avro_partitioned(
         ]
     )
 
-    def _plain_stat(v):
-        import datetime
-        import decimal
+    def write_task(batches):
+        from paimon_presto_spark.sources.datasource import split_groups
 
-        import numpy as np
-
-        if isinstance(v, np.generic):
-            v = v.item()
-        if isinstance(v, decimal.Decimal):
-            return float(v)
-        if isinstance(v, (pd.Timestamp, datetime.datetime, datetime.date)):
-            if isinstance(v, pd.Timestamp):
-                v = v.to_pydatetime()
-            return v.isoformat()
-        if isinstance(v, bytes):
-            return None
-        return v
-
-    def write_task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        writers: dict[str, AvroWriter] = {}
-        counts: dict[str, int] = {}
+        writers: dict[str, AvroWriter] = {}  # reldir -> its file's writer
         stats: dict[str, dict[str, dict]] = {}
-
-        def sink_for(reldir: str) -> str:
-            d = os.path.join(staging, reldir) if reldir else staging
-            os.makedirs(d, exist_ok=True)
-            path = os.path.join(d, f"part-{uuid.uuid4().hex}.avro")
-            writers[path] = AvroWriter(path, avro_schema, codec)
-            counts[path] = 0
-            stats[path] = {}
-            return path
-
-        open_by_dir: dict[str, str] = {}
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            if dir_cols:
-                groups = pdf.groupby(dir_cols, dropna=False, sort=False)
-            else:
-                groups = [((), pdf)]
-            for key, g in groups:
-                if dir_cols:
-                    if not isinstance(key, tuple):
-                        key = (key,)
-                    reldir = os.sep.join(
-                        f"{c}={_dir_value(c, v)}" for c, v in zip(dir_cols, key)
-                    )
-                else:
-                    reldir = ""
-                path = open_by_dir.get(reldir)
-                if path is None:
-                    path = open_by_dir[reldir] = sink_for(reldir)
-                w = writers[path]
-                recs = g[names].to_dict("records")
-                for rec in recs:
-                    # pandas NaN → None for avro null branches
-                    w.write(
-                        {
-                            k: (None if _is_na(v) else v)
-                            for k, v in rec.items()
-                        }
-                    )
-                counts[path] += len(recs)
-                st = stats[path]
+            for values, g in split_groups(pa.Table.from_batches([batch]), dir_cols):
+                reldir = os.sep.join(f"{c}={values[c]}" for c in dir_cols)
+                w = writers.get(reldir)
+                if w is None:
+                    d = os.path.join(staging, reldir) if reldir else staging
+                    os.makedirs(d, exist_ok=True)
+                    path = os.path.join(d, f"part-{uuid.uuid4().hex}.avro")
+                    w = writers[reldir] = AvroWriter(path, avro_schema, codec)
+                    stats[reldir] = {}
+                for rec in g.select(names).to_pylist():
+                    w.write(rec)
                 for c in stat_cols:
-                    col = g[c]
-                    nn = col.dropna()
-                    a = st.setdefault(
-                        c, {"min": None, "max": None, "null_count": 0}
-                    )
-                    a["null_count"] += int(col.isna().sum())
-                    if len(nn):
-                        mn, mx = _plain_stat(nn.min()), _plain_stat(nn.max())
-                        if mn is not None:
-                            a["min"] = mn if a["min"] is None else min(a["min"], mn)
-                        if mx is not None:
-                            a["max"] = mx if a["max"] is None else max(a["max"], mx)
-        for path, w in writers.items():
+                    _merge_stats(stats[reldir], c, g[c])
+        for w in writers.values():
             w.close()
-        yield pd.DataFrame(
+        yield pa.RecordBatch.from_pydict(
             {
-                "path": list(writers),
-                "n_rows": [counts[p] for p in writers],
-                "stats": [json.dumps(stats[p]) for p in writers],
-            }
+                "path": [w.path for w in writers.values()],
+                "n_rows": [w.n_rows for w in writers.values()],
+                "stats": [json.dumps(stats[d]) for d in writers],
+            },
+            schema=pa.schema(
+                [("path", pa.string()), ("n_rows", pa.int64()), ("stats", pa.string())]
+            ),
         )
 
     out: dict[str, tuple[dict, int]] = {}
-    for r in df.mapInPandas(write_task, schema=meta_schema).collect():
-        if r["n_rows"] == 0:
-            try:
-                os.remove(r["path"])
-            except OSError:
-                pass
-            continue
+    for r in df.mapInArrow(write_task, schema=meta_schema).collect():
         out[os.path.abspath(r["path"])] = (json.loads(r["stats"]), int(r["n_rows"]))
     return out
 
 
-def _is_na(v) -> bool:
-    import pandas as pd
+def _merge_stats(acc: dict[str, dict], name: str, col) -> None:
+    """Fold the Arrow column `col` into ``acc[name]``'s min/max/null_count
+    under ``table._footer_stats``' rules for parquet: NULL and NaN are
+    left out of min/max (Arrow's ``min_max`` of an all-NaN column is
+    inf/-inf, which records nothing), values render through
+    ``table._plain`` and timestamps compare in UTC."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    if v is None:
-        return True
-    if isinstance(v, (list, dict, tuple, bytes, str)):
-        return False
-    try:
-        import numpy as np
+    from paimon_presto_spark.table import _plain
 
-        if isinstance(v, np.ndarray):
-            return False
-        return bool(pd.isna(v))
-    except (TypeError, ValueError):
-        return False
+    if pa.types.is_timestamp(col.type) and col.type.tz is not None:
+        col = col.cast(pa.timestamp(col.type.unit, "UTC"))
+    a = acc.setdefault(name, {"min": None, "max": None, "null_count": 0})
+    a["null_count"] += col.null_count
+    mm = pc.min_max(col)
+    mn, mx = mm["min"].as_py(), mm["max"].as_py()
+    if mn is None or mn > mx:
+        return
+    mn, mx = _plain(mn), _plain(mx)
+    a["min"] = mn if a["min"] is None else min(a["min"], mn)
+    a["max"] = mx if a["max"] is None else max(a["max"], mx)

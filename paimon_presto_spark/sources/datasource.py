@@ -26,19 +26,21 @@ Spark's `pyspark.sql.datasource` SPI):
   subset of the deletion-vector index.
 - ``PaimonReader.read``         — pyarrow scan per split, yielding Arrow
   RecordBatches in the render schema; primary-key groups are merged IN
-  the split (pandas), which is the **shuffle-free merge-on-read**:
-  bucketed writes guarantee every version of a key lives in one bucket,
-  so the merge never crosses split boundaries. (The DataFrame-path
-  ``Table.to_df`` merges with a window over a shuffle instead; this
-  reader is the bucket-aligned variant SURVEY §7 risk 5 calls for.)
+  the split (Arrow, ``_merge_arrow``), which is the **shuffle-free
+  merge-on-read**: bucketed writes guarantee every version of a key
+  lives in one bucket, so the merge never crosses split boundaries.
+  (The DataFrame-path ``Table.to_df`` merges with a window over a
+  shuffle instead; this reader is the bucket-aligned variant SURVEY §7
+  risk 5 calls for.)
 - ``PaimonStreamReader``        — snapshot-id offsets over
   ``Table.commit_walk``, the commit walk ``Table.incremental_df`` uses.
 - ``PaimonWriter``              — task-parallel writes: append/overwrite
   for plain tables, upsert/delete (``option("rowkind", "D")``) for
-  primary-key tables. Each task writes parquet files + footer stats and
-  reports manifest entries in its commit message; the driver-side
-  ``commit`` publishes the snapshot through ``Table._commit``, the one
-  commit path of the package (A22 semantics). Bucket
+  primary-key tables. Each task takes Spark's Arrow batches (a
+  ``DataSourceArrowWriter``: no Rows, no pandas), writes parquet files +
+  footer stats and reports manifest entries in its commit message; the
+  driver-side ``commit`` publishes the snapshot through ``Table._commit``,
+  the one commit path of the package (A22 semantics). Bucket
   assignment uses ``functions/xxhash.spark_bucket`` — a pure-Python XXH64
   bit-identical to the JVM ``pmod(xxhash64(pks), n)`` — so DataSource and
   Table-API writes interleave on one table with a consistent bucket layout.
@@ -66,10 +68,10 @@ from typing import Any, Iterator, Sequence
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
+    DataSourceStreamArrowWriter,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
     EqualTo,
     Filter,
     GreaterThan,
@@ -86,6 +88,12 @@ from pyspark.sql.datasource import (
 
 from paimon_presto_spark.plans.predicate import P, Predicate
 from paimon_presto_spark.table import (
+    HIVE_DEFAULT_PARTITION,
+    KIND_COL,
+    PART_DIR_PREFIX,
+    POS_COL,
+    SEQ_COL,
+    SYS_COLS,
     CommitConflict,
     MergeSpec,
     Snapshot,
@@ -97,6 +105,7 @@ from paimon_presto_spark.table import (
     _footer_stats,
     _is_time_type,
     _next_id,
+    _statable,
     _varchar_len,
     merge_spec,
     split_ddl_fields,
@@ -194,7 +203,7 @@ def _arrow_type(ddl: str):
     return None
 
 
-_SYS_DDL = {"__seq": "bigint", "__pos": "bigint", "__row_kind": "string"}
+_SYS_DDL = {SEQ_COL: "bigint", POS_COL: "bigint", KIND_COL: "string"}
 
 
 def _cast_to_schema(tbl, schema: dict, writing: bool = False):
@@ -429,10 +438,10 @@ def read_split_arrow(partition: PaimonPartition):
 def _read_arrow_file(f: str):
     """Data file → pyarrow Table. Parquet and ORC ride pyarrow's native
     readers; .avro files (``file.format=avro`` tables) decode through the
-    pure-Python container codec — per-split parallelism is identical, and
-    column names/values match what the writer staged, so downstream
+    pure-Python container codec (``avroio.read_arrow``, the decoder the
+    DataFrame read path runs too) — per-split parallelism is identical,
+    and column names/values match what the writer staged, so downstream
     field-id projection and merge are format-blind."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     if f.endswith(".orc"):
@@ -443,25 +452,7 @@ def _read_arrow_file(f: str):
         return pq.read_table(f)
     from paimon_presto_spark.sources import avroio
 
-    avro_schema, _, _, _ = avroio.read_header(f)
-    spark_schema, _ = avroio.avro_to_spark_type(avro_schema)
-    rows = list(avroio.read_file_rows(f))
-    cols, names = [], []
-    sys_types = {
-        "__seq": pa.int64(),
-        "__pos": pa.int64(),
-        "__row_kind": pa.string(),
-        "__bucket": pa.int32(),
-    }
-    for fld in spark_schema.fields:
-        names.append(fld.name)
-        typ = sys_types.get(fld.name)
-        vals = [r.get(fld.name) for r in rows]
-        if typ is None:
-            cols.append(pa.array(vals))
-        else:
-            cols.append(pa.array(vals, type=typ))
-    return pa.table(dict(zip(names, cols)))
+    return avroio.read_arrow(f)
 
 
 def _project_arrow(tbl, writer_schema: dict, reader_schema: dict):
@@ -483,7 +474,7 @@ def _project_arrow(tbl, writer_schema: dict, reader_schema: dict):
         else:
             cols.append(pa.nulls(n, type=target or pa.string()))
         names.append(f["name"])
-    for c in ("__seq", "__pos", "__row_kind"):
+    for c in SYS_COLS:
         if c in tbl.column_names:
             cols.append(tbl.column(c))
             names.append(c)
@@ -505,7 +496,7 @@ def _merge_arrow(tbl, spec: MergeSpec):
     import pyarrow.compute as pc
 
     if spec.engine != "deduplicate":  # every other engine ignores deletes
-        tbl = tbl.filter(pc.not_equal(tbl["__row_kind"], "D"))
+        tbl = tbl.filter(pc.not_equal(tbl[KIND_COL], "D"))
     n = tbl.num_rows
     rows = np.arange(n)
     keys = tbl.select(list(spec.keys)).append_column("__i", pa.array(rows))
@@ -534,10 +525,10 @@ def _merge_arrow(tbl, spec: MergeSpec):
         none = (best < 0) | (best >= n)
         return pa.array(ordered[np.where(none, 0, best)], mask=none)
 
-    latest = order(*spec.sequence_fields, "__seq", "__pos")
+    latest = order(*spec.sequence_fields, SEQ_COL, POS_COL)
     if spec.engine in ("deduplicate", "first-row"):
         tbl = tbl.take(pick(latest, first=spec.engine == "first-row"))
-        return tbl.filter(pc.not_equal(tbl["__row_kind"], "D"))
+        return tbl.filter(pc.not_equal(tbl[KIND_COL], "D"))
     hashed = {"sum": "sum", "product": "product", "count": "count",
               "bool_and": "all", "bool_or": "any"}
     out = {k: groups[k] for k in spec.keys}
@@ -548,7 +539,7 @@ def _merge_arrow(tbl, spec: MergeSpec):
         ordered = latest
         if s is not None:  # a sequence group's member
             valid = valid & pc.is_valid(tbl[s]).to_numpy(zero_copy_only=False)
-            ordered = order(s, "__seq", "__pos")
+            ordered = order(s, SEQ_COL, POS_COL)
         picks = {"last_non_null": (ordered, valid, False),
                  "first_non_null": (ordered, valid, True),
                  "last_value": (latest, None, False),
@@ -620,6 +611,61 @@ def _fold(fn: str, vals: list, distinct: bool, typ):
     return list(merged.items())
 
 
+def split_groups(tbl, cols: list[str]):
+    """Yield ({column: directory value}, rows) for each distinct value
+    combination of `cols` in the Arrow table `tbl`, in order of first
+    appearance. Values render as Spark's ``CAST(... AS STRING)`` and
+    ``partitionBy`` do for partition types (``true``, ``3``, ``1.0``,
+    ``2024-01-02``; NULL as ``HIVE_DEFAULT_PARTITION``), so a file lands
+    in the directory the JVM writer would pick. The one row splitter of
+    the Python writers: the DataSource writer and the avro writer."""
+    import numpy as np
+    import pyarrow as pa
+
+    if not cols:
+        yield {}, tbl
+        return
+    groups = (
+        tbl.select(cols)
+        .append_column("__i", pa.array(np.arange(tbl.num_rows)))
+        .group_by(cols, use_threads=False)
+        .aggregate([("__i", "list")])
+    )
+    values = {}
+    for c in cols:
+        col = groups[c]
+        if pa.types.is_floating(col.type):  # Spark's 1.0, not Arrow's 1
+            rendered = [None if v is None else str(v) for v in col.to_pylist()]
+        else:
+            rendered = col.cast(pa.string()).to_pylist()
+        values[c] = [HIVE_DEFAULT_PARTITION if v is None else v for v in rendered]
+    for i, rows in enumerate(groups["__i_list"]):
+        yield {c: values[c][i] for c in cols}, tbl.take(rows.values)
+
+
+def _buckets(tbl, schema: dict):
+    """Each row's bucket in `schema`'s fixed-bucket primary-key table
+    (``functions/xxhash.spark_bucket``, the JVM's ``_fixed_bucket``): a
+    date hashes its days, a timestamp its micros since the epoch."""
+    import pyarrow as pa
+
+    from paimon_presto_spark.functions.xxhash import spark_bucket
+
+    types = {f["name"]: f["type"] for f in schema["fields"]}
+    keys = []
+    for k in schema["primary_keys"]:
+        col = tbl[k]
+        if pa.types.is_temporal(col.type):
+            col = col.cast(pa.int32() if pa.types.is_date32(col.type) else pa.int64())
+        keys.append(col.to_pylist())
+    nb = int(schema.get("options", {}).get("bucket", "4"))
+    pk_types = [types[k] for k in schema["primary_keys"]]
+    return pa.array(
+        [spark_bucket(nb, list(zip(vals, pk_types))) for vals in zip(*keys)],
+        pa.int32(),
+    )
+
+
 class PaimonCommitMessage(WriterCommitMessage):
     def __init__(self, entries: list[dict], base: Snapshot | None):
         self.entries = entries
@@ -629,13 +675,17 @@ class PaimonCommitMessage(WriterCommitMessage):
         self.base = base
 
 
-class PaimonWriter(DataSourceWriter):
+class PaimonWriter(DataSourceArrowWriter):
     """Task-parallel writes: append/overwrite for plain tables, upsert (or
     delete via ``option("rowkind", "D")``) for primary-key tables.
 
-    Each task writes its rows as parquet (footer stats from
-    ``table._footer_stats``, as the Table API records them) into a staging
-    dir and reports manifest entries; ``commit`` moves files into
+    Each task takes Spark's Arrow batches as they come (timestamps
+    time-zone aware, int64 exact, NaN apart from NULL), casts them once
+    to the declared types (``_cast_to_schema``), splits the rows by
+    (partition, bucket) with ``split_groups`` and writes each group as
+    one parquet file (footer stats from ``table._footer_stats``, as the
+    Table API records them) into a staging dir, reporting manifest
+    entries; ``commit`` moves files into
     ``data/`` and commits them through ``Table._commit`` — the same
     manifest write, hard-link snapshot publish, auto-tagging and snapshot
     retention as every Table-API commit. Primary-key rows carry
@@ -734,11 +784,15 @@ class PaimonWriter(DataSourceWriter):
         self.next_snapshot = _next_id(self.base)
 
     def write(self, iterator) -> PaimonCommitMessage:
+        import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        rows = list(iterator)
-        if self.rowkind_field is not None:
+        batches = list(iterator)
+        tbl = pa.Table.from_batches(batches) if batches else None
+        if tbl is not None and self.rowkind_field is not None:
+            kind = pc.utf8_upper(tbl[self.rowkind_field].cast(pa.string()))
             # UB / -U rows are UPDATE pre-images: the UA/+U row already
             # replaces the key, and writing the pre-image (as insert OR
             # tombstone) would race it — cross-task __pos order is salted,
@@ -746,63 +800,41 @@ class PaimonWriter(DataSourceWriter):
             # winners the way Table._commit_cdc_batch does. Dropping them
             # is Paimon's own pk-sink treatment of UPDATE_BEFORE; real
             # deletes arrive as -D/D.
-            rows = [
-                r
-                for r in rows
-                if str(r[self.rowkind_field]).upper() not in ("UB", "-U")
-            ]
-        if not rows:
+            keep = pc.invert(pc.is_in(kind, pa.array(["UB", "-U"])))
+            tbl, kind = tbl.filter(keep), kind.filter(keep)
+        if tbl is None or tbl.num_rows == 0:
             return PaimonCommitMessage([], self.base)
-        names = [f["name"] for f in self.schema["fields"]]
-        types = {f["name"]: f["type"] for f in self.schema["fields"]}
-        part_keys = self.schema.get("partition_keys", [])
-        # index by name, not getattr: Row.__getattr__ rejects the __seq/
-        # __row_kind system columns a paimon→paimon changelog pipe carries
-        cols = {n: [r[n] for r in rows] for n in names}
+        n = tbl.num_rows
+        cols = {f["name"]: tbl[f["name"]] for f in self.schema["fields"]}
         if self.pks:
-            from paimon_presto_spark.functions.xxhash import spark_bucket
-
-            nb = int(self.schema.get("options", {}).get("bucket", "4"))
-            pk_t = [(k, types[k]) for k in self.pks]
-            buckets = [
-                spark_bucket(nb, [(r[k], t) for k, t in pk_t])
-                for r in rows
-            ]
             # __pos only disambiguates same-key rows inside this commit;
             # a per-task random high word keeps it unique across tasks
             # (same role monotonically_increasing_id plays on the JVM path)
             salt = uuid.uuid4().int & 0x7FFFFFFF
-            cols["__seq"] = [self.next_snapshot] * len(rows)
-            cols["__pos"] = [(salt << 32) | i for i in range(len(rows))]
-            if self.rowkind_field is not None:
-                cols["__row_kind"] = [
-                    "D"
-                    if str(r[self.rowkind_field]).upper() in ("-D", "D")
-                    else "I"
-                    for r in rows
-                ]
-            else:
-                cols["__row_kind"] = [self.row_kind] * len(rows)
-        # nested columns take their declared type up front: inferred from
-        # Python values, array<int> would land as list<int64> and a map as
-        # a struct, unlike the file schema readers declare
-        nested = {n: _arrow_type(t) for n, t in types.items() if "<" in t}
-        tbl = pa.table(
-            {n: pa.array(v, type=nested.get(n)) for n, v in cols.items()}
-        )
+            cols[SEQ_COL] = pa.array(np.full(n, self.next_snapshot, np.int64))
+            cols[POS_COL] = pa.array((salt << 32) | np.arange(n, dtype=np.int64))
+            cols[KIND_COL] = (
+                pc.if_else(pc.is_in(kind, pa.array(["-D", "D"])), "D", "I")
+                if self.rowkind_field is not None
+                else pa.repeat(self.row_kind, n)
+            )
+        # declared types, CHAR padded and VARCHAR bounded before the
+        # bucket hash, as the JVM writer pads before _fixed_bucket
+        tbl = _cast_to_schema(pa.table(cols), self.schema, writing=True)
+        group_by = list(self.schema.get("partition_keys", []))
+        if self.pks:
+            tbl = tbl.append_column("__bucket", _buckets(tbl, self.schema))
+            group_by.append("__bucket")
         os.makedirs(self.staging, exist_ok=True)
+        statable = _statable(self.schema["fields"])
         entries = []
-        statable = {
-            f["name"]
-            for f in self.schema["fields"]
-            if not f["type"].startswith(("array", "map", "struct", "binary"))
-        }
-
-        def _write_group(sub_tbl, partition: dict[str, Any], bucket: int = 0):
+        for values, sub in split_groups(tbl, group_by):
+            bucket = int(values.pop("__bucket", 0))
+            if self.pks:
+                sub = sub.drop_columns(["__bucket"])
             name = f"data-ds-{uuid.uuid4().hex}.parquet"
             dst = os.path.join(self.staging, name)
-            pq.write_table(_cast_to_schema(sub_tbl, self.schema, writing=True), dst)
-            stats = _footer_stats(pq.ParquetFile(dst).metadata, statable)
+            pq.write_table(sub, dst)
             entries.append(
                 {
                     "path": name,  # staged; commit() relocates
@@ -810,39 +842,14 @@ class PaimonWriter(DataSourceWriter):
                     # driver-side writer instance is NOT the task's, so
                     # the message must carry where the file actually is
                     "staged": dst,
-                    "partition": {k: str(v) for k, v in partition.items()},
+                    "partition": values,
                     "bucket": bucket,
-                    "row_count": sub_tbl.num_rows,
+                    "row_count": sub.num_rows,
                     "file_size": os.path.getsize(dst),
                     "schema_id": self.schema["schema_id"],
-                    "stats": stats,
+                    "stats": _footer_stats(pq.ParquetFile(dst).metadata, statable),
                 }
             )
-
-        out_names = names + (["__seq", "__pos", "__row_kind"] if self.pks else [])
-        group_cols = list(part_keys)
-        pdf = None
-        if self.pks:
-            pdf = tbl.to_pandas()
-            pdf["__grp_bucket"] = buckets
-            group_cols = group_cols + ["__grp_bucket"]
-        elif part_keys:
-            pdf = tbl.to_pandas()
-        if pdf is not None:
-            for gvals, sub in pdf.groupby(group_cols, sort=False, dropna=False):
-                if not isinstance(gvals, tuple):
-                    gvals = (gvals,)
-                gmap = dict(zip(group_cols, gvals))
-                bucket = int(gmap.pop("__grp_bucket", 0))
-                _write_group(
-                    pa.Table.from_pandas(
-                        sub, schema=tbl.schema, preserve_index=False
-                    ).select(out_names),
-                    gmap,
-                    bucket,
-                )
-        else:
-            _write_group(tbl, {})
         return PaimonCommitMessage(entries, self.base)
 
     def commit(self, messages) -> None:
@@ -866,7 +873,8 @@ class PaimonWriter(DataSourceWriter):
             src = e.get("staged") or os.path.join(self.staging, e["path"])
             staging_dirs.add(os.path.dirname(src))
             parts = [
-                f"__part_{k}={v}" for k, v in sorted(e["partition"].items())
+                f"{PART_DIR_PREFIX}{k}={v}"
+                for k, v in sorted(e["partition"].items())
             ]
             if self.pks:
                 parts.append(f"__bucket={e['bucket']}")
@@ -914,7 +922,7 @@ class PaimonWriter(DataSourceWriter):
         _rmtree(self.staging)
 
 
-class PaimonStreamWriter(PaimonWriter, DataSourceStreamWriter):
+class PaimonStreamWriter(PaimonWriter, DataSourceStreamArrowWriter):
     """Streaming sink: ``df.writeStream.format("paimon")`` — every
     micro-batch is one atomic snapshot commit, stamped
     ``commit_user="stream:<query-name>"`` with the batch id as
@@ -1108,7 +1116,7 @@ class PaimonStreamReader(DataSourceStreamReader):
 
         schema = partition.schema
         names = [f["name"] for f in schema["fields"]]
-        out_names = names + [_SEQ, _KIND]
+        out_names = names + [SEQ_COL, KIND_COL]
 
         def finalize(tbl, seq_default: int, kind_default: str):
             n = tbl.num_rows
@@ -1116,9 +1124,9 @@ class PaimonStreamReader(DataSourceStreamReader):
             for c in out_names:
                 if c in tbl.column_names:
                     cols.append(tbl.column(c))
-                elif c == _SEQ:
+                elif c == SEQ_COL:
                     cols.append(pa.array([seq_default] * n, type=pa.int64()))
-                elif c == _KIND:
+                elif c == KIND_COL:
                     cols.append(pa.array([kind_default] * n, type=pa.string()))
                 else:
                     at = _arrow_type(
@@ -1148,17 +1156,13 @@ class PaimonStreamReader(DataSourceStreamReader):
         if not tables:
             return iter(())
         tbl = pa.concat_tables(tables, promote_options="permissive")
-        if "__pos" in tbl.column_names:
-            tbl = tbl.drop_columns(["__pos"])
+        if POS_COL in tbl.column_names:
+            tbl = tbl.drop_columns([POS_COL])
         return finalize(tbl, partition.seq, "I")
 
     def commit(self, end: dict) -> None:
         if self.consumer:
             self.table.register_consumer(self.consumer, int(end["snapshot"]) + 1)
-
-
-_SEQ = "__seq"
-_KIND = "__row_kind"
 
 
 def _dv_positions(path: str, dv_name: str) -> dict[str, list[int]]:
@@ -1204,7 +1208,7 @@ class PaimonDataSource(DataSource):
             for f in schema.fields
         )
         if self.options.get("changelog") == "true":
-            cols += f", `{_SEQ}` bigint, `{_KIND}` string"
+            cols += f", `{SEQ_COL}` bigint, `{KIND_COL}` string"
         return cols
 
     def reader(self, schema) -> PaimonReader:

@@ -84,6 +84,7 @@ POS_COL = "__pos"
 KIND_COL = "__row_kind"
 SYS_COLS = (SEQ_COL, POS_COL, KIND_COL)
 PART_DIR_PREFIX = "__part_"
+HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"  # a NULL's directory value
 DV_PATH_COL = "__dv_path"  # table-relative data-file path of a scanned row
 DV_POS_COL = "__dv_pos"  # row position within that file (_metadata.row_index)
 #: a change row's audit-log kind: '+I' or '-D' (Paimon's +I/-D)
@@ -148,16 +149,11 @@ class TableSchema:
         return int(self.options.get("bucket", "4"))
 
 
-_TIME_RE = None  # lazy
+_TIME_RE = _re_mod.compile(r"^\s*time\s*(\(\s*\d\s*\))?\s*$", _re_mod.I)
 
 
 def _is_time_type(ddl: str) -> bool:
     """True for TIME / TIME(p) declarations (any precision 0-9)."""
-    global _TIME_RE
-    if _TIME_RE is None:
-        import re as _re
-
-        _TIME_RE = _re.compile(r"^\s*time\s*(\(\s*\d\s*\))?\s*$", _re.I)
     return bool(_TIME_RE.match(ddl))
 
 
@@ -255,16 +251,11 @@ def split_ddl_fields(ddl: str) -> list[tuple[str, str]]:
     return fields
 
 
-_CHAR_RE = None  # lazy
+_CHAR_RE = _re_mod.compile(r"^\s*char\s*\(\s*(\d+)\s*\)\s*$", _re_mod.I)
 
 
 def _char_len(ddl: str) -> int | None:
     """n for CHAR(n) column types, else None."""
-    global _CHAR_RE
-    if _CHAR_RE is None:
-        import re as _re
-
-        _CHAR_RE = _re.compile(r"^\s*char\s*\(\s*(\d+)\s*\)\s*$", _re.I)
     m = _CHAR_RE.match(ddl)
     return int(m.group(1)) if m else None
 
@@ -280,16 +271,11 @@ def _apply_char_padding(col, ddl: str):
     return F.rpad(col, n, " ") if n is not None else col
 
 
-_VARCHAR_RE = None  # lazy
+_VARCHAR_RE = _re_mod.compile(r"^\s*varchar\s*\(\s*(\d+)\s*\)\s*$", _re_mod.I)
 
 
 def _varchar_len(ddl: str) -> int | None:
     """n for VARCHAR(n) column types, else None (bare varchar = unbounded)."""
-    global _VARCHAR_RE
-    if _VARCHAR_RE is None:
-        import re as _re
-
-        _VARCHAR_RE = _re.compile(r"^\s*varchar\s*\(\s*(\d+)\s*\)\s*$", _re.I)
     m = _VARCHAR_RE.match(ddl)
     return int(m.group(1)) if m else None
 
@@ -2430,11 +2416,7 @@ class Table:
             raise ValueError(
                 f"unsupported file.format {fmt!r}; expected parquet, orc or avro"
             )
-        statable = {
-            f["name"]
-            for f in schema.fields
-            if not f["type"].startswith(("array", "map", "struct", "binary"))
-        }
+        statable = _statable(schema.fields)
         if fmt == "avro":
             # no JVM avro DataSource in this distribution — executor-side
             # pure-Python container writer, stats computed in the same pass
@@ -3463,21 +3445,30 @@ def _merge_on_read(
             .filter(f"__rn = 1 AND {_q(KIND_COL)} <> 'D'")
             .selectExpr(*map(_q, out))
         )
-    df = df.filter(F.col(KIND_COL) != "D")  # the combining engines ignore deletes
+    # the combining engines ignore deletes; one aggregate of SQL strings
+    # (the cast DDL from one read of the schema), so building it costs a
+    # constant number of JVM calls, not a few per column
     types = {f.name: f.dataType for f in df.schema}
+    keys = ", ".join(map(_q, pks))
     merged = [
-        _merge_column(spec, c, types[c]).cast(types[c]).alias(c)
+        f"CAST({_merge_column(spec, c, types[c])} AS {types[c].simpleString()})"
+        f" AS {_q(c)}"
         for c in spec.values
     ]
-    return (
-        df.groupBy(*map(_q, pks))
-        .agg(*merged, F.max(SEQ_COL).alias(SEQ_COL))
-        .selectExpr(*map(_q, out))
-    )
+    seq = f"max({_q(SEQ_COL)}) AS {_q(SEQ_COL)}"
+    view = f"__merge_{uuid.uuid4().hex}"
+    df.createOrReplaceTempView(view)
+    try:
+        return df.sparkSession.sql(
+            f"SELECT {', '.join([keys, *merged, seq])} FROM {view}"
+            f" WHERE {_q(KIND_COL)} <> 'D' GROUP BY {keys}"
+        ).selectExpr(*map(_q, out))
+    finally:
+        df.sparkSession.catalog.dropTempView(view)
 
 
-def _merge_column(spec: MergeSpec, column: str, dtype: T.DataType) -> Column:
-    """The aggregate merging value column `column` of one key's change
+def _merge_column(spec: MergeSpec, column: str, dtype: T.DataType) -> str:
+    """The SQL aggregate merging value column `column` of one key's change
     rows under a combining engine (partial-update, aggregation). A key
     whose values are all NULL merges to NULL under every function but
     ``count``."""
@@ -3488,23 +3479,26 @@ def _merge_column(spec: MergeSpec, column: str, dtype: T.DataType) -> Column:
     if fn in ("last_non_null", "first_non_null"):
         by = "max_by" if fn == "last_non_null" else "min_by"
         guard = f"{c} IS NOT NULL" + (f" AND {_q(s)} IS NOT NULL" if s else "")
-        return F.expr(f"{by}({c}, IF({guard}, struct({latest}), NULL))")
+        return f"{by}({c}, IF({guard}, struct({latest}), NULL))"
     if fn in ("last_value", "first_value"):
         by = "max_by" if fn == "last_value" else "min_by"
-        return F.expr(f"{by}({c}, struct({latest}))")
-    if fn == "product" and isinstance(dtype, (T.IntegralType, T.DecimalType)):
-        # exact (Spark's product() computes in double); a decimal rounds
-        # to its declared scale at each step, as Paimon's does
-        t = "bigint" if isinstance(dtype, T.IntegralType) else dtype.simpleString()
-        return F.expr(
+        return f"{by}({c}, struct({latest}))"
+    if fn == "product":
+        # a fold, as Spark SQL has no product(); exact for integers and
+        # decimals (Spark's DataFrame product() computes in double), a
+        # decimal rounding to its declared scale at each step as Paimon's
+        # does, and in double for floats
+        t = (
+            "bigint" if isinstance(dtype, T.IntegralType)
+            else dtype.simpleString() if isinstance(dtype, T.DecimalType)
+            else "double"
+        )
+        return (
             f"IF(count({c}) = 0, NULL, aggregate(collect_list({c}),"
             f" CAST(1 AS {t}), (a, x) -> CAST(a * x AS {t})))"
         )
-    simple = {"sum": F.sum, "product": F.product, "count": F.count,
-              "max": F.max, "min": F.min, "bool_and": F.bool_and,
-              "bool_or": F.bool_or}
-    if fn in simple:
-        return simple[fn](F.col(c))
+    if fn in ("sum", "count", "max", "min", "bool_and", "bool_or"):
+        return f"{fn}({c})"
     values = f"transform({_commit_sorted(c)}, x -> x.v)"
     if fn == "listagg":  # commit-ordered, not arrival-ordered
         merged = f"array_join({values}, ',')"
@@ -3526,7 +3520,7 @@ def _merge_column(spec: MergeSpec, column: str, dtype: T.DataType) -> Column:
             f" (acc, e) -> concat(filter(acc, a -> NOT (a.key <=> e.key)),"
             f" array(e))))"
         )
-    return F.expr(f"IF(count({c}) = 0, NULL, {merged})")
+    return f"IF(count({c}) = 0, NULL, {merged})"
 
 
 def _hilbert_index(coords: list[F.Column], bits: int) -> F.Column:
@@ -3727,7 +3721,7 @@ def _typed_partition(partition: dict[str, str], schema: TableSchema) -> dict[str
             continue
         raw = partition[f["name"]]
         t = f["type"]
-        if raw is None or raw == "__HIVE_DEFAULT_PARTITION__":
+        if raw is None or raw == HIVE_DEFAULT_PARTITION:
             out[f["name"]] = None
         elif t in ("tinyint", "smallint", "int", "bigint") or _is_time_type(t):
             # TIME partitions by its physical micros-since-midnight long
@@ -3851,6 +3845,16 @@ def _build_file_blooms(
         if idx:
             out[path] = idx
     return out
+
+
+def _statable(fields: list[dict]) -> set[str]:
+    """The columns of `fields` a data file records min/max/null_count for:
+    all but nested and binary ones, whichever writer wrote the file."""
+    return {
+        f["name"]
+        for f in fields
+        if not f["type"].startswith(("array", "map", "struct", "binary"))
+    }
 
 
 def _footer_stats(meta, statable: set[str]) -> dict[str, dict]:

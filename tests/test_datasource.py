@@ -16,6 +16,13 @@ def registered(spark):
     return spark
 
 
+def _batch(**row):
+    """One row as the Arrow batch Spark hands a ``DataSourceArrowWriter``."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_pylist([row])
+
+
 def _read(spark, table):
     return spark.read.format("paimon").option("path", table.path).load()
 
@@ -168,6 +175,41 @@ def test_datasource_write_pk_upsert_delete(registered, spark, catalog):
         spark.createDataFrame([(9, "z")], "k int, v string").write.format(
             "paimon"
         ).option("path", t.path).mode("overwrite").save()
+
+
+@pytest.mark.parametrize("key_type", ["date", "char(4)", "timestamp"])
+def test_datasource_write_cobuckets_temporal_and_char_keys(
+    registered, spark, catalog, key_type
+):
+    """A date key hashes its days, a timestamp its micros and a CHAR its
+    padded value, as the JVM writer does: each key's DataSource rows
+    land in the bucket of its ``Table.upsert`` rows, so the per-bucket
+    merge sees both versions and the later one wins."""
+    import datetime
+
+    day = datetime.date(2024, 1, 1)
+    keys = {
+        "date": [day + datetime.timedelta(days=i) for i in range(8)],
+        "char(4)": ["a", "bb", "ccc", "dddd", "", "x", "yy", "zzz"],
+        "timestamp": [datetime.datetime(2024, 1, 2, 3, 4, i) for i in range(8)],
+    }[key_type]
+    in_ddl = f"k {'string' if key_type.startswith('char') else key_type}, v string"
+    t = catalog.create_table(
+        "default", f"ds_key_{key_type[:4]}", f"k {key_type}, v string",
+        primary_keys=["k"], options={"bucket": "4"},
+    )
+    t.upsert(spark.createDataFrame([(k, "table") for k in keys], in_ddl))
+    spark.createDataFrame([(k, "ds") for k in keys], in_ddl).write.format(
+        "paimon").option("path", t.path).mode("append").save()
+    by_writer: dict = {}
+    for e in t.manifest_entries():
+        by_writer.setdefault(e["path"].split("/")[-1].startswith("data-ds-"),
+                             set()).add(e["bucket"])
+    assert len(by_writer[False]) > 1  # the keys spread over buckets
+    assert by_writer[True] == by_writer[False]
+    assert _read(spark, t).count() == len(keys)
+    assert {r["v"] for r in _read(spark, t).collect()} == {"ds"}
+    assert sorted(r["v"] for r in t.to_df().collect()) == ["ds"] * len(keys)
 
 
 def test_int_partition_key_pruning_correct(registered, spark, catalog):
@@ -744,8 +786,6 @@ def test_writer_commit_race_raises_commit_conflict(spark, catalog):
     """The DataSource writer pre-allocates its snapshot id; when a Table
     commit claims that id first, ``commit`` loses the publish race with
     a ``CommitConflict`` and the winner's snapshot is untouched."""
-    from pyspark.sql import Row
-
     from paimon_presto_spark.sources.datasource import PaimonWriter
     from paimon_presto_spark.table import CommitConflict
 
@@ -753,7 +793,7 @@ def test_writer_commit_race_raises_commit_conflict(spark, catalog):
     t.append(spark.createDataFrame([(1,)], "a int"))
     w = PaimonWriter({"path": t.path}, overwrite=False)
     assert w.next_snapshot == 2
-    msg = w.write(iter([Row(a=5)]))
+    msg = w.write(iter([_batch(a=5)]))
     t.append(spark.createDataFrame([(2,)], "a int"))  # claims snapshot 2
     with pytest.raises(CommitConflict):
         w.commit([msg])
@@ -768,8 +808,6 @@ def test_stream_writer_publishes_at_the_stamped_id(spark, catalog):
     ``CommitConflict`` (Spark replays it) instead of publishing rows whose
     ``__seq`` names the other commit; so do tasks that stamped different
     ids."""
-    from pyspark.sql import Row
-
     from paimon_presto_spark.sources.datasource import PaimonStreamWriter
     from paimon_presto_spark.table import CommitConflict
 
@@ -778,17 +816,17 @@ def test_stream_writer_publishes_at_the_stamped_id(spark, catalog):
                              primary_keys=["k"], options={"bucket": "1"})
     t.upsert(spark.createDataFrame([(1, "a")], ddl))
     w = PaimonStreamWriter({"path": t.path, "query-name": "q"}, overwrite=False)
-    stale = w.write(iter([Row(k=1, v="b")]))  # stamps __seq 2
+    stale = w.write(iter([_batch(k=1, v="b")]))  # stamps __seq 2
     t.upsert(spark.createDataFrame([(1, "c")], ddl))  # claims snapshot 2
     with pytest.raises(CommitConflict):
         w.commit([stale], 0)
     assert t.snapshot_ids() == [1, 2]
     assert _rows(t.to_df()) == [(1, "c")]
     with pytest.raises(CommitConflict):
-        w.commit([w.write(iter([Row(k=1, v="b")])), stale], 0)
+        w.commit([w.write(iter([_batch(k=1, v="b")])), stale], 0)
     assert t.snapshot_ids() == [1, 2]
 
-    w.commit([w.write(iter([Row(k=1, v="b")]))], 0)  # the replay lands
+    w.commit([w.write(iter([_batch(k=1, v="b")]))], 0)  # the replay lands
     assert t.snapshot_ids() == [1, 2, 3]
     assert _rows(t.to_df()) == [(1, "b")]
     raw = t.scan().to_df(merge=False).filter("v = 'b'")
@@ -800,14 +838,12 @@ def test_stream_writer_append_table_lands_past_racing_commits(spark, catalog):
     micro-batch re-plans on the latest snapshot: appends landing between
     the tasks and ``commit``, or inside the commit's publish, do not
     fail the batch, and every writer's rows stay."""
-    from pyspark.sql import Row
-
     from paimon_presto_spark.sources.datasource import PaimonStreamWriter
 
     t = catalog.create_table("default", "ds_stream_append", "a int")
     t.append(spark.createDataFrame([(1,)], "a int"))
     w = PaimonStreamWriter({"path": t.path, "query-name": "q"}, overwrite=False)
-    msg = w.write(iter([Row(a=5)]))
+    msg = w.write(iter([_batch(a=5)]))
     t.append(spark.createDataFrame([(2,)], "a int"))  # between write and commit
     w.commit([msg], 0)
     assert t.snapshot_ids() == [1, 2, 3]
@@ -821,7 +857,7 @@ def test_stream_writer_append_table_lands_past_racing_commits(spark, catalog):
         publish(snap)
 
     w.table._publish_snapshot = racing_publish
-    w.commit([w.write(iter([Row(a=6)]))], 1)
+    w.commit([w.write(iter([_batch(a=6)]))], 1)
     assert t.snapshot_ids() == [1, 2, 3, 4, 5]
     assert sorted(r["a"] for r in t.to_df().collect()) == [1, 2, 3, 5, 6]
 

@@ -973,22 +973,44 @@ def test_kmeans_centroids_recover_clusters(spark):
 
 
 def test_python_xxhash64_matches_spark(spark):
-    """functions/xxhash must be bit-identical to F.xxhash64 (bucket interop)."""
+    """functions/xxhash must be bit-identical to F.xxhash64 (bucket interop).
+    A date hashes its days, a timestamp (with or without time zone) its
+    micros since the epoch, and a CHAR/VARCHAR its stored (padded) value."""
+    import datetime
+
     from paimon_presto_spark.functions.xxhash import spark_bucket, spark_xxhash64
 
+    day = datetime.date(2024, 1, 2)
+    at = datetime.datetime(2024, 1, 2, 3, 4, 5, 6)
     rows = [
-        (1, 42, "hello", True), (2, -7, "", False), (3, 2**60, "a" * 40, True),
-        (4, 0, "unicode-日本語", False), (5, -(2**62), "x" * 31, True),
+        (1, 42, "hello", True, day, at, at),
+        (2, -7, "", False, datetime.date(1969, 12, 31),
+         datetime.datetime(1960, 1, 2), datetime.datetime(1969, 12, 31, 23, 59)),
+        (3, 2**60, "a" * 40, True, None, None, None),
+        (4, 0, "unicode-日本語", False, datetime.date(9999, 12, 31), at, at),
+        (5, -(2**62), "x" * 31, True, day, at, at),
     ]
-    df = spark.createDataFrame(rows, "id int, n long, s string, b boolean")
+    df = spark.createDataFrame(
+        rows, "id int, n long, s string, b boolean, d date, ts timestamp, "
+        "tn timestamp_ntz")
     got = df.select(
-        "id", "n", "s", "b",
+        "id", "n", "s", "b", "tn",
+        F.expr("unix_date(d)").alias("days"),
+        F.expr("unix_micros(ts)").alias("micros"),
+        F.expr("rpad(s, 16, ' ')").alias("c"),
         F.xxhash64("id", "n", "s", "b").alias("h"),
+        F.xxhash64("d", "ts", "tn").alias("hdt"),
+        F.expr("xxhash64(rpad(s, 16, ' '), s)").alias("hc"),
         F.pmod(F.xxhash64("id", "s"), F.lit(8)).alias("bk"),
     ).collect()
+    epoch, us = datetime.datetime(1970, 1, 1), datetime.timedelta(microseconds=1)
     for r in got:
         vals = [(r["id"], "int"), (r["n"], "bigint"), (r["s"], "string"), (r["b"], "boolean")]
         assert spark_xxhash64(vals) == r["h"]
+        ntz = None if r["tn"] is None else (r["tn"] - epoch) // us
+        assert spark_xxhash64([(r["days"], "date"), (r["micros"], "timestamp"),
+                               (ntz, "timestamp_ntz")]) == r["hdt"]
+        assert spark_xxhash64([(r["c"], "char(16)"), (r["s"], "varchar(50)")]) == r["hc"]
         assert spark_bucket(8, [(r["id"], "int"), (r["s"], "string")]) == r["bk"]
 
 

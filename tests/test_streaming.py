@@ -290,7 +290,7 @@ def _stream_sink(kind, spark, t, query):
     """Commit one micro-batch ``(rows, batch_id)`` into `t` the way Spark
     drives the named sink: ``table_sink``'s foreachBatch function, or the
     DataSource stream writer's task ``write`` then driver ``commit``."""
-    from pyspark.sql import Row
+    from pyarrow import RecordBatch
 
     from paimon_presto_spark.sources.datasource import PaimonStreamWriter
     from paimon_presto_spark.streaming import table_sink
@@ -300,7 +300,8 @@ def _stream_sink(kind, spark, t, query):
         return lambda rows, bid: commit(spark.createDataFrame(rows, _SINK_DDL), bid)
     w = PaimonStreamWriter({"path": t.path, "query-name": query}, overwrite=False)
     return lambda rows, bid: w.commit(
-        [w.write(iter([Row(k=k, v=v) for k, v in rows]))], bid
+        [w.write(iter([RecordBatch.from_pylist(
+            [{"k": k, "v": v} for k, v in rows])]))], bid
     )
 
 

@@ -842,28 +842,39 @@ def test_reserved_word_columns_read_merge_and_sort_compact(spark, catalog):
     assert rows(t.to_df()) == want
 
 
-def test_read_plan_costs_constant_jvm_calls_per_column(spark, catalog):
+@pytest.mark.parametrize("engine", ["deduplicate", "partial-update", "aggregation"])
+def test_read_plan_costs_constant_jvm_calls_per_column(spark, catalog, engine):
     """Building ``to_df()`` of a primary-key table sends a constant number
-    of py4j commands per column list: the projection is one selectExpr
-    of SQL strings and the merge one window expression, so a column
-    costs about one command (the string crossing), not one per
-    Column-builder call."""
+    of py4j commands per column list, under every merge engine: the
+    projection is one selectExpr of SQL strings and the merge one window
+    expression or one aggregate, so a column costs about one command (the
+    string crossing), not one per Column-builder call. Only the calling
+    thread's commands count: py4j's finalizer thread sends the release
+    of earlier JavaObjects (more after a wider upsert) whenever it gets
+    to them."""
     import gc
+    import threading
 
     import py4j.clientserver as cs
 
     def calls(ncol: int) -> int:
-        ddl = ", ".join(["k int"] + [f"c{i} bigint" for i in range(ncol - 1)])
-        t = catalog.create_table("default", f"wide{ncol}", ddl, primary_keys=["k"])
+        values = [f"c{i}" for i in range(ncol - 1)]
+        ddl = ", ".join(["k int"] + [f"{c} bigint" for c in values])
+        opts = {"merge-engine": engine}
+        if engine == "aggregation":
+            opts |= {f"fields.{c}.aggregate-function": "sum" for c in values}
+        t = catalog.create_table("default", f"wide{ncol}", ddl,
+                                 primary_keys=["k"], options=opts)
         for _ in range(2):
             t.upsert(spark.createDataFrame([tuple(range(ncol))], ddl))
         t.to_df()  # warm the manifest and schema caches
         send, n = cs.ClientServerConnection.send_command, [0]
 
         def counting(self, command):
-            n[0] += 1
+            n[0] += threading.current_thread() is caller
             return send(self, command)
 
+        caller = threading.current_thread()
         gc.collect()
         gc.disable()  # py4j's finalizers send commands too
         cs.ClientServerConnection.send_command = counting
